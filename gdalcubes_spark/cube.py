@@ -20,6 +20,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
 import math
 from dataclasses import dataclass, field
 from typing import Callable, Iterable, List, Optional, Sequence
@@ -106,15 +107,19 @@ def chunk_stream(cube):
     chain = tuple(cube._fuse_chain or ())
     if not chain:
         return cube.df, (lambda t, coords: t)
+    return base, functools.partial(apply_chain, chain)
 
-    def xform(t, coords):
-        for f in chain:
-            t = f(t, coords)
-            if t is None or (isinstance(t, np.ndarray) and np.all(np.isnan(t))):
-                return None
-        return t
 
-    return base, xform
+def apply_chain(chain: tuple, t: np.ndarray, coords: tuple) -> Optional[np.ndarray]:
+    """Run a fused narrow chain of map_chunks fns on one chunk tensor. None
+    when a step returns None or an all-NaN tensor: the chunk is then elided,
+    the missing-chunk ≡ all-NaN invariant the unfused plan enforces between
+    stages."""
+    for f in chain:
+        t = f(t, coords)
+        if t is None or (isinstance(t, np.ndarray) and np.all(np.isnan(t))):
+            return None
+    return t
 
 
 def pack_tensor(a: np.ndarray) -> bytes:
@@ -194,13 +199,8 @@ class Cube:
             for pdf in batches:
                 out = []
                 for _, row in pdf.iterrows():
-                    r = tensor_of(row)
                     coords = (int(row["ct"]), int(row["cy"]), int(row["cx"]))
-                    for f in chain:
-                        r = f(r, coords)
-                        if r is None or (isinstance(r, np.ndarray) and np.all(np.isnan(r))):
-                            r = None
-                            break
+                    r = apply_chain(chain, tensor_of(row), coords)
                     if r is None:
                         continue
                     nb, nt, ny, nx = r.shape

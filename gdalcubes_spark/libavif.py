@@ -17,6 +17,7 @@ closed rather than reading garbage memory.
 from __future__ import annotations
 
 import ctypes
+import warnings
 
 import numpy as np
 
@@ -166,15 +167,19 @@ def decode_rgba(data: bytes) -> np.ndarray:
         lib.avifDecoderDestroy(ctypes.c_void_p(dec))
 
 
-def encode_rgba(a: np.ndarray, max_quantizer: int = 10,
-                speed: int = 10) -> bytes:
+def encode_rgba(a: np.ndarray, max_quantizer: int | None = None,
+                speed: int | None = None) -> bytes:
     """uint8 (4|3, h, w) ARGB/RGB planes → AVIF bytes (test-vector
-    generator; aom encode).  Encoder quantizer/speed fields are poked at
-    their 0.11 offsets — wrong offsets would only change quality/speed,
-    never corrupt output, and the parity test gates PSNR."""
+    generator; aom encode).  Encoder quantizer/speed fields (default 10
+    each) are poked at their 0.11 offsets; a >=1.0 build keeps the library
+    defaults and warns when either was passed."""
     lib = load()
     if lib is None:
         raise RuntimeError("no system libavif available")
+    knobs = _rgb_layout == _RGB_LAYOUTS[0]
+    if not knobs and (max_quantizer is not None or speed is not None):
+        warnings.warn("libavif >= 1.0: max_quantizer/speed are not applied; "
+                      "encoding with the library defaults", stacklevel=2)
     nb, h, w = a.shape
     rgba = np.empty((h, w, 4), np.uint8)
     if nb == 4:
@@ -200,7 +205,7 @@ def encode_rgba(a: np.ndarray, max_quantizer: int = 10,
         enc = lib.avifEncoderCreate()
         if not enc:
             raise RuntimeError("avifEncoderCreate returned NULL")
-        if _rgb_layout == _RGB_LAYOUTS[0]:
+        if knobs:
             # speed/quantizer int offsets are the 0.11.x avifEncoder layout;
             # on a >=1.0 build (probed via the rgb layout) the same offsets
             # land on different config fields (keyframeInterval/autoTiling),
@@ -208,9 +213,9 @@ def encode_rgba(a: np.ndarray, max_quantizer: int = 10,
             # output validity is unaffected, only quality/speed knobs
             emem = ctypes.cast(ctypes.c_void_p(enc),
                                ctypes.POINTER(ctypes.c_int))
-            emem[2] = speed          # avifEncoder.speed @ offset 8
-            emem[8] = 0              # minQuantizer @ 32
-            emem[9] = max_quantizer  # maxQuantizer @ 36
+            emem[2] = 10 if speed is None else speed  # avifEncoder.speed @ offset 8
+            emem[8] = 0  # minQuantizer @ 32
+            emem[9] = 10 if max_quantizer is None else max_quantizer  # maxQuantizer @ 36
         out = (ctypes.c_uint8 * 16)()  # avifRWData {ptr, size}
         rc = lib.avifEncoderWrite(ctypes.c_void_p(enc),
                                   ctypes.c_void_p(img), out)

@@ -15,11 +15,14 @@ shuffle image payloads once, directly to their chunks:
     images ──[column exprs: it, cx0..cx1, cy0..cy1]──▶ explode(chunk_id)
            ──▶ groupBy(chunk_id).applyInPandas(decode → warp → aggregate)
 
-At 10^12-image scale this is one shuffle whose keys are chunk ids; hot cells
-(power-law image density) are handled by the two-phase salted variant
-(salt > 0): partial aggregation per (chunk_id, salt) bounds any single task's
-image count, then a cheap merge per chunk_id — only for decomposable
-aggregation methods; median/none need all values and fall back with a log.
+Both scan variants run one kernel: the per-image loop fold() (decode →
+warp → mask → _AggState.update) and emit() (finalize → fused chain → chunk
+row). At 10^12-image scale the plain scan is one shuffle whose keys are chunk
+ids; hot cells (power-law image density) are handled by the two-phase salted
+variant (salt > 0): fold per (chunk_id, salt bucket) bounds any single task's
+image count, then _AggState.merge per chunk_id — only for decomposable
+aggregation methods; median/none need all values of a cell in one task, so
+they run the plain scan and warn that salt was ignored.
 
 Time-slice assignment replicates cube_coords (view.cpp:416-422) with the
 duration-unit rules of datetime.h: linear epoch arithmetic for second..week
@@ -29,15 +32,17 @@ expressions so the join side never runs Python.
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional
+import warnings
+from typing import List, Optional
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from gdalcubes_spark import codecs
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, pack_tensor, pin_group_partitions
+from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, apply_chain, pack_tensor, pin_group_partitions
 from gdalcubes_spark.sources import resample as RS
 from gdalcubes_spark.grid import ChunkGrid, CubeView, Unit, default_chunking
 from gdalcubes_spark.srs import Transformer, parse_epsg
@@ -45,6 +50,12 @@ from gdalcubes_spark.srs import Transformer, parse_epsg
 _EPS = 1e-9
 
 DECOMPOSABLE = ("min", "max", "mean", "sum", "first", "last", "count_images", "count_values")
+
+# salted scan, phase 1 output: one partial _AggState (to_bytes) per (chunk, bucket)
+_PARTIAL_SCHEMA = T.StructType([
+    T.StructField("chunk_id", T.LongType(), False),
+    T.StructField("state", T.BinaryType(), False),
+])
 
 
 class ImageMask:
@@ -280,45 +291,43 @@ def _sample_image(payload, fmt, native_bbox, img_epsg, xs, ys, view_epsg, resamp
 
 
 class _AggState:
-    """Vectorized per-cell aggregation over images, in image_id order
-    (image_collection_cube.cpp:58-306)."""
+    """The scan's per-cell aggregation kernel (image_collection_cube.cpp:58-306):
+    update() folds one image window in, merge() folds in another state built
+    over a disjoint image subset (salted partials), finalize() yields the
+    (nb, nt, ny, nx) chunk tensor. to_bytes()/from_bytes() carry a partial
+    state between the salted scan's two phases.
+
+    aux holds what merge needs beyond acc: the per-cell value count (mean) or
+    the per-cell order of the image whose value acc keeps (first/last)."""
 
     def __init__(self, method: str, shape):
         self.method = method
         self.acc = np.full(shape, np.nan)
-        if method == "mean":
-            self.count = np.zeros(shape)
-        elif method == "median":
-            self.buckets = {}  # lt -> list of (nb, ny, nx) arrays
-        elif method in ("count_images", "count_values"):
-            self.acc = np.full(shape, np.nan)
+        self.aux = (np.zeros(shape) if method == "mean"
+                    else np.full(shape, np.nan) if method in ("first", "last") else None)
+        self.buckets = {}  # median: lt -> list of (vals, y0, x0) windows
 
-    def update(self, vals: np.ndarray, lt: int, y0: int = 0, x0: int = 0):
-        """vals: (nb, hy, wx) sub-window at (y0, x0); NaN where uncovered."""
+    def update(self, vals: np.ndarray, lt: int, y0: int = 0, x0: int = 0, order: float = 0.0):
+        """vals: (nb, hy, wx) sub-window at (y0, x0); NaN where uncovered.
+        order ranks the image for first/last (images arrive in image_id
+        order within one state, but salted partials interleave)."""
         hy, wx = vals.shape[1], vals.shape[2]
-        a = self.acc[:, lt, y0 : y0 + hy, x0 : x0 + wx]
+        win = (slice(None), lt, slice(y0, y0 + hy), slice(x0, x0 + wx))
+        a = self.acc[win]
         ok = ~np.isnan(vals)
         m = self.method
         if m == "none":
             a[ok] = vals[ok]
-        elif m == "first":
-            w = ok & np.isnan(a)
-            a[w] = vals[w]
-        elif m == "last":
-            a[ok] = vals[ok]
+        elif m in ("first", "last"):
+            self._pick(a, self.aux[win], vals, order)
         elif m == "min":
             a[...] = np.fmin(a, vals)
         elif m == "max":
             a[...] = np.fmax(a, vals)
-        elif m == "sum":
-            first = ok & np.isnan(a)
-            a[first] = 0.0
-            a[ok] += vals[ok]
-        elif m == "mean":
-            first = ok & np.isnan(a)
-            a[first] = 0.0
-            a[ok] += vals[ok]
-            self.count[:, lt, y0 : y0 + hy, x0 : x0 + wx][ok] += 1
+        elif m in ("sum", "mean"):
+            _nan_add(a, vals)
+            if m == "mean":
+                self.aux[win][ok] += 1
         elif m == "median":
             # keep (vals, window) — stacked once per slice at finalize into a
             # single bounding-box buffer (per-image full-plane np.full() was a
@@ -338,6 +347,42 @@ class _AggState:
         else:
             raise ValueError(f"unknown aggregation {m!r}")
 
+    def _pick(self, a, o, vals, order):
+        """first/last: keep vals where the cell is empty or `order` ranks
+        ahead of the image already kept (ties go to the later fold for last)."""
+        w = ~np.isnan(vals) & ~((o <= order) if self.method == "first" else (o > order))
+        a[w] = vals[w]
+        o[w] = np.broadcast_to(order, w.shape)[w]
+
+    def merge(self, other: "_AggState") -> None:
+        """Fold in a state of the same method and shape built over a
+        disjoint set of images (decomposable methods only)."""
+        m = self.method
+        if m == "min":
+            np.fmin(self.acc, other.acc, out=self.acc)
+        elif m == "max":
+            np.fmax(self.acc, other.acc, out=self.acc)
+        elif m in ("first", "last"):
+            self._pick(self.acc, self.aux, other.acc, other.aux)
+        elif m in ("sum", "mean", "count_images", "count_values"):
+            _nan_add(self.acc, other.acc)
+            if m == "mean":
+                self.aux += other.aux
+        else:
+            raise ValueError(f"aggregation {m!r} is not decomposable")
+
+    def to_bytes(self) -> bytes:
+        return pack_tensor(self.acc if self.aux is None else np.stack([self.acc, self.aux]))
+
+    @classmethod
+    def from_bytes(cls, method: str, shape, data: bytes) -> "_AggState":
+        st = cls(method, shape)
+        arrs = np.frombuffer(data, dtype="<f8").reshape(-1, *shape)
+        st.acc = arrs[0]
+        if st.aux is not None:
+            st.aux = arrs[1]
+        return st
+
     # dense-stack budget for the median finalize: K images × slice cells ×
     # 8 B. 256 MB bounds ~8 GB across 32 concurrent tasks — beyond it the
     # pair-sort path (memory ∝ real samples, not K × cells) takes over.
@@ -346,7 +391,7 @@ class _AggState:
     def finalize(self) -> np.ndarray:
         if self.method == "mean":
             with np.errstate(invalid="ignore"):
-                return self.acc / np.maximum(self.count, 1)
+                return self.acc / np.maximum(self.aux, 1)
         if self.method == "median":
             nb, _, ny, nx = self.acc.shape
             plane = ny * nx
@@ -375,32 +420,41 @@ class _AggState:
                     hi = cnt[has] // 2
                     cols = np.nonzero(has)[0]
                     med = (flat[lo, cols] + flat[hi, cols]) / 2.0
-                    self.acc[:, lt].reshape(nb * plane)[cols] = med
-                    continue
-                # sparse fallback (huge K × cells): gather only real samples
-                # as (cell_id, value) pairs, one lexsort, segmented median —
-                # memory/traffic ∝ samples.
-                idx_parts, val_parts = [], []
-                for vals, y0, x0 in items:
-                    ok = ~np.isnan(vals)
-                    if not ok.any():
+                else:
+                    # sparse fallback (huge K × cells): gather only real
+                    # samples as (cell_id, value) pairs, one lexsort,
+                    # segmented median — memory/traffic ∝ samples.
+                    idx_parts, val_parts = [], []
+                    for vals, y0, x0 in items:
+                        ok = ~np.isnan(vals)
+                        if not ok.any():
+                            continue
+                        b, yy, xx = np.nonzero(ok)
+                        idx_parts.append(b * plane + (yy + y0) * nx + (xx + x0))
+                        val_parts.append(vals[ok])
+                    if not idx_parts:
                         continue
-                    b, yy, xx = np.nonzero(ok)
-                    idx_parts.append(b * plane + (yy + y0) * nx + (xx + x0))
-                    val_parts.append(vals[ok])
-                if not idx_parts:
-                    continue
-                idx = np.concatenate(idx_parts)
-                val = np.concatenate(val_parts)
-                order = np.lexsort((val, idx))
-                idx, val = idx[order], val[order]
-                starts = np.nonzero(np.diff(idx, prepend=-1))[0]
-                counts = np.diff(np.append(starts, len(idx)))
-                lo = starts + (counts - 1) // 2
-                hi = starts + counts // 2
-                med = (val[lo] + val[hi]) / 2.0
-                self.acc[:, lt].reshape(nb * plane)[idx[starts]] = med
+                    idx = np.concatenate(idx_parts)
+                    val = np.concatenate(val_parts)
+                    order = np.lexsort((val, idx))
+                    idx, val = idx[order], val[order]
+                    starts = np.nonzero(np.diff(idx, prepend=-1))[0]
+                    counts = np.diff(np.append(starts, len(idx)))
+                    med = (val[starts + (counts - 1) // 2] + val[starts + counts // 2]) / 2.0
+                    cols = idx[starts]
+                # 4-D indices: acc[:, lt] is not contiguous when nb > 1 and
+                # the chunk holds several time slices, so a reshape of it is a
+                # copy and a write through it would be lost
+                b, yy, xx = np.unravel_index(cols, (nb, ny, nx))
+                self.acc[b, lt, yy, xx] = med
         return self.acc
+
+
+def _nan_add(a: np.ndarray, vals: np.ndarray) -> None:
+    """a += vals over vals' non-NaN cells; a NaN cell of a starts from 0."""
+    ok = ~np.isnan(vals)
+    a[ok & np.isnan(a)] = 0.0
+    a[ok] += vals[ok]
 
 
 def _attach_scan_fusion(cube: Cube, make_df, chain: tuple) -> None:
@@ -433,7 +487,7 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
 
     bands: names for the nb payload bands (the collection band dictionary).
     salt: >0 enables two-phase salted aggregation for hot chunks (only for
-    decomposable aggregation methods).
+    DECOMPOSABLE aggregation methods; others warn and run unsalted).
     band_sel: scan-level band pushdown (select_bands on a raster_cube calls
     back into this, mirroring select_bands.h:50-90 / the SQL band filter at
     image_collection.cpp:1385-1392): only the selected bands (plus the mask
@@ -448,6 +502,7 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
     The returned cube carries the scan-fusion hook (_attach_scan_fusion):
     narrow ops chained onto it run inside the build/merge UDF after
     aggregation — zero extra Arrow round trips (see Cube.map_chunks)."""
+    args = dict(locals())  # the select_bands rebuild reuses every argument
     g = chunking or default_chunking(view)
     view_epsg = parse_epsg(view.srs)
     full_bands = list(bands)
@@ -494,115 +549,22 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
 
     vleft, vtop = view.left, view.top
 
-    def mk_build(chain: tuple):
-        def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            cid = int(key[0])
-            kt, ky, kx = g.chunk_coords(cid)
-            (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(kt, ky, kx)
-            nyc, nxc = yy1 - yy0, xx1 - xx0
-            xs = vleft + (np.arange(xx0, xx1) + 0.5) * dx
-            ys = vtop - (np.arange(yy0, yy1) + 0.5) * dy
-            st = _AggState(agg, (nb, t1c - t0c, nyc, nxc))
-            pdf = pdf.sort_values("image_id")
-            c = {k: pdf[k].to_numpy() for k in ("it", "bytes", "fmt", "nleft", "nright", "nbottom",
-                                                "ntop", "epsg", "vleft", "vright", "vbottom", "vtop")}
-            for i in range(len(pdf)):  # plain array indexing — iterrows is ~10× slower
-                lt = int(c["it"][i]) - t0c
-                if not (0 <= lt < t1c - t0c):
-                    continue
-                res = _sample_image(c["bytes"][i], c["fmt"][i],
-                                    (c["nleft"][i], c["nright"][i], c["nbottom"][i], c["ntop"][i]),
-                                    int(c["epsg"][i]), xs, ys, view_epsg, resampling, nb_payload,
-                                    (c["vleft"][i], c["vright"][i], c["vbottom"][i], c["vtop"][i]),
-                                    band_idx, dxv=dx, dyv=dy, use_overviews=use_overviews)
-                if res is None:
-                    continue
-                vals, oy, ox = res
-                if mask is not None:
-                    bad = mask.apply(vals[mask_idx])
-                    vals = np.where(bad[None, ...], np.nan, vals)
-                st.update(vals, lt, oy, ox)
-            t = st.finalize()
-            if out_idx is not None and len(out_idx) != t.shape[0]:
-                t = t[out_idx]  # drop the mask-only band from the output
-            if np.all(np.isnan(t)):
-                return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-            for f in chain:  # fused narrow chain (map_chunks elision contract)
-                t = f(t, (kt, ky, kx))
-                if t is None or (isinstance(t, np.ndarray) and np.all(np.isnan(t))):
-                    return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-            return pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=t.shape[0], nt=t.shape[1],
-                                      ny=t.shape[2], nx=t.shape[3], data=pack_tensor(t))])
-        return build
+    def new_state(cid: int) -> _AggState:
+        return _AggState(agg, (nb,) + g.chunk_shape(*g.chunk_coords(cid)))
 
-    out_bands = list(band_sel) if band_sel is not None else list(bands)
-    if salt > 0 and agg in DECOMPOSABLE:
-        cube, make_df = _salted_scan(exploded, view, out_bands, g, mask, salt,
-                                     build_ctx=(vleft, vtop, dx, dy, view_epsg, resampling, nb, agg,
-                                                mask_idx, nb_payload, band_idx, out_idx,
-                                                use_overviews))
-    else:
-        # Pin the decode shuffle's task count: AQE coalesces by POST-SHUFFLE
-        # BYTES, but this stage's rows are compressed image refs whose decode/
-        # warp cost is orders of magnitude larger per byte than columnar work —
-        # byte-based coalescing was observed collapsing 32 cores' worth of
-        # decode into 5 tasks. An explicit repartition(n, chunk_id) satisfies
-        # the groupBy's clustering (no second exchange) and AQE leaves
-        # user-numbered repartitions alone. n = 4x parallelism oversubscription
-        # (scheduler slack for per-chunk cost variance), capped by chunk count.
-        pinned = pin_group_partitions(exploded, "chunk_id", g.n_chunks)
-
-        def make_df(chain: tuple):
-            return pinned.groupBy("chunk_id").applyInPandas(mk_build(chain), CHUNK_SCHEMA)
-
-        cube = Cube(make_df(()), view, out_bands, g)
-    # select_bands pushdown hook: rebuilding the scan with fewer bands
-    cube._scan_rebuild = lambda names: raster_cube(images, view, full_bands, chunking=g,
-                                                   mask=mask, salt=salt, band_sel=list(names))
-    _attach_scan_fusion(cube, make_df, ())
-    return cube
-
-
-def _salted_scan(exploded: DataFrame, view: CubeView, bands: List[str], g: ChunkGrid,
-                 mask: Optional[ImageMask], salt: int, build_ctx):
-    """Two-phase skew-proof scan: partial aggregation per (chunk_id, salt
-    bucket of image_id), then merge per chunk_id. Bounds any single task to
-    ~|images_in_chunk|/salt decodes (north-rule skew handling)."""
-    (vleft, vtop, dx, dy, view_epsg, resampling, nb, agg, mask_idx,
-     nb_payload, band_idx, out_idx, use_overviews) = build_ctx
-
-    from pyspark.sql import types as T
-
-    part_schema = T.StructType([
-        T.StructField("chunk_id", T.LongType(), False),
-        T.StructField("state", T.BinaryType(), False),
-        # aux = per-cell count (mean) or per-cell winning image order (first/last)
-        T.StructField("aux", T.BinaryType(), True),
-    ])
-
-    def _img_order(image_id: str) -> int:
-        # numeric image order for cross-bucket first/last merging; input_hint
-        # ids are "img_%012d" so the digit suffix is a total order matching
-        # the reference's ORDER BY image_id
-        digits = "".join(ch for ch in image_id if ch.isdigit())
-        if not digits:
-            raise ValueError("salted first/last needs numeric image ids; use salt=0")
-        return int(digits)
-
-    def partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        cid = int(key[0])
-        kt, ky, kx = g.chunk_coords(cid)
-        (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(kt, ky, kx)
-        shape = (nb, t1c - t0c, yy1 - yy0, xx1 - xx0)
+    def fold(cid: int, pdf: pd.DataFrame, rank) -> _AggState:
+        """The one per-image loop: decode, warp and mask chunk `cid`'s
+        images in image_id order and fold them into a fresh state.
+        rank(sorted image ids) gives each image's first/last order."""
+        (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(*g.chunk_coords(cid))
         xs = vleft + (np.arange(xx0, xx1) + 0.5) * dx
         ys = vtop - (np.arange(yy0, yy1) + 0.5) * dy
-        st = _AggState(agg, shape)
-        ordarr = np.full(shape, np.nan) if agg in ("first", "last") else None
+        st = new_state(cid)
         pdf = pdf.sort_values("image_id")
-        c = {k: pdf[k].to_numpy() for k in ("it", "image_id", "bytes", "fmt", "nleft", "nright",
-                                            "nbottom", "ntop", "epsg", "vleft", "vright",
-                                            "vbottom", "vtop")}
-        for i in range(len(pdf)):
+        c = {k: pdf[k].to_numpy() for k in ("it", "bytes", "fmt", "nleft", "nright", "nbottom",
+                                            "ntop", "epsg", "vleft", "vright", "vbottom", "vtop")}
+        order = rank(pdf["image_id"].to_numpy())
+        for i in range(len(pdf)):  # plain array indexing — iterrows is ~10× slower
             lt = int(c["it"][i]) - t0c
             if not (0 <= lt < t1c - t0c):
                 continue
@@ -617,81 +579,93 @@ def _salted_scan(exploded: DataFrame, view: CubeView, bands: List[str], g: Chunk
             if mask is not None:
                 bad = mask.apply(vals[mask_idx])
                 vals = np.where(bad[None, ...], np.nan, vals)
-            if agg in ("first", "last"):
-                o = float(_img_order(str(c["image_id"][i])))
-                ok = ~np.isnan(vals)
-                hy, wx = vals.shape[1], vals.shape[2]
-                a = st.acc[:, lt, oy : oy + hy, ox : ox + wx]
-                oa = ordarr[:, lt, oy : oy + hy, ox : ox + wx]
-                w = ok & (np.isnan(oa) if agg == "first" else np.ones_like(ok))
-                a[w] = vals[w]
-                oa[w] = o
-            else:
-                st.update(vals, lt, oy, ox)
-        aux = None
-        if agg == "mean":
-            aux = pack_tensor(st.count)
-        elif agg in ("first", "last"):
-            aux = pack_tensor(ordarr)
-        return pd.DataFrame([dict(chunk_id=cid, state=pack_tensor(st.acc), aux=aux)])
+            st.update(vals, lt, oy, ox, order[i])
+        return st
 
-    def mk_merge(chain: tuple):
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def emit(cid: int, st: _AggState, chain: tuple) -> pd.DataFrame:
+        """Finalize into one chunk row: drop the mask-only band, elide an
+        all-NaN chunk, run the fused narrow chain."""
+        t = st.finalize()
+        if out_idx is not None and len(out_idx) != t.shape[0]:
+            t = t[out_idx]
+        coords = g.chunk_coords(cid)
+        if np.all(np.isnan(t)) or (t := apply_chain(chain, t, coords)) is None:
+            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
+        kt, ky, kx = coords
+        return pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=t.shape[0], nt=t.shape[1],
+                                  ny=t.shape[2], nx=t.shape[3], data=pack_tensor(t))])
+
+    out_bands = list(band_sel) if band_sel is not None else list(bands)
+    if salt > 0 and agg not in DECOMPOSABLE:
+        warnings.warn(f"salt={salt} ignored: {agg!r} aggregation needs every value of a cell "
+                      f"in one task, so the unsalted scan runs", stacklevel=2)
+        salt = 0
+    if salt > 0:
+        # Two-phase skew-proof scan: fold per (chunk_id, salt bucket of
+        # image_id) into a partial state shipped as bytes, then per chunk_id
+        # merge the partials and emit. Bounds any single task to
+        # ~|images_in_chunk|/salt decodes (north-rule skew handling). Same
+        # kernel as the unsalted build; only the first/last rank differs,
+        # because row positions are not comparable across buckets.
+        rank = _digit_rank if agg in ("first", "last") else _row_rank
+
+        def partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
             cid = int(key[0])
-            kt, ky, kx = g.chunk_coords(cid)
-            (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(kt, ky, kx)
-            shape = (nb, t1c - t0c, yy1 - yy0, xx1 - xx0)
-            acc = np.full(shape, np.nan)
-            cnt = np.zeros(shape) if agg == "mean" else None
-            acc_ord = np.full(shape, np.nan) if agg in ("first", "last") else None
-            for _, row in pdf.iterrows():
-                s = np.frombuffer(row["state"], dtype="<f8").reshape(shape)
-                ok = ~np.isnan(s)
-                if agg == "min":
-                    acc = np.fmin(acc, s)
-                elif agg == "max":
-                    acc = np.fmax(acc, s)
-                elif agg in ("sum", "count_images", "count_values"):
-                    first = ok & np.isnan(acc)
-                    acc[first] = 0.0
-                    acc[ok] += s[ok]
-                elif agg == "mean":
-                    c = np.frombuffer(row["aux"], dtype="<f8").reshape(shape)
-                    first = ok & np.isnan(acc)
-                    acc[first] = 0.0
-                    acc[ok] += s[ok]
-                    cnt += c
-                elif agg in ("first", "last"):
-                    o = np.frombuffer(row["aux"], dtype="<f8").reshape(shape)
-                    if agg == "first":
-                        take = ok & (np.isnan(acc_ord) | (o < acc_ord))
-                    else:
-                        take = ok & (np.isnan(acc_ord) | (o > acc_ord))
-                    acc[take] = s[take]
-                    acc_ord[take] = o[take]
-            if agg == "mean":
-                with np.errstate(invalid="ignore"):
-                    acc = acc / np.maximum(cnt, 1)
-            if out_idx is not None and len(out_idx) != acc.shape[0]:
-                acc = acc[out_idx]
-            if np.all(np.isnan(acc)):
-                return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-            for f in chain:  # fused narrow chain (map_chunks elision contract)
-                acc = f(acc, (kt, ky, kx))
-                if acc is None or (isinstance(acc, np.ndarray) and np.all(np.isnan(acc))):
-                    return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-            return pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=acc.shape[0], nt=acc.shape[1],
-                                      ny=acc.shape[2], nx=acc.shape[3], data=pack_tensor(acc))])
-        return merge
+            return pd.DataFrame([dict(chunk_id=cid, state=fold(cid, pdf, rank).to_bytes())])
 
-    salted = exploded.withColumn("_salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)))
-    part = (pin_group_partitions(salted, ["chunk_id", "_salt"], g.n_chunks * salt)
-            .groupBy("chunk_id", "_salt").applyInPandas(partial, part_schema))
+        salted = exploded.withColumn("_salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)))
+        part = (pin_group_partitions(salted, ["chunk_id", "_salt"], g.n_chunks * salt)
+                .groupBy("chunk_id", "_salt").applyInPandas(partial, _PARTIAL_SCHEMA))
 
-    def make_df(chain: tuple):
-        return part.groupBy("chunk_id").applyInPandas(mk_merge(chain), CHUNK_SCHEMA)
+        def make_df(chain: tuple):
+            def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+                cid = int(key[0])
+                st = new_state(cid)
+                for data in pdf["state"]:
+                    st.merge(_AggState.from_bytes(agg, st.acc.shape, data))
+                return emit(cid, st, chain)
+            return part.groupBy("chunk_id").applyInPandas(merge, CHUNK_SCHEMA)
+    else:
+        # Pin the decode shuffle's task count: AQE coalesces by POST-SHUFFLE
+        # BYTES, but this stage's rows are compressed image refs whose decode/
+        # warp cost is orders of magnitude larger per byte than columnar work —
+        # byte-based coalescing was observed collapsing 32 cores' worth of
+        # decode into 5 tasks. An explicit repartition(n, chunk_id) satisfies
+        # the groupBy's clustering (no second exchange) and AQE leaves
+        # user-numbered repartitions alone. n = 4x parallelism oversubscription
+        # (scheduler slack for per-chunk cost variance), capped by chunk count.
+        pinned = pin_group_partitions(exploded, "chunk_id", g.n_chunks)
 
-    return Cube(make_df(()), view, list(bands), g), make_df
+        def make_df(chain: tuple):
+            def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+                cid = int(key[0])
+                return emit(cid, fold(cid, pdf, _row_rank), chain)
+            return pinned.groupBy("chunk_id").applyInPandas(build, CHUNK_SCHEMA)
+
+    cube = Cube(make_df(()), view, out_bands, g)
+    # select_bands pushdown hook: the same scan over fewer bands
+    cube._scan_rebuild = lambda names: raster_cube(**{**args, "band_sel": list(names)})
+    _attach_scan_fusion(cube, make_df, ())
+    return cube
+
+
+def _row_rank(image_ids: np.ndarray) -> np.ndarray:
+    """first/last order inside one state: the position in the image_id sort
+    (works for any id type)."""
+    return np.arange(len(image_ids))
+
+
+def _digit_rank(image_ids: np.ndarray) -> np.ndarray:
+    """first/last order across salt buckets: the id's digits as a number.
+    input_hint ids are "img_%012d", so this total order matches the
+    reference's ORDER BY image_id."""
+    out = np.empty(len(image_ids))
+    for i, image_id in enumerate(image_ids):
+        digits = "".join(ch for ch in str(image_id) if ch.isdigit())
+        if not digits:
+            raise ValueError("salted first/last needs numeric image ids; use salt=0")
+        out[i] = int(digits)
+    return out
 
 
 def inventory_partition_columns(images: DataFrame, time_bucket: str = "month",

@@ -24,7 +24,6 @@ transcribed from the RFC text (section numbers cited inline).
 from __future__ import annotations
 
 import numpy as np
-from numpy.core.umath import clip as _uclip
 
 from gdalcubes_spark.vp8tables import (
     AC_QLOOKUP,
@@ -150,6 +149,12 @@ class BoolDecoder:
 
 
 # ---------------------------------------------------------------- transforms
+
+
+def _uclip(a, lo, hi):
+    """Clamp to [lo, hi] with two bare ufuncs: np.clip's argument handling
+    costs more than the clamp on these 4x4..16x16 blocks."""
+    return np.minimum(np.maximum(a, lo), hi)
 
 
 def _iwht4(blk):

@@ -52,6 +52,14 @@ class TestBinding:
         d = libavif.decode_rgba(libavif.encode_rgba(a, max_quantizer=4))
         assert _psnr(d[0], alpha) >= 40.0
 
+    def test_knobs_on_newer_layout_warn(self, monkeypatch):
+        # a >=1.0 struct layout cannot take the quantizer/speed pokes; the
+        # 2-band input then fails validation before any native call
+        monkeypatch.setattr(libavif, "_rgb_layout", libavif._RGB_LAYOUTS[1])
+        with pytest.warns(UserWarning, match="max_quantizer/speed"), \
+                pytest.raises(ValueError, match="expected"):
+            libavif.encode_rgba(np.zeros((2, 4, 4), np.uint8), max_quantizer=4)
+
     def test_rgb_input(self):
         a = _smooth()[1:]
         d = libavif.decode_rgba(libavif.encode_rgba(a))

@@ -41,8 +41,19 @@ def _pair_sort_reference(items, shape):
         lo = starts + (counts - 1) // 2
         hi = starts + counts // 2
         med = (val[lo] + val[hi]) / 2.0
-        acc[:, lt].reshape(nb * plane)[idx[starts]] = med
+        b, yy, xx = np.unravel_index(idx[starts], (nb, ny, nx))
+        acc[b, lt, yy, xx] = med
     return acc
+
+
+def _has_data(items, shape):
+    """(nb, nt, ny, nx) mask of cells at least one item has a value for."""
+    has = np.zeros(shape, bool)
+    for lt, its in items.items():
+        for vals, y0, x0 in its:
+            hy, wx = vals.shape[1], vals.shape[2]
+            has[:, lt, y0:y0 + hy, x0:x0 + wx] |= ~np.isnan(vals)
+    return has
 
 
 def _random_items(rng, nb, ny, nx, k, nan_frac):
@@ -73,24 +84,30 @@ def test_median_finalize_dense_equals_pair_sort(k, nan_frac):
     ref = _pair_sort_reference(ref_items, (nb, nt, ny, nx))
     assert np.array_equal(dense.view(np.uint64), ref.view(np.uint64)), \
         "dense median finalize diverged from the pair-sort reference"
+    assert not np.isnan(dense[_has_data(ref_items, dense.shape)]).any(), \
+        "a cell with input data has no median"
 
 
-def test_median_finalize_sparse_fallback_identical():
+@pytest.mark.parametrize("nb,nt", [(1, 1), (2, 2)])
+def test_median_finalize_sparse_fallback_identical(nb, nt):
     """Force the sparse fallback (budget=0) and compare against dense."""
     rng = np.random.default_rng(7)
-    nb, nt, ny, nx = 1, 1, 9, 9
-    items = _random_items(rng, nb, ny, nx, 11, 0.2)
+    ny, nx = 9, 9
+    items = {lt: _random_items(rng, nb, ny, nx, 11, 0.2) for lt in range(nt)}
 
     def run(budget):
         st = _AggState("median", (nb, nt, ny, nx))
         st._MEDIAN_DENSE_BYTES = budget
-        for v, y, x in items:
-            st.update(v.copy(), 0, y, x)
+        for lt, its in items.items():
+            for v, y, x in its:
+                st.update(v.copy(), lt, y, x)
         return st.finalize()
 
     dense = run(1 << 40)
     sparse = run(0)
     assert np.array_equal(dense.view(np.uint64), sparse.view(np.uint64))
+    assert not np.isnan(sparse[_has_data(items, sparse.shape)]).any(), \
+        "a cell with input data has no median"
 
 
 def test_reduce_median_sort_gather_equals_nanmedian():

@@ -6,8 +6,8 @@ import numpy as np
 import pytest
 
 from gdalcubes_spark import codecs, srs
-from gdalcubes_spark.grid import ChunkGrid, CubeView
-from gdalcubes_spark.sources.raster_cube import ImageMask, raster_cube
+from gdalcubes_spark.grid import AGG_METHODS, ChunkGrid, CubeView
+from gdalcubes_spark.sources.raster_cube import DECOMPOSABLE, ImageMask, raster_cube
 from gdalcubes_spark.synth import ImageLayout, band_names, generate_images
 
 
@@ -126,21 +126,16 @@ def oracle_cell_values(layout: ImageLayout, n_images: int, view: CubeView, agg: 
                     v = arr[b, py, px]
                     key = (b, it, iy, ix)
                     state.setdefault(key, []).append((i, v))
+    # count_images is per image touching the cell here; the scan counts per
+    # image touching the chunk slice, so the two agree only when no image
+    # crosses a chunk border. count_values assumes every cell of a touched
+    # slice is covered.
+    fold = {"first": lambda vs: vs[0], "last": lambda vs: vs[-1], "none": lambda vs: vs[-1],
+            "mean": np.mean, "median": np.median, "min": min, "max": max, "sum": sum,
+            "count_images": len, "count_values": len}[agg]
     for (b, it, iy, ix), vals in state.items():
         vals.sort()  # image order
-        vs = [v for _, v in vals]
-        if agg == "first":
-            out[b, it, iy, ix] = vs[0]
-        elif agg == "last":
-            out[b, it, iy, ix] = vs[-1]
-        elif agg == "mean":
-            out[b, it, iy, ix] = np.mean(vs)
-        elif agg == "median":
-            out[b, it, iy, ix] = np.median(vs)
-        elif agg == "count_images":
-            out[b, it, iy, ix] = len(vs)
-        else:
-            raise ValueError(agg)
+        out[b, it, iy, ix] = fold([v for _, v in vals])
     return out
 
 
@@ -206,6 +201,12 @@ class TestRasterCube:
         plain = raster_cube(imgs, v, band_names(lay), chunking=g).collect_array()
         salted = raster_cube(imgs, v, band_names(lay), chunking=g, salt=3).collect_array()
         assert np.allclose(plain, salted)
+
+    @pytest.mark.parametrize("agg", ["median", "none"])
+    def test_salt_ignored_warns(self, spark, images, agg):
+        v = scan_view(agg)
+        with pytest.warns(UserWarning, match="salt=4 ignored"):
+            raster_cube(images, v, band_names(LAYOUT), salt=4)
 
     def test_geotiff_inventory_scan_exact(self, spark):
         # fmt='tif' payloads (real tiled-Deflate GeoTIFF bytes from
@@ -280,6 +281,53 @@ class TestRasterCube:
         med = np.median(dx_grad)
         frac_const = np.mean(np.abs(dx_grad - med) < 1e-6)
         assert frac_const > 0.5
+
+
+def sweep_layout(nb: int) -> ImageLayout:
+    """2x2 overlapping tiles over 3 days, two images per tile and day plus a
+    hot tile: cells hold 1 to 11 images, and images cross chunk borders."""
+    return ImageLayout(left0=0.0, top0=4.0, tile_dx=2.0, tile_dy=2.0, gx=2, gy=2, ntime=3,
+                       tile_w=8, tile_h=8, nb=nb, fmts=("raw", "png"), overlap=0.25, hot_every=5)
+
+
+SWEEP_N = 24
+
+
+@pytest.fixture(scope="module")
+def sweep_images(spark):
+    imgs = {nb: generate_images(spark, SWEEP_N, sweep_layout(nb)).cache() for nb in (1, 3)}
+    yield imgs
+    for df in imgs.values():
+        df.unpersist()
+
+
+@pytest.mark.parametrize("resampling", ["near", "bilinear"])
+@pytest.mark.parametrize("nb", [1, 3])
+@pytest.mark.parametrize("agg", AGG_METHODS)
+def test_scan_invariance_sweep(spark, sweep_images, agg, nb, resampling):
+    """The scan result does not depend on the chunk time depth or on salting
+    (decomposable methods), for every aggregation and band count; near
+    sampling also matches the per-cell oracle."""
+    lay = sweep_layout(nb)
+    v = CubeView.create(srs="EPSG:4326", left=0, right=4, bottom=0, top=4,
+                        t0="2021-01-01", t1="2021-01-03", dt="P1D", dx=0.5, dy=0.5,
+                        aggregation=agg, resampling=resampling)
+
+    def scan(ct, salt=0):
+        g = ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=ct, cy=4, cx=4)
+        return raster_cube(sweep_images[nb], v, band_names(lay), chunking=g, salt=salt).collect_array()
+
+    got = scan(1)
+    assert not np.isnan(got).any()  # the layout covers every cell of every day
+    np.testing.assert_array_equal(scan(3), got)
+    if agg in DECOMPOSABLE:
+        salted = scan(3, salt=4)
+        if agg in ("sum", "mean"):  # summation order differs across buckets
+            np.testing.assert_allclose(salted, got, rtol=1e-12)
+        else:
+            np.testing.assert_array_equal(salted, got)
+    if resampling == "near" and agg != "count_images":
+        np.testing.assert_allclose(got, oracle_cell_values(lay, SWEEP_N, v, agg), rtol=1e-12)
 
 
 class TestPngFilters:

@@ -281,6 +281,22 @@ class TestCogOverviewScan:
         assert np.allclose(fast, full, atol=1.5)
         assert not np.any(np.isnan(fast))
 
+    def test_select_bands_keeps_overviews(self, spark):
+        # the select_bands pushdown rebuilds the scan with every argument
+        # the caller passed, use_overviews included
+        from gdalcubes_spark.grid import ChunkGrid, CubeView
+        from gdalcubes_spark.sources.raster_cube import raster_cube
+        imgs, _ = self._cog_inventory(spark)
+        v = CubeView.create(srs="EPSG:4326", left=0, right=64, bottom=0, top=64,
+                            t0="2021-01-01", t1="2021-01-01", dt="P1D",
+                            dx=8.0, dy=8.0, aggregation="first", resampling="bilinear")
+        g = ChunkGrid(nt=1, ny=8, nx=8, ct=1, cy=8, cx=8)
+        fast = raster_cube(imgs, v, ["B01"], chunking=g, use_overviews=True)
+        full = raster_cube(imgs, v, ["B01"], chunking=g).collect_array()
+        want = fast.collect_array()
+        assert not np.array_equal(want, full)  # the overview level changes values
+        assert np.array_equal(fast.select_bands(["B01"]).collect_array(), want)
+
     def test_overview_scan_exact_when_view_is_fine(self, spark):
         # ratio < 4 -> level 0 chosen -> results are bit-identical
         from gdalcubes_spark.grid import ChunkGrid, CubeView
