@@ -47,6 +47,14 @@ CHUNK_SCHEMA = T.StructType(
     ]
 )
 
+_SLICE_FILES_SCHEMA = T.StructType(
+    [
+        T.StructField("it", T.IntegerType(), False),
+        T.StructField("file", T.StringType(), False),
+        T.StructField("bytes_written", T.LongType(), False),
+    ]
+)
+
 CELL_SCHEMA = T.StructType(
     [
         T.StructField("it", T.IntegerType(), False),
@@ -440,56 +448,61 @@ class Cube:
                 ") USING iceberg\nPARTITIONED BY (ct)\n"
                 "TBLPROPERTIES ('write.target-file-size-bytes'='134217728')")
 
+    def _write_slices(self, path: str, bsel: List[int], ext: str,
+                      encode: Callable[[np.ndarray], bytes]) -> DataFrame:
+        """One file per time slice (cube.cpp:292-615): each slice's
+        (len(bsel), ny, nx) plane is assembled by ONE task (groupBy ct — the
+        reference writer's one-file-per-slice bound) and encode(plane) goes
+        to `path`/slice_<it>_<label>.<ext>. Executors write to `path`
+        directly — use shared storage on a real cluster. Returns
+        DataFrame(it, file, bytes_written)."""
+        import os as _os
+
+        v, g = self.view, self.chunking
+        labels = [d.to_string().replace(":", "-") for d in v.time_labels()]
+        _os.makedirs(path, exist_ok=True)
+        cols = [f.name for f in _SLICE_FILES_SCHEMA.fields]
+
+        def write_slice(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            (t0, t1), _, _ = g.chunk_cell_range(int(key[0]), 0, 0)
+            parts = [(g.chunk_cell_range(int(row["ct"]), int(row["cy"]), int(row["cx"])), tensor_of(row)[bsel])
+                     for _, row in pdf.iterrows()]
+            rows = []
+            for lt in range(t1 - t0):
+                plane = np.full((len(bsel), v.ny, v.nx), np.nan)
+                for (_, (y0, y1), (x0, x1)), t in parts:
+                    plane[:, y0:y1, x0:x1] = t[:, lt]
+                data = encode(plane)
+                it = t0 + lt
+                fn = f"{path}/slice_{it:05d}_{labels[it]}.{ext}"
+                with open(fn, "wb") as fh:
+                    fh.write(data)
+                rows.append((it, fn, len(data)))
+            return pd.DataFrame(rows, columns=cols)
+
+        return self.df.groupBy("ct").applyInPandas(write_slice, _SLICE_FILES_SCHEMA)
+
     def write_png_slices(self, path: str, band=None, vmin: float = None,
                          vmax: float = None) -> "DataFrame":
         """write_tif analogue (cube.cpp:292-615): one image file per time
-        slice. Each slice is assembled by ONE task (groupBy ct — the same
-        one-file-per-slice bound as the reference's GeoTIFF writer), scaled
-        to uint8 via [vmin, vmax] and encoded with the in-repo PNG codec
-        (NaN → 0). Returns a DataFrame(it, file, bytes_written) of what was
-        written. Executors write to `path` directly — use shared storage on
-        a real cluster."""
-        import os as _os
-
+        slice, scaled to uint8 via [vmin, vmax] and encoded with the in-repo
+        PNG codec (NaN → 0). Returns a DataFrame(it, file, bytes_written) of
+        what was written (see _write_slices)."""
         from gdalcubes_spark import codecs as _codecs
 
-        v, g, bands = self.view, self.chunking, list(self.bands)
+        bands = list(self.bands)
         bsel = [bands.index(band)] if isinstance(band, str) else (
             [bands.index(b) for b in band] if band is not None else list(range(min(len(bands), 3))))
         if len(bsel) == 2 or len(bsel) > 3:
             raise ValueError("PNG export needs 1 (grey) or 3 (RGB) bands")
-        labels = [d.to_string().replace(":", "-") for d in v.time_labels()]
         lo = 0.0 if vmin is None else float(vmin)
         hi = 255.0 if vmax is None else float(vmax)
-        _os.makedirs(path, exist_ok=True)
 
-        out_schema = T.StructType([
-            T.StructField("it", T.IntegerType(), False),
-            T.StructField("file", T.StringType(), False),
-            T.StructField("bytes_written", T.LongType(), False),
-        ])
+        def encode(plane: np.ndarray) -> bytes:
+            scaled = np.clip((plane - lo) / max(hi - lo, 1e-12) * 255.0, 0, 255)
+            return _codecs.encode(np.where(np.isnan(scaled), 0, scaled).astype(np.uint8), "png")
 
-        def write_slice(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            ict = int(key[0])
-            (t0, t1), _, _ = g.chunk_cell_range(ict, 0, 0)
-            rows = []
-            for lt in range(t1 - t0):
-                plane = np.full((len(bsel), v.ny, v.nx), np.nan)
-                for _, row in pdf.iterrows():
-                    _, (y0, y1), (x0, x1) = g.chunk_cell_range(int(row["ct"]), int(row["cy"]), int(row["cx"]))
-                    plane[:, y0:y1, x0:x1] = tensor_of(row)[bsel, lt]
-                it_global = t0 + lt
-                scaled = np.clip((plane - lo) / max(hi - lo, 1e-12) * 255.0, 0, 255)
-                a = np.where(np.isnan(scaled), 0, scaled).astype(np.uint8)
-                png = _codecs.encode(a, "png")
-                fn = f"{path}/slice_{it_global:05d}_{labels[it_global]}.png"
-                with open(fn, "wb") as fh:
-                    fh.write(png)
-                rows.append(dict(it=it_global, file=fn, bytes_written=len(png)))
-            return pd.DataFrame(rows, columns=["it", "file", "bytes_written"]) if rows else \
-                pd.DataFrame(columns=["it", "file", "bytes_written"])
-
-        return self.df.groupBy("ct").applyInPandas(write_slice, out_schema)
+        return self._write_slices(path, bsel, "png", encode)
 
     def write_tif(self, path: str, band=None, dtype: str = "float32",
                   nodata: float = -9999.0, tile: int = 256,
@@ -505,21 +518,17 @@ class Cube:
         `packing` mirrors the reference's pack_minmax export (cube.h:52-96):
         a gdalcubes_spark.packing spec → integer bytes with scale/offset
         applied BEFORE the dtype cast. Like the reference's writer, each
-        slice is assembled by one task (groupBy ct); executors write to
-        `path` directly — use shared storage on a real cluster. Returns
+        slice is assembled by one task (see _write_slices). Returns
         DataFrame(it, file, bytes_written)."""
-        import os as _os
-
         from gdalcubes_spark import tiffcodec as _tc
 
         if packing is not None and (packing.type == "none" or
                                     packing.nodata is None or np.isnan(packing.nodata)):
             raise ValueError("write_tif packing needs an integer type with a "
                              "finite nodata code (GeoTIFF carries it in GDAL_NODATA)")
-        v, g, bands = self.view, self.chunking, list(self.bands)
+        v, bands = self.view, list(self.bands)
         bsel = [bands.index(band)] if isinstance(band, str) else (
             [bands.index(b) for b in band] if band is not None else list(range(len(bands))))
-        labels = [d.to_string().replace(":", "-") for d in v.time_labels()]
         epsg = None
         if isinstance(v.srs, str) and v.srs.upper().startswith("EPSG:"):
             epsg = int(v.srs.split(":")[1])
@@ -528,48 +537,26 @@ class Cube:
         # snap tile dim to the slice size (multiple of 16) so small cubes
         # don't pad a 40x40 slice out to a 256x256 tile
         tile = min(tile, max(16, -(-max(v.ny, v.nx) // 16) * 16))
-        _os.makedirs(path, exist_ok=True)
 
-        out_schema = T.StructType([
-            T.StructField("it", T.IntegerType(), False),
-            T.StructField("file", T.StringType(), False),
-            T.StructField("bytes_written", T.LongType(), False),
-        ])
+        def encode(plane: np.ndarray) -> bytes:
+            if packing is not None:
+                a = np.frombuffer(packing.pack(plane), dtype=packing.dtype
+                                  ).reshape(plane.shape).copy()
+                slice_nd = float(packing.nodata)
+            else:
+                a = np.where(np.isnan(plane), nd, plane).astype(dtype)
+                slice_nd = nd
+            # floats get the TechNote-3 byte-split predictor under
+            # deflate (what GDAL writes for float COGs — ~30% smaller
+            # on smooth fields); integers keep the auto predictor 2
+            pred = 3 if (compress == "deflate"
+                         and np.issubdtype(a.dtype, np.floating)) else None
+            return _tc.encode_geotiff(
+                a, tile=tile, compress=compress, overviews=overviews,
+                predictor=pred, nodata=slice_nd,
+                left=left, top=top, dx=dx, dy=dy, epsg=epsg)
 
-        def write_slice(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            ict = int(key[0])
-            (t0, t1), _, _ = g.chunk_cell_range(ict, 0, 0)
-            rows = []
-            for lt in range(t1 - t0):
-                plane = np.full((len(bsel), v.ny, v.nx), np.nan)
-                for _, row in pdf.iterrows():
-                    _, (y0, y1), (x0, x1) = g.chunk_cell_range(int(row["ct"]), int(row["cy"]), int(row["cx"]))
-                    plane[:, y0:y1, x0:x1] = tensor_of(row)[bsel, lt]
-                if packing is not None:
-                    a = np.frombuffer(packing.pack(plane), dtype=packing.dtype
-                                      ).reshape(plane.shape).copy()
-                    slice_nd = float(packing.nodata)
-                else:
-                    a = np.where(np.isnan(plane), nd, plane).astype(dtype)
-                    slice_nd = nd
-                # floats get the TechNote-3 byte-split predictor under
-                # deflate (what GDAL writes for float COGs — ~30% smaller
-                # on smooth fields); integers keep the auto predictor 2
-                pred = 3 if (compress == "deflate"
-                             and np.issubdtype(a.dtype, np.floating)) else None
-                tif = _tc.encode_geotiff(
-                    a, tile=tile, compress=compress, overviews=overviews,
-                    predictor=pred, nodata=slice_nd,
-                    left=left, top=top, dx=dx, dy=dy, epsg=epsg)
-                it_global = t0 + lt
-                fn = f"{path}/slice_{it_global:05d}_{labels[it_global]}.tif"
-                with open(fn, "wb") as fh:
-                    fh.write(tif)
-                rows.append(dict(it=it_global, file=fn, bytes_written=len(tif)))
-            return pd.DataFrame(rows, columns=["it", "file", "bytes_written"]) if rows else \
-                pd.DataFrame(columns=["it", "file", "bytes_written"])
-
-        return self.df.groupBy("ct").applyInPandas(write_slice, out_schema)
+        return self._write_slices(path, bsel, "tif", encode)
 
     # operator API (implemented in gdalcubes_spark.operators.*; thin wrappers
     # so pipelines read like the reference's R verb chains)

@@ -26,6 +26,7 @@ from typing import Iterable, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
 from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_stream, pack_tensor, pin_group_partitions, tensor_of
 from gdalcubes_spark.grid import ChunkGrid
@@ -74,10 +75,6 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
     out_view.dt = (view.t1 - view.t0) + 1
     gout = ChunkGrid(nt=1, ny=g.ny, nx=g.nx, ct=1, cy=g.cy, cx=g.cx)
 
-    # noop elision (reduce_time.cpp:532-535)
-    if view.nt == 1 and all(r in ("min", "max", "mean", "median", "first", "sum", "Q1", "Q3") for r in rnames):
-        pass  # still re-band below; cheap either way
-
     if g.nct == 1:
         # ---- narrow path: whole time axis inside each chunk -----------------
         def fn(t: np.ndarray, coords):
@@ -93,7 +90,6 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
 
     if all(r in R.COMBINABLE for r in rnames):
         # ---- partial/merge path (small shuffle) -----------------------------
-        from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         part_schema = T.StructType([
@@ -166,8 +162,6 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
         return Cube(out_df, out_view, out_bands, gout)
 
     # ---- gather path (exact quantiles) --------------------------------------
-    from pyspark.sql import functions as F
-
     def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("ct")
         ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
@@ -187,7 +181,6 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
         return pd.DataFrame([dict(chunk_id=cid, ct=0, cy=cy, cx=cx, nb=t.shape[0], nt=1,
                                   ny=ny, nx=nx, data=pack_tensor(t))])
 
-    from pyspark.sql import functions as F
     keyed = cube.df.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx"))
     out_df = (pin_group_partitions(keyed, "skey", g.ncy * g.ncx)
               .groupBy("skey").applyInPandas(gather, CHUNK_SCHEMA))
@@ -308,7 +301,6 @@ def value_histogram(cube: Cube, bins: int = 32, vmin: float = None,
     rows BEFORE the single shuffle (codegen HashAggregate combiner), so the
     exchange carries a histogram per task, never cells. vmin/vmax default
     to one cheap min/max aggregate."""
-    from pyspark.sql import functions as F
     cells = cube.cells()
     if vmin is None or vmax is None:
         r = cells.agg(F.min("value").alias("lo"), F.max("value").alias("hi")).first()

@@ -102,8 +102,6 @@ def reduce_time_udf(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
     The full time axis is assembled per spatial chunk before the call."""
     from pyspark.sql import functions as F
 
-    from gdalcubes_spark.grid import ChunkGrid
-
     g, view = cube.chunking, cube.view
     nb = len(cube.bands)
     gout = ChunkGrid(nt=1, ny=g.ny, nx=g.nx, ct=1, cy=g.cy, cx=g.cx)
@@ -136,8 +134,6 @@ def reduce_space_udf(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
                      names: Optional[List[str]] = None) -> Cube:
     """R `reduce_space(x, FUN=...)` (stream_reduce_space.cpp): fn sees each
     time slice's full (nb, ny, nx) plane, returns (k,) — output 1×1/slice."""
-    from gdalcubes_spark.grid import ChunkGrid
-
     g, view = cube.chunking, cube.view
     nb = len(cube.bands)
     gout = ChunkGrid(nt=g.nt, ny=1, nx=1, ct=g.ct, cy=1, cx=1)

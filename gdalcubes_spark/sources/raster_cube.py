@@ -15,14 +15,17 @@ shuffle image payloads once, directly to their chunks:
     images ──[column exprs: it, cx0..cx1, cy0..cy1]──▶ explode(chunk_id)
            ──▶ groupBy(chunk_id).applyInPandas(decode → warp → aggregate)
 
-Both scan variants run one kernel: the per-image loop fold() (decode →
-warp → mask → _AggState.update) and emit() (finalize → fused chain → chunk
-row). At 10^12-image scale the plain scan is one shuffle whose keys are chunk
-ids; hot cells (power-law image density) are handled by the two-phase salted
-variant (salt > 0): fold per (chunk_id, salt bucket) bounds any single task's
-image count, then _AggState.merge per chunk_id — only for decomposable
-aggregation methods; median/none need all values of a cell in one task, so
-they run the plain scan and warn that salt was ignored.
+Both scan variants run one kernel, _ScanKernel: the per-image loop fold()
+(decode → warp → mask → _AggState.update) and emit() (finalize → fused chain
+→ chunk row). At 10^12-image scale the plain scan is one shuffle whose keys
+are chunk ids; hot cells (power-law image density) are handled by the
+two-phase salted variant (salt > 0): fold per (chunk_id, salt bucket) bounds
+any single task's image count, then _AggState.merge per chunk_id — only for
+decomposable aggregation methods; median/none need all values of a cell in
+one task, so they run the plain scan and warn that salt was ignored. The
+incremental scan (streaming.streaming_scan) runs the same _explode plan and
+_ScanKernel, with each chunk's _AggState kept in Spark state between
+micro-batches.
 
 Time-slice assignment replicates cube_coords (view.cpp:416-422) with the
 duration-unit rules of datetime.h: linear epoch arithmetic for second..week
@@ -479,6 +482,120 @@ def _attach_scan_fusion(cube: Cube, make_df, chain: tuple) -> None:
     cube._fuse_into_scan = hook
 
 
+def _explode(images: DataFrame, view: CubeView, g: ChunkGrid) -> DataFrame:
+    """The scan's join side: each image row (batch or streaming) → one row per
+    covering chunk id, by pure column arithmetic on the bbox in the view SRS
+    (no UDF on identity views)."""
+    m = _bbox_in_view_srs(images, view)
+    m = m.withColumn("it", _time_index_col(view).cast("long"))
+    m = m.filter((F.col("it") >= 0) & (F.col("it") < view.nt))
+    dx, dy = view.dx, view.dy
+    # covering cell ranges (inclusive) → covering chunk ranges
+    m = (m.withColumn("x0", F.greatest(F.lit(0), F.floor((F.col("vleft") - view.left) / dx)).cast("long"))
+         .withColumn("x1", F.least(F.lit(view.nx - 1), F.ceil((F.col("vright") - view.left) / dx - _EPS) - 1).cast("long"))
+         .withColumn("y0", F.greatest(F.lit(0), F.floor((view.top - F.col("vtop")) / dy)).cast("long"))
+         .withColumn("y1", F.least(F.lit(view.ny - 1), F.ceil((view.top - F.col("vbottom")) / dy - _EPS) - 1).cast("long"))
+         .filter((F.col("x0") <= F.col("x1")) & (F.col("y0") <= F.col("y1"))))
+    return (m.withColumn("kx", F.explode(F.sequence((F.col("x0") / g.cx).cast("long"),
+                                                    (F.col("x1") / g.cx).cast("long"))))
+            .withColumn("ky", F.explode(F.sequence((F.col("y0") / g.cy).cast("long"),
+                                                   (F.col("y1") / g.cy).cast("long"))))
+            .withColumn("kt", (F.col("it") / g.ct).cast("long"))
+            .withColumn("chunk_id",
+                        F.col("kt") * (g.ncy * g.ncx) + F.col("ky").cast("long") * g.ncx + F.col("kx"))
+            .select("chunk_id", "it", "image_id", "bytes", "fmt", "nleft", "nright", "nbottom", "ntop",
+                    "epsg", "vleft", "vright", "vbottom", "vtop"))
+
+
+class _ScanKernel:
+    """Per-chunk fold and emit of one scan (view, chunk grid, bands, mask,
+    band pushdown): raster_cube's unsalted build and salted partial/merge,
+    and streaming.streaming_scan's stateful update, all run these."""
+
+    def __init__(self, view: CubeView, g: ChunkGrid, bands: List[str],
+                 mask: Optional[ImageMask] = None, band_sel: Optional[List[str]] = None,
+                 use_overviews: bool = False):
+        compute = list(bands)
+        self.band_idx = self.out_idx = None
+        if band_sel is not None:
+            missing = [b for b in band_sel if b not in bands]
+            if missing:
+                raise ValueError(f"unknown bands {missing}; collection has {bands}")
+            compute = list(band_sel)
+            if mask is not None and mask.band not in compute:
+                compute.append(mask.band)
+            self.band_idx = [bands.index(b) for b in compute]
+            self.out_idx = [compute.index(b) for b in band_sel]
+        if mask is not None and mask.band not in compute:
+            raise ValueError(f"mask band {mask.band!r} not in {compute}")
+        self.mask, self.mask_idx = mask, compute.index(mask.band) if mask is not None else -1
+        self.nb, self.nb_payload = len(compute), len(bands)
+        self.out_bands = list(band_sel) if band_sel is not None else list(bands)
+        self.g, self.use_overviews = g, use_overviews
+        self.method, self.resampling = view.aggregation, view.resampling
+        self.view_epsg = parse_epsg(view.srs)
+        self.left, self.top, self.dx, self.dy = view.left, view.top, view.dx, view.dy
+        # two-phase merges (salted partials, streaming micro-batches) rank
+        # first/last by the id's digits: row positions are not comparable
+        # across states
+        self.merge_rank = _digit_rank if self.method in ("first", "last") else _row_rank
+
+    def new_state(self, cid: int) -> _AggState:
+        return _AggState(self.method, (self.nb,) + self.g.chunk_shape(*self.g.chunk_coords(cid)))
+
+    def merged(self, cid: int, blobs) -> _AggState:
+        """A fresh state of chunk `cid` with every to_bytes() blob merged in
+        (from_bytes arrays are read-only views, so never update them)."""
+        st = self.new_state(cid)
+        for data in blobs:
+            st.merge(_AggState.from_bytes(self.method, st.acc.shape, data))
+        return st
+
+    def fold(self, cid: int, pdf: pd.DataFrame, rank) -> _AggState:
+        """The one per-image loop: decode, warp and mask chunk `cid`'s
+        images in image_id order and fold them into a fresh state.
+        rank(sorted image ids) gives each image's first/last order."""
+        g, dx, dy = self.g, self.dx, self.dy
+        (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(*g.chunk_coords(cid))
+        xs = self.left + (np.arange(xx0, xx1) + 0.5) * dx
+        ys = self.top - (np.arange(yy0, yy1) + 0.5) * dy
+        st = self.new_state(cid)
+        pdf = pdf.sort_values("image_id")
+        c = {k: pdf[k].to_numpy() for k in ("it", "bytes", "fmt", "nleft", "nright", "nbottom",
+                                            "ntop", "epsg", "vleft", "vright", "vbottom", "vtop")}
+        order = rank(pdf["image_id"].to_numpy())
+        for i in range(len(pdf)):  # plain array indexing — iterrows is ~10× slower
+            lt = int(c["it"][i]) - t0c
+            if not (0 <= lt < t1c - t0c):
+                continue
+            res = _sample_image(c["bytes"][i], c["fmt"][i],
+                                (c["nleft"][i], c["nright"][i], c["nbottom"][i], c["ntop"][i]),
+                                int(c["epsg"][i]), xs, ys, self.view_epsg, self.resampling, self.nb_payload,
+                                (c["vleft"][i], c["vright"][i], c["vbottom"][i], c["vtop"][i]),
+                                self.band_idx, dxv=dx, dyv=dy, use_overviews=self.use_overviews)
+            if res is None:
+                continue
+            vals, oy, ox = res
+            if self.mask is not None:
+                bad = self.mask.apply(vals[self.mask_idx])
+                vals = np.where(bad[None, ...], np.nan, vals)
+            st.update(vals, lt, oy, ox, order[i])
+        return st
+
+    def emit(self, cid: int, st: _AggState, chain: tuple) -> pd.DataFrame:
+        """Finalize into one chunk row: drop the mask-only band, elide an
+        all-NaN chunk, run the fused narrow chain."""
+        t = st.finalize()
+        if self.out_idx is not None and len(self.out_idx) != t.shape[0]:
+            t = t[self.out_idx]
+        coords = self.g.chunk_coords(cid)
+        if np.all(np.isnan(t)) or (t := apply_chain(chain, t, coords)) is None:
+            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
+        kt, ky, kx = coords
+        return pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=t.shape[0], nt=t.shape[1],
+                                  ny=t.shape[2], nx=t.shape[3], data=pack_tensor(t))])
+
+
 def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
                 chunking: Optional[ChunkGrid] = None, mask: Optional[ImageMask] = None,
                 salt: int = 0, band_sel: Optional[List[str]] = None,
@@ -504,98 +621,10 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
     aggregation — zero extra Arrow round trips (see Cube.map_chunks)."""
     args = dict(locals())  # the select_bands rebuild reuses every argument
     g = chunking or default_chunking(view)
-    view_epsg = parse_epsg(view.srs)
-    full_bands = list(bands)
-    if band_sel is not None:
-        missing = [b for b in band_sel if b not in bands]
-        if missing:
-            raise ValueError(f"unknown bands {missing}; collection has {bands}")
-        compute = list(band_sel)
-        if mask is not None and mask.band not in compute:
-            compute.append(mask.band)
-        band_idx = [bands.index(b) for b in compute]
-        out_idx = [compute.index(b) for b in band_sel]
-        bands = compute
-    else:
-        band_idx = None
-        out_idx = None
-    nb = len(bands)
-    nb_payload = len(full_bands)  # payload band count (validation pre-pushdown)
+    k = _ScanKernel(view, g, bands, mask, band_sel, use_overviews)
+    exploded = _explode(images, view, g)
+
     agg = view.aggregation
-    resampling = view.resampling
-    if mask is not None and mask.band not in bands:
-        raise ValueError(f"mask band {mask.band!r} not in {bands}")
-    mask_idx = bands.index(mask.band) if mask is not None else -1
-
-    m = _bbox_in_view_srs(images, view)
-    m = m.withColumn("it", _time_index_col(view).cast("long"))
-    m = m.filter((F.col("it") >= 0) & (F.col("it") < view.nt))
-    dx, dy = view.dx, view.dy
-    # covering cell ranges (inclusive) → covering chunk ranges
-    m = (m.withColumn("x0", F.greatest(F.lit(0), F.floor((F.col("vleft") - view.left) / dx)).cast("long"))
-         .withColumn("x1", F.least(F.lit(view.nx - 1), F.ceil((F.col("vright") - view.left) / dx - _EPS) - 1).cast("long"))
-         .withColumn("y0", F.greatest(F.lit(0), F.floor((view.top - F.col("vtop")) / dy)).cast("long"))
-         .withColumn("y1", F.least(F.lit(view.ny - 1), F.ceil((view.top - F.col("vbottom")) / dy - _EPS) - 1).cast("long"))
-         .filter((F.col("x0") <= F.col("x1")) & (F.col("y0") <= F.col("y1"))))
-    exploded = (m.withColumn("kx", F.explode(F.sequence((F.col("x0") / g.cx).cast("long"),
-                                                        (F.col("x1") / g.cx).cast("long"))))
-                .withColumn("ky", F.explode(F.sequence((F.col("y0") / g.cy).cast("long"),
-                                                       (F.col("y1") / g.cy).cast("long"))))
-                .withColumn("kt", (F.col("it") / g.ct).cast("long"))
-                .withColumn("chunk_id",
-                            F.col("kt") * (g.ncy * g.ncx) + F.col("ky").cast("long") * g.ncx + F.col("kx"))
-                .select("chunk_id", "it", "image_id", "bytes", "fmt", "nleft", "nright", "nbottom", "ntop",
-                        "epsg", "vleft", "vright", "vbottom", "vtop"))
-
-    vleft, vtop = view.left, view.top
-
-    def new_state(cid: int) -> _AggState:
-        return _AggState(agg, (nb,) + g.chunk_shape(*g.chunk_coords(cid)))
-
-    def fold(cid: int, pdf: pd.DataFrame, rank) -> _AggState:
-        """The one per-image loop: decode, warp and mask chunk `cid`'s
-        images in image_id order and fold them into a fresh state.
-        rank(sorted image ids) gives each image's first/last order."""
-        (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(*g.chunk_coords(cid))
-        xs = vleft + (np.arange(xx0, xx1) + 0.5) * dx
-        ys = vtop - (np.arange(yy0, yy1) + 0.5) * dy
-        st = new_state(cid)
-        pdf = pdf.sort_values("image_id")
-        c = {k: pdf[k].to_numpy() for k in ("it", "bytes", "fmt", "nleft", "nright", "nbottom",
-                                            "ntop", "epsg", "vleft", "vright", "vbottom", "vtop")}
-        order = rank(pdf["image_id"].to_numpy())
-        for i in range(len(pdf)):  # plain array indexing — iterrows is ~10× slower
-            lt = int(c["it"][i]) - t0c
-            if not (0 <= lt < t1c - t0c):
-                continue
-            res = _sample_image(c["bytes"][i], c["fmt"][i],
-                                (c["nleft"][i], c["nright"][i], c["nbottom"][i], c["ntop"][i]),
-                                int(c["epsg"][i]), xs, ys, view_epsg, resampling, nb_payload,
-                                (c["vleft"][i], c["vright"][i], c["vbottom"][i], c["vtop"][i]),
-                                band_idx, dxv=dx, dyv=dy, use_overviews=use_overviews)
-            if res is None:
-                continue
-            vals, oy, ox = res
-            if mask is not None:
-                bad = mask.apply(vals[mask_idx])
-                vals = np.where(bad[None, ...], np.nan, vals)
-            st.update(vals, lt, oy, ox, order[i])
-        return st
-
-    def emit(cid: int, st: _AggState, chain: tuple) -> pd.DataFrame:
-        """Finalize into one chunk row: drop the mask-only band, elide an
-        all-NaN chunk, run the fused narrow chain."""
-        t = st.finalize()
-        if out_idx is not None and len(out_idx) != t.shape[0]:
-            t = t[out_idx]
-        coords = g.chunk_coords(cid)
-        if np.all(np.isnan(t)) or (t := apply_chain(chain, t, coords)) is None:
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-        kt, ky, kx = coords
-        return pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=t.shape[0], nt=t.shape[1],
-                                  ny=t.shape[2], nx=t.shape[3], data=pack_tensor(t))])
-
-    out_bands = list(band_sel) if band_sel is not None else list(bands)
     if salt > 0 and agg not in DECOMPOSABLE:
         warnings.warn(f"salt={salt} ignored: {agg!r} aggregation needs every value of a cell "
                       f"in one task, so the unsalted scan runs", stacklevel=2)
@@ -604,14 +633,10 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
         # Two-phase skew-proof scan: fold per (chunk_id, salt bucket of
         # image_id) into a partial state shipped as bytes, then per chunk_id
         # merge the partials and emit. Bounds any single task to
-        # ~|images_in_chunk|/salt decodes (north-rule skew handling). Same
-        # kernel as the unsalted build; only the first/last rank differs,
-        # because row positions are not comparable across buckets.
-        rank = _digit_rank if agg in ("first", "last") else _row_rank
-
+        # ~|images_in_chunk|/salt decodes (north-rule skew handling).
         def partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
             cid = int(key[0])
-            return pd.DataFrame([dict(chunk_id=cid, state=fold(cid, pdf, rank).to_bytes())])
+            return pd.DataFrame([dict(chunk_id=cid, state=k.fold(cid, pdf, k.merge_rank).to_bytes())])
 
         salted = exploded.withColumn("_salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)))
         part = (pin_group_partitions(salted, ["chunk_id", "_salt"], g.n_chunks * salt)
@@ -620,10 +645,7 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
         def make_df(chain: tuple):
             def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
                 cid = int(key[0])
-                st = new_state(cid)
-                for data in pdf["state"]:
-                    st.merge(_AggState.from_bytes(agg, st.acc.shape, data))
-                return emit(cid, st, chain)
+                return k.emit(cid, k.merged(cid, pdf["state"]), chain)
             return part.groupBy("chunk_id").applyInPandas(merge, CHUNK_SCHEMA)
     else:
         # Pin the decode shuffle's task count: AQE coalesces by POST-SHUFFLE
@@ -639,10 +661,10 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
         def make_df(chain: tuple):
             def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
                 cid = int(key[0])
-                return emit(cid, fold(cid, pdf, _row_rank), chain)
+                return k.emit(cid, k.fold(cid, pdf, _row_rank), chain)
             return pinned.groupBy("chunk_id").applyInPandas(build, CHUNK_SCHEMA)
 
-    cube = Cube(make_df(()), view, out_bands, g)
+    cube = Cube(make_df(()), view, k.out_bands, g)
     # select_bands pushdown hook: the same scan over fewer bands
     cube._scan_rebuild = lambda names: raster_cube(**{**args, "band_sel": list(names)})
     _attach_scan_fusion(cube, make_df, ())
@@ -663,7 +685,8 @@ def _digit_rank(image_ids: np.ndarray) -> np.ndarray:
     for i, image_id in enumerate(image_ids):
         digits = "".join(ch for ch in str(image_id) if ch.isdigit())
         if not digits:
-            raise ValueError("salted first/last needs numeric image ids; use salt=0")
+            raise ValueError("first/last merged across states (salt > 0, streaming) "
+                             "needs numeric image ids")
         out[i] = int(digits)
     return out
 

@@ -5,14 +5,18 @@ process byte protocol, stream.h:38-120 — see operators/stream.py for that).
 Real stream processing for a continuously-arriving image inventory:
 - streaming_inventory(spark, dir): file-source readStream of image-metadata
   parquet drops (the shape of a Kafka/Kinesis feed of new scene arrivals);
+- streaming_scan: the incremental raster_cube — the batch scan's explode
+  plan, fold/emit and _AggState (sources/raster_cube.py), with each chunk's
+  partial state kept in Spark state between micro-batches;
 - streaming_cell_counts: watermarked, windowed per-cube-cell arrival counts —
   the "how much new data landed in each tile this hour" operational metric;
 - streaming_events_window: generic windowed aggregation over the events
   table shape (ts, event_type, value) with late-data handling.
 
-All queries are incremental (state kept by Spark's streaming aggregation) and
-use the same grid column arithmetic as the batch scan, so a tile id means the
-same thing in both planes (the classic lambda-architecture unification).
+All queries are incremental (state kept by Spark's streaming aggregation).
+Image bboxes go through the batch scan's _bbox_in_view_srs and chunk ids
+through its grid arithmetic, so a tile id means the same thing in both
+planes (the classic lambda-architecture unification), in any view SRS.
 """
 
 from __future__ import annotations
@@ -22,8 +26,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gdalcubes_spark.grid import ChunkGrid, CubeView
-from gdalcubes_spark.sources.raster_cube import _time_index_col
+from gdalcubes_spark.grid import ChunkGrid, CubeView, default_chunking
+from gdalcubes_spark.sources.raster_cube import _bbox_in_view_srs, _time_index_col
 from gdalcubes_spark.synth import IMAGE_SCHEMA
 
 
@@ -36,14 +40,16 @@ def streaming_inventory(spark: SparkSession, path: str, max_files_per_trigger: i
 
 def streaming_cell_counts(stream: DataFrame, view: CubeView, chunking: ChunkGrid,
                           watermark: str = "1 hour", window: str = "1 hour") -> DataFrame:
-    """Watermarked windowed count of arriving images per cube chunk —
-    chunk ids computed with the SAME column arithmetic as the batch scan."""
+    """Watermarked windowed count of arriving images per cube chunk: one
+    count per arrival, at the chunk holding the image's top-left corner in
+    the view SRS (clamped into the grid) — the SAME bbox transform and chunk
+    arithmetic as the batch scan."""
     g = chunking
-    m = (stream
+    m = (_bbox_in_view_srs(stream, view)
          .withColumn("it", _time_index_col(view).cast("long"))
          .filter((F.col("it") >= 0) & (F.col("it") < view.nt))
-         .withColumn("x0", F.floor((F.col("left") - view.left) / view.dx))
-         .withColumn("y0", F.floor((view.top - F.col("top")) / view.dy))
+         .withColumn("x0", F.floor((F.col("vleft") - view.left) / view.dx))
+         .withColumn("y0", F.floor((view.top - F.col("vtop")) / view.dy))
          .withColumn("kx", F.greatest(F.lit(0), F.least(F.lit(g.ncx - 1), (F.col("x0") / g.cx).cast("long"))))
          .withColumn("ky", F.greatest(F.lit(0), F.least(F.lit(g.ncy - 1), (F.col("y0") / g.cy).cast("long"))))
          .withColumn("chunk_id", (F.col("it") / g.ct).cast("long") * (g.ncy * g.ncx)
@@ -78,134 +84,50 @@ def run_to_memory(query_df: DataFrame, name: str, output_mode: str = "complete")
     return q
 
 
-def streaming_scan(stream: DataFrame, view: CubeView, bands, chunking: Optional[ChunkGrid] = None,
-                   method: str = "mean", resampling: str = "near") -> DataFrame:
+def streaming_scan(stream: DataFrame, view: CubeView, bands, chunking: Optional[ChunkGrid] = None) -> DataFrame:
     """INCREMENTAL raster_cube: maintain per-chunk aggregation state over a
     stream of arriving images and emit the updated chunk tensor whenever new
     scenes land in it — continuous ingest for a training-data lake, a
     capability the batch-only reference cannot express.
 
-    Same plan shape as the batch scan (explode to covering chunk ids — all
-    JVM columns), then applyInPandasWithState keyed by chunk_id: the state
-    holds the DECOMPOSABLE partial (sum+count for mean; running min/max/sum/
-    count otherwise), so each micro-batch decodes only ITS images; emitted
-    rows carry the finalized tensor plus n_images_seen (monotone — consumers
-    keep the max per chunk). Supported methods: mean, min, max, sum,
-    count_values (the decomposable set; exact median needs all values and
-    stays a batch operation)."""
-    import numpy as np
-    import pandas as pd
+    Same kernel as the batch scan: raster_cube's explode plan (_explode, with
+    the bbox in the view SRS) feeds applyInPandasWithState keyed by
+    chunk_id, and each micro-batch restores the chunk's _AggState, merges in
+    one fold per arrival batch, saves it (to_bytes) and emits — so each
+    micro-batch decodes only ITS images. Aggregation and resampling come from
+    the view, as in raster_cube; the methods are raster_cube.DECOMPOSABLE
+    (the same rule as salt > 0: median/none need every value of a cell at
+    once and stay batch operations). Emitted rows are CHUNK_SCHEMA plus
+    n_images_seen, the images placed on the chunk so far (monotone —
+    consumers keep the row with the max per chunk); a chunk that is still
+    all-NaN is elided, as in the batch scan."""
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from gdalcubes_spark.cube import pack_tensor
-    from gdalcubes_spark.sources.raster_cube import _sample_image
-    from gdalcubes_spark.srs import parse_epsg
+    from gdalcubes_spark.cube import CHUNK_SCHEMA
+    from gdalcubes_spark.sources.raster_cube import DECOMPOSABLE, _explode, _ScanKernel
 
-    if method not in ("mean", "min", "max", "sum", "count_values"):
-        raise ValueError(f"streaming_scan supports decomposable methods only, not {method!r}")
-    g = chunking
-    if g is None:
-        from gdalcubes_spark.grid import default_chunking
-        g = default_chunking(view)
-    nb = len(bands)
-    view_epsg = parse_epsg(view.srs)
-    dx, dy, vleft, vtop = view.dx, view.dy, view.left, view.top
-
-    m = (stream
-         .withColumn("vleft", F.col("left")).withColumn("vright", F.col("right"))
-         .withColumn("vbottom", F.col("bottom")).withColumn("vtop", F.col("top"))
-         .withColumn("it", _time_index_col(view).cast("long"))
-         .filter((F.col("it") >= 0) & (F.col("it") < view.nt))
-         .withColumn("x0", F.greatest(F.lit(0), F.floor((F.col("vleft") - view.left) / dx)).cast("long"))
-         .withColumn("x1", F.least(F.lit(view.nx - 1), F.ceil((F.col("vright") - view.left) / dx - 1e-9) - 1).cast("long"))
-         .withColumn("y0", F.greatest(F.lit(0), F.floor((view.top - F.col("vtop")) / dy)).cast("long"))
-         .withColumn("y1", F.least(F.lit(view.ny - 1), F.ceil((view.top - F.col("vbottom")) / dy - 1e-9) - 1).cast("long"))
-         .filter((F.col("x0") <= F.col("x1")) & (F.col("y0") <= F.col("y1")))
-         .withColumn("kx", F.explode(F.sequence((F.col("x0") / g.cx).cast("long"),
-                                                (F.col("x1") / g.cx).cast("long"))))
-         .withColumn("ky", F.explode(F.sequence((F.col("y0") / g.cy).cast("long"),
-                                                (F.col("y1") / g.cy).cast("long"))))
-         .withColumn("chunk_id", (F.col("it") / g.ct).cast("long") * (g.ncy * g.ncx)
-                     + F.col("ky") * g.ncx + F.col("kx"))
-         .select("chunk_id", "it", "image_id", "bytes", "fmt", "nleft", "nright",
-                 "nbottom", "ntop", "epsg", "vleft", "vright", "vbottom", "vtop"))
-
-    out_schema = T.StructType([
-        T.StructField("chunk_id", T.LongType(), False),
-        T.StructField("ct", T.IntegerType(), False),
-        T.StructField("cy", T.IntegerType(), False),
-        T.StructField("cx", T.IntegerType(), False),
-        T.StructField("nb", T.IntegerType(), False),
-        T.StructField("nt", T.IntegerType(), False),
-        T.StructField("ny", T.IntegerType(), False),
-        T.StructField("nx", T.IntegerType(), False),
-        T.StructField("n_images_seen", T.LongType(), False),
-        T.StructField("data", T.BinaryType(), False),
-    ])
+    if view.aggregation not in DECOMPOSABLE:
+        raise ValueError(f"streaming_scan supports decomposable methods only, not {view.aggregation!r}")
+    g = chunking or default_chunking(view)
+    k = _ScanKernel(view, g, bands)
+    out_schema = T.StructType(CHUNK_SCHEMA.fields + [T.StructField("n_images_seen", T.LongType(), False)])
     state_schema = T.StructType([
-        T.StructField("acc", T.BinaryType(), False),
-        T.StructField("aux", T.BinaryType(), True),   # count tensor for mean
+        T.StructField("state", T.BinaryType(), False),  # _AggState.to_bytes()
         T.StructField("n_seen", T.LongType(), False),
     ])
 
     def update_fn(key, pdf_iter, state: GroupState):
         cid = int(key[0])
-        kt, ky, kx = g.chunk_coords(cid)
-        (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(kt, ky, kx)
-        shape = (nb, t1c - t0c, yy1 - yy0, xx1 - xx0)
-        if state.exists:
-            acc_b, aux_b, n_seen = state.get
-            acc = np.frombuffer(acc_b, dtype="<f8").reshape(shape).copy()
-            cnt = np.frombuffer(aux_b, dtype="<f8").reshape(shape).copy() if aux_b is not None else None
-        else:
-            acc = np.full(shape, np.nan)
-            cnt = np.zeros(shape) if method == "mean" else None
-            n_seen = 0
-        xs = vleft + (np.arange(xx0, xx1) + 0.5) * dx
-        ys = vtop - (np.arange(yy0, yy1) + 0.5) * dy
+        blob, n_seen = state.get if state.exists else (None, 0)
+        st = k.merged(cid, [] if blob is None else [blob])
         for pdf in pdf_iter:
-            c = {k: pdf[k].to_numpy() for k in pdf.columns}
-            for i in range(len(pdf)):
-                lt = int(c["it"][i]) - t0c
-                if not (0 <= lt < shape[1]):
-                    continue
-                res = _sample_image(c["bytes"][i], c["fmt"][i],
-                                    (c["nleft"][i], c["nright"][i], c["nbottom"][i], c["ntop"][i]),
-                                    int(c["epsg"][i]), xs, ys, view_epsg, resampling, nb,
-                                    (c["vleft"][i], c["vright"][i], c["vbottom"][i], c["vtop"][i]),
-                                    None, dxv=dx, dyv=dy)
-                if res is None:
-                    continue
-                vals, oy, ox = res
-                hy, wx = vals.shape[1], vals.shape[2]
-                a = acc[:, lt, oy:oy + hy, ox:ox + wx]
-                ok = ~np.isnan(vals)
-                if method == "min":
-                    a[...] = np.fmin(a, vals)
-                elif method == "max":
-                    a[...] = np.fmax(a, vals)
-                elif method in ("sum", "mean", "count_values"):
-                    first = ok & np.isnan(a)
-                    a[first] = 0.0
-                    if method == "count_values":
-                        a[ok] += 1.0
-                    else:
-                        a[ok] += vals[ok]
-                    if cnt is not None:
-                        cnt[:, lt, oy:oy + hy, ox:ox + wx][ok] += 1
-                n_seen += 1
-        state.update((pack_tensor(acc), pack_tensor(cnt) if cnt is not None else None, n_seen))
-        if method == "mean":
-            with np.errstate(invalid="ignore"):
-                out = acc / np.maximum(cnt, 1)
-        else:
-            out = acc
-        return iter([pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=nb,
-                                        nt=shape[1], ny=shape[2], nx=shape[3],
-                                        n_images_seen=n_seen, data=pack_tensor(out))])])
+            st.merge(k.fold(cid, pdf, k.merge_rank))
+            n_seen += len(pdf)
+        state.update((st.to_bytes(), n_seen))
+        return iter([k.emit(cid, st, ()).assign(n_images_seen=n_seen)])
 
-    return (m.groupBy("chunk_id")
+    return (_explode(stream, view, g).groupBy("chunk_id")
             .applyInPandasWithState(update_fn, out_schema, state_schema,
                                     "update", GroupStateTimeout.NoTimeout))
 

@@ -90,6 +90,42 @@ class TestStreaming:
         per_chunk = spark.sql("SELECT chunk_id, sum(n_images) n FROM cellcounts GROUP BY 1")
         assert per_chunk.count() > 1  # spread over chunks
 
+    def test_streaming_cell_counts_utm_view(self, spark, tmp_path):
+        """Into an EPSG:32632 view, each arrival counts at the chunk holding
+        its top-left corner in UTM — recomputed here in numpy from the
+        inventory's EPSG:4326 bboxes."""
+        from gdalcubes_spark import srs
+        from gdalcubes_spark.streaming import run_to_memory, streaming_cell_counts, streaming_inventory
+        from gdalcubes_spark.synth import ImageLayout, generate_images
+        lay = ImageLayout(left0=8.0, top0=52.0, tile_dx=0.5, tile_dy=0.5, gx=2, gy=2, ntime=2,
+                          tile_w=8, tile_h=8, nb=1, fmts=("raw",))
+        src = str(tmp_path / "utm_drops")
+        imgs = generate_images(spark, 8, lay)
+        imgs.filter("image_id < 'img_000000000004'").write.mode("overwrite").parquet(src)
+        imgs.filter("image_id >= 'img_000000000004'").write.mode("append").parquet(src)
+        l, b = srs.geodetic_to_utm(7.95, 50.95, zone=32)
+        r, t = srs.geodetic_to_utm(9.05, 52.05, zone=32)
+        v = CubeView.create(srs="EPSG:32632", left=float(l), right=float(r), bottom=float(b),
+                            top=float(t), t0="2021-01-01", t1="2021-01-02", dt="P1D", nx=16, ny=16)
+        g = ChunkGrid(nt=2, ny=16, nx=16, ct=1, cy=4, cx=4)
+        stream = streaming_inventory(spark, src, max_files_per_trigger=1)
+        run_to_memory(streaming_cell_counts(stream, v, g, watermark="1 hour", window="1 day"),
+                      "utmcounts")
+        got = {r["chunk_id"]: r["n"] for r in spark.sql(
+            "SELECT chunk_id, sum(n_images) n FROM utmcounts GROUP BY 1").collect()}
+
+        p = imgs.toPandas()
+        X, Y = srs.geodetic_to_utm(np.stack([p.left, p.right, p.left, p.right]),
+                                   np.stack([p.bottom, p.bottom, p.top, p.top]), zone=32)
+        kx = np.clip(np.floor((X.min(axis=0) - v.left) / v.dx) // g.cx, 0, g.ncx - 1)
+        ky = np.clip(np.floor((v.top - Y.max(axis=0)) / v.dy) // g.cy, 0, g.ncy - 1)
+        it = (p.datetime - p.datetime.min()).dt.days.to_numpy()
+        cid = (it // g.ct * g.ncy * g.ncx + ky * g.ncx + kx).astype(int)
+        want = dict(zip(*np.unique(cid, return_counts=True)))
+        assert sum(got.values()) == 8
+        assert len(want) > 2  # corners land in several chunks, not one clamped corner
+        assert got == want
+
     def test_streaming_events_window_matches_batch(self, spark, tmp_path):
         from gdalcubes_spark.streaming import run_to_memory, streaming_events_window
         src = str(tmp_path / "events_dir")
@@ -248,47 +284,113 @@ class TestStreamingEmbedNeardup:
         allv.unpersist()
 
 
+def _chunk_rows_to_array(rows, nb, view, g):
+    """Latest update per chunk (rows) → the dense (nb, nt, ny, nx) cube."""
+    got = np.full((nb, view.nt, view.ny, view.nx), np.nan)
+    for r in rows:
+        t = np.frombuffer(r["data"], dtype="<f8").reshape(r["nb"], r["nt"], r["ny"], r["nx"])
+        (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(r["ct"], r["cy"], r["cx"])
+        got[:, t0:t1, y0:y1, x0:x1] = t
+    return got
+
+
+def _stream_scan_vs_batch(spark, tmp_path, name, lay, n, split, v, g):
+    """Land images [0, split) and [split, n) as two drops, run streaming_scan
+    over them one file per micro-batch, and return (streamed cube from the
+    last update per chunk, batch raster_cube over all n images)."""
+    from gdalcubes_spark.sources.raster_cube import raster_cube
+    from gdalcubes_spark.streaming import run_to_memory, streaming_inventory, streaming_scan
+    from gdalcubes_spark.synth import band_names, generate_images
+
+    src = str(tmp_path / name)
+    all_imgs = generate_images(spark, n, lay)
+    cut = f"image_id < 'img_{split:012d}'"
+    all_imgs.filter(cut).write.mode("overwrite").parquet(src)
+    all_imgs.filter(f"NOT ({cut})").write.mode("append").parquet(src)
+
+    stream = streaming_inventory(spark, src, max_files_per_trigger=1)  # >1 micro-batch
+    run_to_memory(streaming_scan(stream, v, band_names(lay), chunking=g), name, output_mode="update")
+    # consumers keep the LAST update per chunk (n_images_seen is monotone)
+    rows = spark.sql(f"""
+        SELECT * FROM (
+          SELECT *, ROW_NUMBER() OVER (PARTITION BY chunk_id ORDER BY n_images_seen DESC) rn
+          FROM {name}) WHERE rn = 1""").collect()
+    got = _chunk_rows_to_array(rows, lay.nb, v, g)
+    want = raster_cube(all_imgs, v, band_names(lay), chunking=g).collect_array()
+    return got, want
+
+
+def _same(got, want):
+    return np.allclose(np.nan_to_num(got, nan=-1), np.nan_to_num(want, nan=-1))
+
+
 class TestStreamingScan:
     def test_incremental_scan_matches_batch(self, spark, tmp_path):
         """streaming_scan over two arrival batches == batch raster_cube(mean)
         on the full inventory (the incremental-ingest invariant)."""
-        from gdalcubes_spark.sources.raster_cube import raster_cube
-        from gdalcubes_spark.streaming import run_to_memory, streaming_inventory, streaming_scan
-        from gdalcubes_spark.synth import ImageLayout, band_names, generate_images
+        from gdalcubes_spark.synth import ImageLayout
 
         lay = ImageLayout(left0=0, top0=4.0, tile_dx=2.0, tile_dy=2.0, gx=2, gy=2,
                           ntime=2, tile_w=8, tile_h=8, nb=1, fmts=("raw",), overlap=0.25)
-        src = str(tmp_path / "scan_drops")
-        all_imgs = generate_images(spark, 16, lay)
-        all_imgs.filter("image_id < 'img_000000000008'").write.mode("overwrite").parquet(src)
-        all_imgs.filter("image_id >= 'img_000000000008'").write.mode("append").parquet(src)
-
         v = CubeView.create(srs="EPSG:4326", left=0, right=4, bottom=0, top=4,
                             t0="2021-01-01", t1="2021-01-02", dt="P1D", dx=0.5, dy=0.5,
                             aggregation="mean", resampling="near")
         g = ChunkGrid(nt=2, ny=8, nx=8, ct=1, cy=4, cx=4)
-
-        stream = streaming_inventory(spark, src, max_files_per_trigger=1)  # >1 micro-batch
-        out = streaming_scan(stream, v, ["B01"], chunking=g, method="mean")
-        run_to_memory(out, "incscan", output_mode="update")
-
-        # consumers keep the LAST update per chunk (n_images_seen is monotone)
-        rows = spark.sql("""
-            SELECT * FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY chunk_id ORDER BY n_images_seen DESC) rn
-              FROM incscan) WHERE rn = 1""").collect()
-        got = np.full((1, v.nt, v.ny, v.nx), np.nan)
-        for r in rows:
-            t = np.frombuffer(r["data"], dtype="<f8").reshape(r["nb"], r["nt"], r["ny"], r["nx"])
-            (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(r["ct"], r["cy"], r["cx"])
-            got[:, t0:t1, y0:y1, x0:x1] = t
-
-        want = raster_cube(all_imgs, v, band_names(lay), chunking=g).collect_array()
-        assert np.allclose(np.nan_to_num(got, nan=-1), np.nan_to_num(want, nan=-1))
+        got, want = _stream_scan_vs_batch(spark, tmp_path, "incscan", lay, 16, 8, v, g)
+        assert _same(got, want)
         # statefulness really exercised: some chunk saw images in BOTH batches
         multi = spark.sql("SELECT chunk_id, COUNT(*) c FROM incscan GROUP BY 1 HAVING c > 1")
         assert multi.count() > 0
 
+    def test_count_values_partial_coverage(self, spark, tmp_path):
+        """Images cover a quarter of the one chunk per slice: like the batch
+        scan, a touched slice reads 0 (not NaN) where no image has a value."""
+        from gdalcubes_spark.synth import ImageLayout
+
+        lay = ImageLayout(left0=0, top0=4.0, tile_dx=1.0, tile_dy=1.0, gx=2, gy=2,
+                          ntime=2, tile_w=8, tile_h=8, nb=1, fmts=("raw",))
+        v = CubeView.create(srs="EPSG:4326", left=0, right=4, bottom=0, top=4,
+                            t0="2021-01-01", t1="2021-01-02", dt="P1D", dx=0.5, dy=0.5,
+                            aggregation="count_values", resampling="near")
+        g = ChunkGrid(nt=2, ny=8, nx=8, ct=1, cy=8, cx=8)
+        got, want = _stream_scan_vs_batch(spark, tmp_path, "cvscan", lay, 6, 3, v, g)
+        assert (want == 0).any()  # uncovered cells of a touched slice
+        assert _same(got, want)
+
+    def test_mean_into_utm_view(self, spark, tmp_path):
+        """EPSG:4326 inventory into an EPSG:32632 view: the image bboxes are
+        transformed into the view SRS before the chunk explode."""
+        from gdalcubes_spark import srs
+        from gdalcubes_spark.synth import ImageLayout
+
+        lay = ImageLayout(left0=8.0, top0=52.0, tile_dx=0.5, tile_dy=0.5, gx=2, gy=2,
+                          ntime=1, tile_w=16, tile_h=16, nb=1, fmts=("raw",))
+        l, b = srs.geodetic_to_utm(8.05, 51.05, zone=32)
+        r, t = srs.geodetic_to_utm(8.9, 51.9, zone=32)
+        v = CubeView.create(srs="EPSG:32632", left=float(l), right=float(r),
+                            bottom=float(b), top=float(t), t0="2021-01-01", t1="2021-01-01",
+                            dt="P1D", nx=16, ny=16, aggregation="mean", resampling="near")
+        g = ChunkGrid(nt=1, ny=16, nx=16, ct=1, cy=8, cx=8)
+        got, want = _stream_scan_vs_batch(spark, tmp_path, "utmscan", lay, 8, 4, v, g)
+        assert np.isfinite(want).mean() > 0.9
+        assert _same(got, want)
+
+    @pytest.mark.parametrize("method", ["min", "last"])
+    def test_merge_across_restored_state(self, spark, tmp_path, method):
+        """Every chunk gets images in both micro-batches (ids 4-7 land on the
+        tiles of ids 0-3), so the result needs the restored state merged with
+        the new fold — first/last by image id across batches."""
+        from gdalcubes_spark.synth import ImageLayout
+
+        lay = ImageLayout(left0=0, top0=4.0, tile_dx=2.0, tile_dy=2.0, gx=2, gy=2,
+                          ntime=1, tile_w=8, tile_h=8, nb=1, fmts=("raw",), overlap=0.25)
+        v = CubeView.create(srs="EPSG:4326", left=0, right=4, bottom=0, top=4,
+                            t0="2021-01-01", t1="2021-01-01", dt="P1D", dx=0.5, dy=0.5,
+                            aggregation=method, resampling="near")
+        g = ChunkGrid(nt=1, ny=8, nx=8, ct=1, cy=4, cx=4)
+        got, want = _stream_scan_vs_batch(spark, tmp_path, f"merge_{method}", lay, 8, 4, v, g)
+        assert np.isfinite(want).all()
+        assert _same(got, want)
 
     def test_kill_restart_recovers_chunk_state(self, spark, tmp_path):
         """Exactly-once resume drill for streaming_scan: run the query over
@@ -316,7 +418,7 @@ class TestStreamingScan:
 
         def run_once():
             stream = streaming_inventory(spark, src, max_files_per_trigger=4)
-            out = streaming_scan(stream, v, ["B01"], chunking=g, method="mean")
+            out = streaming_scan(stream, v, ["B01"], chunking=g)
             q = (out.writeStream.outputMode("update")
                  .foreachBatch(lambda df, _id: df.write.mode("append").parquet(sink))
                  .option("checkpointLocation", ckpt)
@@ -336,13 +438,9 @@ class TestStreamingScan:
         rows = (upd.withColumn("rn", F.expr(
                     "row_number() OVER (PARTITION BY chunk_id ORDER BY n_images_seen DESC)"))
                 .filter("rn = 1").collect())
-        got = np.full((1, v.nt, v.ny, v.nx), np.nan)
-        for r in rows:
-            t = np.frombuffer(r["data"], dtype="<f8").reshape(r["nb"], r["nt"], r["ny"], r["nx"])
-            (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(r["ct"], r["cy"], r["cx"])
-            got[:, t0:t1, y0:y1, x0:x1] = t
+        got = _chunk_rows_to_array(rows, 1, v, g)
         want = raster_cube(all_imgs, v, band_names(lay), chunking=g).collect_array()
-        assert np.allclose(np.nan_to_num(got, nan=-1), np.nan_to_num(want, nan=-1))
+        assert _same(got, want)
         # restart really combined OLD state with NEW images: some chunk's
         # final row counts images from both batches
         seen = {}
