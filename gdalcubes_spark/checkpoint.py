@@ -5,16 +5,23 @@ the reference lacks entirely (its multiprocess failure story is
 A checkpointed materialization writes three things under one root:
 - chunks/     the chunk-tensor table (parquet; Iceberg-compatible layout —
               swap the writer format on a cluster with an Iceberg catalog)
-- metrics/    one row PER PARTITION per chunk: rows, bytes, nan_fraction,
-              wall-clock ms, attempt id — the per-partition lineage+metrics
-              record the north rule asks for
+- metrics/    one row per committed chunk: chunk_id, the partition that
+              wrote it, n_cells, n_nan, bytes, wall_ms, written_at — the
+              per-chunk lineage+metrics record the north rule asks for
 - _lineage.json   the cube's constructible plan (view JSON, bands, chunking,
               lineage string of the DataFrame plan)
 
+Every commit is ONE Python pass over the chunk rows (_commit): a mapInPandas
+forwards the rows to the chunks/ writer and reports each chunk's metrics row
+to the driver through an accumulator; the driver writes metrics/ from that
+local frame. Nothing is persisted, counted or recomputed, so each commit pays
+one wave of Python tasks.
+
 resume(): recompute ONLY the chunk ids missing from the checkpoint (a
 left-anti join on chunk_id — at 10^12 scale this is metadata-sized) and
-append. Combined with Spark's native task retry this gives exact
-resume-after-executor-loss: a re-submitted job skips every committed chunk.
+append them through the same commit pass. Combined with Spark's native task
+retry this gives exact resume-after-executor-loss: a re-submitted job skips
+every committed chunk.
 """
 
 from __future__ import annotations
@@ -22,12 +29,12 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Iterable, Optional
+from typing import Iterable
 
 import numpy as np
 import pandas as pd
+from pyspark import AccumulatorParam, TaskContext
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube
@@ -44,52 +51,58 @@ _METRIC_SCHEMA = T.StructType([
 ])
 
 
-def _with_metrics(df):
-    """Wrap chunk rows so each pass also emits a per-partition metrics row
-    (returned as a second DataFrame via an extra marker column)."""
-    from pyspark import TaskContext
+class _RowsParam(AccumulatorParam):
+    """Accumulator of metric-row tuples: tasks append, the driver reads."""
 
-    combined = T.StructType(CHUNK_SCHEMA.fields + [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("n_nan", T.LongType(), False),
-        T.StructField("wall_ms", T.DoubleType(), False),
-    ])
+    def zero(self, value):
+        return []
 
-    def gen(batches: Iterable[pd.DataFrame]):
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
+    def addInPlace(self, a, b):
+        a.extend(b)
+        return a
+
+
+def _commit(df, path: str, mode: str) -> int:
+    """Write `df`'s chunk rows to `path`/chunks in ONE Python pass and their
+    metrics rows to `path`/metrics; returns the number of chunks committed.
+
+    The pass forwards each Arrow batch unchanged and reports one metrics row
+    per chunk through an accumulator. wall_ms is the batch's wait since the
+    previous yield (the upstream work that produced it) plus the NaN count,
+    split evenly over its chunks. A re-run task reports again, so the driver
+    keeps the latest row per chunk_id, then writes metrics/ from a local
+    frame (no Python worker, no second pass over the chunks)."""
+    spark = df.sparkSession
+    acc = spark.sparkContext.accumulator([], _RowsParam())
+
+    def commit(batches: Iterable[pd.DataFrame]):
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx else -1
+        t0 = time.perf_counter()
         for pdf in batches:
-            t0 = time.time()
-            if len(pdf) == 0:
-                yield pd.DataFrame({f.name: pd.Series(dtype="object") for f in combined.fields})
-                continue
-            nnan = []
-            for _, row in pdf.iterrows():
-                a = np.frombuffer(row["data"], dtype="<f8")
-                nnan.append(int(np.isnan(a).sum()))
-            out = pdf.copy()
-            out["partition_id"] = pid
-            out["n_nan"] = nnan
-            out["wall_ms"] = (time.time() - t0) * 1000.0 / max(len(pdf), 1)
-            yield out
+            rows = [(int(cid), pid, int(nb) * int(nt) * int(ny) * int(nx),
+                     int(np.isnan(np.frombuffer(data, dtype="<f8")).sum()), len(data))
+                    for cid, nb, nt, ny, nx, data in zip(pdf["chunk_id"], pdf["nb"], pdf["nt"],
+                                                         pdf["ny"], pdf["nx"], pdf["data"])]
+            ms = (time.perf_counter() - t0) * 1000.0 / max(len(rows), 1)
+            now = time.time()
+            acc.add([r + (ms, now) for r in rows])
+            yield pdf
+            t0 = time.perf_counter()
 
-    return df.mapInPandas(gen, combined)
+    chunk_cols = [f.name for f in CHUNK_SCHEMA.fields]
+    df.select(chunk_cols).mapInPandas(commit, CHUNK_SCHEMA).write.mode(mode).parquet(f"{path}/chunks")
+    m = (pd.DataFrame(acc.value, columns=_METRIC_SCHEMA.fieldNames())
+         .sort_values("written_at", kind="stable").drop_duplicates("chunk_id", keep="last"))
+    acc.value = []  # the driver's accumulator registry keeps `acc` alive
+    if len(m) or mode == "overwrite":
+        spark.createDataFrame(m, _METRIC_SCHEMA).write.mode(mode).parquet(f"{path}/metrics")
+    return len(m)
 
 
 def write_checkpoint(cube: Cube, path: str, mode: str = "overwrite") -> None:
-    """Materialize cube + per-partition lineage/metrics (one pass)."""
-    spark = cube.df.sparkSession
-    enriched = _with_metrics(cube.df)
-    enriched.persist()
-    try:
-        chunk_cols = [f.name for f in CHUNK_SCHEMA.fields]
-        enriched.select(chunk_cols).write.mode(mode).parquet(f"{path}/chunks")
-        (enriched.select("chunk_id", "partition_id",
-                         (F.col("nb").cast("long") * F.col("nt") * F.col("ny") * F.col("nx")).alias("n_cells"),
-                         "n_nan", F.length("data").cast("long").alias("bytes"), "wall_ms",
-                         F.lit(time.time()).alias("written_at"))
-         .write.mode(mode).parquet(f"{path}/metrics"))
-    finally:
-        enriched.unpersist()
+    """Materialize cube + per-chunk lineage/metrics (one Python pass)."""
+    _commit(cube.df, path, mode)
     lineage = dict(view=cube.view.to_json(), bands=cube.bands,
                    chunking=dict(ct=cube.chunking.ct, cy=cube.chunking.cy, cx=cube.chunking.cx),
                    plan="\n".join(cube.df._jdf.queryExecution().simpleString().splitlines()[:50]),
@@ -123,7 +136,8 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
 
 def resume(cube: Cube, path: str) -> int:
     """Compute + append only the chunks NOT already committed at `path`
-    (exact resume after job loss). Returns number of chunks appended."""
+    (exact resume after job loss). Returns the number of chunks appended:
+    -1 for a fresh full write, 0 when the checkpoint was complete."""
     spark = cube.df.sparkSession
     # Fall back to a fresh full write ONLY when the checkpoint genuinely does
     # not exist; a transient read error (storage/permission) must propagate
@@ -131,20 +145,5 @@ def resume(cube: Cube, path: str) -> int:
     if not _fs_exists(spark, f"{path}/_lineage.json") and not _fs_exists(spark, f"{path}/chunks"):
         write_checkpoint(cube, path, mode="overwrite")
         return -1
-    done = spark.read.parquet(f"{path}/chunks").select("chunk_id").distinct()
-    missing = cube.df.join(done, "chunk_id", "left_anti")
-    n = missing.count()
-    if n > 0:
-        remaining = Cube(missing, cube.view, cube.bands, cube.chunking)
-        enriched = _with_metrics(remaining.df)
-        enriched.persist()
-        try:
-            enriched.select([f.name for f in CHUNK_SCHEMA.fields]).write.mode("append").parquet(f"{path}/chunks")
-            (enriched.select("chunk_id", "partition_id",
-                             (F.col("nb").cast("long") * F.col("nt") * F.col("ny") * F.col("nx")).alias("n_cells"),
-                             "n_nan", F.length("data").cast("long").alias("bytes"), "wall_ms",
-                             F.lit(time.time()).alias("written_at"))
-             .write.mode("append").parquet(f"{path}/metrics"))
-        finally:
-            enriched.unpersist()
-    return n
+    done = spark.read.parquet(f"{path}/chunks").select("chunk_id")
+    return _commit(cube.df.join(done, "chunk_id", "left_anti"), path, "append")

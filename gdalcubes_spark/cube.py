@@ -75,14 +75,17 @@ def pin_group_partitions(df: DataFrame, keys, n_groups: int) -> DataFrame:
     of magnitude more per byte than columnar work — byte-based coalescing was
     observed collapsing 32 cores' worth of decode onto 5 tasks. A
     user-numbered repartition satisfies the downstream clustering requirement
-    (no second exchange) and AQE leaves it alone. Count = 4× cluster
-    parallelism (scheduler slack for per-group cost variance), capped by the
-    number of groups."""
+    (no second exchange) and AQE leaves it alone.
+
+    Count = cluster parallelism, capped by the number of groups: ONE wave of
+    Python tasks. Every Python task pays a fixed JVM-side cost before its UDF
+    runs (≈0.22 s on a 4-core host, `tools/python_task_cost.py`), so each
+    extra wave costs that much again whether a task folds 8 images or 52."""
     try:
         par = df.sparkSession.sparkContext.defaultParallelism
     except Exception:
         par = 32
-    n = max(1, min(int(n_groups), 4 * par))
+    n = max(1, min(int(n_groups), par))
     return df.repartition(n, *([keys] if isinstance(keys, str) else list(keys)))
 
 
@@ -293,7 +296,7 @@ class Cube:
 
         nb = len(bands)
 
-        def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def assemble(key, pdf):
             cid = int(key[0])
             ict, icy, icx = g.chunk_coords(cid)
             (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(ict, icy, icx)
@@ -463,7 +466,7 @@ class Cube:
         _os.makedirs(path, exist_ok=True)
         cols = [f.name for f in _SLICE_FILES_SCHEMA.fields]
 
-        def write_slice(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def write_slice(key, pdf):
             (t0, t1), _, _ = g.chunk_cell_range(int(key[0]), 0, 0)
             parts = [(g.chunk_cell_range(int(row["ct"]), int(row["cy"]), int(row["cx"])), tensor_of(row)[bsel])
                      for _, row in pdf.iterrows()]

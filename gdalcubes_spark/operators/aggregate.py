@@ -94,7 +94,7 @@ def _aggregate(cube: Cube, out_view, gout: ChunkGrid, t_map: np.ndarray,
 
     fn = _PANDAS_AGG[method]
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(key, pdf):
         ocid = int(key[0])
         kt, ky, kx = gout.chunk_coords(ocid)
         ntc, nyc, nxc = gout.chunk_shape(kt, ky, kx)

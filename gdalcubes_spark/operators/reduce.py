@@ -126,7 +126,7 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
                 yield pd.DataFrame(rows, columns=[f.name for f in part_schema.fields]) if rows else \
                     pd.DataFrame({f.name: pd.Series(dtype="object") for f in part_schema.fields})
 
-        def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def merge_group(key, pdf):
             pdf = pdf.sort_values("ct")  # time order matters for which_*
             ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
             nstates = sum(len(R.STATE_KEYS[r]) for r in rnames)
@@ -162,7 +162,7 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
         return Cube(out_df, out_view, out_bands, gout)
 
     # ---- gather path (exact quantiles) --------------------------------------
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gather(key, pdf):
         pdf = pdf.sort_values("ct")
         ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
         vals, its = [], []
@@ -236,7 +236,7 @@ def reduce_space(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] 
                     pd.DataFrame(dict(ct=pd.Series(dtype="int32"), nt=pd.Series(dtype="int32"),
                                       state=pd.Series(dtype="object")))
 
-        def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def merge_group(key, pdf):
             nt = int(pdf.iloc[0]["nt"])
             nstates = sum(len(R.STATE_KEYS[r]) for r in rnames)
             acc = None
@@ -269,7 +269,7 @@ def reduce_space(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] 
 
     # gather path for exact median: all spatial chunks of a t-slab in one group.
     # Memory bound = one full t-slab, same as the reference's per-thread scan.
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gather(key, pdf):
         nt = None
         chunks = []
         for _, row in pdf.iterrows():

@@ -156,7 +156,7 @@ def select_time(cube: Cube, datetimes: Sequence) -> Cube:
                 pd.DataFrame({f.name: pd.Series(dtype="object") for f in piece_schema.fields})
 
     # assemble slices per output chunk (ct dimension = label index, ct_chunk = nt)
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf):
         cy, cx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
         ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
         nb = int(pdf.iloc[0]["nb"])
@@ -298,7 +298,7 @@ def _regrid(cube: Cube, trange, yrange, xrange, out_view: CubeView, gout: ChunkG
 
     nb = len(cube.bands)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf):
         cid = int(key[0])
         kt, ky, kx = gout.chunk_coords(cid)
         nt, ny, nx = gout.chunk_shape(kt, ky, kx)

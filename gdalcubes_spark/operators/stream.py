@@ -69,7 +69,7 @@ def apply_time(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
 
     nb = len(cube.bands)
 
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gather(key, pdf):
         pdf = pdf.sort_values("ct")
         icy, icx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
         ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
@@ -107,7 +107,7 @@ def reduce_time_udf(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
     gout = ChunkGrid(nt=1, ny=g.ny, nx=g.nx, ct=1, cy=g.cy, cx=g.cx)
     out_view = view.copy(dt=(view.t1 - view.t0) + 1, labels=None)
 
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gather(key, pdf):
         pdf = pdf.sort_values("ct")
         icy, icx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
         ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
@@ -141,7 +141,7 @@ def reduce_space_udf(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
     out_view.set_x_axis(view.left, view.right, n=1)
     out_view.set_y_axis(view.bottom, view.top, n=1)
 
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gather(key, pdf):
         ict = int(key[0])
         (t0c, t1c), _, _ = g.chunk_cell_range(ict, 0, 0)
         ntc = t1c - t0c

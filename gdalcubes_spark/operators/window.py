@@ -129,7 +129,7 @@ def window_time(cube: Cube, window: Sequence[int], reducer=None, kernel=None) ->
 
     nb_in = len(cube.bands)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf):
         cid = int(key[0])
         kt, ky, kx = g.chunk_coords(cid)
         (kt0, kt1), (y0, y1), (x0, x1) = g.chunk_cell_range(kt, ky, kx)
@@ -273,7 +273,7 @@ def window_space(cube: Cube, reducer=None, kernel=None, window: Optional[Sequenc
 
     nb_in = len(cube.bands)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf):
         cid = int(key[0])
         kt, ky, kx = g.chunk_coords(cid)
         (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(kt, ky, kx)
@@ -354,7 +354,7 @@ def fill_time(cube: Cube, method: str = "linear") -> Cube:
         return cube.map_chunks(fn)
 
     # gather the full time column per spatial chunk (fill scans arbitrarily far)
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gather(key, pdf):
         pdf = pdf.sort_values("ct")
         icy, icx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
         ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])

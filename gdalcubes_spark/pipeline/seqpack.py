@@ -47,7 +47,7 @@ def pack_sequences(df: DataFrame, max_len: int, id_col: str = "doc_id",
         F.col(len_col).cast("long").alias("n_tokens"),
         F.pmod(h, F.lit(n_buckets)).cast("int").alias("bucket"))
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key, pdf):
         bucket = int(key[0])
         pdf = pdf.sort_values(["n_tokens", "doc_id"], ascending=[False, True])
         lens = pdf["n_tokens"].to_numpy()

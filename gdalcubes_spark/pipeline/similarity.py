@@ -695,7 +695,7 @@ def ivfpq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     qprobe = queries.select(id_col, vec_col).mapInPandas(probes, q_schema)
 
     # --- candidate scoring: equi-join on centroid, ADC per group (numpy)
-    def adc(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def adc(key, pdf):
         if len(pdf) == 0:
             return pd.DataFrame({f.name: pd.Series(dtype="float64") for f in _PAIR_SCHEMA.fields})
         lut = np.frombuffer(pdf["lut"].iloc[0], dtype=np.float32).reshape(m, -1)

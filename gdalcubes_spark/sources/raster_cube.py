@@ -634,7 +634,7 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
         # image_id) into a partial state shipped as bytes, then per chunk_id
         # merge the partials and emit. Bounds any single task to
         # ~|images_in_chunk|/salt decodes (north-rule skew handling).
-        def partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def partial(key, pdf):
             cid = int(key[0])
             return pd.DataFrame([dict(chunk_id=cid, state=k.fold(cid, pdf, k.merge_rank).to_bytes())])
 
@@ -643,7 +643,7 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
                 .groupBy("chunk_id", "_salt").applyInPandas(partial, _PARTIAL_SCHEMA))
 
         def make_df(chain: tuple):
-            def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            def merge(key, pdf):
                 cid = int(key[0])
                 return k.emit(cid, k.merged(cid, pdf["state"]), chain)
             return part.groupBy("chunk_id").applyInPandas(merge, CHUNK_SCHEMA)
@@ -654,12 +654,12 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
         # byte-based coalescing was observed collapsing 32 cores' worth of
         # decode into 5 tasks. An explicit repartition(n, chunk_id) satisfies
         # the groupBy's clustering (no second exchange) and AQE leaves
-        # user-numbered repartitions alone. n = 4x parallelism oversubscription
-        # (scheduler slack for per-chunk cost variance), capped by chunk count.
+        # user-numbered repartitions alone. n = parallelism, capped by chunk
+        # count: one wave, since each Python task pays a fixed start-up cost.
         pinned = pin_group_partitions(exploded, "chunk_id", g.n_chunks)
 
         def make_df(chain: tuple):
-            def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            def build(key, pdf):
                 cid = int(key[0])
                 return k.emit(cid, k.fold(cid, pdf, _row_rank), chain)
             return pinned.groupBy("chunk_id").applyInPandas(build, CHUNK_SCHEMA)

@@ -58,6 +58,39 @@ class TestCheckpoint:
         # second resume is a no-op
         assert resume(c, path) == 0
 
+    def test_resume_metrics_one_row_per_chunk(self, spark, tmp_path):
+        """write → lose one committed part file (and the metrics rows of its
+        chunks, as a lost commit would) → resume: metrics/ holds one row per
+        committed chunk, measured from the chunk itself."""
+        from gdalcubes_spark.checkpoint import resume, write_checkpoint
+        g = ChunkGrid(nt=6, ny=10, nx=10, ct=2, cy=5, cx=5)
+        c = dummy_cube(spark, view10(), 2, 1.0, chunking=g).filter_pixel("ix + iy < 12")
+        path = str(tmp_path / "ckpt_m")
+        write_checkpoint(c, path)
+        files = sorted(glob.glob(f"{path}/chunks/part-*.parquet"))
+        assert len(files) > 1
+        lost = {r["chunk_id"] for r in spark.read.parquet(files[0]).select("chunk_id").collect()}
+        os.remove(files[0])
+        metrics = spark.read.parquet(f"{path}/metrics")
+        kept = metrics.filter(~F.col("chunk_id").isin(list(lost))).toPandas()
+        shutil.rmtree(f"{path}/metrics")
+        spark.createDataFrame(kept, metrics.schema).write.parquet(f"{path}/metrics")
+        assert resume(c, path) == len(lost) > 0
+
+        chunks = spark.read.parquet(f"{path}/chunks").toPandas().set_index("chunk_id")
+        m = spark.read.parquet(f"{path}/metrics").toPandas()
+        assert m["chunk_id"].is_unique and set(m["chunk_id"]) == set(chunks.index)
+        assert len(chunks) == c.df.count()
+        m = m.set_index("chunk_id").loc[chunks.index]
+        want_nan = [int(np.isnan(np.frombuffer(d, dtype="<f8")).sum()) for d in chunks["data"]]
+        assert list(m["n_nan"]) == want_nan and 0 < sum(want_nan) < m["n_cells"].sum()
+        assert list(m["n_cells"]) == list(chunks.nb * chunks.nt * chunks.ny * chunks.nx)
+        assert list(m["bytes"]) == [len(d) for d in chunks["data"]]
+        assert (m["wall_ms"] > 0).all()
+        # complete checkpoint: a second resume commits and reports nothing
+        assert resume(c, path) == 0
+        assert spark.read.parquet(f"{path}/metrics").count() == len(chunks)
+
     def test_cube_parquet_roundtrip(self, spark, tmp_path):
         c = dummy_cube(spark, view10(), 1, 7.0)
         p = str(tmp_path / "cube_pq")

@@ -2,6 +2,9 @@
 Catalyst do its job — predicate pushdown to parquet, partition pruning on
 chunk coords, broadcast of small join sides."""
 
+import inspect
+import re
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -48,6 +51,39 @@ class TestPlans:
         assert "LeftSemi" in plan
         # and the result is correct: 4 cells × 6 slices
         assert rows.count() == 24
+
+    def test_tensor_udf_stages_pinned_to_one_wave(self, spark):
+        """The scan's, the reduce_time gather's and both extract_geom cogroup
+        sides' user-numbered exchanges hold min(n_groups, parallelism)
+        partitions: one wave of Python tasks, no oversubscription."""
+        from gdalcubes_spark import cube as cube_mod
+        from gdalcubes_spark.geom import rect_wkt
+        from gdalcubes_spark.operators.extract_geom import extract_geom
+        from gdalcubes_spark.sources.raster_cube import raster_cube
+        from gdalcubes_spark.synth import ImageLayout, band_names, generate_images
+        assert "4 * par" not in inspect.getsource(cube_mod.pin_group_partitions)
+        par = spark.sparkContext.defaultParallelism
+
+        def pinned(df):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            return sorted((k, int(n)) for k, n in
+                          re.findall(r"hashpartitioning\((\w+)#\w+, (\d+)\), REPARTITION_BY_NUM", plan))
+
+        lay = ImageLayout(left0=0.0, top0=4.0, tile_dx=2.0, tile_dy=2.0, gx=2, gy=2,
+                          ntime=3, tile_w=16, tile_h=16, nb=1, fmts=("raw",))
+        v = CubeView.create(srs="EPSG:4326", left=0, right=4, bottom=0, top=4,
+                            t0="2021-01-01", t1="2021-01-03", dt="P1D", dx=0.25, dy=0.25,
+                            aggregation="median", resampling="near")
+        g = ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=1, cy=8, cx=8)  # 12 chunks, 4 spatial
+        scan = raster_cube(generate_images(spark, 12, lay), v, band_names(lay), chunking=g)
+        med = scan.reduce_time(f"median({band_names(lay)[0]})")
+        feats = spark.createDataFrame([(1, rect_wkt(0.1, 0.1, 3.9, 3.9))], "fid long, wkt string")
+        n_scan, n_red = min(g.n_chunks, par), min(g.ncy * g.ncx, par)
+        n_ex = min(med.chunking.n_chunks, par)
+        assert pinned(scan.df) == [("chunk_id", n_scan)]
+        assert pinned(med.df) == sorted([("chunk_id", n_scan), ("skey", n_red)])
+        assert pinned(extract_geom(med, feats)) == sorted(
+            [("chunk_id", n_scan), ("skey", n_red), ("chunk_id", n_ex), ("chunk_id", n_ex)])
 
     def test_whole_stage_codegen_for_text_features(self, spark):
         # text analysis must stay JVM-side: no Python UDF nodes in the plan

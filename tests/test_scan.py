@@ -208,6 +208,23 @@ class TestRasterCube:
         with pytest.warns(UserWarning, match="salt=4 ignored"):
             raster_cube(images, v, band_names(LAYOUT), salt=4)
 
+    def test_median_scan_reduce_raise_no_user_warning(self, spark, images):
+        """Grouped UDFs carry no partial type hints, so PySpark's "Cannot
+        infer the eval type from type hints" UserWarning never fires while a
+        median scan → reduce_time is built and collected."""
+        import warnings
+        v = scan_view("median")
+        g = ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=1, cy=8, cx=8)
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", UserWarning)
+            c = raster_cube(images, v, band_names(LAYOUT), chunking=g)
+            got = c.reduce_time(*[f"median({b})" for b in band_names(LAYOUT)]).collect_array()
+            scan = c.collect_array()
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)  # all-NaN cells
+            want = np.nanmedian(scan, axis=1, keepdims=True)
+        assert np.allclose(np.nan_to_num(got, nan=-1), np.nan_to_num(want, nan=-1))
+
     def test_geotiff_inventory_scan_exact(self, spark):
         # fmt='tif' payloads (real tiled-Deflate GeoTIFF bytes from
         # tiffcodec.py) flow through the distributed scan losslessly
