@@ -15,13 +15,16 @@ Every commit is ONE Python pass over the chunk rows (_commit): a mapInPandas
 forwards the rows to the chunks/ writer and reports each chunk's metrics row
 to the driver through an accumulator; the driver writes metrics/ from that
 local frame. Nothing is persisted, counted or recomputed, so each commit pays
-one wave of Python tasks.
+one wave of Python tasks. The price is driver-side: the metrics rows (about
+60 bytes each) travel through the scheduler's accumulator merges and sit in
+driver memory as one pandas frame, so commit cost on the driver grows with
+the number of chunks committed — fine at 10^5 chunks, not at 10^9 (see the
+ROADMAP item on a distributed metrics write).
 
 resume(): recompute ONLY the chunk ids missing from the checkpoint (a
-left-anti join on chunk_id — at 10^12 scale this is metadata-sized) and
-append them through the same commit pass. Combined with Spark's native task
-retry this gives exact resume-after-executor-loss: a re-submitted job skips
-every committed chunk.
+left-anti join on chunk_id) and append them through the same commit pass.
+Combined with Spark's native task retry this gives exact
+resume-after-executor-loss: a re-submitted job skips every committed chunk.
 """
 
 from __future__ import annotations
@@ -71,7 +74,8 @@ def _commit(df, path: str, mode: str) -> int:
     previous yield (the upstream work that produced it) plus the NaN count,
     split evenly over its chunks. A re-run task reports again, so the driver
     keeps the latest row per chunk_id, then writes metrics/ from a local
-    frame (no Python worker, no second pass over the chunks)."""
+    frame (no Python worker, no second pass over the chunks). Driver memory
+    and accumulator-merge time are O(chunks committed)."""
     spark = df.sparkSession
     acc = spark.sparkContext.accumulator([], _RowsParam())
 
@@ -123,14 +127,17 @@ def read_checkpoint(spark: SparkSession, path: str) -> Cube:
     return Cube(df.select([f.name for f in CHUNK_SCHEMA.fields]), view, list(lin["bands"]), g)
 
 
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for `path`, so s3a://, hdfs:// and file: URIs
+    all resolve against the filesystem the EXECUTING cluster sees — a
+    driver-local os.path.exists would report a remote checkpoint as absent
+    and let resume() silently overwrite committed chunks."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem API, so s3a://, hdfs://
-    and file: URIs all resolve against the filesystem the EXECUTING cluster
-    sees — a driver-local os.path.exists would report a remote checkpoint as
-    absent and let resume() silently overwrite committed chunks."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = _fs(spark, path)
     return bool(fs.exists(p))
 
 
@@ -145,5 +152,14 @@ def resume(cube: Cube, path: str) -> int:
     if not _fs_exists(spark, f"{path}/_lineage.json") and not _fs_exists(spark, f"{path}/chunks"):
         write_checkpoint(cube, path, mode="overwrite")
         return -1
+    fs, chunks = _fs(spark, f"{path}/chunks")
+    before = {st.getPath().toString() for st in fs.listStatus(chunks)}
     done = spark.read.parquet(f"{path}/chunks").select("chunk_id")
-    return _commit(cube.df.join(done, "chunk_id", "left_anti"), path, "append")
+    n = _commit(cube.df.join(done, "chunk_id", "left_anti"), path, "append")
+    if n == 0:
+        # Spark writes write-task 0's part file even when it has no rows;
+        # drop it so repeated resumes of a complete checkpoint add no files.
+        for st in fs.listStatus(chunks):
+            if st.getPath().toString() not in before:
+                fs.delete(st.getPath(), False)
+    return n

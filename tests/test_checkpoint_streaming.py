@@ -87,9 +87,12 @@ class TestCheckpoint:
         assert list(m["n_cells"]) == list(chunks.nb * chunks.nt * chunks.ny * chunks.nx)
         assert list(m["bytes"]) == [len(d) for d in chunks["data"]]
         assert (m["wall_ms"] > 0).all()
-        # complete checkpoint: a second resume commits and reports nothing
+        # complete checkpoint: a second resume commits and reports nothing,
+        # and leaves no empty part file behind
+        parts = sorted(os.listdir(f"{path}/chunks"))
         assert resume(c, path) == 0
         assert spark.read.parquet(f"{path}/metrics").count() == len(chunks)
+        assert sorted(os.listdir(f"{path}/chunks")) == parts
 
     def test_cube_parquet_roundtrip(self, spark, tmp_path):
         c = dummy_cube(spark, view10(), 1, 7.0)

@@ -8,14 +8,14 @@ wave of Python tasks. The engine's tensor-UDF stages are pinned to one wave
 (`cube.pin_group_partitions`); this table is how to re-check that rule on
 another host.
 
-Usage: PYTHONPATH=. python tools/python_task_cost.py [--cores N] [--repeats K]
-Prints one table row per partition count (median of K timed runs after one
-warm-up run) and a final JSON line.
+Usage: PYTHONPATH=. python tools/python_task_cost.py
+Runs at local[<CPUs this process may use>]. Prints one table row per
+partition count (median of 3 timed runs after one warm-up run) and a final
+JSON line.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import statistics
@@ -23,16 +23,18 @@ import time
 
 import pandas as pd
 
+REPEATS = 3
+
 
 def _identity(batches):
     for pdf in batches:
         yield pdf
 
 
-def _timed(fn, repeats: int) -> float:
+def _timed(fn) -> float:
     fn()  # warm-up: worker start, JIT
     xs = []
-    for _ in range(repeats):
+    for _ in range(REPEATS):
         t0 = time.perf_counter()
         fn()
         xs.append(time.perf_counter() - t0)
@@ -40,13 +42,9 @@ def _timed(fn, repeats: int) -> float:
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--cores", type=int, default=len(os.sched_getaffinity(0)))
-    ap.add_argument("--repeats", type=int, default=3)
-    a = ap.parse_args()
-
+    cores = len(os.sched_getaffinity(0))
     from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master(f"local[{a.cores}]").appName("python_task_cost")
+    spark = (SparkSession.builder.master(f"local[{cores}]").appName("python_task_cost")
              .config("spark.ui.enabled", "false")
              .config("spark.ui.showConsoleProgress", "false")
              .config("spark.driver.memory", "1g")
@@ -60,12 +58,12 @@ def main() -> None:
         for n in (1, p, 2 * p, 4 * p, 8 * p):
             df = spark.range(64).repartition(n).cache()
             df.count()
-            py_s = _timed(lambda: df.mapInPandas(_identity, df.schema).collect(), a.repeats)
-            jvm_s = _timed(lambda: df.collect(), a.repeats)
+            py_s = _timed(lambda: df.mapInPandas(_identity, df.schema).collect())
+            jvm_s = _timed(lambda: df.collect())
             df.unpersist()
             rows.append(dict(partitions=n, waves=-(-n // p), python_s=round(py_s, 3), jvm_s=round(jvm_s, 3)))
         print(pd.DataFrame(rows).to_string(index=False))
-        print(json.dumps(dict(cores=a.cores, parallelism=p, repeats=a.repeats, rows=rows)))
+        print(json.dumps(dict(cores=cores, parallelism=p, repeats=REPEATS, rows=rows)))
     finally:
         spark.stop()
 
