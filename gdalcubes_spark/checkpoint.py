@@ -11,7 +11,7 @@ A checkpointed materialization writes three things under one root:
 - _lineage.json   the cube's constructible plan (view JSON, bands, chunking,
               lineage string of the DataFrame plan)
 
-Every commit is ONE Python pass over the chunk rows (_commit): a mapInPandas
+Every commit is ONE Python pass over the chunk rows (_commit): a mapInArrow
 forwards the rows to the chunks/ writer and reports each chunk's metrics row
 to the driver through an accumulator; the driver writes metrics/ from that
 local frame. Nothing is persisted, counted or recomputed, so each commit pays
@@ -36,11 +36,12 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark import AccumulatorParam, TaskContext
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube
+from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_rows
 from gdalcubes_spark.grid import ChunkGrid, CubeView
 
 _METRIC_SCHEMA = T.StructType([
@@ -79,23 +80,20 @@ def _commit(df, path: str, mode: str) -> int:
     spark = df.sparkSession
     acc = spark.sparkContext.accumulator([], _RowsParam())
 
-    def commit(batches: Iterable[pd.DataFrame]):
+    def commit(batches: Iterable[pa.RecordBatch]):
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx else -1
         t0 = time.perf_counter()
-        for pdf in batches:
-            rows = [(int(cid), pid, int(nb) * int(nt) * int(ny) * int(nx),
-                     int(np.isnan(np.frombuffer(data, dtype="<f8")).sum()), len(data))
-                    for cid, nb, nt, ny, nx, data in zip(pdf["chunk_id"], pdf["nb"], pdf["nt"],
-                                                         pdf["ny"], pdf["nx"], pdf["data"])]
+        for b in batches:
+            rows = [(cid, pid, t.size, int(np.isnan(t).sum()), t.nbytes) for cid, _, t in chunk_rows(b)]
             ms = (time.perf_counter() - t0) * 1000.0 / max(len(rows), 1)
             now = time.time()
             acc.add([r + (ms, now) for r in rows])
-            yield pdf
+            yield b
             t0 = time.perf_counter()
 
     chunk_cols = [f.name for f in CHUNK_SCHEMA.fields]
-    df.select(chunk_cols).mapInPandas(commit, CHUNK_SCHEMA).write.mode(mode).parquet(f"{path}/chunks")
+    df.select(chunk_cols).mapInArrow(commit, CHUNK_SCHEMA).write.mode(mode).parquet(f"{path}/chunks")
     m = (pd.DataFrame(acc.value, columns=_METRIC_SCHEMA.fieldNames())
          .sort_values("written_at", kind="stable").drop_duplicates("chunk_id", keep="last"))
     acc.value = []  # the driver's accumulator registry keeps `acc` alive

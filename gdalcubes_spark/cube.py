@@ -15,7 +15,11 @@ Scale notes:
 - one chunk row ≈ 8*nb*nt_c*ny_c*nx_c bytes; default chunking keeps this in
   the tens of MB so a single Arrow batch / Spark task handles a few chunks.
 - chunk_id is the deterministic partition/join key (cube.h:495-497); narrow
-  ops are mapInPandas (no shuffle), wide ops shuffle on a chunk-coord subset.
+  ops are mapInArrow (no shuffle), wide ops shuffle on a chunk-coord subset
+  into applyInArrow.
+- chunk_rows() and emit() are the one reader and the one writer of chunk
+  rows in the batch chunk UDFs, like gdalcubes' single chunk_data interface:
+  the UDFs see (chunk_id, (ct, cy, cx), tensor), never payload bytes and dims.
 """
 
 from __future__ import annotations
@@ -23,13 +27,15 @@ from __future__ import annotations
 import functools
 import math
 from dataclasses import dataclass, field
-from typing import Callable, Iterable, List, Optional, Sequence
+from typing import Callable, Iterable, Iterator, List, Optional, Sequence, Tuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from gdalcubes_spark.grid import ChunkGrid, CubeView, default_chunking
 
@@ -68,7 +74,7 @@ CELL_SCHEMA = T.StructType(
 
 def pin_group_partitions(df: DataFrame, keys, n_groups: int) -> DataFrame:
     """Repartition by `keys` with an EXPLICIT partition count before a
-    groupBy().applyInPandas over chunk tensors.
+    groupBy().applyInArrow over chunk tensors.
 
     AQE coalesces post-shuffle partitions by byte size, but tensor-UDF stages
     (decode, focal windows, PIP extraction, exact-median gathers) cost orders
@@ -93,11 +99,27 @@ def pin_group_partitions(df: DataFrame, keys, n_groups: int) -> DataFrame:
     return df.repartition(n, *([keys] if isinstance(keys, str) else list(keys)))
 
 
-def tensor_of(row) -> np.ndarray:
-    """Decode a chunk row's payload into an (nb, nt, ny, nx) float64 array."""
-    return np.frombuffer(row["data"], dtype="<f8").reshape(
-        int(row["nb"]), int(row["nt"]), int(row["ny"]), int(row["nx"])
-    )
+def chunk_rows(batch) -> Iterator[Tuple[int, Tuple[int, int, int], Optional[np.ndarray]]]:
+    """The chunk rows of an Arrow RecordBatch or Table, as (chunk_id,
+    (ct, cy, cx), tensor). tensor is the (nb, nt, ny, nx) float64 payload, a
+    read-only np.frombuffer view, or None for a null payload (the missing
+    side of an outer join). Extra columns of `batch` are ignored."""
+    cols = [batch.column(f.name).to_pylist() for f in CHUNK_SCHEMA.fields]
+    for cid, ct, cy, cx, nb, nt, ny, nx, data in zip(*cols):
+        t = None if data is None else np.frombuffer(data, dtype="<f8").reshape(nb, nt, ny, nx)
+        yield cid, (ct, cy, cx), t
+
+
+def emit(schema: T.StructType, rows: Iterable[tuple]) -> pa.RecordBatch:
+    """One Arrow batch of `schema` from `rows`. A CHUNK_SCHEMA row is
+    (chunk_id, (ct, cy, cx), tensor): the tensor becomes its dims and the
+    float64 payload. Rows of any other schema are tuples in field order.
+    No rows give the empty batch of `schema`."""
+    arrow = to_arrow_schema(schema)
+    if schema == CHUNK_SCHEMA:
+        rows = [(cid, *coords, *t.shape, pack_tensor(t)) for cid, coords, t in rows]
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return pa.RecordBatch.from_arrays([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
 
 
 def chunk_stream(cube):
@@ -106,10 +128,10 @@ def chunk_stream(cube):
     (ct,cy,cx)) -> tensor | None` applies any pending fused narrow chain
     (None ⇒ treat the chunk as elided/all-NaN, same invariant as map_chunks).
 
-    Using this instead of `cube.df` + `tensor_of` lets a narrow chain fuse
-    INTO the wide op's first UDF — e.g. scan → apply_pixel → reduce gather
-    runs the apply inside the gather's emit, removing a standalone
-    mapInPandas node (one full-cube Arrow round-trip)."""
+    Using this instead of `cube.df` lets a narrow chain fuse INTO the wide
+    op's first UDF — e.g. scan → apply_pixel → reduce partial runs the apply
+    inside the partial's UDF, removing a standalone mapInArrow node (one
+    full-cube Arrow round-trip)."""
     base = cube._fuse_base
     if base is None:
         # scan-fused cubes carry a LAZY bare-scan base (built only when a
@@ -190,7 +212,7 @@ class Cube:
         Chained narrow ops FUSE: if this cube itself came out of map_chunks,
         the new fn is composed onto the existing tensor-fn chain over the
         original pre-UDF DataFrame, so `apply_pixel → filter_pixel → reduce`
-        runs as ONE mapInPandas (one Arrow round-trip, one pack/unpack per
+        runs as ONE mapInArrow (one Arrow round-trip, one pack/unpack per
         chunk) instead of one per operator. Legal because map_chunks preserves
         chunk coordinates and dropping an all-NaN intermediate equals the
         missing-chunk ≡ all-NaN invariant the unfused plan enforces between
@@ -210,24 +232,12 @@ class Cube:
         base = self._fuse_base if self._fuse_base is not None else self.df
         chain = tuple(self._fuse_chain) + (fn,)
 
-        def gen(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
-                out = []
-                for _, row in pdf.iterrows():
-                    coords = (int(row["ct"]), int(row["cy"]), int(row["cx"]))
-                    r = apply_chain(chain, tensor_of(row), coords)
-                    if r is None:
-                        continue
-                    nb, nt, ny, nx = r.shape
-                    out.append(
-                        dict(chunk_id=int(row["chunk_id"]), ct=coords[0], cy=coords[1],
-                             cx=coords[2], nb=nb, nt=nt, ny=ny, nx=nx, data=pack_tensor(r))
-                    )
-                yield pd.DataFrame(out, columns=[f.name for f in CHUNK_SCHEMA.fields]) if out else pd.DataFrame(
-                    {f.name: pd.Series(dtype="object") for f in CHUNK_SCHEMA.fields}
-                )
+        def gen(batches: Iterable[pa.RecordBatch]):
+            for b in batches:
+                out = ((cid, coords, apply_chain(chain, t, coords)) for cid, coords, t in chunk_rows(b))
+                yield emit(CHUNK_SCHEMA, [r for r in out if r[2] is not None])
 
-        fused = self._derive(base.mapInPandas(gen, CHUNK_SCHEMA), view, bands, chunking)
+        fused = self._derive(base.mapInArrow(gen, CHUNK_SCHEMA), view, bands, chunking)
         fused._fuse_base = base
         fused._fuse_chain = chain
         return fused
@@ -252,15 +262,15 @@ class Cube:
         )
 
         base_df, xf = chunk_stream(self)  # fuse any pending narrow chain in here
+        arrow = to_arrow_schema(schema)
+        band_names = pa.array(bands, pa.string())
 
-        def gen(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    coords = (int(row["ct"]), int(row["cy"]), int(row["cx"]))
-                    t = xf(tensor_of(row), coords)
+        def gen(batches: Iterable[pa.RecordBatch]):
+            for b in batches:
+                for _, coords, t in chunk_rows(b):
+                    t = xf(t, coords)
                     if t is None:
                         continue
-                    nb, nt, ny, nx = t.shape
                     (t0, _), (y0, _), (x0, _) = g.chunk_cell_range(*coords)
                     bi, ti, yi, xi = np.unravel_index(np.arange(t.size), t.shape)
                     v = t.ravel()
@@ -269,27 +279,18 @@ class Cube:
                         bi, ti, yi, xi, v = bi[keep], ti[keep], yi[keep], xi[keep], v[keep]
                     if len(v) == 0:
                         continue
-                    band_col = bi.astype("int32") if band_as_index else np.array(bands, dtype=object)[bi]
-                    yield pd.DataFrame(
-                        dict(
-                            it=(ti + t0).astype("int32"), iy=(yi + y0).astype("int32"),
-                            ix=(xi + x0).astype("int32"), band=band_col, value=v,
-                        )
-                    )
-                yield pd.DataFrame(
-                    dict(it=pd.Series(dtype="int32"), iy=pd.Series(dtype="int32"), ix=pd.Series(dtype="int32"),
-                         band=pd.Series(dtype="object" if not band_as_index else "int32"),
-                         value=pd.Series(dtype="float64"))
-                )
+                    band_col = bi.astype("int32") if band_as_index else band_names.take(bi)
+                    yield pa.RecordBatch.from_arrays(
+                        [(ti + t0).astype("int32"), (yi + y0).astype("int32"), (xi + x0).astype("int32"),
+                         band_col, v], schema=arrow)
 
-        return base_df.mapInPandas(gen, schema)
+        return base_df.mapInArrow(gen, schema)
 
     @staticmethod
     def from_cells(cells_df: DataFrame, view: CubeView, bands: List[str], chunking: ChunkGrid) -> "Cube":
         """Assemble a Cube from a long-format DataFrame (inverse of cells()).
         Cells absent from the input are NaN. Shuffles once on chunk_id."""
         g = chunking
-        b2i = {b: i for i, b in enumerate(bands)}
         ncx, ncy = g.ncx, g.ncy
         ct_, cy_, cx_ = g.ct, g.cy, g.cx
 
@@ -299,35 +300,37 @@ class Cube:
             .withColumn("chunk_id", (F.col("_ict").cast("long") * (ncy * ncx) + F.col("_icy") * ncx + F.col("_icx")))
 
         nb = len(bands)
+        band_names = pa.array(bands, pa.string())
 
-        def assemble(key, pdf):
-            cid = int(key[0])
-            ict, icy, icx = g.chunk_coords(cid)
-            (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(ict, icy, icx)
+        def assemble(key, table):
+            cid = key[0].as_py()
+            coords = g.chunk_coords(cid)
+            (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(*coords)
             t = np.full((nb, t1 - t0, y1 - y0, x1 - x0), np.nan)
-            bi = pdf["band"].map(b2i).to_numpy()
-            t[bi, pdf["it"].to_numpy() - t0, pdf["iy"].to_numpy() - y0, pdf["ix"].to_numpy() - x0] = (
-                pdf["value"].to_numpy()
-            )
-            return pd.DataFrame(
-                [dict(chunk_id=cid, ct=ict, cy=icy, cx=icx, nb=nb, nt=t1 - t0, ny=y1 - y0, nx=x1 - x0,
-                      data=pack_tensor(t))]
-            )
+            col = {k: table.column(k).to_numpy() for k in ("it", "iy", "ix", "value")}
+            bi = pc.index_in(table.column("band"), value_set=band_names).to_numpy()
+            t[bi, col["it"] - t0, col["iy"] - y0, col["ix"] - x0] = col["value"]
+            return pa.table(emit(CHUNK_SCHEMA, [(cid, coords, t)]))
 
         out = (pin_group_partitions(df, "chunk_id", chunking.n_chunks)
-               .groupBy("chunk_id").applyInPandas(assemble, CHUNK_SCHEMA))
+               .groupBy("chunk_id").applyInArrow(assemble, CHUNK_SCHEMA))
         return Cube(out, view, list(bands), chunking)
 
     # ---------------------------------------------------------------- collect
     def collect_array(self) -> np.ndarray:
         """Assemble the whole cube on the driver as (nb, nt, ny, nx). Test/
-        debug harness only — the distributed path writes chunk tables."""
+        debug harness only — the distributed path writes chunk tables. A
+        chunk whose tensor does not fill its slot exactly (a band count or
+        chunk shape that disagrees with the cube's metadata) raises."""
         v, g = self.view, self.chunking
         out = np.full((len(self.bands), v.nt, v.ny, v.nx), np.nan)
-        for row in self.df.collect():
-            t = np.frombuffer(row["data"], dtype="<f8").reshape(row["nb"], row["nt"], row["ny"], row["nx"])
-            (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(row["ct"], row["cy"], row["cx"])
-            out[:, t0:t1, y0:y1, x0:x1] = t
+        for cid, coords, t in chunk_rows(self.df.toArrow()):
+            (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(*coords)
+            slot = out[:, t0:t1, y0:y1, x0:x1]
+            if t.shape != slot.shape:
+                raise ValueError(f"chunk {cid} at {coords} has shape {t.shape}, but its slot in a cube "
+                                 f"with bands {self.bands} is {slot.shape}")
+            slot[...] = t
         return out
 
     # ------------------------------------------------------------ persistence
@@ -353,13 +356,12 @@ class Cube:
                     pack=pk.to_json())
         df = self.df
         if pk.type != "none":
-            def repack(batches: Iterable[pd.DataFrame]):
-                for pdf in batches:
-                    if len(pdf):
-                        pdf = pdf.copy()
-                        pdf["data"] = [pk.pack(tensor_of(r)) for _, r in pdf.iterrows()]
-                    yield pdf
-            df = df.mapInPandas(repack, CHUNK_SCHEMA)
+            # packed payloads are Packing's format, not the float64 wire format
+            def repack(batches: Iterable[pa.RecordBatch]):
+                for b in batches:
+                    packed = pa.array([pk.pack(t) for _, _, t in chunk_rows(b)], pa.binary())
+                    yield b.set_column(b.schema.get_field_index("data"), "data", packed)
+            df = df.mapInArrow(repack, CHUNK_SCHEMA)
         for k, val in meta.items():
             df = df.withColumn(f"_meta_{k}", F.lit(val))
         if format == "iceberg":
@@ -468,12 +470,10 @@ class Cube:
         v, g = self.view, self.chunking
         labels = [d.to_string().replace(":", "-") for d in v.time_labels()]
         _os.makedirs(path, exist_ok=True)
-        cols = [f.name for f in _SLICE_FILES_SCHEMA.fields]
 
-        def write_slice(key, pdf):
-            (t0, t1), _, _ = g.chunk_cell_range(int(key[0]), 0, 0)
-            parts = [(g.chunk_cell_range(int(row["ct"]), int(row["cy"]), int(row["cx"])), tensor_of(row)[bsel])
-                     for _, row in pdf.iterrows()]
+        def write_slice(key, table):
+            (t0, t1), _, _ = g.chunk_cell_range(key[0].as_py(), 0, 0)
+            parts = [(g.chunk_cell_range(*coords), t[bsel]) for _, coords, t in chunk_rows(table)]
             rows = []
             for lt in range(t1 - t0):
                 plane = np.full((len(bsel), v.ny, v.nx), np.nan)
@@ -485,9 +485,9 @@ class Cube:
                 with open(fn, "wb") as fh:
                     fh.write(data)
                 rows.append((it, fn, len(data)))
-            return pd.DataFrame(rows, columns=cols)
+            return pa.table(emit(_SLICE_FILES_SCHEMA, rows))
 
-        return self.df.groupBy("ct").applyInPandas(write_slice, _SLICE_FILES_SCHEMA)
+        return self.df.groupBy("ct").applyInArrow(write_slice, _SLICE_FILES_SCHEMA)
 
     def write_png_slices(self, path: str, band=None, vmin: float = None,
                          vmax: float = None) -> "DataFrame":
@@ -703,19 +703,15 @@ def dummy_cube(spark: SparkSession, view: CubeView, nbands: int = 1, fill: float
     parts = min(n, max(1, spark.sparkContext.defaultParallelism))
     base = spark.range(0, n, numPartitions=parts).withColumnRenamed("id", "chunk_id")
 
-    def gen(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
+    def gen(batches: Iterable[pa.RecordBatch]):
+        for b in batches:
             rows = []
-            for cid in pdf["chunk_id"]:
-                ict, icy, icx = g.chunk_coords(int(cid))
-                nt, ny, nx = g.chunk_shape(ict, icy, icx)
-                t = np.full((nbands, nt, ny, nx), float(fill))
-                rows.append(dict(chunk_id=int(cid), ct=ict, cy=icy, cx=icx, nb=nbands, nt=nt, ny=ny, nx=nx,
-                                 data=pack_tensor(t)))
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else pd.DataFrame(
-                {f.name: pd.Series(dtype="object") for f in CHUNK_SCHEMA.fields})
+            for cid in b.column("chunk_id").to_pylist():
+                coords = g.chunk_coords(cid)
+                rows.append((cid, coords, np.full((nbands,) + g.chunk_shape(*coords), float(fill))))
+            yield emit(CHUNK_SCHEMA, rows)
 
-    return Cube(base.mapInPandas(gen, CHUNK_SCHEMA), view, bands, g)
+    return Cube(base.mapInArrow(gen, CHUNK_SCHEMA), view, bands, g)
 
 
 def empty_cube(spark: SparkSession, view: CubeView, nbands: int = 1,
@@ -738,11 +734,9 @@ def cube_from_array(spark: SparkSession, arr: np.ndarray, view: CubeView,
         ict, icy, icx = g.chunk_coords(cid)
         (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(ict, icy, icx)
         t = arr[:, t0:t1, y0:y1, x0:x1]
-        if np.all(np.isnan(t)):
-            continue
-        rows.append((cid, ict, icy, icx, nb, t1 - t0, y1 - y0, x1 - x0, pack_tensor(t)))
-    df = spark.createDataFrame(rows, CHUNK_SCHEMA) if rows else spark.createDataFrame([], CHUNK_SCHEMA)
-    return Cube(df, view, bands, g)
+        if not np.all(np.isnan(t)):
+            rows.append((cid, (ict, icy, icx), t))
+    return Cube(spark.createDataFrame(pa.table(emit(CHUNK_SCHEMA, rows)), CHUNK_SCHEMA), view, bands, g)
 
 
 def read_bucketed_cube(spark: SparkSession, table: str) -> Cube:
@@ -776,13 +770,12 @@ def read_parquet_cube(spark: SparkSession, path: str) -> Cube:
     out = df.select([f.name for f in CHUNK_SCHEMA.fields])
     pk = Packing.from_json(meta["_meta_pack"]) if "_meta_pack" in cols else Packing()
     if pk.type != "none":
-        def unpack(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
-                if len(pdf):
-                    pdf = pdf.copy()
-                    pdf["data"] = [pack_tensor(pk.unpack(r["data"],
-                                                         (int(r["nb"]), int(r["nt"]), int(r["ny"]), int(r["nx"]))))
-                                   for _, r in pdf.iterrows()]
-                yield pdf
-        out = out.mapInPandas(unpack, CHUNK_SCHEMA)
+        # packed payloads are Packing's format: read them column-wise, not
+        # through chunk_rows (which reads the float64 wire format)
+        def unpack(batches: Iterable[pa.RecordBatch]):
+            for b in batches:
+                cols = [b.column(f.name).to_pylist() for f in CHUNK_SCHEMA.fields]
+                yield emit(CHUNK_SCHEMA, [(cid, (ct, cy, cx), pk.unpack(data, (nb, nt, ny, nx)))
+                                          for cid, ct, cy, cx, nb, nt, ny, nx, data in zip(*cols)])
+        out = out.mapInArrow(unpack, CHUNK_SCHEMA)
     return Cube(out, view, bands, g)

@@ -20,30 +20,16 @@ tensors end-to-end.
 from __future__ import annotations
 
 import itertools
-import math
 from typing import Iterable, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+import pyarrow as pa
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_stream, pack_tensor, tensor_of
+from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_rows, chunk_stream, emit
 from gdalcubes_spark.grid import ChunkGrid, Duration
 
 AGG_METHODS = ("mean", "min", "max", "median", "count", "var", "sd", "prod", "sum")
-
-_PIECE_SCHEMA = T.StructType([
-    T.StructField("ocid", T.LongType(), False),     # output chunk id
-    T.StructField("gmap_t", T.BinaryType(), False),  # int64 out t index per input slice (local to out chunk)
-    T.StructField("gmap_y", T.BinaryType(), False),
-    T.StructField("gmap_x", T.BinaryType(), False),
-    T.StructField("nb", T.IntegerType(), False),
-    T.StructField("nt", T.IntegerType(), False),
-    T.StructField("ny", T.IntegerType(), False),
-    T.StructField("nx", T.IntegerType(), False),
-    T.StructField("data", T.BinaryType(), False),
-])
 
 _PANDAS_AGG = {"mean": "mean", "min": "min", "max": "max", "median": "median",
                "count": "count", "var": "var", "sd": "std", "prod": "prod", "sum": "sum"}
@@ -52,81 +38,70 @@ _PANDAS_AGG = {"mean": "mean", "min": "min", "max": "max", "median": "median",
 def _aggregate(cube: Cube, out_view, gout: ChunkGrid, t_map: np.ndarray,
                y_map: np.ndarray, x_map: np.ndarray, method: str) -> Cube:
     """Generic regrid-aggregate. t/y/x_map: global input index → global output
-    index (precomputed on the driver: nt/ny/nx-sized int arrays — small)."""
+    index (precomputed on the driver: nt/ny/nx-sized int arrays — small).
+
+    A piece travels as a chunk row keyed by its OUTPUT chunk id and carrying
+    its INPUT chunk's (ct, cy, cx); the merge re-derives the piece's output
+    cell indices from those coords and the maps."""
     g = cube.chunking
     nb = len(cube.bands)
 
+    def maps(coords, ocoords):
+        """Per axis: the input cells of chunk `coords` that land in output
+        chunk `ocoords`, and their output indices local to it."""
+        out = []
+        for m, (i0, i1), (o0, _), k, c in zip((t_map, y_map, x_map), g.chunk_cell_range(*coords),
+                                               gout.chunk_cell_range(*ocoords), ocoords,
+                                               (gout.ct, gout.cy, gout.cx)):
+            om = m[i0:i1]
+            sel = om // c == k
+            out.append((sel, om[sel] - o0))
+        return out
+
     base_df, _xf = chunk_stream(cube)  # fuse any pending narrow chain in here
 
-    def cut(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
+    def cut(batches: Iterable[pa.RecordBatch]):
+        for b in batches:
             rows = []
-            for _, row in pdf.iterrows():
-                ict, icy, icx = int(row["ct"]), int(row["cy"]), int(row["cx"])
-                tsr = _xf(tensor_of(row), (ict, icy, icx))
+            for _, coords, tsr in chunk_rows(b):
+                tsr = _xf(tsr, coords)
                 if tsr is None:
                     continue
-                (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(ict, icy, icx)
-                ot = t_map[t0:t1]
-                oy = y_map[y0:y1]
-                ox = x_map[x0:x1]
+                (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(*coords)
                 # output chunk coords touched by this input chunk
-                kts = np.unique(ot // gout.ct)
-                kys = np.unique(oy // gout.cy)
-                kxs = np.unique(ox // gout.cx)
-                for kt, ky, kx in itertools.product(kts, kys, kxs):
-                    st = ot // gout.ct == kt
-                    sy = oy // gout.cy == ky
-                    sx = ox // gout.cx == kx
+                for ocoords in itertools.product(np.unique(t_map[t0:t1] // gout.ct).tolist(),
+                                                 np.unique(y_map[y0:y1] // gout.cy).tolist(),
+                                                 np.unique(x_map[x0:x1] // gout.cx).tolist()):
+                    (st, _), (sy, _), (sx, _) = maps(coords, ocoords)
                     piece = tsr[:, st][:, :, sy][:, :, :, sx]
-                    if np.all(np.isnan(piece)):
-                        continue
-                    (pt0, _), (py0, _), (px0, _) = gout.chunk_cell_range(int(kt), int(ky), int(kx))
-                    rows.append(dict(
-                        ocid=gout.chunk_id(int(kt), int(ky), int(kx)),
-                        gmap_t=(ot[st] - pt0).astype("<i8").tobytes(),
-                        gmap_y=(oy[sy] - py0).astype("<i8").tobytes(),
-                        gmap_x=(ox[sx] - px0).astype("<i8").tobytes(),
-                        nb=nb, nt=int(st.sum()), ny=int(sy.sum()), nx=int(sx.sum()),
-                        data=pack_tensor(piece)))
-            yield pd.DataFrame(rows, columns=[f.name for f in _PIECE_SCHEMA.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in _PIECE_SCHEMA.fields})
+                    if not np.all(np.isnan(piece)):
+                        rows.append((gout.chunk_id(*ocoords), coords, piece))
+            yield emit(CHUNK_SCHEMA, rows)
 
     fn = _PANDAS_AGG[method]
 
-    def merge(key, pdf):
-        ocid = int(key[0])
-        kt, ky, kx = gout.chunk_coords(ocid)
-        ntc, nyc, nxc = gout.chunk_shape(kt, ky, kx)
+    def merge(key, table):
+        ocid = key[0].as_py()
+        ocoords = gout.chunk_coords(ocid)
+        ntc, nyc, nxc = gout.chunk_shape(*ocoords)
         groups, values = [], []
-        for _, row in pdf.iterrows():
-            p = tensor_of(row)
-            lt = np.frombuffer(row["gmap_t"], dtype="<i8")
-            ly = np.frombuffer(row["gmap_y"], dtype="<i8")
-            lx = np.frombuffer(row["gmap_x"], dtype="<i8")
-            nb_, pnt, pny, pnx = p.shape
-            gid = (np.arange(nb_)[:, None, None, None] * (ntc * nyc * nxc)
+        for _, coords, p in chunk_rows(table):
+            (_, lt), (_, ly), (_, lx) = maps(coords, ocoords)
+            gid = (np.arange(p.shape[0])[:, None, None, None] * (ntc * nyc * nxc)
                    + lt[None, :, None, None] * (nyc * nxc)
                    + ly[None, None, :, None] * nxc
                    + lx[None, None, None, :])
             groups.append(gid.ravel())
             values.append(p.ravel())
-        gids = np.concatenate(groups)
-        vals = np.concatenate(values)
-        s = pd.Series(vals).groupby(pd.Series(gids)).agg(fn)
+        s = pd.Series(np.concatenate(values)).groupby(pd.Series(np.concatenate(groups))).agg(fn)
         out = np.full(nb * ntc * nyc * nxc, np.nan)
-        idx = s.index.to_numpy()
-        res = s.to_numpy(dtype="float64")
         # pandas count returns 0 for all-NaN groups but those groups only exist
         # where an input chunk contributed → matches the non-empty-chunk rule
-        out[idx] = res
+        out[s.index.to_numpy()] = s.to_numpy(dtype="float64")
         t = out.reshape(nb, ntc, nyc, nxc)
-        if np.all(np.isnan(t)):
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-        return pd.DataFrame([dict(chunk_id=ocid, ct=kt, cy=ky, cx=kx, nb=nb, nt=ntc,
-                                  ny=nyc, nx=nxc, data=pack_tensor(t))])
+        return pa.table(emit(CHUNK_SCHEMA, [] if np.all(np.isnan(t)) else [(ocid, ocoords, t)]))
 
-    out_df = base_df.mapInPandas(cut, _PIECE_SCHEMA).groupBy("ocid").applyInPandas(merge, CHUNK_SCHEMA)
+    out_df = base_df.mapInArrow(cut, CHUNK_SCHEMA).groupBy("chunk_id").applyInArrow(merge, CHUNK_SCHEMA)
     return Cube(out_df, out_view, list(cube.bands), gout)
 
 

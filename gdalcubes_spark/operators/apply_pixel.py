@@ -9,7 +9,7 @@ Reference semantics (apply_pixel.cpp:33-209, filter_pixel.h:48-80):
 - filter_pixel: predicate string; non-matching pixels become NaN — the cube
   SHAPE IS PRESERVED (this is NOT row filtering).
 
-Spark shape: a narrow mapInPandas over chunk tensors — stays in one stage,
+Spark shape: a narrow mapInArrow over chunk tensors — stays in one stage,
 no shuffle; the numpy evaluation is the vectorized analogue of tinyexpr's
 per-pixel loop. On long/cell form the same expressions render to F.expr via
 gdalcubes_spark.expr.to_sql (used by the SQL oracles).

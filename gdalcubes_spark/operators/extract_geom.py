@@ -23,11 +23,12 @@ from typing import List, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gdalcubes_spark.cube import Cube, pin_group_partitions, tensor_of
+from gdalcubes_spark.cube import Cube, chunk_rows, pin_group_partitions
 from gdalcubes_spark.geom import parse_wkt
 from gdalcubes_spark.grid import Datetime
 
@@ -143,9 +144,7 @@ def extract_geom(cube: Cube, features: DataFrame, time_column: Optional[str] = N
         empty = pd.DataFrame({f.name: pd.Series(dtype="object") for f in out_schema.fields})
         if len(chunks) == 0 or len(feats_) == 0:
             return empty
-        row = chunks.iloc[0]
-        t_ = tensor_of(row)
-        kt, ky, kx = int(row["ct"]), int(row["cy"]), int(row["cx"])
+        _, (kt, ky, kx), t_ = next(chunk_rows(pa.Table.from_pandas(chunks.iloc[:1], preserve_index=False)))
         (ct0, ct1), (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(kt, ky, kx)
         xs = vleft + (np.arange(cx0, cx1) + 0.5) * dx
         ys = vtop - (np.arange(cy0, cy1) + 0.5) * dy

@@ -19,10 +19,10 @@ import math
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, pack_tensor, tensor_of
+from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_rows, emit
 from gdalcubes_spark.geom import parse_wkt
 
 
@@ -47,12 +47,11 @@ def filter_geom(cube: Cube, wkt: str) -> Cube:
 
     vleft, vtop, dx, dy = view.left, view.top, view.dx, view.dy
 
-    def gen(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
+    def gen(batches: Iterable[pa.RecordBatch]):
+        for b in batches:
             rows = []
-            for _, row in pdf.iterrows():
-                icy, icx = int(row["cy"]), int(row["cx"])
-                _, (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(int(row["ct"]), icy, icx)
+            for cid, coords, t in chunk_rows(b):
+                _, (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(*coords)
                 cl = vleft + cx0 * dx
                 cr = vleft + cx1 * dx
                 ctp = vtop - cy0 * dy
@@ -60,9 +59,8 @@ def filter_geom(cube: Cube, wkt: str) -> Cube:
                 if geom.disjoint_bbox(cl, cb, cr, ctp):
                     continue
                 if geom.contains_rect(cl, cb, cr, ctp):
-                    rows.append(row.to_dict())  # zero-copy pass-through
+                    rows.append((cid, coords, t))  # pass-through
                     continue
-                t = tensor_of(row)
                 xs = vleft + (np.arange(cx0, cx1) + 0.5) * dx
                 ys = vtop - (np.arange(cy0, cy1) + 0.5) * dy
                 X, Y = np.meshgrid(xs, ys)
@@ -70,15 +68,11 @@ def filter_geom(cube: Cube, wkt: str) -> Cube:
                 if not inside.any():
                     continue
                 out = np.where(inside[None, None, :, :], t, np.nan)
-                if np.all(np.isnan(out)):
-                    continue
-                d = row.to_dict()
-                d["data"] = pack_tensor(out)
-                rows.append(d)
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in CHUNK_SCHEMA.fields})
+                if not np.all(np.isnan(out)):
+                    rows.append((cid, coords, out))
+            yield emit(CHUNK_SCHEMA, rows)
 
-    masked = Cube(pruned.mapInPandas(gen, CHUNK_SCHEMA), view, list(cube.bands), g)
+    masked = Cube(pruned.mapInArrow(gen, CHUNK_SCHEMA), view, list(cube.bands), g)
     # crop to the geometry bbox; bounds are already cell-aligned (x0/x1/y0/y1
     # are cell indices), so snap="in" keeps them exactly — no outward growth
     from gdalcubes_spark.operators.select import crop

@@ -10,13 +10,13 @@ upstream partitioning the exchange is often reused.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Optional, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, pack_tensor
+from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_rows, emit
 
 
 def join_bands(cubes: Sequence[Cube], prefixes: Optional[Sequence[str]] = None) -> Cube:
@@ -31,7 +31,6 @@ def join_bands(cubes: Sequence[Cube], prefixes: Optional[Sequence[str]] = None) 
         if not same:
             raise ValueError("join_bands requires identical shape, st_ref and chunking (join_bands.h:85-107)")
     # band naming: prefix on conflict (or always, when prefixes given)
-    all_bands: List[str] = []
     counts = {}
     for c in cubes:
         for b in c.bands:
@@ -42,44 +41,26 @@ def join_bands(cubes: Sequence[Cube], prefixes: Optional[Sequence[str]] = None) 
         for b in c.bands:
             out_bands.append(f"{pre}.{b}" if (prefixes or counts[b] > 1) else b)
 
+    # each side rides the join as one struct of its chunk-row columns, so
+    # chunk_rows reads every side; a side without the chunk has a null payload
+    def side(i: int, c: Cube):
+        cols = [F.col(f.name) for f in CHUNK_SCHEMA.fields]
+        return c.df.select("chunk_id", F.struct(*cols).alias(f"s{i}"))
+
+    joined = side(0, cubes[0])
+    for i in range(1, len(cubes)):
+        joined = joined.join(side(i, cubes[i]), "chunk_id", "outer")
     nbs = [len(c.bands) for c in cubes]
-    nb_total = sum(nbs)
-
-    dfs = []
-    for i, c in enumerate(cubes):
-        dfs.append(c.df.select("chunk_id", "ct", "cy", "cx", "nt", "ny", "nx",
-                               F.col("data").alias(f"d{i}")))
-    joined = dfs[0]
-    for i in range(1, len(dfs)):
-        right = dfs[i].select("chunk_id", F.col(f"d{i}"),
-                              F.col("ct").alias(f"_ct{i}"), F.col("cy").alias(f"_cy{i}"),
-                              F.col("cx").alias(f"_cx{i}"), F.col("nt").alias(f"_nt{i}"),
-                              F.col("ny").alias(f"_ny{i}"), F.col("nx").alias(f"_nx{i}"))
-        joined = joined.join(right, "chunk_id", "outer")
-        # coalesce chunk metadata from whichever side is present
-        for col in ("ct", "cy", "cx", "nt", "ny", "nx"):
-            joined = joined.withColumn(col, F.coalesce(F.col(col), F.col(f"_{col}{i}"))).drop(f"_{col}{i}")
-
-    g = g0
 
     def combine(batches):
-        for pdf in batches:
+        for b in batches:
+            sides = [chunk_rows(pa.RecordBatch.from_struct_array(b.column(f"s{i}"))) for i in range(len(nbs))]
             rows = []
-            for _, row in pdf.iterrows():
-                nt, ny, nx = int(row["nt"]), int(row["ny"]), int(row["nx"])
-                parts = []
-                for i, nb in enumerate(nbs):
-                    d = row[f"d{i}"]
-                    if d is None:
-                        parts.append(np.full((nb, nt, ny, nx), np.nan))
-                    else:
-                        parts.append(np.frombuffer(d, dtype="<f8").reshape(nb, nt, ny, nx))
-                t = np.concatenate(parts, axis=0)
-                rows.append(dict(chunk_id=int(row["chunk_id"]), ct=int(row["ct"]), cy=int(row["cy"]),
-                                 cx=int(row["cx"]), nb=nb_total, nt=nt, ny=ny, nx=nx,
-                                 data=pack_tensor(t)))
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in CHUNK_SCHEMA.fields})
+            for cid, parts in zip(b.column("chunk_id").to_pylist(), zip(*sides)):
+                coords = next(co for _, co, t in parts if t is not None)
+                shape = g0.chunk_shape(*coords)
+                rows.append((cid, coords, np.concatenate(
+                    [t if t is not None else np.full((nb,) + shape, np.nan) for (_, _, t), nb in zip(parts, nbs)])))
+            yield emit(CHUNK_SCHEMA, rows)
 
-    out = joined.mapInPandas(combine, CHUNK_SCHEMA)
-    return Cube(out, v0, out_bands, g0)
+    return Cube(joined.mapInArrow(combine, CHUNK_SCHEMA), v0, out_bands, g0)

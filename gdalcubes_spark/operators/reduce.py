@@ -7,7 +7,7 @@ Output band names are "<band>_<reducer>" unless names given
 
 Spark shapes (designed for the 100 TB case):
 - reduce_time, nct == 1 (the default adaptive chunking): NARROW — one
-  mapInPandas, zero shuffle.
+  mapInArrow, zero shuffle.
 - reduce_time, nct > 1, all reducers combinable: map-side partial states per
   chunk (8·ny·nx·nstates bytes instead of the full tensor), shuffled by the
   spatial chunk key, merged + finalized. This is Catalyst's
@@ -25,10 +25,10 @@ import re
 from typing import Iterable, List, Optional, Sequence, Tuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_stream, pack_tensor, pin_group_partitions, tensor_of
+from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_rows, chunk_stream, emit, pin_group_partitions
 from gdalcubes_spark.grid import ChunkGrid
 from gdalcubes_spark import reducers as R
 
@@ -86,105 +86,49 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
 
         return cube.map_chunks(fn, out_view=out_view, out_bands=out_bands, out_chunking=gout)
 
-    spatial_key_expr = "cy * {ncx} + cx".format(ncx=g.ncx)
-
+    spatial_key = F.col("cy").cast("long") * g.ncx + F.col("cx")
     if all(r in R.COMBINABLE for r in rnames):
         # ---- partial/merge path (small shuffle) -----------------------------
-        from pyspark.sql import types as T
-
-        part_schema = T.StructType([
-            T.StructField("skey", T.LongType(), False),
-            T.StructField("cy", T.IntegerType(), False),
-            T.StructField("cx", T.IntegerType(), False),
-            T.StructField("ct", T.IntegerType(), False),
-            T.StructField("ny", T.IntegerType(), False),
-            T.StructField("nx", T.IntegerType(), False),
-            T.StructField("state", T.BinaryType(), False),
-        ])
-
+        # a chunk's partial states travel as a chunk row whose "bands" are
+        # the stacked STATE_KEYS arrays: shape (nstates, 1, ny, nx)
         base_df, xf = chunk_stream(cube)  # fuse any pending narrow chain in here
 
-        def mk_partial(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
+        def mk_partial(batches: Iterable[pa.RecordBatch]):
+            for b in batches:
                 rows = []
-                for _, row in pdf.iterrows():
-                    coords = (int(row["ct"]), int(row["cy"]), int(row["cx"]))
-                    t = xf(tensor_of(row), coords)
+                for cid, coords, t in chunk_rows(b):
+                    t = xf(t, coords)
                     if t is None:
                         continue
                     (t0, t1), _, _ = g.chunk_cell_range(*coords)
-                    its = np.arange(t0, t1)
-                    td = _t_doubles(view, its)
+                    td = _t_doubles(view, np.arange(t0, t1))
                     blobs = []
                     for r, bi in zip(rnames, bidx):
                         st = R.partial_state(r, t[bi], td)
                         blobs.extend(st[k] for k in R.STATE_KEYS[r])
-                    state = np.stack(blobs, axis=0)
-                    rows.append(dict(skey=int(row["cy"]) * g.ncx + int(row["cx"]), cy=int(row["cy"]),
-                                     cx=int(row["cx"]), ct=int(row["ct"]), ny=t.shape[2], nx=t.shape[3],
-                                     state=pack_tensor(state)))
-                yield pd.DataFrame(rows, columns=[f.name for f in part_schema.fields]) if rows else \
-                    pd.DataFrame({f.name: pd.Series(dtype="object") for f in part_schema.fields})
+                    rows.append((cid, coords, np.stack(blobs, axis=0)[:, None]))
+                yield emit(CHUNK_SCHEMA, rows)
 
-        def merge_group(key, pdf):
-            pdf = pdf.sort_values("ct")  # time order matters for which_*
-            ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
-            nstates = sum(len(R.STATE_KEYS[r]) for r in rnames)
-            acc = None
-            for _, row in pdf.iterrows():
-                st = np.frombuffer(row["state"], dtype="<f8").reshape(nstates, ny, nx)
-                if acc is None:
-                    acc = st.copy()
-                    continue
-                off = 0
-                for r in rnames:
-                    ks = R.STATE_KEYS[r]
-                    a = {k: acc[off + i] for i, k in enumerate(ks)}
-                    b = {k: st[off + i] for i, k in enumerate(ks)}
-                    m = R.merge_state(r, a, b)
-                    for i, k in enumerate(ks):
-                        acc[off + i] = m[k]
-                    off += len(ks)
-            out = []
-            off = 0
-            for r in rnames:
-                ks = R.STATE_KEYS[r]
-                out.append(R.finalize_state(r, {k: acc[off + i] for i, k in enumerate(ks)}))
-                off += len(ks)
-            t = np.stack(out, axis=0)[:, None, :, :]
-            cy, cx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
-            cid = gout.chunk_id(0, cy, cx)
-            return pd.DataFrame([dict(chunk_id=cid, ct=0, cy=cy, cx=cx, nb=t.shape[0], nt=1,
-                                      ny=ny, nx=nx, data=pack_tensor(t))])
+        def merge(key, table):
+            rows = sorted(chunk_rows(table), key=lambda r: r[1][0])  # time order matters for which_*
+            _, cy, cx = rows[0][1]
+            t = R.merge_finalize(rnames, (st[:, 0] for _, _, st in rows))[:, None]
+            return pa.table(emit(CHUNK_SCHEMA, [(gout.chunk_id(0, cy, cx), (0, cy, cx), t)]))
 
-        part = base_df.mapInPandas(mk_partial, part_schema)
-        out_df = part.groupBy("skey").applyInPandas(merge_group, CHUNK_SCHEMA)
-        return Cube(out_df, out_view, out_bands, gout)
+        keyed = base_df.mapInArrow(mk_partial, CHUNK_SCHEMA).withColumn("skey", spatial_key)
+    else:
+        # ---- gather path (exact quantiles) ----------------------------------
+        def merge(key, table):
+            rows = sorted(chunk_rows(table), key=lambda r: r[1][0])
+            _, cy, cx = rows[0][1]
+            v = np.concatenate([t for _, _, t in rows], axis=1)  # (nb, T, ny, nx)
+            its = np.concatenate([np.arange(*g.chunk_cell_range(*coords)[0]) for _, coords, _ in rows])
+            td = _t_doubles(view, its) if any(r.startswith("which") for r in rnames) else None
+            t = np.stack([R.full_reduce(r, v[bi], its, td) for r, bi in zip(rnames, bidx)], axis=0)[:, None]
+            return pa.table(emit(CHUNK_SCHEMA, [(gout.chunk_id(0, cy, cx), (0, cy, cx), t)]))
 
-    # ---- gather path (exact quantiles) --------------------------------------
-    def gather(key, pdf):
-        pdf = pdf.sort_values("ct")
-        ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
-        vals, its = [], []
-        for _, row in pdf.iterrows():
-            t = tensor_of(row)
-            (t0, t1), _, _ = g.chunk_cell_range(int(row["ct"]), int(row["cy"]), int(row["cx"]))
-            vals.append(t)
-            its.append(np.arange(t0, t1))
-        v = np.concatenate(vals, axis=1)  # (nb, T, ny, nx)
-        its = np.concatenate(its)
-        td = _t_doubles(view, its) if any(r.startswith("which") for r in rnames) else None
-        outs = [R.full_reduce(r, v[bi], its, td) for r, bi in zip(rnames, bidx)]
-        t = np.stack(outs, axis=0)[:, None, :, :]
-        cy, cx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
-        cid = gout.chunk_id(0, cy, cx)
-        return pd.DataFrame([dict(chunk_id=cid, ct=0, cy=cy, cx=cx, nb=t.shape[0], nt=1,
-                                  ny=ny, nx=nx, data=pack_tensor(t))])
-
-    keyed = cube.df.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx"))
-    out_df = (pin_group_partitions(keyed, "skey", g.ncy * g.ncx)
-              .groupBy("skey").applyInPandas(gather, CHUNK_SCHEMA))
-    return Cube(out_df, out_view, out_bands, gout)
+        keyed = pin_group_partitions(cube.df.withColumn("skey", spatial_key), "skey", g.ncy * g.ncx)
+    return Cube(keyed.groupBy("skey").applyInArrow(merge, CHUNK_SCHEMA), out_view, out_bands, gout)
 
 
 def reduce_space(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] = None) -> Cube:
@@ -195,6 +139,8 @@ def reduce_space(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] 
         if r in ("which_min", "which_max", "Q1", "Q3"):
             raise ValueError(f"reducer {r!r} not supported by reduce_space (reduce_space.h:80-92)")
     out_bands = list(names) if names else [f"{b}_{r}" for r, b in pairs]
+    if len(out_bands) != len(pairs):
+        raise ValueError("names must match reducer pairs")
     bidx = [cube.bands.index(b) for _, b in pairs]
     rnames = [r for r, _ in pairs]
     view, g = cube.view, cube.chunking
@@ -203,90 +149,46 @@ def reduce_space(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] 
     out_view.set_y_axis(view.bottom, view.top, n=1)
     gout = ChunkGrid(nt=g.nt, ny=1, nx=1, ct=g.ct, cy=1, cx=1)
 
-    from pyspark.sql import types as T
-
-    combinable = all(r in R.COMBINABLE for r in rnames)
-
-    if combinable:
-        part_schema = T.StructType([
-            T.StructField("ct", T.IntegerType(), False),
-            T.StructField("nt", T.IntegerType(), False),
-            T.StructField("state", T.BinaryType(), False),
-        ])
-
+    if all(r in R.COMBINABLE for r in rnames):
+        # partial states as chunk rows of shape (nstates, nt, 1, 1), merged per t-slab
         base_df, xf = chunk_stream(cube)  # fuse any pending narrow chain in here
 
-        def mk_partial(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
+        def mk_partial(batches: Iterable[pa.RecordBatch]):
+            for b in batches:
                 rows = []
-                for _, row in pdf.iterrows():
-                    t = xf(tensor_of(row), (int(row["ct"]), int(row["cy"]), int(row["cx"])))
+                for cid, coords, t in chunk_rows(b):
+                    t = xf(t, coords)
                     if t is None:
                         continue
-                    nb, nt, ny, nx = t.shape
+                    _, nt, ny, nx = t.shape
                     blobs = []
                     for r, bi in zip(rnames, bidx):
                         # reduce over space: stack (ny*nx, nt)
-                        v = t[bi].reshape(nt, ny * nx).T  # (cells, nt)
-                        st = R.partial_state(r, v)
+                        st = R.partial_state(r, t[bi].reshape(nt, ny * nx).T)
                         blobs.extend(st[k] for k in R.STATE_KEYS[r])
-                    state = np.stack(blobs, axis=0)  # (nstates, nt)
-                    rows.append(dict(ct=int(row["ct"]), nt=nt, state=pack_tensor(state)))
-                yield pd.DataFrame(rows, columns=["ct", "nt", "state"]) if rows else \
-                    pd.DataFrame(dict(ct=pd.Series(dtype="int32"), nt=pd.Series(dtype="int32"),
-                                      state=pd.Series(dtype="object")))
+                    rows.append((cid, coords, np.stack(blobs, axis=0)[:, :, None, None]))
+                yield emit(CHUNK_SCHEMA, rows)
 
-        def merge_group(key, pdf):
-            nt = int(pdf.iloc[0]["nt"])
-            nstates = sum(len(R.STATE_KEYS[r]) for r in rnames)
-            acc = None
-            for _, row in pdf.iterrows():
-                st = np.frombuffer(row["state"], dtype="<f8").reshape(nstates, nt)
-                if acc is None:
-                    acc = st.copy()
-                    continue
-                off = 0
-                for r in rnames:
-                    ks = R.STATE_KEYS[r]
-                    m = R.merge_state(r, {k: acc[off + i] for i, k in enumerate(ks)},
-                                      {k: st[off + i] for i, k in enumerate(ks)})
-                    for i, k in enumerate(ks):
-                        acc[off + i] = m[k]
-                    off += len(ks)
-            out, off = [], 0
-            for r in rnames:
-                ks = R.STATE_KEYS[r]
-                out.append(R.finalize_state(r, {k: acc[off + i] for i, k in enumerate(ks)}))
-                off += len(ks)
-            t = np.stack(out, axis=0)[:, :, None, None]  # (nb, nt, 1, 1)
-            ict = int(key[0])
-            return pd.DataFrame([dict(chunk_id=gout.chunk_id(ict, 0, 0), ct=ict, cy=0, cx=0,
-                                      nb=t.shape[0], nt=nt, ny=1, nx=1, data=pack_tensor(t))])
+        def merge(key, table):
+            ict = key[0].as_py()
+            t = R.merge_finalize(rnames, (st[:, :, 0, 0] for _, _, st in chunk_rows(table)))
+            return pa.table(emit(CHUNK_SCHEMA, [(gout.chunk_id(ict, 0, 0), (ict, 0, 0), t[:, :, None, None])]))
 
-        part = base_df.mapInPandas(mk_partial, part_schema)
-        out_df = part.groupBy("ct").applyInPandas(merge_group, CHUNK_SCHEMA)
-        return Cube(out_df, out_view, out_bands, gout)
+        parts = base_df.mapInArrow(mk_partial, CHUNK_SCHEMA)
+    else:
+        # gather path for exact median: all spatial chunks of a t-slab in one
+        # group. Memory bound = one full t-slab, same as the reference's
+        # per-thread scan.
+        def merge(key, table):
+            ict = key[0].as_py()
+            chunks = [t for _, _, t in chunk_rows(table)]
+            nt = chunks[0].shape[1]
+            t = np.stack([R.full_reduce(r, np.concatenate([c[bi].reshape(nt, -1) for c in chunks], axis=1).T)
+                          for r, bi in zip(rnames, bidx)], axis=0)
+            return pa.table(emit(CHUNK_SCHEMA, [(gout.chunk_id(ict, 0, 0), (ict, 0, 0), t[:, :, None, None])]))
 
-    # gather path for exact median: all spatial chunks of a t-slab in one group.
-    # Memory bound = one full t-slab, same as the reference's per-thread scan.
-    def gather(key, pdf):
-        nt = None
-        chunks = []
-        for _, row in pdf.iterrows():
-            t = tensor_of(row)
-            nt = t.shape[1]
-            chunks.append(t)
-        outs = []
-        for r, bi in zip(rnames, bidx):
-            v = np.concatenate([c[bi].reshape(nt, -1) for c in chunks], axis=1).T  # (cells, nt)
-            outs.append(R.full_reduce(r, v))
-        t = np.stack(outs, axis=0)[:, :, None, None]
-        ict = int(key[0])
-        return pd.DataFrame([dict(chunk_id=gout.chunk_id(ict, 0, 0), ct=ict, cy=0, cx=0,
-                                  nb=t.shape[0], nt=nt, ny=1, nx=1, data=pack_tensor(t))])
-
-    out_df = cube.df.groupBy("ct").applyInPandas(gather, CHUNK_SCHEMA)
-    return Cube(out_df, out_view, out_bands, gout)
+        parts = cube.df
+    return Cube(parts.groupBy("ct").applyInArrow(merge, CHUNK_SCHEMA), out_view, out_bands, gout)
 
 
 def value_histogram(cube: Cube, bins: int = 32, vmin: float = None,

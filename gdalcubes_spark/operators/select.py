@@ -14,14 +14,15 @@ crop re-grids chunk space: chunk pieces are shuffled by output chunk id
 
 from __future__ import annotations
 
+import itertools
 import math
-from typing import Iterable, List, Optional, Sequence
+from typing import Iterable, Optional, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, pack_tensor, tensor_of
+from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_rows, emit
 from gdalcubes_spark.grid import ChunkGrid, CubeView, Datetime
 
 
@@ -67,21 +68,14 @@ def slice_time(cube: Cube, t=None, it: Optional[int] = None) -> Cube:
     out_view.t1 = tsel
     gout = ChunkGrid(nt=1, ny=g.ny, nx=g.nx, ct=1, cy=g.cy, cx=g.cx)
 
-    def gen(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                t_ = tensor_of(row)[:, loc : loc + 1]
-                if np.all(np.isnan(t_)):
-                    continue
-                cy, cx = int(row["cy"]), int(row["cx"])
-                rows.append(dict(chunk_id=gout.chunk_id(0, cy, cx), ct=0, cy=cy, cx=cx,
-                                 nb=t_.shape[0], nt=1, ny=t_.shape[2], nx=t_.shape[3], data=pack_tensor(t_)))
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in CHUNK_SCHEMA.fields})
+    def gen(batches: Iterable[pa.RecordBatch]):
+        for b in batches:
+            pieces = ((cy, cx, t[:, loc : loc + 1]) for _, (_, cy, cx), t in chunk_rows(b))
+            yield emit(CHUNK_SCHEMA, [(gout.chunk_id(0, cy, cx), (0, cy, cx), t) for cy, cx, t in pieces
+                                      if not np.all(np.isnan(t))])
 
     # partition pruning: only the one chunk slab along t is read
-    df = cube.df.filter(F.col("ct") == ict).mapInPandas(gen, CHUNK_SCHEMA)
+    df = cube.df.filter(F.col("ct") == ict).mapInArrow(gen, CHUNK_SCHEMA)
     return Cube(df, out_view, list(cube.bands), gout)
 
 
@@ -100,20 +94,13 @@ def slice_space(cube: Cube, x: Optional[float] = None, y: Optional[float] = None
     out_view.set_y_axis(view.top - (iy + 1) * view.dy, view.top - iy * view.dy, n=1)
     gout = ChunkGrid(nt=g.nt, ny=1, nx=1, ct=g.ct, cy=1, cx=1)
 
-    def gen(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                t_ = tensor_of(row)[:, :, ly : ly + 1, lx : lx + 1]
-                if np.all(np.isnan(t_)):
-                    continue
-                ict = int(row["ct"])
-                rows.append(dict(chunk_id=gout.chunk_id(ict, 0, 0), ct=ict, cy=0, cx=0,
-                                 nb=t_.shape[0], nt=t_.shape[1], ny=1, nx=1, data=pack_tensor(t_)))
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in CHUNK_SCHEMA.fields})
+    def gen(batches: Iterable[pa.RecordBatch]):
+        for b in batches:
+            pieces = ((ct, t[:, :, ly : ly + 1, lx : lx + 1]) for _, (ct, _, _), t in chunk_rows(b))
+            yield emit(CHUNK_SCHEMA, [(gout.chunk_id(ct, 0, 0), (ct, 0, 0), t) for ct, t in pieces
+                                      if not np.all(np.isnan(t))])
 
-    df = cube.df.filter((F.col("cy") == icy) & (F.col("cx") == icx)).mapInPandas(gen, CHUNK_SCHEMA)
+    df = cube.df.filter((F.col("cy") == icy) & (F.col("cx") == icx)).mapInArrow(gen, CHUNK_SCHEMA)
     return Cube(df, out_view, list(cube.bands), gout)
 
 
@@ -135,41 +122,29 @@ def select_time(cube: Cube, datetimes: Sequence) -> Cube:
         wanted.setdefault(it // g.ct, []).append((oi, it % g.ct))
     wanted_cts = sorted(wanted)
 
-    piece_schema = CHUNK_SCHEMA
-
-    def gen(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
+    # a picked slice travels as a chunk row whose ct is its label index
+    def gen(batches: Iterable[pa.RecordBatch]):
+        for b in batches:
             rows = []
-            for _, row in pdf.iterrows():
-                ict = int(row["ct"])
-                if ict not in wanted:
-                    continue
-                t_ = tensor_of(row)
-                for oi, loc in wanted[ict]:
-                    s = t_[:, loc : loc + 1]
-                    if np.all(np.isnan(s)):
-                        continue
-                    cy, cx = int(row["cy"]), int(row["cx"])
-                    rows.append(dict(chunk_id=oi * 10**9 + gout.chunk_id(0, cy, cx), ct=oi, cy=cy, cx=cx,
-                                     nb=s.shape[0], nt=1, ny=s.shape[2], nx=s.shape[3], data=pack_tensor(s)))
-            yield pd.DataFrame(rows, columns=[f.name for f in piece_schema.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in piece_schema.fields})
+            for cid, (ict, cy, cx), t in chunk_rows(b):
+                for oi, loc in wanted.get(ict, ()):
+                    s = t[:, loc : loc + 1]
+                    if not np.all(np.isnan(s)):
+                        rows.append((cid, (oi, cy, cx), s))
+            yield emit(CHUNK_SCHEMA, rows)
 
     # assemble slices per output chunk (ct dimension = label index, ct_chunk = nt)
-    def assemble(key, pdf):
-        cy, cx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
-        ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
-        nb = int(pdf.iloc[0]["nb"])
-        t = np.full((nb, len(its), ny, nx), np.nan)
-        for _, row in pdf.iterrows():
-            t[:, int(row["ct"])] = tensor_of(row)[:, 0]
-        cid = gout.chunk_id(0, cy, cx)
-        return pd.DataFrame([dict(chunk_id=cid, ct=0, cy=cy, cx=cx, nb=nb, nt=len(its),
-                                  ny=ny, nx=nx, data=pack_tensor(t))])
+    def assemble(key, table):
+        rows = list(chunk_rows(table))
+        _, (_, cy, cx), first = rows[0]
+        t = np.full((first.shape[0], len(its)) + first.shape[2:], np.nan)
+        for _, (oi, _, _), s in rows:
+            t[:, oi] = s[:, 0]
+        return pa.table(emit(CHUNK_SCHEMA, [(gout.chunk_id(0, cy, cx), (0, cy, cx), t)]))
 
-    pieces = cube.df.filter(F.col("ct").isin(wanted_cts)).mapInPandas(gen, piece_schema)
+    pieces = cube.df.filter(F.col("ct").isin(wanted_cts)).mapInArrow(gen, CHUNK_SCHEMA)
     df = pieces.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx")) \
-        .groupBy("skey").applyInPandas(assemble, CHUNK_SCHEMA)
+        .groupBy("skey").applyInArrow(assemble, CHUNK_SCHEMA)
     return Cube(df, out_view, list(cube.bands), gout)
 
 
@@ -255,16 +230,13 @@ def _regrid(cube: Cube, trange, yrange, xrange, out_view: CubeView, gout: ChunkG
         & (F.col("cx") >= x0 // g.cx) & (F.col("cx") <= (x1 - 1) // g.cx)
     )
 
-    piece_schema = CHUNK_SCHEMA  # reuse: ct/cy/cx double as dest offsets via chunk_id key
-
-    def cut(batches: Iterable[pd.DataFrame]):
-        import itertools
-        for pdf in batches:
+    # a piece travels as a chunk row keyed by its OUTPUT chunk id, with its
+    # offset inside that chunk in the (ct, cy, cx) columns
+    def cut(batches: Iterable[pa.RecordBatch]):
+        for b in batches:
             rows = []
-            for _, row in pdf.iterrows():
-                t_ = tensor_of(row)
-                ict, icy, icx = int(row["ct"]), int(row["cy"]), int(row["cx"])
-                (ct0, ct1), (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(ict, icy, icx)
+            for _, coords, t_ in chunk_rows(b):
+                (ct0, ct1), (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(*coords)
                 # overlap with crop in global input cell coords
                 ot0, ot1 = max(ct0, tt0), min(ct1, tt1)
                 oy0, oy1 = max(cy0, y0), min(cy1, y1)
@@ -286,29 +258,19 @@ def _regrid(cube: Cube, trange, yrange, xrange, out_view: CubeView, gout: ChunkG
                     piece = t_[:, st0 + tt0 - ct0 : st1 + tt0 - ct0,
                                sy0 + y0 - cy0 : sy1 + y0 - cy0,
                                sx0 + x0 - cx0 : sx1 + x0 - cx0]
-                    if np.all(np.isnan(piece)):
-                        continue
-                    # encode dest offset (within output chunk) in ct/cy/cx columns
-                    rows.append(dict(chunk_id=gout.chunk_id(kt, ky, kx),
-                                     ct=st0 - pt0, cy=sy0 - py0, cx=sx0 - px0,
-                                     nb=piece.shape[0], nt=piece.shape[1], ny=piece.shape[2],
-                                     nx=piece.shape[3], data=pack_tensor(piece)))
-            yield pd.DataFrame(rows, columns=[f.name for f in piece_schema.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in piece_schema.fields})
+                    if not np.all(np.isnan(piece)):
+                        rows.append((gout.chunk_id(kt, ky, kx), (st0 - pt0, sy0 - py0, sx0 - px0), piece))
+            yield emit(CHUNK_SCHEMA, rows)
 
     nb = len(cube.bands)
 
-    def assemble(key, pdf):
-        cid = int(key[0])
-        kt, ky, kx = gout.chunk_coords(cid)
-        nt, ny, nx = gout.chunk_shape(kt, ky, kx)
-        t_ = np.full((nb, nt, ny, nx), np.nan)
-        for _, row in pdf.iterrows():
-            p = tensor_of(row)
-            ot, oy, ox = int(row["ct"]), int(row["cy"]), int(row["cx"])
+    def assemble(key, table):
+        cid = key[0].as_py()
+        coords = gout.chunk_coords(cid)
+        t_ = np.full((nb,) + gout.chunk_shape(*coords), np.nan)
+        for _, (ot, oy, ox), p in chunk_rows(table):
             t_[:, ot : ot + p.shape[1], oy : oy + p.shape[2], ox : ox + p.shape[3]] = p
-        return pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=nb, nt=nt, ny=ny, nx=nx,
-                                  data=pack_tensor(t_))])
+        return pa.table(emit(CHUNK_SCHEMA, [(cid, coords, t_)]))
 
-    out_df = df.mapInPandas(cut, piece_schema).groupBy("chunk_id").applyInPandas(assemble, CHUNK_SCHEMA)
+    out_df = df.mapInArrow(cut, CHUNK_SCHEMA).groupBy("chunk_id").applyInArrow(assemble, CHUNK_SCHEMA)
     return Cube(out_df, out_view, list(cube.bands), gout)

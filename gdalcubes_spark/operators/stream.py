@@ -1,8 +1,8 @@
 """User-defined-function operators — the reference's "streaming" machinery
 (stream.h:38-120, stream_apply_pixel/time, R chunk_apply/apply_time/predict)
-re-expressed as Arrow-batched pandas transforms. cloudpickle (built into
-PySpark) replaces the reference's external-process byte protocol; Arrow
-replaces its [size][names][dims][payload] framing.
+re-expressed as Arrow UDFs over chunk tensors (mapInArrow / applyInArrow).
+cloudpickle (built into PySpark) replaces the reference's external-process
+byte protocol; Arrow replaces its [size][names][dims][payload] framing.
 
 - chunk_apply(fn):   fn(tensor (nb,nt,ny,nx), (ict,icy,icx)) → tensor; output
   t/y/x dims must be 1 or same-as-input (stream.h shape rule).
@@ -10,6 +10,10 @@ replaces its [size][names][dims][payload] framing.
   (k, nt). Requires the whole time axis → gathers chunk columns when nct > 1.
 - predict(model):    broadcast model, model.predict(X (cells, nb)) → (cells,)
   or (cells, k); the standard Spark batch-inference pattern.
+
+The output band count of a user function is only known when it runs, so
+each operator checks it there against the band names it declared (the
+input's, or `names=`) and raises instead of writing a mislabeled cube.
 """
 
 from __future__ import annotations
@@ -17,13 +21,36 @@ from __future__ import annotations
 from typing import Callable, List, Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+from pyspark.sql import functions as F
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, pack_tensor, tensor_of
+from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_rows, emit
 from gdalcubes_spark.grid import ChunkGrid
 
 
+def _check_bands(op: str, out: np.ndarray, bands: List[str]) -> np.ndarray:
+    if out.shape[0] != len(bands):
+        raise ValueError(f"{op}: the function returned {out.shape[0]} band(s), but the output cube "
+                         f"declares {len(bands)} ({bands}); pass names= with one name per output band")
+    return out
+
+
+def _time_columns(g: ChunkGrid, table):
+    """(icy, icx, full): a spatial chunk's rows gathered into its full
+    (nb, nt, ny, nx) time column, NaN where a chunk is elided."""
+    rows = list(chunk_rows(table))
+    _, icy, icx = rows[0][1]
+    nb, _, ny, nx = rows[0][2].shape
+    full = np.full((nb, g.nt, ny, nx), np.nan)
+    for _, coords, t in rows:
+        (t0, t1), _, _ = g.chunk_cell_range(*coords)
+        full[:, t0:t1] = t
+    return icy, icx, full
+
+
 def chunk_apply(cube: Cube, fn: Callable, names: Optional[List[str]] = None) -> Cube:
+    out_bands = list(names or cube.bands)
+
     def wrapped(t: np.ndarray, coords):
         r = fn(t, coords)
         if r is None:
@@ -33,11 +60,7 @@ def chunk_apply(cube: Cube, fn: Callable, names: Optional[List[str]] = None) -> 
         for dim, (got, want) in enumerate(zip(r.shape[1:], (nt, ny, nx))):
             if got not in (1, want):
                 raise ValueError(f"chunk_apply output dim {dim} must be 1 or {want}, got {got}")
-        return r
-    out_bands = names
-    if out_bands is None:
-        out_bands = list(cube.bands)
-    # output dims may shrink to 1 → probe lazily is impossible; trust shape rule
+        return _check_bands("chunk_apply", r, out_bands)
     return cube.map_chunks(wrapped, out_bands=out_bands)
 
 
@@ -46,7 +69,7 @@ def apply_time(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
     """fn: (nb, nt) → (k, nt) per pixel (R apply_time, R/apply_time.R:115).
     The function is applied per pixel; vectorize inside fn where possible."""
     g = cube.chunking
-    view = cube.view
+    out_bands = list(names or cube.bands)
 
     def per_chunk(full: np.ndarray) -> np.ndarray:
         nb, nt, ny, nx = full.shape
@@ -58,41 +81,26 @@ def apply_time(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
                 r = r[None, :]
             outs.append(r)
         k = outs[0].shape[0]
-        out = np.stack(outs, axis=-1).reshape(k, nt, ny, nx)
-        return out
+        return _check_bands("apply_time", np.stack(outs, axis=-1).reshape(k, nt, ny, nx), out_bands)
 
     if g.nct == 1:
-        return cube.map_chunks(lambda t, coords: per_chunk(t), out_bands=names or cube.bands)
+        return cube.map_chunks(lambda t, coords: per_chunk(t), out_bands=out_bands)
 
     # gather chunk columns along t (same pattern as fill_time)
-    from pyspark.sql import functions as F
-
-    nb = len(cube.bands)
-
-    def gather(key, pdf):
-        pdf = pdf.sort_values("ct")
-        icy, icx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
-        ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
-        full = np.full((nb, g.nt, ny, nx), np.nan)
-        for _, row in pdf.iterrows():
-            (t0, t1), _, _ = g.chunk_cell_range(int(row["ct"]), icy, icx)
-            full[:, t0:t1] = tensor_of(row)
+    def gather(key, table):
+        icy, icx, full = _time_columns(g, table)
         out = per_chunk(full)
         rows = []
         for kt in range(g.nct):
             (t0, t1), _, _ = g.chunk_cell_range(kt, icy, icx)
             piece = out[:, t0:t1]
-            if np.all(np.isnan(piece)):
-                continue
-            rows.append(dict(chunk_id=g.chunk_id(kt, icy, icx), ct=kt, cy=icy, cx=icx,
-                             nb=out.shape[0], nt=t1 - t0, ny=ny, nx=nx, data=pack_tensor(piece)))
-        return pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else \
-            pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
+            if not np.all(np.isnan(piece)):
+                rows.append((g.chunk_id(kt, icy, icx), (kt, icy, icx), piece))
+        return pa.table(emit(CHUNK_SCHEMA, rows))
 
     keyed = cube.df.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx"))
-    df = keyed.groupBy("skey").applyInPandas(gather, CHUNK_SCHEMA)
-    out_bands = names or list(cube.bands)
-    return Cube(df, view, out_bands, g)
+    df = keyed.groupBy("skey").applyInArrow(gather, CHUNK_SCHEMA)
+    return Cube(df, cube.view, out_bands, g)
 
 
 def reduce_time_udf(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
@@ -100,33 +108,23 @@ def reduce_time_udf(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
     """R `reduce_time(x, FUN=...)` (stream_reduce_time.cpp:24-196): fn sees
     each pixel's FULL (nb, nt) series, returns (k,) — output nt == 1.
     The full time axis is assembled per spatial chunk before the call."""
-    from pyspark.sql import functions as F
-
     g, view = cube.chunking, cube.view
-    nb = len(cube.bands)
     gout = ChunkGrid(nt=1, ny=g.ny, nx=g.nx, ct=1, cy=g.cy, cx=g.cx)
     out_view = view.copy(dt=(view.t1 - view.t0) + 1, labels=None)
+    out_bands = list(names or ["udf1"])
 
-    def gather(key, pdf):
-        pdf = pdf.sort_values("ct")
-        icy, icx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
-        ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
-        full = np.full((nb, g.nt, ny, nx), np.nan)
-        for _, row in pdf.iterrows():
-            (t0, t1), _, _ = g.chunk_cell_range(int(row["ct"]), icy, icx)
-            full[:, t0:t1] = tensor_of(row)
+    def gather(key, table):
+        icy, icx, full = _time_columns(g, table)
+        nb, _, ny, nx = full.shape
         cols = full.reshape(nb, g.nt, ny * nx)
         outs = [np.atleast_1d(np.asarray(fn(cols[:, :, i]), dtype="float64"))
                 for i in range(ny * nx)]
-        out = np.stack(outs, axis=-1).reshape(len(outs[0]), 1, ny, nx)
-        if np.all(np.isnan(out)):
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-        return pd.DataFrame([dict(chunk_id=gout.chunk_id(0, icy, icx), ct=0, cy=icy, cx=icx,
-                                  nb=out.shape[0], nt=1, ny=ny, nx=nx, data=pack_tensor(out))])
+        out = _check_bands("reduce_time_udf", np.stack(outs, axis=-1).reshape(len(outs[0]), 1, ny, nx), out_bands)
+        rows = [] if np.all(np.isnan(out)) else [(gout.chunk_id(0, icy, icx), (0, icy, icx), out)]
+        return pa.table(emit(CHUNK_SCHEMA, rows))
 
     keyed = cube.df.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx"))
-    df = keyed.groupBy("skey").applyInPandas(gather, CHUNK_SCHEMA)
-    out_bands = names or [f"udf{i + 1}" for i in range(1)]
+    df = keyed.groupBy("skey").applyInArrow(gather, CHUNK_SCHEMA)
     return Cube(df, out_view, out_bands, gout)
 
 
@@ -140,24 +138,22 @@ def reduce_space_udf(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
     out_view = view.copy()
     out_view.set_x_axis(view.left, view.right, n=1)
     out_view.set_y_axis(view.bottom, view.top, n=1)
+    out_bands = list(names or ["udf1"])
 
-    def gather(key, pdf):
-        ict = int(key[0])
+    def gather(key, table):
+        ict = key[0].as_py()
         (t0c, t1c), _, _ = g.chunk_cell_range(ict, 0, 0)
         ntc = t1c - t0c
         plane = np.full((nb, ntc, g.ny, g.nx), np.nan)
-        for _, row in pdf.iterrows():
-            _, (y0, y1), (x0, x1) = g.chunk_cell_range(int(row["ct"]), int(row["cy"]), int(row["cx"]))
-            plane[:, :, y0:y1, x0:x1] = tensor_of(row)
+        for _, coords, t in chunk_rows(table):
+            _, (y0, y1), (x0, x1) = g.chunk_cell_range(*coords)
+            plane[:, :, y0:y1, x0:x1] = t
         outs = [np.atleast_1d(np.asarray(fn(plane[:, t]), dtype="float64")) for t in range(ntc)]
-        out = np.stack(outs, axis=1).reshape(len(outs[0]), ntc, 1, 1)
-        if np.all(np.isnan(out)):
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-        return pd.DataFrame([dict(chunk_id=gout.chunk_id(ict, 0, 0), ct=ict, cy=0, cx=0,
-                                  nb=out.shape[0], nt=ntc, ny=1, nx=1, data=pack_tensor(out))])
+        out = _check_bands("reduce_space_udf", np.stack(outs, axis=1).reshape(len(outs[0]), ntc, 1, 1), out_bands)
+        rows = [] if np.all(np.isnan(out)) else [(gout.chunk_id(ict, 0, 0), (ict, 0, 0), out)]
+        return pa.table(emit(CHUNK_SCHEMA, rows))
 
-    df = cube.df.groupBy("ct").applyInPandas(gather, CHUNK_SCHEMA)
-    out_bands = names or ["udf1"]
+    df = cube.df.groupBy("ct").applyInArrow(gather, CHUNK_SCHEMA)
     return Cube(df, out_view, out_bands, gout)
 
 

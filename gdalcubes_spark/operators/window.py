@@ -17,24 +17,26 @@ Reference semantics:
   far.
 
 Spark shapes:
-- window_time / fill_time: if nct == 1 → NARROW mapInPandas (no shuffle).
+- window_time / fill_time: if nct == 1 → NARROW mapInArrow (no shuffle).
   Else: halo slab exchange along t (window) or full-column gather (fill) —
   one bounded shuffle keyed by the spatial chunk.
 - window_space: halo exchange — every chunk ships ≤ 8 boundary strips of
   width = window radius to its neighbors (tiny vs the tensor), groupBy
   assembles the padded plane. This is the canonical Spark stencil pattern.
+- Halo pieces of both windows travel as chunk rows keyed by their TARGET
+  chunk id, with their offset in the target's padded buffer in the
+  (ct, cy, cx) columns.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional, Sequence
+from typing import Iterable, Optional, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_stream, pack_tensor, pin_group_partitions, tensor_of
+from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_rows, chunk_stream, emit, pin_group_partitions
 from gdalcubes_spark.operators.reduce import parse_pairs
 
 _WINDOW_REDUCERS = {
@@ -92,25 +94,13 @@ def window_time(cube: Cube, window: Sequence[int], reducer=None, kernel=None) ->
         return cube.map_chunks(fn, out_bands=out_bands)
 
     # halo slab exchange along t: chunk k needs [k*ct - l, (k+1)*ct + r)
-    halo_schema = T.StructType([
-        T.StructField("tkey", T.LongType(), False),   # target chunk id
-        T.StructField("off", T.IntegerType(), False),  # dest offset in padded buffer
-        T.StructField("nb", T.IntegerType(), False),
-        T.StructField("nt", T.IntegerType(), False),
-        T.StructField("ny", T.IntegerType(), False),
-        T.StructField("nx", T.IntegerType(), False),
-        T.StructField("is_core", T.IntegerType(), False),
-        T.StructField("data", T.BinaryType(), False),
-    ])
-
     base_df, _xf = chunk_stream(cube)  # fuse any pending narrow chain in here
 
-    def emit(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
+    def halo(batches: Iterable[pa.RecordBatch]):
+        for b in batches:
             rows = []
-            for _, row in pdf.iterrows():
-                ict, icy, icx = int(row["ct"]), int(row["cy"]), int(row["cx"])
-                t_ = _xf(tensor_of(row), (ict, icy, icx))
+            for _, (ict, icy, icx), t_ in chunk_rows(b):
+                t_ = _xf(t_, (ict, icy, icx))
                 if t_ is None:
                     continue
                 (t0, t1), _, _ = g.chunk_cell_range(ict, icy, icx)
@@ -119,36 +109,28 @@ def window_time(cube: Cube, window: Sequence[int], reducer=None, kernel=None) ->
                     lo, hi = max(t0, kt0 - l), min(t1, kt1 + r)
                     if lo >= hi:
                         continue
-                    piece = t_[:, lo - t0 : hi - t0]
-                    rows.append(dict(tkey=g.chunk_id(kt, icy, icx), off=lo - (kt0 - l),
-                                     nb=piece.shape[0], nt=piece.shape[1], ny=piece.shape[2],
-                                     nx=piece.shape[3], is_core=int(kt == ict),
-                                     data=pack_tensor(piece)))
-            yield pd.DataFrame(rows, columns=[f.name for f in halo_schema.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in halo_schema.fields})
+                    rows.append((g.chunk_id(kt, icy, icx), (lo - (kt0 - l), 0, 0), t_[:, lo - t0 : hi - t0]))
+            yield emit(CHUNK_SCHEMA, rows)
 
     nb_in = len(cube.bands)
 
-    def assemble(key, pdf):
-        cid = int(key[0])
-        kt, ky, kx = g.chunk_coords(cid)
-        (kt0, kt1), (y0, y1), (x0, x1) = g.chunk_cell_range(kt, ky, kx)
+    def assemble(key, table):
+        cid = key[0].as_py()
+        coords = g.chunk_coords(cid)
+        (kt0, kt1), (y0, y1), (x0, x1) = g.chunk_cell_range(*coords)
         ntc, ny, nx = kt1 - kt0, y1 - y0, x1 - x0
-        # NOTE: no is_core guard — an elided (all-NaN) core chunk still gets a
-        # window computed from neighbor halo data (window_time.cpp:160-251);
-        # the all-NaN output check below keeps the missing-chunk invariant.
+        # NOTE: no core-chunk guard — an elided (all-NaN) core chunk still
+        # gets a window computed from neighbor halo data
+        # (window_time.cpp:160-251); the all-NaN output check below keeps the
+        # missing-chunk invariant.
         padded = np.full((nb_in, l + ntc + r, ny, nx), np.nan)
-        for _, row in pdf.iterrows():
-            p = tensor_of(row)
-            padded[:, int(row["off"]) : int(row["off"]) + p.shape[1]] = p
+        for _, (off, _, _), p in chunk_rows(table):
+            padded[:, off : off + p.shape[1]] = p
         out = compute(padded, ntc)
-        if np.all(np.isnan(out)):
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-        return pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=out.shape[0], nt=ntc,
-                                  ny=ny, nx=nx, data=pack_tensor(out))])
+        return pa.table(emit(CHUNK_SCHEMA, [] if np.all(np.isnan(out)) else [(cid, coords, out)]))
 
-    df = (pin_group_partitions(base_df.mapInPandas(emit, halo_schema), "tkey", g.n_chunks)
-          .groupBy("tkey").applyInPandas(assemble, CHUNK_SCHEMA))
+    df = (pin_group_partitions(base_df.mapInArrow(halo, CHUNK_SCHEMA), "chunk_id", g.n_chunks)
+          .groupBy("chunk_id").applyInArrow(assemble, CHUNK_SCHEMA))
     return Cube(df, view, out_bands, g)
 
 
@@ -231,26 +213,13 @@ def window_space(cube: Cube, reducer=None, kernel=None, window: Optional[Sequenc
     if pad not in ("none", "constant", "replicate", "reflect", "reflect_pixel"):
         raise ValueError(f"unknown pad mode {pad!r}")
 
-    halo_schema = T.StructType([
-        T.StructField("tkey", T.LongType(), False),
-        T.StructField("offy", T.IntegerType(), False),
-        T.StructField("offx", T.IntegerType(), False),
-        T.StructField("nb", T.IntegerType(), False),
-        T.StructField("nt", T.IntegerType(), False),
-        T.StructField("ny", T.IntegerType(), False),
-        T.StructField("nx", T.IntegerType(), False),
-        T.StructField("is_core", T.IntegerType(), False),
-        T.StructField("data", T.BinaryType(), False),
-    ])
-
     base_df, _xf = chunk_stream(cube)  # fuse any pending narrow chain in here
 
-    def emit(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
+    def halo(batches: Iterable[pa.RecordBatch]):
+        for b in batches:
             rows = []
-            for _, row in pdf.iterrows():
-                ict, icy, icx = int(row["ct"]), int(row["cy"]), int(row["cx"])
-                t_ = _xf(tensor_of(row), (ict, icy, icx))
+            for _, (ict, icy, icx), t_ in chunk_rows(b):
+                t_ = _xf(t_, (ict, icy, icx))
                 if t_ is None:
                     continue
                 _, (y0, y1), (x0, x1) = g.chunk_cell_range(ict, icy, icx)
@@ -261,30 +230,22 @@ def window_space(cube: Cube, reducer=None, kernel=None, window: Optional[Sequenc
                         xlo, xhi = max(x0, kx0 - hx), min(x1, kx1 + hx)
                         if ylo >= yhi or xlo >= xhi:
                             continue
-                        piece = t_[:, :, ylo - y0 : yhi - y0, xlo - x0 : xhi - x0]
-                        rows.append(dict(tkey=g.chunk_id(ict, ky, kx),
-                                         offy=ylo - (ky0 - hy), offx=xlo - (kx0 - hx),
-                                         nb=piece.shape[0], nt=piece.shape[1],
-                                         ny=piece.shape[2], nx=piece.shape[3],
-                                         is_core=int(ky == icy and kx == icx),
-                                         data=pack_tensor(piece)))
-            yield pd.DataFrame(rows, columns=[f.name for f in halo_schema.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in halo_schema.fields})
+                        rows.append((g.chunk_id(ict, ky, kx), (0, ylo - (ky0 - hy), xlo - (kx0 - hx)),
+                                     t_[:, :, ylo - y0 : yhi - y0, xlo - x0 : xhi - x0]))
+            yield emit(CHUNK_SCHEMA, rows)
 
     nb_in = len(cube.bands)
 
-    def assemble(key, pdf):
-        cid = int(key[0])
-        kt, ky, kx = g.chunk_coords(cid)
-        (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(kt, ky, kx)
+    def assemble(key, table):
+        cid = key[0].as_py()
+        coords = g.chunk_coords(cid)
+        (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(*coords)
         ntc, ny, nx = t1 - t0, y1 - y0, x1 - x0
-        # NOTE: no is_core guard — see window_time.assemble; an all-NaN core
-        # with live neighbor halos must still produce windowed values.
+        # NOTE: no core-chunk guard — see window_time.assemble; an all-NaN
+        # core with live neighbor halos must still produce windowed values.
         padded = np.full((nb_in, ntc, ny + 2 * hy, nx + 2 * hx), np.nan)
-        for _, row in pdf.iterrows():
-            p = tensor_of(row)
-            padded[:, :, int(row["offy"]) : int(row["offy"]) + p.shape[2],
-                   int(row["offx"]) : int(row["offx"]) + p.shape[3]] = p
+        for _, (_, offy, offx), p in chunk_rows(table):
+            padded[:, :, offy : offy + p.shape[2], offx : offx + p.shape[3]] = p
         padded = _pad_plane(padded, hy, hx, pad, pad_value,
                             at_top=(y0 == 0), at_bottom=(y1 == g.ny),
                             at_left=(x0 == 0), at_right=(x1 == g.nx))
@@ -295,13 +256,10 @@ def window_space(cube: Cube, reducer=None, kernel=None, window: Optional[Sequenc
         else:
             flat = sw.reshape(sw.shape[:4] + (wy * wx,))
             out = np.stack([_nanreduce_window(n, flat[bi]) for n, bi in zip(rnames, bidx)], axis=0)
-        if np.all(np.isnan(out)):
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-        return pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=out.shape[0], nt=ntc,
-                                  ny=ny, nx=nx, data=pack_tensor(out))])
+        return pa.table(emit(CHUNK_SCHEMA, [] if np.all(np.isnan(out)) else [(cid, coords, out)]))
 
-    df = (pin_group_partitions(base_df.mapInPandas(emit, halo_schema), "tkey", g.n_chunks)
-          .groupBy("tkey").applyInPandas(assemble, CHUNK_SCHEMA))
+    df = (pin_group_partitions(base_df.mapInArrow(halo, CHUNK_SCHEMA), "chunk_id", g.n_chunks)
+          .groupBy("chunk_id").applyInArrow(assemble, CHUNK_SCHEMA))
     return Cube(df, view, out_bands, g)
 
 
@@ -354,28 +312,24 @@ def fill_time(cube: Cube, method: str = "linear") -> Cube:
         return cube.map_chunks(fn)
 
     # gather the full time column per spatial chunk (fill scans arbitrarily far)
-    def gather(key, pdf):
-        pdf = pdf.sort_values("ct")
-        icy, icx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
-        ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
-        nb = int(pdf.iloc[0]["nb"])
+    def gather(key, table):
+        rows = list(chunk_rows(table))
+        _, icy, icx = rows[0][1]
+        nb, _, ny, nx = rows[0][2].shape
         full = np.full((nb, g.nt, ny, nx), np.nan)
-        for _, row in pdf.iterrows():
-            (t0, t1), _, _ = g.chunk_cell_range(int(row["ct"]), icy, icx)
-            full[:, t0:t1] = tensor_of(row)
+        for _, coords, t in rows:
+            (t0, t1), _, _ = g.chunk_cell_range(*coords)
+            full[:, t0:t1] = t
         filled = _fill_series(np.moveaxis(full, 1, 0), method).transpose(1, 0, 2, 3)
-        rows = []
+        out = []
         for kt in range(g.nct):
             (t0, t1), _, _ = g.chunk_cell_range(kt, icy, icx)
             piece = filled[:, t0:t1]
-            if np.all(np.isnan(piece)):
-                continue
-            rows.append(dict(chunk_id=g.chunk_id(kt, icy, icx), ct=kt, cy=icy, cx=icx,
-                             nb=nb, nt=t1 - t0, ny=ny, nx=nx, data=pack_tensor(piece)))
-        return pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else \
-            pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
+            if not np.all(np.isnan(piece)):
+                out.append((g.chunk_id(kt, icy, icx), (kt, icy, icx), piece))
+        return pa.table(emit(CHUNK_SCHEMA, out))
 
     keyed = cube.df.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx"))
     df = (pin_group_partitions(keyed, "skey", g.ncy * g.ncx)
-          .groupBy("skey").applyInPandas(gather, CHUNK_SCHEMA))
+          .groupBy("skey").applyInArrow(gather, CHUNK_SCHEMA))
     return Cube(df, view, list(cube.bands), g)

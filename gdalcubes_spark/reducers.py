@@ -190,3 +190,19 @@ STATE_KEYS = {
     "mean": ["n", "s"], "var": ["n", "mean", "m2"], "sd": ["n", "mean", "m2"],
     "which_min": ["v", "t"], "which_max": ["v", "t"],
 }
+
+
+def merge_finalize(names, states) -> np.ndarray:
+    """Merge and finalize packed multi-reducer partial states. Each state
+    stacks, along axis 0, the STATE_KEYS arrays of every reducer in `names`
+    (in order); `states` arrive in merge order (time order for which_*).
+    Returns the (len(names), ...) finalized values."""
+    acc = None
+    for st in states:
+        parts, off = [], 0
+        for r in names:
+            ks = STATE_KEYS[r]
+            parts.append({k: st[off + i] for i, k in enumerate(ks)})
+            off += len(ks)
+        acc = parts if acc is None else [merge_state(r, a, b) for r, a, b in zip(names, acc, parts)]
+    return np.stack([finalize_state(r, s) for r, s in zip(names, acc)], axis=0)

@@ -101,11 +101,12 @@ def streaming_scan(stream: DataFrame, view: CubeView, bands, chunking: Optional[
     n_images_seen, the images placed on the chunk so far (monotone —
     consumers keep the row with the max per chunk); a chunk that is still
     all-NaN is elided, as in the batch scan."""
+    import pandas as pd
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from gdalcubes_spark.cube import CHUNK_SCHEMA
-    from gdalcubes_spark.sources.raster_cube import DECOMPOSABLE, _explode, _ScanKernel
+    from gdalcubes_spark.cube import CHUNK_SCHEMA, pack_tensor
+    from gdalcubes_spark.sources.raster_cube import DECOMPOSABLE, FOLD_COLUMNS, _explode, _ScanKernel
 
     if view.aggregation not in DECOMPOSABLE:
         raise ValueError(f"streaming_scan supports decomposable methods only, not {view.aggregation!r}")
@@ -122,10 +123,15 @@ def streaming_scan(stream: DataFrame, view: CubeView, bands, chunking: Optional[
         blob, n_seen = state.get if state.exists else (None, 0)
         st = k.merged(cid, [] if blob is None else [blob])
         for pdf in pdf_iter:
-            st.merge(k.fold(cid, pdf, k.merge_rank))
+            st.merge(k.fold(cid, {c: pdf[c].to_numpy() for c in FOLD_COLUMNS}, k.merge_rank))
             n_seen += len(pdf)
         state.update((st.to_bytes(), n_seen))
-        return iter([k.emit(cid, st, ()).assign(n_images_seen=n_seen)])
+        t = k.emit(cid, st, ())
+        if t is None:
+            return iter([])
+        (kt, ky, kx), (nb, nt, ny, nx) = g.chunk_coords(cid), t.shape
+        return iter([pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=nb, nt=nt, ny=ny, nx=nx,
+                                        data=pack_tensor(t), n_images_seen=n_seen)])])
 
     return (_explode(stream, view, g).groupBy("chunk_id")
             .applyInPandasWithState(update_fn, out_schema, state_schema,

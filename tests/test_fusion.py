@@ -1,8 +1,8 @@
-"""Narrow-op fusion: chained map_chunks ops run as ONE mapInPandas.
+"""Narrow-op fusion: chained map_chunks ops run as ONE mapInArrow.
 
 Each narrow operator (apply_pixel, filter_pixel, rename/select via
 map_chunks, nct==1 reduce/window/fill, apply_time, predict) used to add its
-own MapInPandas node — one JVM↔Python Arrow round-trip plus a tensor
+own Python map node — one JVM↔Python Arrow round-trip plus a tensor
 pack/unpack per operator per chunk. Cube.map_chunks now composes onto the
 previous chain (cube.py), the Python-side analogue of whole-stage codegen.
 
@@ -24,8 +24,10 @@ def _view():
 
 
 def _py_nodes(df):
+    """Python map nodes of the executed plan: chunk UDFs are MapInArrow,
+    vectorized column UDFs ArrowEvalPython."""
     plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan.count("MapInPandas") + plan.count("ArrowEvalPython")
+    return plan.count("MapInArrow") + plan.count("ArrowEvalPython")
 
 
 class TestFusion:
@@ -77,7 +79,7 @@ class TestFusion:
         c = dummy_cube(spark, v, band_names=["b"], fill=2.0, chunking=g)
         r = c.apply_pixel("b*3", names=["x"]).reduce_time("mean(x)")
         plan = r.df._jdf.queryExecution().executedPlan().toString()
-        assert _py_nodes(r.df) + plan.count("FlatMapGroupsInPandas") == 3
+        assert _py_nodes(r.df) + plan.count("FlatMapGroupsInArrow") == 3
         a = r.collect_array()
         assert a.shape == (1, 1, 8, 8)
         assert np.allclose(a, 6.0)

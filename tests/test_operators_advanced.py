@@ -198,6 +198,30 @@ class TestStreamOps:
         a = r.collect_array()
         assert np.allclose(a[0, :, 0, 0], np.cumsum(np.arange(6.0)))
 
+    @pytest.mark.parametrize("op", ["chunk_apply", "apply_time", "reduce_time_udf", "reduce_space_udf"])
+    def test_band_count_mismatch_raises(self, spark, op):
+        """A user function whose band count disagrees with the declared bands
+        (no names= passed) must raise, naming the operator and names=, not
+        mislabel bands or fail later with a broadcast error."""
+        from gdalcubes_spark.operators.stream import reduce_space_udf, reduce_time_udf
+        v = CubeView.create(srs="EPSG:4326", left=0, right=5, bottom=0, top=5,
+                            t0="2021-01-01", t1="2021-01-08", dt="P1D", dx=1.0, dy=1.0)
+        c = dummy_cube(spark, v, 2, 1.0, chunking=ChunkGrid(nt=8, ny=5, nx=5, ct=4, cy=5, cx=5))
+        build = {
+            "chunk_apply": lambda: c.chunk_apply(lambda t, coords: t[:1]),  # 1 band, declares 2
+            "apply_time": lambda: c.apply_time(lambda s: s[:1]),  # 1 band, declares 2
+            "reduce_time_udf": lambda: reduce_time_udf(c, lambda s: np.nansum(s, axis=1)),  # 2, declares 1
+            "reduce_space_udf": lambda: reduce_space_udf(c, lambda p: np.nanmean(p, axis=(1, 2))),  # 2 vs 1
+        }[op]
+        with pytest.raises(Exception, match=f"{op}: the function returned .* pass names="):
+            build().collect_array()
+
+    def test_collect_array_rejects_mislabeled_chunks(self, spark):
+        from gdalcubes_spark.cube import Cube
+        c = dummy_cube(spark, yearly_view(4, 4), 2, 1.0)
+        with pytest.raises(ValueError, match="has shape"):
+            Cube(c.df, c.view, ["only_one"], c.chunking).collect_array()
+
     def test_predict(self, spark):
         class Model:
             def predict(self, X):

@@ -85,6 +85,56 @@ class TestPlans:
         assert pinned(extract_geom(med, feats)) == sorted(
             [("chunk_id", n_scan), ("skey", n_red), ("chunk_id", n_ex), ("chunk_id", n_ex)])
 
+    def test_chunk_udfs_are_arrow_nodes(self, spark, tmp_path, monkeypatch):
+        """Every chunk UDF is an Arrow node. A cube built through the scan,
+        reduce_time (partial/merge and gather), window_time's halo exchange,
+        crop, join_bands, cells and from_cells, then checkpointed, executes
+        no MapInPandas or FlatMapGroupsInPandas node."""
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        from gdalcubes_spark.checkpoint import read_checkpoint, write_checkpoint
+        from gdalcubes_spark.cube import Cube
+        from gdalcubes_spark.sources.raster_cube import raster_cube
+        from gdalcubes_spark.synth import ImageLayout, band_names, generate_images
+
+        def plan(df):
+            return df._jdf.queryExecution().executedPlan().toString()
+
+        written = []  # the checkpoint commit's plan, taken at its parquet write
+        parquet = DataFrameWriter.parquet
+
+        def recording_parquet(self, path, *args, **kwargs):
+            written.append(plan(self._df))
+            return parquet(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+        lay = ImageLayout(left0=0.0, top0=4.0, tile_dx=2.0, tile_dy=2.0, gx=2, gy=2,
+                          ntime=4, tile_w=16, tile_h=16, nb=1, fmts=("raw",))
+        v = CubeView.create(srs="EPSG:4326", left=0, right=4, bottom=0, top=4,
+                            t0="2021-01-01", t1="2021-01-04", dt="P1D", dx=0.25, dy=0.25,
+                            aggregation="mean", resampling="near")
+        g = ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=2, cy=8, cx=8)  # nct = 2: the wide paths
+        b = band_names(lay)[0]
+        gen = generate_images(spark, 16, lay)  # the synthetic source is itself a pandas UDF
+        images = spark.createDataFrame(gen.collect(), gen.schema)
+        scan = raster_cube(images, v, band_names(lay), chunking=g)
+        partial = scan.reduce_time(f"mean({b})")
+        gather = scan.reduce_time(f"median({b})")
+        halo = scan.window_time([1, 1], reducer=f"mean({b})")
+        cropped = halo.crop(left=0.5, right=3.5, bottom=0.5, top=3.5)
+        joined = partial.join_bands(gather)
+        rebuilt = Cube.from_cells(joined.cells(), joined.view, joined.bands, joined.chunking)
+        write_checkpoint(rebuilt, str(tmp_path / "ck"))
+
+        plans = [plan(c.df) for c in (scan, partial, gather, halo, cropped, joined, rebuilt)] + written
+        for p in plans:
+            assert "MapInPandas" not in p and "FlatMapGroupsInPandas" not in p, p
+        assert "MapInArrow" in written[0]  # the commit pass
+        assert all("FlatMapGroupsInArrow" in p for p in plans[:7])
+        got = read_checkpoint(spark, str(tmp_path / "ck")).collect_array()
+        assert np.array_equal(got, joined.collect_array(), equal_nan=True)
+        assert not np.all(np.isnan(got)) and not np.all(np.isnan(cropped.collect_array()))
+
     def test_whole_stage_codegen_for_text_features(self, spark):
         # text analysis must stay JVM-side: no Python UDF nodes in the plan
         from gdalcubes_spark.pipeline.text import text_features

@@ -2,18 +2,24 @@
 Spark and its oracle_sql() on DuckDB over the same parquet, compare row count,
 schema (column names) and order-insensitive values.
 
-Usage: PYTHONPATH=/root/repo python tools/check_oracles.py [sf_dir] [name...]
+Usage: python tools/check_oracles.py [sf_dir] [name...]
+
+The package and __spark_entry__ are imported from the checkout this tool sits
+in (driver and Spark Python workers alike), whatever the working directory.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
