@@ -20,6 +20,12 @@ Scale notes:
 - chunk_rows() and emit() are the one reader and the one writer of chunk
   rows in the batch chunk UDFs, like gdalcubes' single chunk_data interface:
   the UDFs see (chunk_id, (ct, cy, cx), tensor), never payload bytes and dims.
+- narrow ops fuse one way: a Cube is its source's build(chain), the chain
+  being the map_chunks tensor fns still pending on that source (the way
+  gdalcubes' operators pull their input chunk through read_chunk). Direct df
+  consumers get the chain inside the source's last UDF (on raster_cube, the
+  scan's build); wide ops read chunk_stream() and run it in their own first
+  UDF. Either way a chain of narrow ops crosses the JVM↔Python boundary once.
 """
 
 from __future__ import annotations
@@ -88,9 +94,11 @@ def pin_group_partitions(df: DataFrame, keys, n_groups: int) -> DataFrame:
     runs (≈0.22 s on a 4-core host, `tools/python_task_cost.py`), so each
     extra wave costs that much again whether a task folds 8 images or 52.
     The rule was measured only at local[4] on the median_zonal stages (scan,
-    reduce_time gather, extract_geom); window, reduce_space and from_cells
-    follow it untimed. Hashing chunk_id into exactly `par` partitions gives
-    tasks unequal group counts, so skew across the one wave is higher."""
+    reduce_time gather, extract_geom); window and from_cells follow it
+    untimed. reduce_space (groupBy "ct") and aggregate_* (groupBy chunk_id)
+    group with no pin, so AQE may coalesce those stages. Hashing chunk_id
+    into exactly `par` partitions gives tasks unequal group counts, so skew
+    across the one wave is higher."""
     try:
         par = df.sparkSession.sparkContext.defaultParallelism
     except Exception:
@@ -123,28 +131,23 @@ def emit(schema: T.StructType, rows: Iterable[tuple]) -> pa.RecordBatch:
 
 
 def chunk_stream(cube):
-    """(df, xform) for WIDE operators consuming a cube's chunk rows inside
-    their own UDF: `df` is the DataFrame to map over and `xform(tensor,
-    (ct,cy,cx)) -> tensor | None` applies any pending fused narrow chain
-    (None ⇒ treat the chunk as elided/all-NaN, same invariant as map_chunks).
+    """(df, rows) for WIDE operators that read a cube's chunk rows inside
+    their own first UDF: map over `df`; `rows(batch)` yields the batch's
+    (chunk_id, (ct, cy, cx), tensor) with the cube's pending narrow chain
+    applied and elided (None / all-NaN) chunks dropped.
 
-    Using this instead of `cube.df` lets a narrow chain fuse INTO the wide
-    op's first UDF — e.g. scan → apply_pixel → reduce partial runs the apply
-    inside the partial's UDF, removing a standalone mapInArrow node (one
-    full-cube Arrow round-trip)."""
-    base = cube._fuse_base
-    if base is None:
-        # scan-fused cubes carry a LAZY bare-scan base (built only when a
-        # stream consumer actually wants it — see _attach_scan_fusion)
-        thunk = getattr(cube, "_fuse_base_thunk", None)
-        if thunk is not None:
-            base = cube._fuse_base = thunk()
-    if base is None:
-        base = cube.df
-    chain = tuple(cube._fuse_chain or ())
-    if not chain:
-        return cube.df, (lambda t, coords: t)
-    return base, functools.partial(apply_chain, chain)
+    `df` is the cube's build with an empty chain, so the chain runs in the
+    consumer's UDF: scan → apply_pixel → reduce partial runs the apply inside
+    the partial, with no node (one full-cube Arrow round trip) of its own."""
+    chain = cube._chain
+    df = cube._build(()) if chain else cube.df
+
+    def rows(batch):
+        for cid, coords, t in chunk_rows(batch):
+            t = apply_chain(chain, t, coords)
+            if t is not None:
+                yield cid, coords, t
+    return df, rows
 
 
 def apply_chain(chain: tuple, t: np.ndarray, coords: tuple) -> Optional[np.ndarray]:
@@ -157,6 +160,18 @@ def apply_chain(chain: tuple, t: np.ndarray, coords: tuple) -> Optional[np.ndarr
         if t is None or (isinstance(t, np.ndarray) and np.all(np.isnan(t))):
             return None
     return t
+
+
+def _map_chain(df: DataFrame, chain: tuple) -> DataFrame:
+    """The default build: `chain` as one mapInArrow over `df`."""
+    if not chain:
+        return df
+
+    def gen(batches: Iterable[pa.RecordBatch]):
+        for b in batches:
+            out = ((cid, coords, apply_chain(chain, t, coords)) for cid, coords, t in chunk_rows(b))
+            yield emit(CHUNK_SCHEMA, [r for r in out if r[2] is not None])
+    return df.mapInArrow(gen, CHUNK_SCHEMA)
 
 
 def pack_tensor(a: np.ndarray) -> bytes:
@@ -175,14 +190,16 @@ class Cube:
     view: CubeView
     bands: List[str]
     chunking: ChunkGrid
-    # Narrow-op fusion state: when this cube's df was produced by map_chunks,
-    # _fuse_base is the pre-UDF DataFrame and _fuse_chain the tensor fns applied
-    # to it. A subsequent map_chunks composes onto the chain so N chained narrow
-    # ops cross the JVM↔Python Arrow boundary ONCE, not N times (the Python-side
-    # analogue of whole-stage codegen). df itself is always fully materialized
-    # and valid — fusion only changes how the NEXT narrow op builds its plan.
-    _fuse_base: Optional[DataFrame] = field(default=None, repr=False, compare=False)
-    _fuse_chain: tuple = field(default=(), repr=False, compare=False)
+    # Narrow-op fusion: df == _build(_chain). _chain holds the map_chunks
+    # tensor fns still pending on the cube's source and _build(chain) builds
+    # the chunk table with `chain` run inside the source's last UDF, so N
+    # chained narrow ops cross the JVM↔Python Arrow boundary ONCE, not N
+    # times (the Python-side analogue of whole-stage codegen). None means
+    # the default build (_map_chain over df). df itself is always valid.
+    _build: Optional[Callable[[tuple], DataFrame]] = field(default=None, repr=False, compare=False)
+    _chain: tuple = field(default=(), repr=False, compare=False)
+    # select_bands pushdown: the same source over fewer bands (raster_cube)
+    _scan_rebuild: Optional[Callable[[List[str]], "Cube"]] = field(default=None, repr=False, compare=False)
 
     # ------------------------------------------------------------------ meta
     @property
@@ -191,10 +208,6 @@ class Cube:
 
     def band_index(self, name: str) -> int:
         return self.bands.index(name)
-
-    def _derive(self, df: DataFrame, view: Optional[CubeView] = None, bands: Optional[List[str]] = None,
-                chunking: Optional[ChunkGrid] = None) -> "Cube":
-        return Cube(df, view or self.view, list(bands or self.bands), chunking or self.chunking)
 
     # ----------------------------------------------------------- chunk plumbing
     def map_chunks(
@@ -209,38 +222,18 @@ class Cube:
         Output chunk grid must keep the same (ct,cy,cx) chunk coordinates
         unless out_chunking says otherwise.
 
-        Chained narrow ops FUSE: if this cube itself came out of map_chunks,
-        the new fn is composed onto the existing tensor-fn chain over the
-        original pre-UDF DataFrame, so `apply_pixel → filter_pixel → reduce`
-        runs as ONE mapInArrow (one Arrow round-trip, one pack/unpack per
-        chunk) instead of one per operator. Legal because map_chunks preserves
-        chunk coordinates and dropping an all-NaN intermediate equals the
-        missing-chunk ≡ all-NaN invariant the unfused plan enforces between
-        stages."""
-        view = out_view or self.view
-        bands = list(out_bands or self.bands)
-        chunking = out_chunking or self.chunking
-        # scan-side fusion: a cube produced by raster_cube exposes a rebuild
-        # hook that applies the tensor fn INSIDE the scan's build UDF (after
-        # aggregation, before pack/emit) — the narrow op then costs zero
-        # extra Arrow round trips and, when it narrows the tensor (e.g. an
-        # NDVI apply_pixel halving band count), the downstream shuffle moves
-        # the narrowed bytes
-        hook = getattr(self, "_fuse_into_scan", None)
-        if hook is not None:
-            return hook(fn, view, bands, chunking)
-        base = self._fuse_base if self._fuse_base is not None else self.df
-        chain = tuple(self._fuse_chain) + (fn,)
-
-        def gen(batches: Iterable[pa.RecordBatch]):
-            for b in batches:
-                out = ((cid, coords, apply_chain(chain, t, coords)) for cid, coords, t in chunk_rows(b))
-                yield emit(CHUNK_SCHEMA, [r for r in out if r[2] is not None])
-
-        fused = self._derive(base.mapInArrow(gen, CHUNK_SCHEMA), view, bands, chunking)
-        fused._fuse_base = base
-        fused._fuse_chain = chain
-        return fused
+        Chained narrow ops FUSE: the result is build(chain + (fn,)), with
+        build this cube's _build or, without one, one mapInArrow over this
+        cube's df. `apply_pixel → filter_pixel → reduce` therefore runs as
+        ONE Python UDF (one Arrow round trip, one pack/unpack per chunk) —
+        on a raster_cube inside the scan's own build UDF. Legal because
+        map_chunks preserves chunk coordinates and dropping an all-NaN
+        intermediate equals the missing-chunk ≡ all-NaN invariant the unfused
+        plan enforces between stages."""
+        build = self._build or functools.partial(_map_chain, self.df)
+        chain = self._chain + (fn,)
+        return Cube(build(chain), out_view or self.view, list(out_bands or self.bands),
+                    out_chunking or self.chunking, _build=build, _chain=chain)
 
     # ------------------------------------------------------------- long format
     def cells(self, drop_nan: bool = True, band_as_index: bool = False) -> DataFrame:
@@ -261,16 +254,13 @@ class Cube:
             ]
         )
 
-        base_df, xf = chunk_stream(self)  # fuse any pending narrow chain in here
+        base_df, chunks = chunk_stream(self)  # fuse any pending narrow chain in here
         arrow = to_arrow_schema(schema)
         band_names = pa.array(bands, pa.string())
 
         def gen(batches: Iterable[pa.RecordBatch]):
             for b in batches:
-                for _, coords, t in chunk_rows(b):
-                    t = xf(t, coords)
-                    if t is None:
-                        continue
+                for _, coords, t in chunks(b):
                     (t0, _), (y0, _), (x0, _) = g.chunk_cell_range(*coords)
                     bi, ti, yi, xi = np.unravel_index(np.arange(t.size), t.shape)
                     v = t.ravel()

@@ -58,15 +58,12 @@ def _aggregate(cube: Cube, out_view, gout: ChunkGrid, t_map: np.ndarray,
             out.append((sel, om[sel] - o0))
         return out
 
-    base_df, _xf = chunk_stream(cube)  # fuse any pending narrow chain in here
+    base_df, chunks = chunk_stream(cube)  # fuse any pending narrow chain in here
 
     def cut(batches: Iterable[pa.RecordBatch]):
         for b in batches:
             rows = []
-            for _, coords, tsr in chunk_rows(b):
-                tsr = _xf(tsr, coords)
-                if tsr is None:
-                    continue
+            for _, coords, tsr in chunks(b):
                 (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(*coords)
                 # output chunk coords touched by this input chunk
                 for ocoords in itertools.product(np.unique(t_map[t0:t1] // gout.ct).tolist(),

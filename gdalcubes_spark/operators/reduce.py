@@ -91,15 +91,12 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
         # ---- partial/merge path (small shuffle) -----------------------------
         # a chunk's partial states travel as a chunk row whose "bands" are
         # the stacked STATE_KEYS arrays: shape (nstates, 1, ny, nx)
-        base_df, xf = chunk_stream(cube)  # fuse any pending narrow chain in here
+        base_df, chunks = chunk_stream(cube)  # fuse any pending narrow chain in here
 
         def mk_partial(batches: Iterable[pa.RecordBatch]):
             for b in batches:
                 rows = []
-                for cid, coords, t in chunk_rows(b):
-                    t = xf(t, coords)
-                    if t is None:
-                        continue
+                for cid, coords, t in chunks(b):
                     (t0, t1), _, _ = g.chunk_cell_range(*coords)
                     td = _t_doubles(view, np.arange(t0, t1))
                     blobs = []
@@ -151,15 +148,12 @@ def reduce_space(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] 
 
     if all(r in R.COMBINABLE for r in rnames):
         # partial states as chunk rows of shape (nstates, nt, 1, 1), merged per t-slab
-        base_df, xf = chunk_stream(cube)  # fuse any pending narrow chain in here
+        base_df, chunks = chunk_stream(cube)  # fuse any pending narrow chain in here
 
         def mk_partial(batches: Iterable[pa.RecordBatch]):
             for b in batches:
                 rows = []
-                for cid, coords, t in chunk_rows(b):
-                    t = xf(t, coords)
-                    if t is None:
-                        continue
+                for cid, coords, t in chunks(b):
                     _, nt, ny, nx = t.shape
                     blobs = []
                     for r, bi in zip(rnames, bidx):

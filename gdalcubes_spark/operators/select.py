@@ -34,9 +34,8 @@ def select_bands(cube: Cube, bands: Sequence[str]) -> Cube:
     idx = [cube.bands.index(b) for b in bands]
     # pushdown: selecting bands of a raster_cube re-plans the scan so only
     # those bands are sampled/aggregated/shuffled (select_bands.h:50-90)
-    rebuild = getattr(cube, "_scan_rebuild", None)
-    if rebuild is not None:
-        return rebuild(bands)
+    if cube._scan_rebuild is not None:
+        return cube._scan_rebuild(bands)
 
     def fn(t: np.ndarray, coords):
         return t[idx]

@@ -94,15 +94,12 @@ def window_time(cube: Cube, window: Sequence[int], reducer=None, kernel=None) ->
         return cube.map_chunks(fn, out_bands=out_bands)
 
     # halo slab exchange along t: chunk k needs [k*ct - l, (k+1)*ct + r)
-    base_df, _xf = chunk_stream(cube)  # fuse any pending narrow chain in here
+    base_df, chunks = chunk_stream(cube)  # fuse any pending narrow chain in here
 
     def halo(batches: Iterable[pa.RecordBatch]):
         for b in batches:
             rows = []
-            for _, (ict, icy, icx), t_ in chunk_rows(b):
-                t_ = _xf(t_, (ict, icy, icx))
-                if t_ is None:
-                    continue
+            for _, (ict, icy, icx), t_ in chunks(b):
                 (t0, t1), _, _ = g.chunk_cell_range(ict, icy, icx)
                 for kt in range(max(0, (t0 - r) // g.ct), min(g.nct - 1, (t1 - 1 + l) // g.ct) + 1):
                     (kt0, kt1), _, _ = g.chunk_cell_range(kt, icy, icx)
@@ -137,51 +134,28 @@ def window_time(cube: Cube, window: Sequence[int], reducer=None, kernel=None) ->
 # ---------------------------------------------------------------------------
 
 
-def _pad_plane(p: np.ndarray, hy: int, hx: int, mode: str, value: float,
-               at_top: bool, at_bottom: bool, at_left: bool, at_right: bool) -> np.ndarray:
-    """Apply cube-boundary padding to the outer border of an already-haloed
-    plane p (..., ny+2hy, nx+2hx). Interior (chunk-boundary) halo cells were
-    filled from real neighbors; only cube edges get synthetic padding."""
+def _pad_plane(p: np.ndarray, y0: int, x0: int, ny: int, nx: int, mode: str, value: float) -> np.ndarray:
+    """Apply cube-boundary padding to a haloed plane p (..., h, w) whose
+    first row and column are the global cells y0 and x0 of an ny × nx cube.
+    Each plane index outside [0, n) takes np.pad's value for it (constant,
+    edge, symmetric, reflect); indices inside hold real data from the halo
+    exchange. A padded index maps to a cube cell no farther from the chunk
+    than the halo, so it lies inside the plane however narrow the chunk."""
     if mode == "none":
         return p
-    def fill_axis(arr, axis, lo, hi, h):
-        idx = [slice(None)] * arr.ndim
-        n = arr.shape[axis]
-        if lo:
-            src_sl, dst_sl = list(idx), list(idx)
-            if mode == "constant":
-                dst_sl[axis] = slice(0, h)
-                arr[tuple(dst_sl)] = value
-            elif mode == "replicate":
-                src_sl[axis] = slice(h, h + 1)
-                dst_sl[axis] = slice(0, h)
-                arr[tuple(dst_sl)] = np.repeat(arr[tuple(src_sl)], h, axis=axis)
-            elif mode in ("reflect", "reflect_pixel"):
-                o = 0 if mode == "reflect" else 1
-                for k in range(h):
-                    s, d = list(idx), list(idx)
-                    d[axis] = slice(h - 1 - k, h - k)
-                    s[axis] = slice(h + k + o, h + k + o + 1)
-                    arr[tuple(d)] = arr[tuple(s)]
-        if hi:
-            if mode == "constant":
-                d = list(idx); d[axis] = slice(n - h, n)
-                arr[tuple(d)] = value
-            elif mode == "replicate":
-                s, d = list(idx), list(idx)
-                s[axis] = slice(n - h - 1, n - h)
-                d[axis] = slice(n - h, n)
-                arr[tuple(d)] = np.repeat(arr[tuple(s)], h, axis=axis)
-            elif mode in ("reflect", "reflect_pixel"):
-                o = 0 if mode == "reflect" else 1
-                for k in range(h):
-                    s, d = list(idx), list(idx)
-                    d[axis] = slice(n - h + k, n - h + k + 1)
-                    s[axis] = slice(n - h - 1 - k - o, n - h - k - o)
-                    arr[tuple(d)] = arr[tuple(s)]
-        return arr
-    p = fill_axis(p, p.ndim - 2, at_top, at_bottom, hy)
-    p = fill_axis(p, p.ndim - 1, at_left, at_right, hx)
+    for axis, lo, n in ((p.ndim - 2, y0, ny), (p.ndim - 1, x0, nx)):
+        gi = np.arange(lo, lo + p.shape[axis])
+        if mode == "constant":
+            outside = ((gi < 0) | (gi >= n)).reshape((-1,) + (1,) * (p.ndim - 1 - axis))
+            p = np.where(outside, value, p)
+            continue
+        if mode == "replicate":
+            src = np.clip(gi, 0, n - 1)
+        else:  # mirror with period 2n (reflect: edge repeated) or 2n - 2 (reflect_pixel)
+            period = 2 * n if mode == "reflect" else max(2 * n - 2, 1)
+            r = gi % period
+            src = np.where(r < n, r, period - r - (mode == "reflect"))
+        p = np.take(p, src - lo, axis=axis)
     return p
 
 
@@ -213,15 +187,12 @@ def window_space(cube: Cube, reducer=None, kernel=None, window: Optional[Sequenc
     if pad not in ("none", "constant", "replicate", "reflect", "reflect_pixel"):
         raise ValueError(f"unknown pad mode {pad!r}")
 
-    base_df, _xf = chunk_stream(cube)  # fuse any pending narrow chain in here
+    base_df, chunks = chunk_stream(cube)  # fuse any pending narrow chain in here
 
     def halo(batches: Iterable[pa.RecordBatch]):
         for b in batches:
             rows = []
-            for _, (ict, icy, icx), t_ in chunk_rows(b):
-                t_ = _xf(t_, (ict, icy, icx))
-                if t_ is None:
-                    continue
+            for _, (ict, icy, icx), t_ in chunks(b):
                 _, (y0, y1), (x0, x1) = g.chunk_cell_range(ict, icy, icx)
                 for ky in range(max(0, (y0 - hy) // g.cy), min(g.ncy - 1, (y1 - 1 + hy) // g.cy) + 1):
                     for kx in range(max(0, (x0 - hx) // g.cx), min(g.ncx - 1, (x1 - 1 + hx) // g.cx) + 1):
@@ -246,9 +217,7 @@ def window_space(cube: Cube, reducer=None, kernel=None, window: Optional[Sequenc
         padded = np.full((nb_in, ntc, ny + 2 * hy, nx + 2 * hx), np.nan)
         for _, (_, offy, offx), p in chunk_rows(table):
             padded[:, :, offy : offy + p.shape[2], offx : offx + p.shape[3]] = p
-        padded = _pad_plane(padded, hy, hx, pad, pad_value,
-                            at_top=(y0 == 0), at_bottom=(y1 == g.ny),
-                            at_left=(x0 == 0), at_right=(x1 == g.nx))
+        padded = _pad_plane(padded, y0 - hy, x0 - hx, g.ny, g.nx, pad, pad_value)
         swy = np.lib.stride_tricks.sliding_window_view(padded, wy, axis=2)
         sw = np.lib.stride_tricks.sliding_window_view(swy, wx, axis=3)  # (nb,ntc,ny,nx,wy,wx)
         if kernel is not None:

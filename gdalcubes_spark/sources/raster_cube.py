@@ -466,28 +466,6 @@ def _nan_add(a: np.ndarray, vals: np.ndarray) -> None:
     a[ok] += vals[ok]
 
 
-def _attach_scan_fusion(cube: Cube, make_df, chain: tuple) -> None:
-    """Wire Cube.map_chunks' scan-fusion hook onto a scan-produced cube.
-
-    make_df(chain) wraps the ALREADY-ANALYZED pre-groupBy DataFrame with a
-    build/merge UDF applying `chain` in-UDF — reusing the analyzed subtree
-    keeps each fused rebuild to one cheap applyInArrow wrap (a from-scratch
-    raster_cube rebuild cost ~0.3-0.6 s of driver-side analysis per narrow
-    op, eating the executor-side win). The bare-scan stream base is a THUNK:
-    only chunk_stream consumers (reduce partials, aggregate cut, window
-    emits) pay for building it, and they get the chain fused into their own
-    UDF with no packed intermediate; direct cube.df consumers get the
-    in-build fusion."""
-    def hook(fn, fview, fbands, fchunking):
-        new_chain = chain + (fn,)
-        fused = Cube(make_df(new_chain), fview, list(fbands), fchunking)
-        fused._fuse_chain = new_chain
-        fused._fuse_base_thunk = lambda: make_df(())
-        _attach_scan_fusion(fused, make_df, new_chain)
-        return fused
-    cube._fuse_into_scan = hook
-
-
 def _explode(images: DataFrame, view: CubeView, g: ChunkGrid) -> DataFrame:
     """The scan's join side: each image row (batch or streaming) → one row per
     covering chunk id, by pure column arithmetic on the bbox in the view SRS
@@ -622,9 +600,11 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
     a full-res warp at the last ulp — enable when the view is much coarser
     than the sources and the decode dominates (the usual 100 TB case).
 
-    The returned cube carries the scan-fusion hook (_attach_scan_fusion):
-    narrow ops chained onto it run inside the build/merge UDF after
-    aggregation — zero extra Arrow round trips (see Cube.map_chunks)."""
+    The returned cube's build is the build/merge UDF with a fused chain:
+    narrow ops chained onto it run inside that UDF after aggregation, with
+    zero extra Arrow round trips (see Cube.map_chunks). Each chained build
+    wraps the same analyzed pre-groupBy DataFrame, so it costs one cheap
+    applyInArrow, not a from-scratch re-plan of the scan."""
     args = dict(locals())  # the select_bands rebuild reuses every argument
     g = chunking or default_chunking(view)
     k = _ScanKernel(view, g, bands, mask, band_sel, use_overviews)
@@ -671,11 +651,8 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
                 return k.chunk_table(cid, k.emit(cid, k.fold(cid, _fold_columns(table), _row_rank), chain))
             return pinned.groupBy("chunk_id").applyInArrow(build, CHUNK_SCHEMA)
 
-    cube = Cube(make_df(()), view, k.out_bands, g)
-    # select_bands pushdown hook: the same scan over fewer bands
-    cube._scan_rebuild = lambda names: raster_cube(**{**args, "band_sel": list(names)})
-    _attach_scan_fusion(cube, make_df, ())
-    return cube
+    return Cube(make_df(()), view, k.out_bands, g, _build=make_df,
+                _scan_rebuild=lambda names: raster_cube(**{**args, "band_sel": list(names)}))
 
 
 def _fold_columns(table: pa.Table) -> dict:

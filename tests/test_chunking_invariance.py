@@ -1,0 +1,105 @@
+"""Chunking invariance of the halo and gather operators: the result of an
+operator must not depend on the chunk grid. Every grid here has edge chunks
+narrower than the window's halo, the case a per-chunk view of the cube edge
+gets wrong. Kernels compare to 1e-12: einsum's summation order follows the
+chunk shape. window_space is also checked against np.pad (gdalcubes pads the
+window read against the cube, window_space.cpp:219-300)."""
+
+import numpy as np
+import pytest
+
+from gdalcubes_spark.cube import cube_from_array
+from gdalcubes_spark.grid import ChunkGrid, CubeView
+
+# gdalcubes pad mode → np.pad mode ("none" is NaN beyond the cube edge)
+NP_PAD = {"none": "constant", "constant": "constant", "replicate": "edge",
+          "reflect": "symmetric", "reflect_pixel": "reflect"}
+PAD_VALUE = 0.5
+
+
+def _view(nt, ny, nx):
+    return CubeView.create(srs="EPSG:4326", left=0, right=nx, bottom=0, top=ny,
+                           t0="2021-01-01", t1=f"2021-01-{nt:02d}", dt="P1D", dx=1.0, dy=1.0)
+
+
+def _run(spark, arr, grid, op):
+    """op on arr chunked as (ct, cy, cx), collected to (nb, nt, ny, nx)."""
+    _, nt, ny, nx = arr.shape
+    g = ChunkGrid(nt=nt, ny=ny, nx=nx, ct=grid[0], cy=grid[1], cx=grid[2])
+    return op(cube_from_array(spark, arr, _view(nt, ny, nx), chunking=g)).collect_array()
+
+
+def _window_space_ref(arr, wy, wx, pad, reduce):
+    hy, hx = wy // 2, wx // 2
+    kw = {"constant_values": np.nan if pad == "none" else PAD_VALUE} if NP_PAD[pad] == "constant" else {}
+    p = np.pad(arr, ((0, 0), (0, 0), (hy, hy), (hx, hx)), mode=NP_PAD[pad], **kw)
+    sw = np.lib.stride_tricks.sliding_window_view(p, (wy, wx), axis=(2, 3))
+    return reduce(sw)
+
+
+# 2×9×7: (ct, cy, cx) grids whose last y and/or x chunk (1 cell) is
+# narrower than a 2-cell halo
+WS_GRIDS = [(1, 3, 3), (1, 2, 3), (1, 9, 2)]
+
+
+@pytest.mark.parametrize("window", [(3, 3), (3, 5), (5, 5)], ids=["3x3", "3x5", "5x5"])
+@pytest.mark.parametrize("pad", list(NP_PAD))
+def test_window_space_chunking_invariant(spark, pad, window):
+    wy, wx = window
+    arr = np.random.default_rng(7).random((1, 2, 9, 7))
+    kernel = np.random.default_rng(8).random(window)
+    ops = {
+        "reducer": (lambda c: c.window_space(reducer="mean(band1)", window=window, pad=pad,
+                                             pad_value=PAD_VALUE),
+                    lambda sw: np.nanmean(sw, axis=(-2, -1))),
+        "kernel": (lambda c: c.window_space(kernel=kernel, pad=pad, pad_value=PAD_VALUE),
+                   lambda sw: np.einsum("btyxuv,uv->btyx", sw, kernel)),
+    }
+    for name, (op, reduce) in ops.items():
+        single = _run(spark, arr, (2, 9, 7), op)
+        np.testing.assert_allclose(single, _window_space_ref(arr, wy, wx, pad, reduce), rtol=1e-12,
+                                   err_msg=name)
+        for grid in WS_GRIDS:
+            np.testing.assert_allclose(_run(spark, arr, grid, op), single, rtol=1e-12, err_msg=f"{name} {grid}")
+
+
+@pytest.mark.parametrize("how", ["reducer", "kernel"])
+def test_window_time_halo_wider_than_chunk(spark, how):
+    """l and r both exceed ct: a chunk's window reaches past its neighbor."""
+    arr = np.random.default_rng(9).random((1, 7, 3, 2))
+    l, r = 3, 2
+    if how == "reducer":
+        def op(c):
+            return c.window_time((l, r), reducer="sum(band1)")
+
+        def reduce(sw):
+            return np.nansum(sw, axis=-1)
+    else:
+        kernel = np.random.default_rng(10).random(l + 1 + r)
+
+        def op(c):
+            return c.window_time((l, r), kernel=kernel)
+
+        def reduce(sw):
+            return sw @ kernel
+    p = np.pad(arr, ((0, 0), (l, r), (0, 0), (0, 0)), constant_values=np.nan)
+    ref = reduce(np.lib.stride_tricks.sliding_window_view(p, l + 1 + r, axis=1))
+    single = _run(spark, arr, (7, 3, 2), op)
+    np.testing.assert_allclose(single, ref, rtol=1e-12)
+    for grid in [(1, 3, 2), (2, 2, 1)]:
+        np.testing.assert_allclose(_run(spark, arr, grid, op), single, rtol=1e-12, err_msg=str(grid))
+
+
+@pytest.mark.parametrize("method", ["near", "linear", "locf", "nocb"])
+def test_fill_time_gaps_across_chunks(spark, method):
+    """NaN runs that span whole chunks (and both cube ends) fill the same
+    whatever the time chunking."""
+    arr = np.random.default_rng(11).random((1, 9, 2, 2))
+    arr[:, 0] = np.nan            # leading gap
+    arr[:, 2:7, 0, :] = np.nan    # 5-step gap across 2-3 chunks
+    arr[:, 3:9, 1, 1] = np.nan    # trailing gap
+    single = _run(spark, arr, (9, 2, 2), lambda c: c.fill_time(method))
+    assert np.isnan(single).sum() < np.isnan(arr).sum()
+    for grid in [(2, 2, 2), (3, 1, 2), (1, 2, 1)]:
+        np.testing.assert_array_equal(_run(spark, arr, grid, lambda c: c.fill_time(method)), single,
+                                      err_msg=str(grid))

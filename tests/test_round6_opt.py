@@ -5,7 +5,6 @@ value-identical to their reference formulations.
 - reduce_time sort-gather median == np.nanmedian
 - PNG filter-0 fast path roundtrip
 - JPEG decode/encode identical across the optimized entropy loop
-- scan fusion: map_chunks on a raster_cube == unfused computation
 - cosine_neardup_pairs_bucketed: derived plane count keeps clone recall
 """
 
@@ -165,72 +164,6 @@ def test_jpeg_roundtrip_stable():
             if sub == "444":
                 err = np.abs(dec.astype(float) - a.astype(float)).mean()
                 assert err < 16.0  # sanity: quality 90 on noise, no subsampling
-
-
-def test_scan_fusion_matches_unfused(spark):
-    from gdalcubes_spark.grid import ChunkGrid, CubeView
-    from gdalcubes_spark.sources.raster_cube import raster_cube
-    from gdalcubes_spark.synth import ImageLayout, band_names, generate_images
-
-    lay = ImageLayout(left0=0.0, top0=2.0, tile_dx=1.0, tile_dy=1.0, gx=2, gy=2,
-                      ntime=2, dt_days=31, tile_w=16, tile_h=16, nb=2,
-                      fmts=("png", "raw"), hot_every=5, overlap=0.2)
-    imgs = generate_images(spark, 16, lay)
-    v = CubeView.create(srs="EPSG:4326", left=0, right=2, bottom=0, top=2,
-                        t0="2021-01-01", t1="2021-02-28", dt="P1M",
-                        dx=1.0 / 16, dy=1.0 / 16,
-                        aggregation="median", resampling="bilinear")
-    g = ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=1, cy=16, cx=16)
-    cube = raster_cube(imgs, v, band_names(lay), chunking=g)
-    fused = cube.apply_pixel("(b02 - b01) / (b02 + b01 + 1)", ["ndvi"])
-    # the fusion hook must have fired: no extra ArrowEval node in the plan
-    assert getattr(fused, "_fuse_into_scan", None) is not None
-    arr_f = fused.collect_array()
-    base = raster_cube(imgs, v, band_names(lay), chunking=g).collect_array()
-    ref = (base[1] - base[0]) / (base[1] + base[0] + 1)
-    assert np.array_equal(arr_f[0], ref, equal_nan=True)
-    # salted scan: the fused chain after merge equals the unfused map_chunks
-    # over the same salted scan (salted vs unsalted mean differs in ULP by
-    # design — summation order — so compare fused vs unfused, both salted)
-    v2 = v.copy()
-    v2.aggregation = "mean"
-    sc1 = raster_cube(imgs, v2, band_names(lay), chunking=g, salt=2)
-    salted_fused = sc1.apply_pixel("b01 + b02", ["s"]).collect_array()
-    sc2 = raster_cube(imgs, v2, band_names(lay), chunking=g, salt=2)
-    del sc2._fuse_into_scan  # force the plain mapInPandas path
-    salted_unfused = sc2.apply_pixel("b01 + b02", ["s"]).collect_array()
-    assert np.array_equal(salted_fused, salted_unfused, equal_nan=True)
-
-
-def test_scan_fusion_stream_thunk_routes(spark):
-    """Both consumer routes of a scan-fused narrow chain must match the
-    unfused computation: the combinable reduce (chunk_stream -> lazy
-    bare-scan thunk, chain applied in the consumer's UDF) and the gather
-    median (direct cube.df, chain applied inside the scan build)."""
-    from gdalcubes_spark.grid import ChunkGrid, CubeView
-    from gdalcubes_spark.sources.raster_cube import raster_cube
-    from gdalcubes_spark.synth import ImageLayout, band_names, generate_images
-
-    lay = ImageLayout(left0=0.0, top0=2.0, tile_dx=1.0, tile_dy=1.0, gx=2, gy=2,
-                      ntime=3, dt_days=31, tile_w=16, tile_h=16, nb=2,
-                      fmts=("png", "raw"), hot_every=5, overlap=0.2)
-    imgs = generate_images(spark, 24, lay)
-    v = CubeView.create(srs="EPSG:4326", left=0, right=2, bottom=0, top=2,
-                        t0="2021-01-01", t1="2021-03-31", dt="P1M",
-                        dx=1.0 / 16, dy=1.0 / 16,
-                        aggregation="mean", resampling="bilinear")
-    g = ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=1, cy=16, cx=16)
-    fused = raster_cube(imgs, v, band_names(lay), chunking=g) \
-        .apply_pixel("b01 * 2 + b02", ["s"])
-    ref_cube = raster_cube(imgs, v, band_names(lay), chunking=g)
-    del ref_cube._fuse_into_scan  # force the plain map_chunks path
-    ref = ref_cube.apply_pixel("b01 * 2 + b02", ["s"])
-    got_c = fused.reduce_time("mean(s)", "max(s)").collect_array()
-    ref_c = ref.reduce_time("mean(s)", "max(s)").collect_array()
-    assert np.array_equal(got_c, ref_c, equal_nan=True)
-    got_m = fused.reduce_time("median(s)", names=["m"]).collect_array()
-    ref_m = ref.reduce_time("median(s)", names=["m"]).collect_array()
-    assert np.array_equal(got_m, ref_m, equal_nan=True)
 
 
 def test_cc_input_fixpoint_early_stop(spark):
