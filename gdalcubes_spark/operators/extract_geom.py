@@ -7,41 +7,102 @@ filter :282, per-feature rasterize+copy :327-493, all-NaN rows dropped
 :430-449); R zonal stats = aggregate by FID(,time) (R/extract.R:81-151).
 
 Spark shape (the north rule's raster↔vector pattern):
-1. features → bbox → covering chunk-id rectangles via pure column arithmetic
-   (same equi-join trick as the scan: theta join → explode + equi join);
-2. COGROUP chunks with their features (no tensor duplication per feature);
-3. vectorized PIP gathers covered cells → long rows;
+1. feature cover in the JVM: regexp_extract_all pulls the WKT's coordinates,
+   array_min/array_max give its bbox, column arithmetic its cell range and
+   an explode its covering chunk ids (the scan's equi-join trick: theta join
+   → explode + equi join); a feature datetime picks one slice by counting
+   slice starts ≤ its epoch. A WKT that is not POINT, POLYGON or
+   MULTIPOLYGON fails the job (raise_error);
+2. a left-semi join keeps only chunks some feature covers;
+3. ONE Arrow cogroup of each chunk with its features (no tensor duplication
+   per feature): the covered cells (a point's cell, or the cells of the
+   feature's window whose centres are inside the polygon) are gathered for
+   all the chunk's slices at once and leave as Arrow columns;
 4. zonal stats = plain groupBy("fid"[, "time"]).agg — Catalyst's hash agg.
 kNN tile lookup lives in pipeline/knn.py on the same cell-id machinery.
 """
 
 from __future__ import annotations
 
-import math
 import re
 from typing import List, Optional
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gdalcubes_spark.cube import Cube, chunk_rows, pin_group_partitions
+from gdalcubes_spark.cube import Cube, chunk_rows, emit, pin_group_partitions
 from gdalcubes_spark.geom import parse_wkt
-from gdalcubes_spark.grid import Datetime
 
-_POINT_RE = re.compile(r"^\s*POINT\s*\(\s*([-+0-9.eE]+)\s+([-+0-9.eE]+)\s*\)\s*$", re.I)
+# one pattern for the JVM (RLIKE) and Python (re): both read (?i), \s, [...]
+_PAIR = r"([-+0-9.eE]+)\s+([-+0-9.eE]+)"
+_POINT = r"(?i)^\s*POINT\s*\(\s*" + _PAIR + r"\s*\)\s*$"
+_POLYGON = r"(?i)^\s*(MULTI)?POLYGON"
+_POINT_RE = re.compile(_POINT)
 
 
-def _feature_bbox(wkt: str):
-    m = _POINT_RE.match(wkt)
-    if m:
-        x, y = float(m.group(1)), float(m.group(2))
-        return x, y, x, y
-    g = parse_wkt(wkt)
-    return g.bbox
+def _sql(s: str) -> str:
+    """s as a Spark SQL string literal (the parser unescapes backslashes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+_XS = f"transform(regexp_extract_all(wkt, {_sql(_PAIR)}, 1), s -> CAST(s AS double))"
+_YS = f"transform(regexp_extract_all(wkt, {_sql(_PAIR)}, 2), s -> CAST(s AS double))"
+# (l, b, r, t): the bbox of a `wkt` column, the min and max of the coordinate
+# pairs. A WKT that is not POINT, POLYGON or MULTIPOLYGON fails the job with
+# "unsupported WKT", as geom.parse_wkt raises.
+_WKT_BBOX = [
+    f"IF(wkt RLIKE {_sql(_POINT)} OR (wkt RLIKE {_sql(_POLYGON)} AND size({_XS}) > 0), array_min({_XS}),"
+    f" raise_error(concat('unsupported WKT ', substr(wkt, 1, 40)))) AS l",
+    f"array_min({_YS}) AS b", f"array_max({_XS}) AS r", f"array_max({_YS}) AS t"]
+
+
+def _cover(cube: Cube, features: DataFrame, time_column: Optional[str]) -> DataFrame:
+    """(chunk_id, fid, wkt, it_f, x0, x1, y0, y1), all SQL expressions: one
+    row per chunk a feature's bbox touches, with the feature's cell range
+    clamped to the view ([x0, x1] × [y0, y1], inclusive) and its slice it_f
+    (-1: every slice). A feature whose unclamped cell range misses the view,
+    or whose datetime falls outside the time axis, gets no row. (Expression
+    strings, not Column calls: each PySpark Column call is a JVM round trip,
+    and the ~70 this cover needs would double zonal_stats' plan-building
+    time.)"""
+    view, g = cube.view, cube.chunking
+    left, top, dx, dy, nx, ny = view.left, view.top, view.dx, view.dy, view.nx, view.ny
+    fepoch = f"unix_timestamp(`{time_column}`)" if time_column else "NULL"
+    # unclamped cell range, floor so a coordinate just outside the view maps
+    # to the outside cell (-1 or n), never to the edge cell; greatest skips
+    # the NULL of a zero-width extent
+    x0, y0 = f"floor((l - {left}) / {dx})", f"floor(({top} - t) / {dy})"
+    fb = (features.selectExpr("fid", "wkt", *_WKT_BBOX, f"CAST({fepoch} AS bigint) AS fepoch")
+          .selectExpr("fid", "wkt", "fepoch", f"{x0} AS x0", f"{y0} AS y0",
+                      f"greatest({x0}, IF(r > l, ceil((r - {left}) / {dx} - 1e-9) - 1, NULL)) AS x1",
+                      f"greatest({y0}, IF(t > b, ceil(({top} - b) / {dy} - 1e-9) - 1, NULL)) AS y1")
+          .filter(f"x1 >= 0 AND x0 < {nx} AND y1 >= 0 AND y0 < {ny}")
+          .selectExpr("fid", "wkt", "fepoch", "greatest(x0, 0) AS x0", f"least(x1, {nx - 1}) AS x1",
+                      "greatest(y0, 0) AS y0", f"least(y1, {ny - 1}) AS y1")
+          .selectExpr("*", f"explode(sequence(floor(x0 / {g.cx}), floor(x1 / {g.cx}))) AS kx")
+          .selectExpr("*", f"explode(sequence(floor(y0 / {g.cy}), floor(y1 / {g.cy}))) AS ky"))
+    if time_column:
+        # feature time → the slice whose [start, end) holds it (calendar-aware)
+        starts = ", ".join(str(int(e)) for e in view.time_epochs())
+        fb = (fb.selectExpr("*", f"size(filter(array({starts}), e -> e <= fepoch)) - 1 AS it_f")
+              .filter(f"it_f >= 0 AND it_f < {view.nt}").selectExpr("*", f"floor(it_f / {g.ct}) AS kt"))
+    else:
+        fb = fb.selectExpr("*", f"explode(sequence(0L, {g.nct - 1}L)) AS kt", "-1 AS it_f")
+    return fb.selectExpr(f"kt * {g.ncy * g.ncx} + ky * {g.ncx} + kx AS chunk_id", "fid", "wkt",
+                         "CAST(it_f AS bigint) AS it_f", "x0", "x1", "y0", "y1")
+
+
+def _covered_cells(wkt: str, xs: np.ndarray, ys: np.ndarray):
+    """Row-major (iy, ix) of the window cells with centres (xs, ys) that a
+    feature covers: a POINT its one cell, a polygon the cells whose centre is
+    inside it (even-odd PIP, geom.Geometry.contains)."""
+    if _POINT_RE.match(wkt):
+        return np.nonzero(np.ones((len(ys), len(xs)), bool))
+    X, Y = np.meshgrid(xs, ys)
+    return np.nonzero(parse_wkt(wkt).contains(X.ravel(), Y.ravel()).reshape(X.shape))
 
 
 def extract_geom(cube: Cube, features: DataFrame, time_column: Optional[str] = None,
@@ -55,151 +116,65 @@ def extract_geom(cube: Cube, features: DataFrame, time_column: Optional[str] = N
     form is O(covered cells) rows through Arrow; partials are O(features ×
     chunks) — the map-side-combine shape of the zonal aggregation."""
     view, g = cube.view, cube.chunking
-    bands = list(cube.bands)
-    vleft, vtop, dx, dy = view.left, view.top, view.dx, view.dy
-    nx, ny = view.nx, view.ny
-    has_time = time_column is not None
+    fb = _cover(cube, features, time_column)
 
-    # per-slice [start,end) epochs for feature-datetime → slice lookup
-    slice_epochs = view.time_epochs()
-
-    bbox_schema = T.StructType([
-        T.StructField("fid", T.LongType(), False),
-        T.StructField("wkt", T.StringType(), False),
-        T.StructField("fepoch", T.LongType(), True),
-        T.StructField("x0", T.LongType(), False),
-        T.StructField("x1", T.LongType(), False),
-        T.StructField("y0", T.LongType(), False),
-        T.StructField("y1", T.LongType(), False),
-    ])
-
-    def prep(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                l, b, r, t = _feature_bbox(row["wkt"])
-                x0 = max(0, int(math.floor((l - vleft) / dx)))
-                x1 = min(nx - 1, int(math.ceil((r - vleft) / dx - 1e-9) - 1)) if r > l else x0
-                x1 = max(x1, x0)
-                y0 = max(0, int(math.floor((vtop - t) / dy)))
-                y1 = min(ny - 1, int(math.ceil((vtop - b) / dy - 1e-9) - 1)) if t > b else y0
-                y1 = max(y1, y0)
-                if x0 > nx - 1 or y0 > ny - 1 or x1 < 0 or y1 < 0:
-                    continue
-                fe = None
-                if has_time and row[time_column] is not None:
-                    fe = int(pd.Timestamp(row[time_column]).timestamp())
-                rows.append(dict(fid=int(row["fid"]), wkt=row["wkt"], fepoch=fe,
-                                 x0=x0, x1=x1, y0=y0, y1=y1))
-            yield pd.DataFrame(rows, columns=[f.name for f in bbox_schema.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in bbox_schema.fields})
-
-    fb = features.mapInPandas(prep, bbox_schema)
-    # explode to covering chunk ids (kt unconstrained unless feature has time)
-    fb = (fb.withColumn("kx", F.explode(F.sequence((F.col("x0") / g.cx).cast("long"),
-                                                   (F.col("x1") / g.cx).cast("long"))))
-          .withColumn("ky", F.explode(F.sequence((F.col("y0") / g.cy).cast("long"),
-                                                 (F.col("y1") / g.cy).cast("long")))))
-    if has_time:
-        # feature time → single slice → single kt (calendar-aware searchsorted)
-        @F.pandas_udf("long")
-        def slice_of(ep: pd.Series) -> pd.Series:
-            idx = np.searchsorted(np.asarray(slice_epochs), ep.to_numpy(), side="right") - 1
-            idx = np.where((ep.to_numpy() >= slice_epochs[0]) & (idx >= 0) & (idx < view.nt), idx, -1)
-            return pd.Series(idx)
-        fb = fb.withColumn("it_f", slice_of("fepoch")).filter(F.col("it_f") >= 0)
-        fb = fb.withColumn("kt", (F.col("it_f") / g.ct).cast("long"))
-        fb = fb.withColumn("chunk_id", F.col("kt") * (g.ncy * g.ncx)
-                           + F.col("ky") * g.ncx + F.col("kx"))
-    else:
-        kts = F.sequence(F.lit(0), F.lit(g.nct - 1))
-        fb = (fb.withColumn("kt", F.explode(kts))
-              .withColumn("it_f", F.lit(-1).cast("long"))
-              .withColumn("chunk_id", F.col("kt").cast("long") * (g.ncy * g.ncx)
-                          + F.col("ky") * g.ncx + F.col("kx")))
-    fb = fb.select("chunk_id", "fid", "wkt", "it_f")
-
-    time_strings = [view.datetime_at_index(i).to_string() for i in range(view.nt)]
-    safe = [re.sub(r"\W", "_", b) for b in bands]
+    time_strings = pa.array([view.datetime_at_index(i).to_string() for i in range(view.nt)], pa.string())
+    safe = [re.sub(r"\W", "_", b) for b in cube.bands]
+    keys = [T.StructField("fid", T.LongType(), False), T.StructField("it", T.IntegerType(), False),
+            T.StructField("time", T.StringType(), False)]
     if _partials:
-        out_schema = T.StructType(
-            [T.StructField("fid", T.LongType(), False),
-             T.StructField("it", T.IntegerType(), False),
-             T.StructField("time", T.StringType(), False)]
-            + [f for s in safe for f in (
-                T.StructField(f"{s}__cnt", T.LongType(), False),
-                T.StructField(f"{s}__sum", T.DoubleType(), True),
-                T.StructField(f"{s}__min", T.DoubleType(), True),
-                T.StructField(f"{s}__max", T.DoubleType(), True))]
-        )
+        out_schema = T.StructType(keys + [f for s in safe for f in (
+            T.StructField(f"{s}__cnt", T.LongType(), False),
+            T.StructField(f"{s}__sum", T.DoubleType(), True),
+            T.StructField(f"{s}__min", T.DoubleType(), True),
+            T.StructField(f"{s}__max", T.DoubleType(), True))])
     else:
-        out_schema = T.StructType(
-            [T.StructField("fid", T.LongType(), False),
-             T.StructField("it", T.IntegerType(), False),
-             T.StructField("time", T.StringType(), False)]
-            + [T.StructField(s, T.DoubleType(), True) for s in safe]
-        )
+        out_schema = T.StructType(keys + [T.StructField(s, T.DoubleType(), True) for s in safe])
+    empty = emit(out_schema, [])
+    arrow = empty.schema
 
-    def gather(chunks: pd.DataFrame, feats_: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({f.name: pd.Series(dtype="object") for f in out_schema.fields})
-        if len(chunks) == 0 or len(feats_) == 0:
-            return empty
-        _, (kt, ky, kx), t_ = next(chunk_rows(pa.Table.from_pandas(chunks.iloc[:1], preserve_index=False)))
-        (ct0, ct1), (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(kt, ky, kx)
-        xs = vleft + (np.arange(cx0, cx1) + 0.5) * dx
-        ys = vtop - (np.arange(cy0, cy1) + 0.5) * dy
-        frames = []
-        for _, f in feats_.iterrows():
-            wkt = f["wkt"]
-            pm = _POINT_RE.match(wkt)
-            if pm:
-                px, py = float(pm.group(1)), float(pm.group(2))
-                ixg = int((px - vleft) / dx)
-                iyg = int((vtop - py) / dy)
-                if not (cx0 <= ixg < cx1 and cy0 <= iyg < cy1):
-                    continue
-                sel_y = np.array([iyg - cy0])
-                sel_x = np.array([ixg - cx0])
-            else:
-                geo = parse_wkt(wkt)
-                gl, gb, gr, gtp = geo.bbox
-                # restrict PIP to the bbox sub-window of this chunk
-                sx0 = max(0, int((gl - vleft) / dx) - cx0)
-                sx1 = min(cx1 - cx0, int(math.ceil((gr - vleft) / dx)) - cx0)
-                sy0 = max(0, int((vtop - gtp) / dy) - cy0)
-                sy1 = min(cy1 - cy0, int(math.ceil((vtop - gb) / dy)) - cy0)
+    def rows_of(fid, its, vals):
+        """[fid, it, <band columns>...] of one feature's (nb, nits, ncells)
+        values: one row per covered cell and slice, or per slice (partials)."""
+        ok = ~np.isnan(vals)
+        if _partials:
+            cnt = ok.sum(axis=2)  # (nb, nits)
+            keep = cnt.any(axis=0)  # a slice with no value in any band gives no row
+            sums, mins, maxs = (np.where(cnt > 0, red(np.where(ok, vals, fill), axis=2), np.nan)
+                                for red, fill in ((np.sum, 0.0), (np.min, np.inf), (np.max, -np.inf)))
+            bands = [s[bi][keep] for bi in range(len(safe)) for s in (cnt, sums, mins, maxs)]
+            return [np.full(keep.sum(), fid), its[keep], *bands]
+        keep = ok.any(axis=0)  # (nits, ncells): all-NaN rows dropped
+        return [np.full(keep.sum(), fid), np.repeat(its, keep.sum(axis=1)),
+                *(vals[bi][keep] for bi in range(len(safe)))]
+
+    def gather(chunks: pa.Table, feats: pa.Table) -> pa.Table:
+        out = []
+        if chunks.num_rows and feats.num_rows:
+            _, coords, t_ = next(chunk_rows(chunks))
+            (ct0, ct1), (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(*coords)
+            xs = view.left + (np.arange(cx0, cx1) + 0.5) * view.dx
+            ys = view.top - (np.arange(cy0, cy1) + 0.5) * view.dy
+            cols = [feats.column(c).to_pylist() for c in ("fid", "wkt", "it_f", "x0", "x1", "y0", "y1")]
+            for fid, wkt, it_f, x0, x1, y0, y1 in zip(*cols):
+                # the feature's cell window within this chunk, chunk-local
+                sx0, sx1 = max(x0, cx0) - cx0, min(x1 + 1, cx1) - cx0
+                sy0, sy1 = max(y0, cy0) - cy0, min(y1 + 1, cy1) - cy0
                 if sx0 >= sx1 or sy0 >= sy1:
                     continue
-                X, Y = np.meshgrid(xs[sx0:sx1], ys[sy0:sy1])
-                inside = geo.contains(X.ravel(), Y.ravel()).reshape(X.shape)
-                if not inside.any():
+                iy, ix = _covered_cells(wkt, xs[sx0:sx1], ys[sy0:sy1])
+                if len(iy) == 0:
                     continue
-                yy, xx = np.nonzero(inside)
-                sel_y = yy + sy0
-                sel_x = xx + sx0
-            its = range(ct0, ct1) if int(f["it_f"]) < 0 else [int(f["it_f"])]
-            for it in its:
-                lt = it - ct0
-                vals = t_[:, lt, sel_y, sel_x]  # (nb, ncells)
-                keep = ~np.all(np.isnan(vals), axis=0)  # drop all-NaN rows
-                if not keep.any():
-                    continue
-                d = {"fid": int(f["fid"]), "it": it, "time": time_strings[it]}
-                if _partials:
-                    v = vals[:, keep]
-                    ok = ~np.isnan(v)
-                    with np.errstate(all="ignore"):
-                        for bi, s in enumerate(safe):
-                            vb = v[bi][ok[bi]]
-                            d[f"{s}__cnt"] = int(len(vb))
-                            d[f"{s}__sum"] = float(vb.sum()) if len(vb) else np.nan
-                            d[f"{s}__min"] = float(vb.min()) if len(vb) else np.nan
-                            d[f"{s}__max"] = float(vb.max()) if len(vb) else np.nan
-                    frames.append(pd.DataFrame([d]))
-                else:
-                    frame = pd.DataFrame({**d, **{s: vals[bi, keep] for bi, s in enumerate(safe)}})
-                    frames.append(frame)
-        return pd.concat(frames, ignore_index=True) if frames else empty
+                its = np.arange(ct0, ct1) if it_f < 0 else np.array([it_f])
+                out.append(rows_of(fid, its, t_[:, (its - ct0)[:, None], iy + sy0, ix + sx0]))
+        if not out:
+            return pa.Table.from_batches([empty])
+        fid, it, *bands = (np.concatenate(c) for c in zip(*out))
+        fields = [f for f in arrow if f.name != "time"]
+        cols = [pa.array(c, f.type, from_pandas=True)  # NaN → null: an absent value
+                for c, f in zip([fid, it, *bands], fields)]
+        cols.insert(2, time_strings.take(it))
+        return pa.Table.from_arrays(cols, schema=arrow)
 
     # chunk-mask pruning analogue (extract_geom.cpp:164-218): only chunks with
     # candidate features enter the cogroup — a semi-join Catalyst can
@@ -208,10 +183,9 @@ def extract_geom(cube: Cube, features: DataFrame, time_column: Optional[str] = N
     pruned = cube.df.join(fb.select("chunk_id"), "chunk_id", "left_semi")
     # pin the cogroup's task count on BOTH sides (PIP/extract cost per byte ≫
     # columnar work — see pin_group_partitions' AQE note)
-    joined = (pin_group_partitions(pruned, "chunk_id", g.n_chunks).groupBy("chunk_id")
-              .cogroup(pin_group_partitions(fb, "chunk_id", g.n_chunks).groupBy("chunk_id"))
-              .applyInPandas(lambda left, right: gather(left, right), out_schema))
-    return joined
+    return (pin_group_partitions(pruned, "chunk_id", g.n_chunks).groupBy("chunk_id")
+            .cogroup(pin_group_partitions(fb, "chunk_id", g.n_chunks).groupBy("chunk_id"))
+            .applyInArrow(gather, out_schema))
 
 
 ZONAL_FUNCS = {"min": F.min, "max": F.max, "mean": F.avg, "sum": F.sum, "count": F.count,

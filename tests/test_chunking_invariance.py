@@ -1,14 +1,18 @@
 """Chunking invariance of the halo and gather operators: the result of an
 operator must not depend on the chunk grid. Every grid here has edge chunks
-narrower than the window's halo, the case a per-chunk view of the cube edge
-gets wrong. Kernels compare to 1e-12: einsum's summation order follows the
+narrower than the window's halo (or the extracted feature), the case a
+per-chunk view of the cube edge gets wrong. Kernels compare to 1e-12: einsum's summation order follows the
 chunk shape. window_space is also checked against np.pad (gdalcubes pads the
 window read against the cube, window_space.cpp:219-300)."""
+
+import datetime as dt
 
 import numpy as np
 import pytest
 
 from gdalcubes_spark.cube import cube_from_array
+from gdalcubes_spark.geom import rect_wkt
+from gdalcubes_spark.operators.extract_geom import extract_geom, zonal_stats
 from gdalcubes_spark.grid import ChunkGrid, CubeView
 
 # gdalcubes pad mode → np.pad mode ("none" is NaN beyond the cube edge)
@@ -103,3 +107,63 @@ def test_fill_time_gaps_across_chunks(spark, method):
     for grid in [(2, 2, 2), (3, 1, 2), (1, 2, 1)]:
         np.testing.assert_array_equal(_run(spark, arr, grid, lambda c: c.fill_time(method)), single,
                                       err_msg=str(grid))
+
+
+# extract_geom / zonal_stats on a 2×4×9×7 cube (band2 NaN on a third of the
+# cells, so the bands' NaN masks differ) over grids whose last t, y and/or x
+# chunk is one slice or cell wide, narrower than every polygon below
+EG_GRIDS = [(1, 2, 3), (3, 4, 2), (2, 9, 2)]
+EG_FEATURES = [
+    (1, rect_wkt(0.5, 0.5, 6.5, 8.5)),                     # nearly the whole cube
+    (2, rect_wkt(1.2, 2.7, 4.8, 6.1)),                     # crosses several chunk edges
+    (3, "POLYGON ((0 0, 7 0, 0 9, 0 0))"),                  # triangle
+    (4, "MULTIPOLYGON (((4 4, 7 4, 7 9, 4 9, 4 4), (5 6, 6 6, 6 7, 5 7, 5 6)),"
+        " ((-1 -1, 2 -1, 2 2, -1 2, -1 -1)))"),            # hole; part outside the view
+    (5, "POINT (6.5 0.5)"),                                 # in the one-cell corner chunk
+]
+EG_TIMED = [
+    (6, "POINT (3.5 4.5)", dt.datetime(2021, 1, 3)),
+    (7, "POINT (6.5 8.5)", dt.datetime(2021, 1, 4, 12)),   # last slice, mid-day
+    (8, rect_wkt(1.5, 1.5, 6.5, 5.5), dt.datetime(2021, 1, 2)),
+    (9, "POINT (3.5 4.5)", dt.datetime(2020, 12, 31)),     # before the time axis
+]
+_COMBINABLE = ["mean", "count", "min", "max", "sum"]
+EG_OPS = {
+    "rows": lambda s, c: extract_geom(c, s.createDataFrame(EG_FEATURES, "fid long, wkt string")),
+    "timed_rows": lambda s, c: extract_geom(
+        c, s.createDataFrame(EG_TIMED, "fid long, wkt string, t timestamp"), time_column="t"),
+    "partials_by_time": lambda s, c: zonal_stats(
+        c, s.createDataFrame(EG_FEATURES, "fid long, wkt string"), _COMBINABLE, by_time=True),
+    "partials": lambda s, c: zonal_stats(
+        c, s.createDataFrame(EG_FEATURES, "fid long, wkt string"), _COMBINABLE, by_time=False),
+    "long_form_by_time": lambda s, c: zonal_stats(
+        c, s.createDataFrame(EG_FEATURES, "fid long, wkt string"), ["median", "var"], by_time=True),
+    "long_form_timed": lambda s, c: zonal_stats(
+        c, s.createDataFrame(EG_TIMED, "fid long, wkt string, t timestamp"), ["median", "var", "count"],
+        by_time=False, time_column="t"),
+}
+
+
+def _eg_rows(spark, arr, grid, op):
+    _, nt, ny, nx = arr.shape
+    g = ChunkGrid(nt=nt, ny=ny, nx=nx, ct=grid[0], cy=grid[1], cx=grid[2])
+    df = op(spark, cube_from_array(spark, arr, _view(nt, ny, nx), chunking=g))
+    return sorted((tuple(r) for r in df.collect()),
+                  key=lambda r: tuple(float("-inf") if v is None else v for v in r))
+
+
+@pytest.mark.parametrize("name", list(EG_OPS))
+def test_extract_geom_chunking_invariant(spark, name):
+    """Sorted rows equal the single-chunk grid's: exactly for extracted
+    values, counts, min/max and medians; sums, means and variances to 1e-12,
+    since their summation order follows the chunking."""
+    rng = np.random.default_rng(12)
+    arr = rng.random((2, 4, 9, 7))
+    arr[1][rng.random((4, 9, 7)) < 1 / 3] = np.nan
+    single = _eg_rows(spark, arr, (4, 9, 7), EG_OPS[name])
+    assert single
+    for grid in EG_GRIDS:
+        got = _eg_rows(spark, arr, grid, EG_OPS[name])
+        assert len(got) == len(single), grid
+        for a, b in zip(got, single):
+            assert a == pytest.approx(b, rel=1e-12, nan_ok=True), grid

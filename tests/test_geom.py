@@ -141,3 +141,55 @@ class TestExtractGeom:
             else:
                 assert np.allclose(fast[col].astype(float), slow[col].astype(float),
                                    equal_nan=True), col
+
+    def test_points_outside_the_view_give_no_rows(self, spark):
+        """A point in the one-cell band just outside the view, or further
+        out, covers no cell; truncating its cell index toward zero would hand
+        it the edge cell's value."""
+        v = grid_view()
+        g = ChunkGrid(nt=3, ny=10, nx=10, ct=1, cy=4, cx=4)
+        c = dummy_cube(spark, v, 1, 1.0, chunking=g).apply_pixel("ix + iy*100", ["pos"], keep_bands=False)
+        feats = spark.createDataFrame([(1, "POINT (-0.5 5.5)"),    # band left of the view
+                                       (2, "POINT (5.5 10.4)"),    # band above it
+                                       (3, "POINT (-1.5 5.5)"),
+                                       (4, "POINT (5.5 11.5)"),
+                                       (5, "POINT (3.5 6.5)")],    # inside: (iy 3, ix 3)
+                                      "fid long, wkt string")
+        pdf = extract_geom(c, feats).toPandas().sort_values("it")
+        assert list(pdf["fid"]) == [5, 5, 5]
+        assert list(pdf["pos"]) == [303.0] * 3
+
+
+# the WKT shapes extract_geom accepts: holes, multipolygons, lowercase,
+# exponents, negative coordinates and points
+WKT_CORPUS = [
+    "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))",
+    "MULTIPOLYGON (((0 0, 2 0, 2 2, 0 2, 0 0)), ((5 5, 7 5, 7 7, 5 7, 5 5)))",
+    "polygon((1 1, 3 1, 3 3, 1 1))",
+    "POLYGON ((-1.5e1 -2.5E-1, 1e+2 -3, 4.25 7.5e0, -1.5e1 -2.5E-1))",
+    "  MultiPolygon (((-3 -4, -1 -4, -1 -2, -3 -4)), ((8 9, 9.5 9, 9.5 12, 8 9)))",
+    rect_wkt(0.25, 0.5, 6.75, 8.125),
+    rect_wkt(-2, -3, 4, 5),
+]
+POINT_CORPUS = {"POINT (2.5 7.5)": (2.5, 7.5), "point(-0.5 1e1)": (-0.5, 10.0),
+                " POINT ( 3 -4.25 ) ": (3.0, -4.25)}
+
+
+class TestWktCover:
+    def test_jvm_bbox_matches_parse_wkt(self, spark):
+        from gdalcubes_spark.operators.extract_geom import _WKT_BBOX
+        wkts = WKT_CORPUS + list(POINT_CORPUS)
+        df = spark.createDataFrame([(w,) for w in wkts], "wkt string")
+        got = [tuple(r) for r in df.selectExpr(*_WKT_BBOX).collect()]
+        want = [tuple(parse_wkt(w).bbox) for w in WKT_CORPUS]
+        want += [(x, y, x, y) for x, y in POINT_CORPUS.values()]
+        assert got == [tuple(float(v) for v in w) for w in want]
+
+    def test_unsupported_wkt_fails_the_job(self, spark):
+        with pytest.raises(ValueError, match="unsupported WKT"):
+            parse_wkt("LINESTRING (0 0, 1 1)")
+        v = grid_view()
+        c = dummy_cube(spark, v, 1, 1.0)
+        feats = spark.createDataFrame([(1, "LINESTRING (0 0, 1 1)")], "fid long, wkt string")
+        with pytest.raises(Exception, match="unsupported WKT"):
+            extract_geom(c, feats).collect()

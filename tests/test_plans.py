@@ -12,6 +12,11 @@ from gdalcubes_spark.cube import dummy_cube, read_parquet_cube
 from gdalcubes_spark.grid import ChunkGrid, CubeView
 
 
+# a plan line's node name when the node runs Python (MapInPandas,
+# FlatMapGroupsInArrow, ArrowEvalPython, ...)
+PYTHON_NODE = re.compile(r"^[\s:|+-]*(\w*(?:InPandas|InArrow|EvalPython)\w*)", re.M)
+
+
 def view10():
     return CubeView.create(srs="EPSG:4326", left=0, right=10, bottom=0, top=10,
                            t0="2021-01-01", t1="2021-01-06", dt="P1D", dx=1.0, dy=1.0)
@@ -52,6 +57,26 @@ class TestPlans:
         # and the result is correct: 4 cells × 6 slices
         assert rows.count() == 24
 
+    def test_extract_geom_has_one_python_node(self, spark):
+        """The feature cover is column expressions: on a cube with no Python
+        of its own, a zonal_stats plan (partial-state and long-form path) and
+        an extract_geom(time_column=) plan run exactly one Python node, the
+        Arrow cogroup of chunks with features."""
+        import datetime as dt
+
+        from gdalcubes_spark.cube import cube_from_array
+        from gdalcubes_spark.geom import rect_wkt
+        from gdalcubes_spark.operators.extract_geom import extract_geom, zonal_stats
+        arr = np.random.default_rng(0).random((1, 6, 10, 10))
+        c = cube_from_array(spark, arr, view10(), chunking=ChunkGrid(nt=6, ny=10, nx=10, ct=2, cy=5, cx=5))
+        feats = spark.createDataFrame([(1, rect_wkt(1, 1, 6, 6)), (2, "POINT (7.5 2.5)")], "fid long, wkt string")
+        timed = spark.createDataFrame([(1, "POINT (7.5 2.5)", dt.datetime(2021, 1, 3))],
+                                      "fid long, wkt string, t timestamp")
+        for df in (zonal_stats(c, feats, ["mean", "median"]), zonal_stats(c, feats, ["mean", "count"]),
+                   extract_geom(c, timed, time_column="t")):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert PYTHON_NODE.findall(plan) == ["FlatMapCoGroupsInArrow"], plan
+
     def test_tensor_udf_stages_pinned_to_one_wave(self, spark):
         """The scan's, the reduce_time gather's and both extract_geom cogroup
         sides' user-numbered exchanges hold min(n_groups, parallelism)
@@ -88,12 +113,15 @@ class TestPlans:
     def test_chunk_udfs_are_arrow_nodes(self, spark, tmp_path, monkeypatch):
         """Every chunk UDF is an Arrow node. A cube built through the scan,
         reduce_time (partial/merge and gather), window_time's halo exchange,
-        crop, join_bands, cells and from_cells, then checkpointed, executes
-        no MapInPandas or FlatMapGroupsInPandas node."""
+        crop, join_bands, cells and from_cells, then checkpointed, and zonal
+        stats over it (both paths) execute no MapInPandas,
+        FlatMapGroupsInPandas or FlatMapCoGroupsInPandas node."""
         from pyspark.sql.readwriter import DataFrameWriter
 
         from gdalcubes_spark.checkpoint import read_checkpoint, write_checkpoint
         from gdalcubes_spark.cube import Cube
+        from gdalcubes_spark.geom import rect_wkt
+        from gdalcubes_spark.operators.extract_geom import zonal_stats
         from gdalcubes_spark.sources.raster_cube import raster_cube
         from gdalcubes_spark.synth import ImageLayout, band_names, generate_images
 
@@ -126,9 +154,13 @@ class TestPlans:
         rebuilt = Cube.from_cells(joined.cells(), joined.view, joined.bands, joined.chunking)
         write_checkpoint(rebuilt, str(tmp_path / "ck"))
 
+        feats = spark.createDataFrame([(1, rect_wkt(0.6, 0.6, 3.1, 2.9))], "fid long, wkt string")
+        zonal = [zonal_stats(gather, feats, fns) for fns in (["mean"], ["median"])]
         plans = [plan(c.df) for c in (scan, partial, gather, halo, cropped, joined, rebuilt)] + written
+        plans += [plan(z) for z in zonal]
         for p in plans:
             assert "MapInPandas" not in p and "FlatMapGroupsInPandas" not in p, p
+            assert "FlatMapCoGroupsInPandas" not in p, p
         assert "MapInArrow" in written[0]  # the commit pass
         assert all("FlatMapGroupsInArrow" in p for p in plans[:7])
         got = read_checkpoint(spark, str(tmp_path / "ck")).collect_array()
