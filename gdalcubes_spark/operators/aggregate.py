@@ -12,9 +12,9 @@ Reference semantics:
 
 Spark shape: one bounded shuffle — input chunk tensors are cut into pieces
 keyed by output chunk id (pure arithmetic, narrow), then each output chunk
-bins its pieces' cells with vectorized pandas groupby reductions (exact
-median/var, NaN-skipping). No cell-row explosion: payloads stay as packed
-tensors end-to-end.
+reduces its pieces' cells grouped by output cell with reducers.segment_reduce
+(exact median/var, NaN-skipping). No cell-row explosion: payloads stay as
+packed tensors end-to-end.
 """
 
 from __future__ import annotations
@@ -23,16 +23,13 @@ import itertools
 from typing import Iterable, Optional
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
+from gdalcubes_spark import reducers as R
 from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_rows, chunk_stream, emit
 from gdalcubes_spark.grid import ChunkGrid, Duration
 
 AGG_METHODS = ("mean", "min", "max", "median", "count", "var", "sd", "prod", "sum")
-
-_PANDAS_AGG = {"mean": "mean", "min": "min", "max": "max", "median": "median",
-               "count": "count", "var": "var", "sd": "std", "prod": "prod", "sum": "sum"}
 
 
 def _aggregate(cube: Cube, out_view, gout: ChunkGrid, t_map: np.ndarray,
@@ -75,8 +72,6 @@ def _aggregate(cube: Cube, out_view, gout: ChunkGrid, t_map: np.ndarray,
                         rows.append((gout.chunk_id(*ocoords), coords, piece))
             yield emit(CHUNK_SCHEMA, rows)
 
-    fn = _PANDAS_AGG[method]
-
     def merge(key, table):
         ocid = key[0].as_py()
         ocoords = gout.chunk_coords(ocid)
@@ -90,12 +85,10 @@ def _aggregate(cube: Cube, out_view, gout: ChunkGrid, t_map: np.ndarray,
                    + lx[None, None, None, :])
             groups.append(gid.ravel())
             values.append(p.ravel())
-        s = pd.Series(np.concatenate(values)).groupby(pd.Series(np.concatenate(groups))).agg(fn)
-        out = np.full(nb * ntc * nyc * nxc, np.nan)
-        # pandas count returns 0 for all-NaN groups but those groups only exist
-        # where an input chunk contributed → matches the non-empty-chunk rule
-        out[s.index.to_numpy()] = s.to_numpy(dtype="float64")
-        t = out.reshape(nb, ntc, nyc, nxc)
+        # a cell that only all-NaN values reach gives count/sum 0 (prod 1), but
+        # it is only reached where an input piece had data: the non-empty-chunk rule
+        t = R.segment_reduce(method, np.concatenate(groups), np.concatenate(values),
+                             nb * ntc * nyc * nxc).reshape(nb, ntc, nyc, nxc)
         return pa.table(emit(CHUNK_SCHEMA, [] if np.all(np.isnan(t)) else [(ocid, ocoords, t)]))
 
     out_df = base_df.mapInArrow(cut, CHUNK_SCHEMA).groupBy("chunk_id").applyInArrow(merge, CHUNK_SCHEMA)

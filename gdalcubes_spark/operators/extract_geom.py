@@ -177,10 +177,12 @@ def extract_geom(cube: Cube, features: DataFrame, time_column: Optional[str] = N
         return pa.Table.from_arrays(cols, schema=arrow)
 
     # chunk-mask pruning analogue (extract_geom.cpp:164-218): only chunks with
-    # candidate features enter the cogroup — a semi-join Catalyst can
-    # broadcast. No distinct on the build side: left_semi dedupes by
-    # construction, and the distinct was one whole extra exchange.
-    pruned = cube.df.join(fb.select("chunk_id"), "chunk_id", "left_semi")
+    # candidate features enter the cogroup. The feature side is broadcast
+    # explicitly: it has no size estimate, so Catalyst would plan a
+    # SortMergeJoin and shuffle the cube's tensors by chunk_id before AQE
+    # could switch to a broadcast — one tensor shuffle more than the pin
+    # below. No distinct on the build side: left_semi dedupes by construction.
+    pruned = cube.df.join(F.broadcast(fb.select("chunk_id")), "chunk_id", "left_semi")
     # pin the cogroup's task count on BOTH sides (PIP/extract cost per byte ≫
     # columnar work — see pin_group_partitions' AQE note)
     return (pin_group_partitions(pruned, "chunk_id", g.n_chunks).groupBy("chunk_id")

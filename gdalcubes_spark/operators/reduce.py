@@ -81,8 +81,7 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
             nt = t.shape[1]
             its = np.arange(nt)
             td = _t_doubles(view, its) if any(r.startswith("which") for r in rnames) else None
-            outs = [R.full_reduce(r, np.moveaxis(t[bi], 0, 0), its, td)[None, ...] for r, bi in zip(rnames, bidx)]
-            return np.stack([o[0] for o in outs], axis=0)[:, None, :, :]
+            return np.stack([R.full_reduce(r, t[bi], its, td) for r, bi in zip(rnames, bidx)], axis=0)[:, None]
 
         return cube.map_chunks(fn, out_view=out_view, out_bands=out_bands, out_chunking=gout)
 

@@ -6,6 +6,8 @@ Reference semantics:
   median — NaN-skipping) as (reducer, band) pairs, OR a convolution kernel of
   length l+1+r applied to every band (any NaN in the window → NaN,
   .cpp:104-119). Values beyond the cube's time range are NaN.
+- Both windows' named reducers are reducers.full_reduce over the window
+  axis; an all-NaN window gives NaN, except count → 0.
 - window_space (window_space.h:47-185, .cpp:24-721): odd ny×nx focal window
   per band and time slice; reducer pairs or 2-D kernel; padding modes
   none/constant/replicate/reflect/reflect_pixel applied at CUBE boundaries
@@ -36,25 +38,21 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import functions as F
 
+from gdalcubes_spark import reducers as R
 from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_rows, chunk_stream, emit, pin_group_partitions
 from gdalcubes_spark.operators.reduce import parse_pairs
 
-_WINDOW_REDUCERS = {
-    "mean": np.nanmean, "sum": np.nansum, "count": lambda a, axis: np.sum(~np.isnan(a), axis=axis),
-    "prod": np.nanprod, "min": np.nanmin, "max": np.nanmax, "median": np.nanmedian,
-}
+WINDOW_REDUCERS = ("mean", "sum", "count", "prod", "min", "max", "median")
 
 
-def _nanreduce_window(name: str, w: np.ndarray) -> np.ndarray:
-    """Reduce the last axis of a sliding-window view with NaN-skip semantics;
-    all-NaN windows → NaN (count → 0)."""
-    allnan = np.all(np.isnan(w), axis=-1)
-    with np.errstate(all="ignore"):
-        if name == "count":
-            return np.sum(~np.isnan(w), axis=-1).astype("float64")
-        filled = np.where(allnan[..., None], 0.0, w)
-        r = _WINDOW_REDUCERS[name](filled, axis=-1)
-    return np.where(allnan, np.nan, r)
+def _reduce_window(name: str, w: np.ndarray) -> np.ndarray:
+    """Reduce the last (window) axis of a sliding-window view. An all-NaN
+    window gives NaN, except count → 0: full_reduce already gives NaN there
+    for every reducer but sum and prod (0 and 1)."""
+    r = R.full_reduce(name, np.moveaxis(w, -1, 0))
+    if name in ("sum", "prod"):
+        r[np.all(np.isnan(w), axis=-1)] = np.nan
+    return r
 
 
 def window_time(cube: Cube, window: Sequence[int], reducer=None, kernel=None) -> Cube:
@@ -70,7 +68,7 @@ def window_time(cube: Cube, window: Sequence[int], reducer=None, kernel=None) ->
     else:
         pairs = parse_pairs([reducer] if isinstance(reducer, str) else list(reducer), cube.bands)
         for name, _ in pairs:
-            if name not in _WINDOW_REDUCERS:
+            if name not in WINDOW_REDUCERS:
                 raise ValueError(f"window_time reducer {name!r} not supported")
         out_bands = [f"{b}_{n}" for n, b in pairs]
         bidx = [cube.bands.index(b) for _, b in pairs]
@@ -82,7 +80,7 @@ def window_time(cube: Cube, window: Sequence[int], reducer=None, kernel=None) ->
         if kernel is not None:
             out = np.einsum("btyxw,w->btyx", sw[bidx], kernel)  # NaN propagates
         else:
-            out = np.stack([_nanreduce_window(n, sw[bi]) for n, bi in zip(rnames, bidx)], axis=0)
+            out = np.stack([_reduce_window(n, sw[bi]) for n, bi in zip(rnames, bidx)], axis=0)
         return out
 
     if g.nct == 1:
@@ -178,7 +176,7 @@ def window_space(cube: Cube, reducer=None, kernel=None, window: Optional[Sequenc
             raise ValueError("window dimensions must be odd")
         pairs = parse_pairs([reducer] if isinstance(reducer, str) else list(reducer), cube.bands)
         for name, _ in pairs:
-            if name not in _WINDOW_REDUCERS:
+            if name not in WINDOW_REDUCERS:
                 raise ValueError(f"window_space reducer {name!r} not supported")
         out_bands = [f"{b}_{n}" for n, b in pairs]
         bidx = [cube.bands.index(b) for _, b in pairs]
@@ -224,7 +222,7 @@ def window_space(cube: Cube, reducer=None, kernel=None, window: Optional[Sequenc
             out = np.einsum("btyxuv,uv->btyx", sw[bidx], kernel)
         else:
             flat = sw.reshape(sw.shape[:4] + (wy * wx,))
-            out = np.stack([_nanreduce_window(n, flat[bi]) for n, bi in zip(rnames, bidx)], axis=0)
+            out = np.stack([_reduce_window(n, flat[bi]) for n, bi in zip(rnames, bidx)], axis=0)
         return pa.table(emit(CHUNK_SCHEMA, [] if np.all(np.isnan(out)) else [(cid, coords, out)]))
 
     df = (pin_group_partitions(base_df.mapInArrow(halo, CHUNK_SCHEMA), "chunk_id", g.n_chunks)

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gdalcubes_spark import codecs
+from gdalcubes_spark import reducers as R
 from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, apply_chain, emit, pack_tensor, pin_group_partitions
 from gdalcubes_spark.sources import resample as RS
 from gdalcubes_spark.grid import ChunkGrid, CubeView, Unit, default_chunking
@@ -392,11 +393,6 @@ class _AggState:
             st.aux = arrs[1]
         return st
 
-    # dense-stack budget for the median finalize: K images × slice cells ×
-    # 8 B. 256 MB bounds ~8 GB across 32 concurrent tasks — beyond it the
-    # pair-sort path (memory ∝ real samples, not K × cells) takes over.
-    _MEDIAN_DENSE_BYTES = 256 * 1024 * 1024
-
     def finalize(self) -> np.ndarray:
         if self.method == "mean":
             with np.errstate(invalid="ignore"):
@@ -406,56 +402,25 @@ class _AggState:
             plane = ny * nx
             for lt, items in self.buckets.items():
                 K = len(items)
-                if K * nb * plane * 8 <= self._MEDIAN_DENSE_BYTES:
+                if K * nb * plane * 8 <= R.MEDIAN_DENSE_BYTES:
                     # dense path: stack each image's sub-window into one
-                    # (K, nb, ny, nx) buffer, ONE column-wise sort along K
-                    # (NaN sorts last), gather the (cnt-1)//2 and cnt//2
-                    # order statistics per cell. Same even-count tie rule
-                    # ((lo + hi) / 2, reduce_time.cpp:376-394), identical
-                    # float64 results — measured ~17x faster than the pair
-                    # lexsort on a 174-image hot chunk, which was the scan's
-                    # straggler task.
+                    # (K, nb, ny, nx) buffer and sort it in place along K —
+                    # measured ~17x faster than sorting (cell, value) pairs on a
+                    # 174-image hot chunk, which was the scan's straggler task
                     buf = np.full((K, nb, ny, nx), np.nan)
                     for k, (vals, y0, x0) in enumerate(items):
-                        hy, wx = vals.shape[1], vals.shape[2]
-                        buf[k, :, y0:y0 + hy, x0:x0 + wx] = vals
-                    flat = buf.reshape(K, nb * plane)
-                    flat.sort(axis=0)  # in place — no second K x cells copy
-                    cnt = K - np.isnan(flat).sum(axis=0)
-                    has = cnt > 0
-                    if not has.any():
-                        continue
-                    lo = (cnt[has] - 1) // 2
-                    hi = cnt[has] // 2
-                    cols = np.nonzero(has)[0]
-                    med = (flat[lo, cols] + flat[hi, cols]) / 2.0
+                        buf[k, :, y0:y0 + vals.shape[1], x0:x0 + vals.shape[2]] = vals
+                    med = R.sorted_median(buf.reshape(K, nb * plane))
                 else:
-                    # sparse fallback (huge K × cells): gather only real
-                    # samples as (cell_id, value) pairs, one lexsort,
-                    # segmented median — memory/traffic ∝ samples.
-                    idx_parts, val_parts = [], []
+                    # sparse fallback (huge K × cells): only the real samples,
+                    # as (cell, value) pairs — memory ∝ samples
+                    idx, val = [], []
                     for vals, y0, x0 in items:
-                        ok = ~np.isnan(vals)
-                        if not ok.any():
-                            continue
-                        b, yy, xx = np.nonzero(ok)
-                        idx_parts.append(b * plane + (yy + y0) * nx + (xx + x0))
-                        val_parts.append(vals[ok])
-                    if not idx_parts:
-                        continue
-                    idx = np.concatenate(idx_parts)
-                    val = np.concatenate(val_parts)
-                    order = np.lexsort((val, idx))
-                    idx, val = idx[order], val[order]
-                    starts = np.nonzero(np.diff(idx, prepend=-1))[0]
-                    counts = np.diff(np.append(starts, len(idx)))
-                    med = (val[starts + (counts - 1) // 2] + val[starts + counts // 2]) / 2.0
-                    cols = idx[starts]
-                # 4-D indices: acc[:, lt] is not contiguous when nb > 1 and
-                # the chunk holds several time slices, so a reshape of it is a
-                # copy and a write through it would be lost
-                b, yy, xx = np.unravel_index(cols, (nb, ny, nx))
-                self.acc[b, lt, yy, xx] = med
+                        b, yy, xx = np.nonzero(~np.isnan(vals))
+                        idx.append(b * plane + (yy + y0) * nx + (xx + x0))
+                        val.append(vals[b, yy, xx])
+                    med = R.segment_reduce("median", np.concatenate(idx), np.concatenate(val), nb * plane)
+                self.acc[:, lt] = med.reshape(nb, ny, nx)
         return self.acc
 
 

@@ -14,22 +14,26 @@ Scale notes:
   the image's covered sub-window only — O(taps · covered cells).
 - Footprint methods on the same-SRS (separable) path are EXACT: each source
   pixel is assigned its covering target cell by pure index arithmetic, then
-  one lexsort + segmented reduction per image — O(S log S) in the number of
-  covered SOURCE pixels, no dense intermediate. Cells with no contributing
-  pixel (up-sampling) fall back to nearest — average(near-grid) == near.
+  one reducers.segment_reduce per band and image — memory ∝ the covered
+  SOURCE pixels. Cells with no contributing pixel (up-sampling) fall back to
+  nearest — average(near-grid) == near.
 - Footprint methods on the reprojection path use deterministic supersampling
   (n×n sub-cell centers, n = ceil(target/source pixel ratio), capped at 8):
-  the n² nearest-samples per cell approximate the true footprint; exact for
-  axis-aligned integer-factor grids.
+  the n² nearest-samples per cell approximate the true footprint, reduced
+  by reducers.full_reduce; exact for axis-aligned integer-factor grids.
 
-Quantile convention: Hyndman–Fan type-7 (numpy default), matching the repo's
-reduce Q1/Q3 (reduce_time.cpp:426-453). mode: most frequent value, ties →
-smallest (deterministic).
+Both paths reduce through reducers.py, so they share its conventions: med is
+the (lo + hi) / 2 median of reduce_time (reduce_time.cpp:376-394); q1/q3 are
+Hyndman–Fan type-7 (numpy default), the repo's reduce Q1/Q3
+(reduce_time.cpp:426-453). mode: most frequent value, ties → smallest
+(deterministic).
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+from gdalcubes_spark import reducers as R
 
 # ---------------------------------------------------------------------------
 # convolution kernels
@@ -118,59 +122,11 @@ def kernel_projected(arr: np.ndarray, fx: np.ndarray, fy: np.ndarray, name: str)
 # footprint reductions
 
 
-def _hf7(val: np.ndarray, starts: np.ndarray, counts: np.ndarray, q: float) -> np.ndarray:
-    """Hyndman-Fan 7 quantile of each sorted segment (val sorted within
-    segment)."""
-    pos = q * (counts - 1)
-    lo = np.floor(pos).astype(np.int64)
-    frac = pos - lo
-    vlo = val[starts + lo]
-    vhi = val[starts + np.minimum(lo + 1, counts - 1)]
-    return vlo * (1.0 - frac) + vhi * frac
-
-
-def segmented_reduce(ids: np.ndarray, vals: np.ndarray, n_out: int, method: str) -> np.ndarray:
-    """Reduce vals grouped by integer ids into an (n_out,) array (NaN where a
-    group is empty). One lexsort — memory ∝ samples, never dense."""
-    ok = ~np.isnan(vals)
-    ids, vals = ids[ok], vals[ok]
-    out = np.full(n_out, np.nan)
-    if ids.size == 0:
-        return out
-    if method == "average":
-        s = np.bincount(ids, weights=vals, minlength=n_out)
-        c = np.bincount(ids, minlength=n_out)
-        nz = c > 0
-        out[nz] = s[nz] / c[nz]
-        return out
-    order = np.lexsort((vals, ids))
-    ids, vals = ids[order], vals[order]
-    starts = np.nonzero(np.diff(ids, prepend=-1))[0]
-    counts = np.diff(np.append(starts, len(ids)))
-    cells = ids[starts]
-    if method == "min":
-        out[cells] = vals[starts]
-    elif method == "max":
-        out[cells] = vals[starts + counts - 1]
-    elif method in ("med", "q1", "q3"):
-        q = {"med": 0.5, "q1": 0.25, "q3": 0.75}[method]
-        out[cells] = _hf7(vals, starts, counts, q)
-    elif method == "mode":
-        # runs of equal value within a segment; winner = longest run,
-        # ties → smallest value (runs are value-ascending inside a segment)
-        change = np.empty(len(ids), dtype=bool)
-        change[0] = True
-        change[1:] = (ids[1:] != ids[:-1]) | (vals[1:] != vals[:-1])
-        rs = np.nonzero(change)[0]
-        rl = np.diff(np.append(rs, len(ids)))
-        rid, rv = ids[rs], vals[rs]
-        o2 = np.lexsort((rv, -rl, rid))
-        rid, rv = rid[o2], rv[o2]
-        firsts = np.nonzero(np.diff(rid, prepend=-1))[0]
-        out[rid[firsts]] = rv[firsts]
-    else:
-        raise ValueError(f"unknown footprint method {method!r}")
-    return out
+# footprint method → the reducers.py name that computes it ("mode" has no
+# reducer: segment_reduce knows it as a footprint-only name, and the
+# supersampled path has _mode_lastaxis)
+_REDUCER = {"average": "mean", "min": "min", "max": "max", "med": "median", "q1": "Q1", "q3": "Q3",
+            "mode": "mode"}
 
 
 def footprint_separable(arr: np.ndarray, sxs: np.ndarray, sys_: np.ndarray,
@@ -204,7 +160,7 @@ def footprint_separable(arr: np.ndarray, sxs: np.ndarray, sys_: np.ndarray,
             cell = (ty[oky][:, None] * wx_n + tx[okx][None, :]).ravel()
             ncell = hy_n * wx_n
             for b in range(nb):
-                out[b] = segmented_reduce(cell, sub[b].ravel(), ncell, method).reshape(hy_n, wx_n)
+                out[b] = R.segment_reduce(_REDUCER[method], cell, sub[b].ravel(), ncell).reshape(hy_n, wx_n)
     # nearest fallback for empty cells whose center is inside the image
     fx = (sxs - il) / pdx
     fy = (it_ - sys_) / pdy
@@ -245,23 +201,11 @@ def _mode_lastaxis(v: np.ndarray) -> np.ndarray:
 
 def reduce_lastaxis(v: np.ndarray, method: str) -> np.ndarray:
     """NaN-skipping reduction along the last axis (supersampled footprints)."""
-    allnan = np.all(np.isnan(v), axis=-1)
-    filled = np.where(allnan[..., None], 0.0, v)
-    with np.errstate(all="ignore"):
-        if method == "average":
-            r = np.nanmean(filled, axis=-1)
-        elif method == "min":
-            r = np.nanmin(filled, axis=-1)
-        elif method == "max":
-            r = np.nanmax(filled, axis=-1)
-        elif method in ("med", "q1", "q3"):
-            q = {"med": 50, "q1": 25, "q3": 75}[method]
-            r = np.nanpercentile(filled, q, axis=-1)
-        elif method == "mode":
-            return _mode_lastaxis(v)
-        else:
-            raise ValueError(f"unknown footprint method {method!r}")
-    return np.where(allnan, np.nan, r)
+    if method == "mode":
+        return _mode_lastaxis(v)
+    if method not in _REDUCER:
+        raise ValueError(f"unknown footprint method {method!r}")
+    return R.full_reduce(_REDUCER[method], np.moveaxis(v, -1, 0))
 
 
 def supersample_grid(sxs: np.ndarray, sys_: np.ndarray, dxv: float, dyv: float,

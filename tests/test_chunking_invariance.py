@@ -1,5 +1,5 @@
-"""Chunking invariance of the halo and gather operators: the result of an
-operator must not depend on the chunk grid. Every grid here has edge chunks
+"""Chunking invariance of the halo, gather and aggregate operators: the
+result of an operator must not depend on the chunk grid. Every grid here has edge chunks
 narrower than the window's halo (or the extracted feature), the case a
 per-chunk view of the cube edge gets wrong. Kernels compare to 1e-12: einsum's summation order follows the
 chunk shape. window_space is also checked against np.pad (gdalcubes pads the
@@ -167,3 +167,50 @@ def test_extract_geom_chunking_invariant(spark, name):
         assert len(got) == len(single), grid
         for a, b in zip(got, single):
             assert a == pytest.approx(b, rel=1e-12, nan_ok=True), grid
+
+
+# reduce_*, aggregate_* and window_time median on a 2×6×5×4 cube with NaN
+# holes in both bands. The grids mix nct = 1 and nct > 1, and edge chunks one
+# slice or one cell wide. No input chunk is entirely NaN on any grid: an
+# elided chunk reads as NaN where the single-chunk grid has 0 (count, sum),
+# the gdalcubes empty-chunk rule, which these cases do not decide.
+RA_GRIDS = [(6, 2, 3), (2, 3, 4), (4, 5, 1)]
+_RT = ["median", "var", "which_max", "sum", "count"]
+_RS = ["median", "mean", "count"]
+RA_CASES = {
+    "reduce_time_gather": (lambda c: c.reduce_time(*[f"{r}(band{i % 2 + 1})" for i, r in enumerate(_RT)]), _RT),
+    "reduce_time_partial": (lambda c: c.reduce_time(*[f"{r}(band1)" for r in _RT[1:]]), _RT[1:]),
+    "reduce_space_gather": (lambda c: c.reduce_space(*[f"{r}(band2)" for r in _RS]), _RS),
+    "reduce_space_partial": (lambda c: c.reduce_space(*[f"{r}(band1)" for r in _RS[1:]]), _RS[1:]),
+    **{f"aggregate_time_{m}": (lambda c, m=m: c.aggregate_time(fact=3, method=m), [m, m])
+       for m in ("median", "var", "count", "sum")},
+    **{f"aggregate_space_{m}": (lambda c, m=m: c.aggregate_space(fact=2, method=m), [m, m])
+       for m in ("median", "sd", "prod")},
+    "window_time_median": (lambda c: c.window_time((2, 1), reducer="median(band1)"), ["median"]),
+}
+_EXACT = {"min", "max", "median", "count", "which_min", "which_max"}
+
+
+@pytest.mark.parametrize("name", list(RA_CASES))
+def test_reduce_aggregate_chunking_invariant(spark, name):
+    """Each output band equals the single-chunk grid's: exactly for order
+    statistics and counts, to 1e-12 for sums, products, means and variances
+    (the order in which a cell's values are combined follows the chunking)."""
+    rng = np.random.default_rng(13)
+    arr = rng.random((2, 6, 5, 4)) + 0.5
+    arr[rng.random(arr.shape) < 0.2] = np.nan
+    op, reducers = RA_CASES[name]
+    for grid in RA_GRIDS:
+        g = ChunkGrid(nt=6, ny=5, nx=4, ct=grid[0], cy=grid[1], cx=grid[2])
+        for cid in range(g.n_chunks):
+            (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(*g.chunk_coords(cid))
+            assert not np.all(np.isnan(arr[:, t0:t1, y0:y1, x0:x1])), (grid, cid)
+    single = _run(spark, arr, (6, 5, 4), op)
+    assert not np.all(np.isnan(single))
+    for grid in RA_GRIDS:
+        got = _run(spark, arr, grid, op)
+        for b, r in enumerate(reducers):
+            if r in _EXACT:
+                np.testing.assert_array_equal(got[b], single[b], err_msg=f"{r} {grid}")
+            else:
+                np.testing.assert_allclose(got[b], single[b], rtol=1e-12, err_msg=f"{r} {grid}")

@@ -54,6 +54,10 @@ class TestPlans:
         rows = extract_geom(c, feats)
         plan = rows._jdf.queryExecution().executedPlan().toString()
         assert "LeftSemi" in plan
+        # the feature side is broadcast in the initial plan: no SortMergeJoin
+        # that would shuffle the cube's tensors before AQE could re-plan it
+        assert re.search(r"BroadcastHashJoin \[chunk_id#\d+L?\], \[chunk_id#\d+L?\], LeftSemi", plan), plan
+        assert "SortMergeJoin" not in plan
         # and the result is correct: 4 cells × 6 slices
         assert rows.count() == 24
 

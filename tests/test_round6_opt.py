@@ -1,125 +1,14 @@
 """Round-6 optimization regression tests: the changed internals must stay
 value-identical to their reference formulations.
 
-- median finalize: dense-stack sort path == sparse pair-lexsort path
-- reduce_time sort-gather median == np.nanmedian
 - PNG filter-0 fast path roundtrip
 - JPEG decode/encode identical across the optimized entropy loop
 - cosine_neardup_pairs_bucketed: derived plane count keeps clone recall
 """
 
 import numpy as np
-import pytest
 
 from gdalcubes_spark import codecs
-from gdalcubes_spark.sources.raster_cube import _AggState
-
-
-def _pair_sort_reference(items, shape):
-    """The pre-r6 sparse formulation, kept as the oracle."""
-    nb, nt, ny, nx = shape
-    acc = np.full(shape, np.nan)
-    plane = ny * nx
-    for lt in range(nt):
-        idx_parts, val_parts = [], []
-        for vals, y0, x0 in items.get(lt, []):
-            ok = ~np.isnan(vals)
-            if not ok.any():
-                continue
-            b, yy, xx = np.nonzero(ok)
-            idx_parts.append(b * plane + (yy + y0) * nx + (xx + x0))
-            val_parts.append(vals[ok])
-        if not idx_parts:
-            continue
-        idx = np.concatenate(idx_parts)
-        val = np.concatenate(val_parts)
-        order = np.lexsort((val, idx))
-        idx, val = idx[order], val[order]
-        starts = np.nonzero(np.diff(idx, prepend=-1))[0]
-        counts = np.diff(np.append(starts, len(idx)))
-        lo = starts + (counts - 1) // 2
-        hi = starts + counts // 2
-        med = (val[lo] + val[hi]) / 2.0
-        b, yy, xx = np.unravel_index(idx[starts], (nb, ny, nx))
-        acc[b, lt, yy, xx] = med
-    return acc
-
-
-def _has_data(items, shape):
-    """(nb, nt, ny, nx) mask of cells at least one item has a value for."""
-    has = np.zeros(shape, bool)
-    for lt, its in items.items():
-        for vals, y0, x0 in its:
-            hy, wx = vals.shape[1], vals.shape[2]
-            has[:, lt, y0:y0 + hy, x0:x0 + wx] |= ~np.isnan(vals)
-    return has
-
-
-def _random_items(rng, nb, ny, nx, k, nan_frac):
-    items = []
-    for _ in range(k):
-        hy = rng.integers(1, ny + 1)
-        wx = rng.integers(1, nx + 1)
-        y0 = rng.integers(0, ny - hy + 1)
-        x0 = rng.integers(0, nx - wx + 1)
-        vals = rng.random((nb, hy, wx))
-        vals[rng.random((nb, hy, wx)) < nan_frac] = np.nan
-        items.append((vals, int(y0), int(x0)))
-    return items
-
-
-@pytest.mark.parametrize("k,nan_frac", [(1, 0.0), (7, 0.3), (40, 0.05), (3, 1.0)])
-def test_median_finalize_dense_equals_pair_sort(k, nan_frac):
-    rng = np.random.default_rng(k * 1000 + int(nan_frac * 10))
-    nb, nt, ny, nx = 2, 2, 17, 13
-    st = _AggState("median", (nb, nt, ny, nx))
-    ref_items = {}
-    for lt in range(nt):
-        its = _random_items(rng, nb, ny, nx, k, nan_frac)
-        ref_items[lt] = [(v.copy(), y, x) for v, y, x in its]
-        for v, y, x in its:
-            st.update(v, lt, y, x)
-    dense = st.finalize()
-    ref = _pair_sort_reference(ref_items, (nb, nt, ny, nx))
-    assert np.array_equal(dense.view(np.uint64), ref.view(np.uint64)), \
-        "dense median finalize diverged from the pair-sort reference"
-    assert not np.isnan(dense[_has_data(ref_items, dense.shape)]).any(), \
-        "a cell with input data has no median"
-
-
-@pytest.mark.parametrize("nb,nt", [(1, 1), (2, 2)])
-def test_median_finalize_sparse_fallback_identical(nb, nt):
-    """Force the sparse fallback (budget=0) and compare against dense."""
-    rng = np.random.default_rng(7)
-    ny, nx = 9, 9
-    items = {lt: _random_items(rng, nb, ny, nx, 11, 0.2) for lt in range(nt)}
-
-    def run(budget):
-        st = _AggState("median", (nb, nt, ny, nx))
-        st._MEDIAN_DENSE_BYTES = budget
-        for lt, its in items.items():
-            for v, y, x in its:
-                st.update(v.copy(), lt, y, x)
-        return st.finalize()
-
-    dense = run(1 << 40)
-    sparse = run(0)
-    assert np.array_equal(dense.view(np.uint64), sparse.view(np.uint64))
-    assert not np.isnan(sparse[_has_data(items, sparse.shape)]).any(), \
-        "a cell with input data has no median"
-
-
-def test_reduce_median_sort_gather_equals_nanmedian():
-    from gdalcubes_spark.reducers import full_reduce
-    rng = np.random.default_rng(3)
-    v = rng.random((9, 2, 11, 5))
-    v[rng.random(v.shape) < 0.25] = np.nan
-    v[:, 0, 0, 0] = np.nan  # an all-NaN cell
-    got = full_reduce("median", v)
-    allnan = np.all(np.isnan(v), axis=0)
-    ref = np.where(allnan, np.nan,
-                   np.nanmedian(np.where(allnan[None, ...], 0.0, v), axis=0))
-    assert np.array_equal(got.view(np.uint64), ref.view(np.uint64))
 
 
 def test_png_fast_path_roundtrip_and_filtered_rows():
