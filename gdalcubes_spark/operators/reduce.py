@@ -67,6 +67,7 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
         raise ValueError("names must match reducer pairs")
     bidx = [cube.bands.index(b) for _, b in pairs]
     rnames = [r for r, _ in pairs]
+    which = any(r.startswith("which") for r in rnames)  # only which_* reads the slice datetimes
     view = cube.view
     g = cube.chunking
     # nt collapses to 1: keep [t0, t1] with dt = full span; drop any labeled
@@ -78,10 +79,8 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
     if g.nct == 1:
         # ---- narrow path: whole time axis inside each chunk -----------------
         def fn(t: np.ndarray, coords):
-            nt = t.shape[1]
-            its = np.arange(nt)
-            td = _t_doubles(view, its) if any(r.startswith("which") for r in rnames) else None
-            return np.stack([R.full_reduce(r, t[bi], its, td) for r, bi in zip(rnames, bidx)], axis=0)[:, None]
+            td = _t_doubles(view, np.arange(t.shape[1])) if which else None
+            return np.stack([R.full_reduce(r, t[bi], td) for r, bi in zip(rnames, bidx)], axis=0)[:, None]
 
         return cube.map_chunks(fn, out_view=out_view, out_bands=out_bands, out_chunking=gout)
 
@@ -118,9 +117,10 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
             rows = sorted(chunk_rows(table), key=lambda r: r[1][0])
             _, cy, cx = rows[0][1]
             v = np.concatenate([t for _, _, t in rows], axis=1)  # (nb, T, ny, nx)
-            its = np.concatenate([np.arange(*g.chunk_cell_range(*coords)[0]) for _, coords, _ in rows])
-            td = _t_doubles(view, its) if any(r.startswith("which") for r in rnames) else None
-            t = np.stack([R.full_reduce(r, v[bi], its, td) for r, bi in zip(rnames, bidx)], axis=0)[:, None]
+            td = None
+            if which:
+                td = _t_doubles(view, np.concatenate([np.arange(*g.chunk_cell_range(*c)[0]) for _, c, _ in rows]))
+            t = np.stack([R.full_reduce(r, v[bi], td) for r, bi in zip(rnames, bidx)], axis=0)[:, None]
             return pa.table(emit(CHUNK_SCHEMA, [(gout.chunk_id(0, cy, cx), (0, cy, cx), t)]))
 
         keyed = pin_group_partitions(cube.df.withColumn("skey", spatial_key), "skey", g.ncy * g.ncx)

@@ -67,10 +67,9 @@ def sorted_median(a: np.ndarray) -> np.ndarray:
     return r
 
 
-def full_reduce(name: str, v: np.ndarray, its: Optional[np.ndarray] = None,
-                t_doubles: Optional[np.ndarray] = None) -> np.ndarray:
+def full_reduce(name: str, v: np.ndarray, t_doubles: Optional[np.ndarray] = None) -> np.ndarray:
     """Reduce stacked values v (T, ...) along axis 0 with reference NaN rules.
-    its: global time indices per slice; t_doubles: to_double() datetime codes."""
+    t_doubles: to_double() datetime codes per slice (which_* only)."""
     with np.errstate(all="ignore"):
         if name == "sum":
             return np.nansum(v, axis=0)

@@ -4,6 +4,7 @@ import glob
 import json
 import os
 import shutil
+import uuid
 
 import numpy as np
 import pytest
@@ -16,6 +17,30 @@ from gdalcubes_spark.grid import ChunkGrid, CubeView
 def view10():
     return CubeView.create(srs="EPSG:4326", left=0, right=10, bottom=0, top=10,
                            t0="2021-01-01", t1="2021-01-06", dt="P1D", dx=1.0, dy=1.0)
+
+
+def _series_view(n):
+    return CubeView.create(srs="EPSG:4326", left=0, right=2, bottom=0, top=2,
+                           t0="2021-01-01", t1=f"2021-01-{n:02d}", dt="P1D", dx=1.0, dy=1.0)
+
+
+def _cube8(spark, fill=1.0, nb=1, right=8, cy=4):
+    """A 2-slice, 8-row dummy cube in cy×cy chunks: 8×8 in 8 chunks by default."""
+    v = CubeView.create(srs="EPSG:4326", left=0, right=right, bottom=0, top=8,
+                        t0="2021-01-01", t1="2021-01-02", dt="P1D", dx=1.0, dy=1.0)
+    return dummy_cube(spark, v, nb, fill, chunking=ChunkGrid(nt=2, ny=8, nx=right, ct=1, cy=cy, cx=cy))
+
+
+def _jobs(spark, fn) -> int:
+    """The number of Spark jobs fn() runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class TestCheckpoint:
@@ -32,7 +57,7 @@ class TestCheckpoint:
         # lineage + per-partition metrics exist
         lin = json.load(open(f"{path}/_lineage.json"))
         assert "plan" in lin and lin["bands"] == ["band1", "band2", "s"]
-        m = spark.read.parquet(f"{path}/metrics")
+        m = spark.read.parquet(f"{path}/chunks").drop("data")
         assert m.count() == c.df.count()
         row = m.first()
         assert row["n_cells"] > 0 and row["partition_id"] >= 0
@@ -59,8 +84,8 @@ class TestCheckpoint:
         assert resume(c, path) == 0
 
     def test_resume_metrics_one_row_per_chunk(self, spark, tmp_path):
-        """write → lose one committed part file (and the metrics rows of its
-        chunks, as a lost commit would) → resume: metrics/ holds one row per
+        """write → lose one committed part file (and with it the metrics
+        columns of its chunks) → resume: chunks/ holds one metrics row per
         committed chunk, measured from the chunk itself."""
         from gdalcubes_spark.checkpoint import resume, write_checkpoint
         g = ChunkGrid(nt=6, ny=10, nx=10, ct=2, cy=5, cx=5)
@@ -71,14 +96,10 @@ class TestCheckpoint:
         assert len(files) > 1
         lost = {r["chunk_id"] for r in spark.read.parquet(files[0]).select("chunk_id").collect()}
         os.remove(files[0])
-        metrics = spark.read.parquet(f"{path}/metrics")
-        kept = metrics.filter(~F.col("chunk_id").isin(list(lost))).toPandas()
-        shutil.rmtree(f"{path}/metrics")
-        spark.createDataFrame(kept, metrics.schema).write.parquet(f"{path}/metrics")
         assert resume(c, path) == len(lost) > 0
 
         chunks = spark.read.parquet(f"{path}/chunks").toPandas().set_index("chunk_id")
-        m = spark.read.parquet(f"{path}/metrics").toPandas()
+        m = spark.read.parquet(f"{path}/chunks").drop("data").toPandas()
         assert m["chunk_id"].is_unique and set(m["chunk_id"]) == set(chunks.index)
         assert len(chunks) == c.df.count()
         m = m.set_index("chunk_id").loc[chunks.index]
@@ -91,7 +112,7 @@ class TestCheckpoint:
         # and leaves no empty part file behind
         parts = sorted(os.listdir(f"{path}/chunks"))
         assert resume(c, path) == 0
-        assert spark.read.parquet(f"{path}/metrics").count() == len(chunks)
+        assert spark.read.parquet(f"{path}/chunks").drop("data").count() == len(chunks)
         assert sorted(os.listdir(f"{path}/chunks")) == parts
 
     def test_cube_parquet_roundtrip(self, spark, tmp_path):
@@ -101,6 +122,116 @@ class TestCheckpoint:
         c2 = read_parquet_cube(spark, p)
         assert np.allclose(c2.collect_array(), 7.0)
         assert c2.view.nt == 6
+
+    def test_commit_is_one_job(self, spark, tmp_path):
+        """The metrics are columns of chunks/, so a commit is the chunk write
+        alone: write_checkpoint runs 1 Spark job. resume runs 3: the parquet
+        footer read that infers chunks/'s schema, the broadcast of the
+        committed chunk ids to the left-anti join, and the chunk write."""
+        from gdalcubes_spark.checkpoint import resume, write_checkpoint
+        c = _cube8(spark)
+        path = str(tmp_path / "ckpt")
+        assert _jobs(spark, lambda: write_checkpoint(c, path)) == 1
+        os.remove(sorted(glob.glob(f"{path}/chunks/part-*.parquet"))[0])
+        assert _jobs(spark, lambda: resume(c, path)) == 3
+
+    @pytest.mark.parametrize("field, other", [
+        ("chunking", dict(cy=2)),  # another chunking of the same grid
+        ("bands", dict(nb=2)),  # other bands
+        ("view", dict(right=12)),  # another view extent, same chunk size
+    ])
+    def test_resume_refuses_another_cube(self, spark, tmp_path, field, other):
+        """resume() must not append chunks of a cube its lineage does not
+        describe: the ids would collide or mix grids in one table."""
+        from gdalcubes_spark.checkpoint import read_checkpoint, resume, write_checkpoint
+        path = str(tmp_path / "ckpt")
+        write_checkpoint(_cube8(spark), path)
+        os.remove(sorted(glob.glob(f"{path}/chunks/part-*.parquet"))[0])
+        parts = sorted(os.listdir(f"{path}/chunks"))
+        with pytest.raises(ValueError, match=field):
+            resume(_cube8(spark, **other), path)
+        assert sorted(os.listdir(f"{path}/chunks")) == parts
+        assert resume(_cube8(spark), path) > 0  # the checkpoint's own cube still resumes
+        assert np.allclose(read_checkpoint(spark, path).collect_array(), 1.0)
+
+    def test_resume_refuses_chunks_without_lineage(self, spark, tmp_path):
+        from gdalcubes_spark.checkpoint import resume, write_checkpoint
+        path = str(tmp_path / "ckpt")
+        write_checkpoint(_cube8(spark), path)
+        os.remove(f"{path}/_lineage.json")
+        with pytest.raises(ValueError, match="_lineage.json"):
+            resume(_cube8(spark), path)
+
+    def test_file_uri_lineage_is_written_at_the_path(self, spark, tmp_path, monkeypatch):
+        """The lineage goes through the same Hadoop FileSystem as chunks/: a
+        file: URI lands at its path, not under the working directory."""
+        from gdalcubes_spark.checkpoint import read_checkpoint, write_checkpoint
+        q = tmp_path / "q"
+        for d in ("a", "b"):
+            (tmp_path / d).mkdir()
+        monkeypatch.chdir(tmp_path / "a")
+        write_checkpoint(_cube8(spark, fill=5.0), f"file:{q}")
+        assert (q / "_lineage.json").is_file() and (q / "chunks").is_dir()
+        monkeypatch.chdir(tmp_path / "b")
+        c2 = read_checkpoint(spark, f"file:{q}")
+        assert c2.chunking.cy == 4 and np.allclose(c2.collect_array(), 5.0)
+
+
+class TestResumeRobustness:
+    def test_fresh_path_full_write(self, spark, tmp_path):
+        from gdalcubes_spark.checkpoint import read_checkpoint, resume
+        v = _series_view(2)
+        c = dummy_cube(spark, v, 1, 4.0, chunking=ChunkGrid(nt=2, ny=2, nx=2, ct=1, cy=2, cx=2))
+        p = str(tmp_path / "ckpt")
+        assert resume(c, p) == -1
+        assert np.allclose(read_checkpoint(spark, p).collect_array(), 4.0)
+
+    def test_corrupt_read_raises_not_overwrites(self, spark, tmp_path):
+        import os
+        from gdalcubes_spark.checkpoint import resume, write_checkpoint
+        v = _series_view(2)
+        c = dummy_cube(spark, v, 1, 4.0, chunking=ChunkGrid(nt=2, ny=2, nx=2, ct=1, cy=2, cx=2))
+        p = str(tmp_path / "ckpt")
+        write_checkpoint(c, p)
+        # corrupt the chunk store: parquet read must now FAIL, and resume must
+        # propagate instead of silently overwriting committed chunks
+        for f in os.listdir(f"{p}/chunks"):
+            os.remove(f"{p}/chunks/{f}")
+        with open(f"{p}/chunks/garbage.parquet", "w") as f:
+            f.write("not parquet")
+        with pytest.raises(Exception):
+            resume(c, p)
+        # the garbage file is still there — nothing was overwritten
+        assert open(f"{p}/chunks/garbage.parquet").read() == "not parquet"
+
+    def test_resume_appends_only_missing(self, spark, tmp_path):
+        from gdalcubes_spark.checkpoint import resume, write_checkpoint
+        from gdalcubes_spark.cube import Cube
+        v = _series_view(2)
+        c = dummy_cube(spark, v, 1, 4.0, chunking=ChunkGrid(nt=2, ny=2, nx=2, ct=1, cy=2, cx=2))
+        p = str(tmp_path / "ckpt")
+        partial = Cube(c.df.filter("ct = 0"), c.view, c.bands, c.chunking)
+        write_checkpoint(partial, p)
+        assert resume(c, p) == 1  # only the ct=1 chunk is recomputed
+
+
+class TestCheckpointFsExists:
+    def test_file_uri_checkpoint_is_seen(self, spark, tmp_path):
+        """resume() must see an existing checkpoint through a file: URI —
+        os.path.exists('file:/...') is False and pre-fix it OVERWROTE."""
+        from gdalcubes_spark.checkpoint import _fs_exists, resume, write_checkpoint
+        from gdalcubes_spark.cube import dummy_cube
+        from gdalcubes_spark.grid import CubeView
+        v = CubeView.create(srs="EPSG:4326", left=0, right=2, bottom=0, top=2,
+                            t0="2021-01-01", t1="2021-01-02", dt="P1D", dx=1.0, dy=1.0)
+        c = dummy_cube(spark, v, fill=3.0)
+        p = str(tmp_path / "ckpt")
+        write_checkpoint(c, p)
+        assert _fs_exists(spark, f"{p}/_lineage.json")
+        assert _fs_exists(spark, f"file:{p}/_lineage.json")
+        assert not _fs_exists(spark, f"{p}/nope")
+        # file: URI path → existing checkpoint recognized, nothing recomputed
+        assert resume(c, f"file:{p}") == 0
 
 
 class TestStreaming:

@@ -5,11 +5,9 @@
 2. Labeled-axis views must not leak stale labels into derived views
    (reduce_time / slice_time / crop / aggregate_time) and time_epochs()
    must work on labeled axes (ADVICE medium ×2).
-3. resume() must not silently discard committed chunks on transient read
-   errors (ADVICE low).
-4. hash_near_pairs banding must honor the pigeonhole guarantee at the
+3. hash_near_pairs banding must honor the pigeonhole guarantee at the
    REQUESTED max_hamming (VERDICT wrong #1).
-5. jaccard_pairs df_cap="auto" drops hot tokens via a broadcast anti-join.
+4. jaccard_pairs df_cap="auto" drops hot tokens via a broadcast anti-join.
 """
 
 import numpy as np
@@ -139,44 +137,6 @@ class TestHammingBanding:
         sig = spark.createDataFrame([(1, base), (2, other)], "id long, h long")
         got = hash_near_pairs(sig, "id", "h", max_hamming=1).collect()
         assert len(got) == 1 and got[0]["hamming"] == 1
-
-
-class TestResumeRobustness:
-    def test_fresh_path_full_write(self, spark, tmp_path):
-        from gdalcubes_spark.checkpoint import read_checkpoint, resume
-        v = _series_view(2)
-        c = dummy_cube(spark, v, 1, 4.0, chunking=ChunkGrid(nt=2, ny=2, nx=2, ct=1, cy=2, cx=2))
-        p = str(tmp_path / "ckpt")
-        assert resume(c, p) == -1
-        assert np.allclose(read_checkpoint(spark, p).collect_array(), 4.0)
-
-    def test_corrupt_read_raises_not_overwrites(self, spark, tmp_path):
-        import os
-        from gdalcubes_spark.checkpoint import resume, write_checkpoint
-        v = _series_view(2)
-        c = dummy_cube(spark, v, 1, 4.0, chunking=ChunkGrid(nt=2, ny=2, nx=2, ct=1, cy=2, cx=2))
-        p = str(tmp_path / "ckpt")
-        write_checkpoint(c, p)
-        # corrupt the chunk store: parquet read must now FAIL, and resume must
-        # propagate instead of silently overwriting committed chunks
-        for f in os.listdir(f"{p}/chunks"):
-            os.remove(f"{p}/chunks/{f}")
-        with open(f"{p}/chunks/garbage.parquet", "w") as f:
-            f.write("not parquet")
-        with pytest.raises(Exception):
-            resume(c, p)
-        # the garbage file is still there — nothing was overwritten
-        assert open(f"{p}/chunks/garbage.parquet").read() == "not parquet"
-
-    def test_resume_appends_only_missing(self, spark, tmp_path):
-        from gdalcubes_spark.checkpoint import resume, write_checkpoint
-        from gdalcubes_spark.cube import Cube
-        v = _series_view(2)
-        c = dummy_cube(spark, v, 1, 4.0, chunking=ChunkGrid(nt=2, ny=2, nx=2, ct=1, cy=2, cx=2))
-        p = str(tmp_path / "ckpt")
-        partial = Cube(c.df.filter("ct = 0"), c.view, c.bands, c.chunking)
-        write_checkpoint(partial, p)
-        assert resume(c, p) == 1  # only the ct=1 chunk is recomputed
 
 
 class TestBruteTopkBatched:

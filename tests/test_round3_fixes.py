@@ -10,13 +10,11 @@
    (VERDICT wrong #3).
 4. stratified_sample: zero-candidate groups enter the exact fallback rather
    than vanishing (ADVICE low, sampling.py:76).
-5. resume()/checkpoint existence goes through the Hadoop FileSystem API so
-   file: URIs (and remote schemes) resolve (ADVICE medium, checkpoint.py:120).
-6. write_bucketed_table overwrite resolves db-qualified locations
+5. write_bucketed_table overwrite resolves db-qualified locations
    (ADVICE low, cube.py:363).
-7. to_sql fac/ncr/npr render as gamma expressions matching the Python path
+6. to_sql fac/ncr/npr render as gamma expressions matching the Python path
    (ADVICE low, expr.py:152).
-8. knn_tiles routes its cache through the shared release registry
+7. knn_tiles routes its cache through the shared release registry
    (VERDICT wrong #4).
 """
 
@@ -170,25 +168,6 @@ class TestStratifiedZeroCandidates:
         a = sorted(r.doc_id for r in full.select("doc_id").collect())
         b = sorted(r.doc_id for r in degenerate.select("doc_id").collect())
         assert a == b and len(a) > 0
-
-
-class TestCheckpointFsExists:
-    def test_file_uri_checkpoint_is_seen(self, spark, tmp_path):
-        """resume() must see an existing checkpoint through a file: URI —
-        os.path.exists('file:/...') is False and pre-fix it OVERWROTE."""
-        from gdalcubes_spark.checkpoint import _fs_exists, resume, write_checkpoint
-        from gdalcubes_spark.cube import dummy_cube
-        from gdalcubes_spark.grid import CubeView
-        v = CubeView.create(srs="EPSG:4326", left=0, right=2, bottom=0, top=2,
-                            t0="2021-01-01", t1="2021-01-02", dt="P1D", dx=1.0, dy=1.0)
-        c = dummy_cube(spark, v, fill=3.0)
-        p = str(tmp_path / "ckpt")
-        write_checkpoint(c, p)
-        assert _fs_exists(spark, f"{p}/_lineage.json")
-        assert _fs_exists(spark, f"file:{p}/_lineage.json")
-        assert not _fs_exists(spark, f"{p}/nope")
-        # file: URI path → existing checkpoint recognized, nothing recomputed
-        assert resume(c, f"file:{p}") == 0
 
 
 class TestBucketedTableDbQualified:
