@@ -107,8 +107,7 @@ def read_checkpoint(spark: SparkSession, path: str) -> Cube:
     view = CubeView.from_json(lin["view"])
     ck = lin["chunking"]
     g = ChunkGrid(nt=view.nt, ny=view.ny, nx=view.nx, ct=ck["ct"], cy=ck["cy"], cx=ck["cx"])
-    df = spark.read.parquet(f"{path}/chunks")
-    return Cube(df.select(CHUNK_SCHEMA.fieldNames()), view, list(lin["bands"]), g)
+    return Cube(spark.read.schema(CHUNK_SCHEMA).parquet(f"{path}/chunks"), view, list(lin["bands"]), g)
 
 
 def _fs(spark: SparkSession, path: str):
@@ -151,7 +150,9 @@ def resume(cube: Cube, path: str) -> int:
             raise ValueError(f"resume: the cube's {field} {want} differs from the checkpoint's "
                              f"{stored[field]} at {path}")
     before = {st.getPath().toString() for st in fs.listStatus(chunks)}
-    done = spark.read.parquet(f"{path}/chunks").select("chunk_id")
+    # a known schema: no inference job, and a chunks/ that holds no part file
+    # (a job lost before its commit) reads as empty instead of failing
+    done = spark.read.schema(T.StructType([CHUNK_SCHEMA["chunk_id"]])).parquet(f"{path}/chunks")
     n = _commit(cube.df.join(done, "chunk_id", "left_anti"), path, "append")
     if n == 0:
         # Spark writes write-task 0's part file even when it has no rows;

@@ -90,10 +90,15 @@ def pin_group_partitions(df: DataFrame, keys, n_groups: int) -> DataFrame:
     (no second exchange) and AQE leaves it alone.
 
     Count = cluster parallelism, capped by the number of groups: ONE wave of
-    Python tasks. Every Python task pays a fixed JVM-side cost before its UDF
-    runs (≈0.22 s on a 4-core host, `tools/python_task_cost.py`), so each
-    extra wave costs that much again whether a task folds 8 images or 52.
-    The rule was measured only at local[4] on the median_zonal stages (scan,
+    Python tasks. Every Python task pays a fixed cost before its UDF runs, so
+    each extra wave costs that much again whether a task folds 8 images or
+    52. Most of that cost was the worker re-reading its zip archives
+    (pyspark.zip, the spark-core jar) at every task start; the engine's worker
+    daemon (worker_daemon.py) removes it, and a wave now costs ≈0.05 s on a
+    4-core host (≈0.14 s without the daemon, `tools/python_task_cost.py`).
+    The one-wave rule was sized on the old cost and is kept as it is: a
+    re-check starts from the new figure. It was measured only at local[4] on
+    the median_zonal stages (scan,
     reduce_time gather, extract_geom); window and from_cells follow it
     untimed. reduce_space (groupBy "ct") and aggregate_* (groupBy chunk_id)
     group with no pin, so AQE may coalesce those stages. Hashing chunk_id

@@ -7,6 +7,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# `spark.python.daemon.module` for every session that runs the engine's UDFs
+# (see worker_daemon.py); a session not made by get_spark should set it too.
+WORKER_DAEMON = "gdalcubes_spark.worker_daemon"
+
 
 def get_spark(app: str = "gdalcubes_spark", cores: int | None = None, shuffle_partitions: int | None = None) -> SparkSession:
     if cores is None:
@@ -29,5 +33,6 @@ def get_spark(app: str = "gdalcubes_spark", cores: int | None = None, shuffle_pa
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/gdalcubes_warehouse"))
         .config("spark.driver.extraJavaOptions", "-Dderby.system.home=/tmp/gdalcubes_derby")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", WORKER_DAEMON)
         .getOrCreate()
     )

@@ -9,7 +9,7 @@ image_collection_cube.cpp:58-306.
 Spark-first design — the theta range join is turned into an EQUI join:
 because the cube grid is regular, an image's bbox + datetime map to an exact
 rectangle of chunk ids by pure column arithmetic. We explode each image row
-to its covering chunk ids (F.sequence + explode, all JVM-side, no UDF) and
+to its covering chunk ids (sequence + explode, all JVM-side, no UDF) and
 shuffle image payloads once, directly to their chunks:
 
     images ──[column exprs: it, cx0..cx1, cy0..cy1]──▶ explode(chunk_id)
@@ -30,7 +30,7 @@ micro-batches.
 
 Time-slice assignment replicates cube_coords (view.cpp:416-422) with the
 duration-unit rules of datetime.h: linear epoch arithmetic for second..week
-units, calendar month/year arithmetic otherwise — all as Catalyst column
+units, calendar month/year arithmetic otherwise — all as Spark SQL
 expressions so the join side never runs Python.
 """
 
@@ -85,21 +85,20 @@ class ImageMask:
         return ~m if self.invert else m
 
 
-def _time_index_col(view: CubeView):
-    """it as a Catalyst column expression from the `datetime` column."""
+def _time_index_sql(view: CubeView) -> str:
+    """it as a Spark SQL expression over the `datetime` column."""
     u, n = view.dt.unit, view.dt.n
     t0 = view.t0
     if u in (Unit.SECOND, Unit.MINUTE, Unit.HOUR, Unit.DAY, Unit.WEEK):
         secs = {Unit.SECOND: 1, Unit.MINUTE: 60, Unit.HOUR: 3600, Unit.DAY: 86400, Unit.WEEK: 604800}[u] * n
         if u in (Unit.DAY, Unit.WEEK):
             # day difference counts calendar days of the date part (datetime.h DAY diff)
-            return F.floor(F.datediff(F.to_date("datetime"), F.lit(t0.to_string())) / (secs // 86400))
-        return F.floor((F.unix_timestamp("datetime") - F.lit(t0.epoch())) / secs)
+            return f"floor(datediff(to_date(datetime), '{t0.to_string()}') / {secs // 86400})"
+        return f"floor((unix_timestamp(datetime) - {t0.epoch()}) / {secs})"
     if u == Unit.MONTH:
-        months = (F.year("datetime") * 12 + F.month("datetime")) - F.lit(t0.year * 12 + t0.month)
-        return F.floor(months / n)
+        return f"floor(((year(datetime) * 12 + month(datetime)) - {t0.year * 12 + t0.month}) / {n})"
     if u == Unit.YEAR:
-        return F.floor((F.year("datetime") - F.lit(t0.year)) / n)
+        return f"floor((year(datetime) - {t0.year}) / {n})"
     raise ValueError(f"unsupported dt unit {u}")
 
 
@@ -109,8 +108,7 @@ def _bbox_in_view_srs(images: DataFrame, view: CubeView) -> DataFrame:
     4 corners in a vectorized Arrow UDF (the warp-transformer-cache analogue)."""
     code = parse_epsg(view.srs)
     if code == 4326:
-        return (images.withColumn("vleft", F.col("left")).withColumn("vright", F.col("right"))
-                .withColumn("vbottom", F.col("bottom")).withColumn("vtop", F.col("top")))
+        return images.selectExpr("*", "`left` AS vleft", "`right` AS vright", "bottom AS vbottom", "top AS vtop")
     tr = Transformer(4326, code)
 
     @F.pandas_udf("left double, right double, bottom double, top double")
@@ -122,8 +120,7 @@ def _bbox_in_view_srs(images: DataFrame, view: CubeView) -> DataFrame:
                                  bottom=Y.min(axis=0), top=Y.max(axis=0)))
 
     return (images.withColumn("_v", corners("left", "right", "bottom", "top"))
-            .withColumn("vleft", F.col("_v.left")).withColumn("vright", F.col("_v.right"))
-            .withColumn("vbottom", F.col("_v.bottom")).withColumn("vtop", F.col("_v.top"))
+            .selectExpr("*", "_v.left AS vleft", "_v.right AS vright", "_v.bottom AS vbottom", "_v.top AS vtop")
             .drop("_v"))
 
 
@@ -434,26 +431,23 @@ def _nan_add(a: np.ndarray, vals: np.ndarray) -> None:
 def _explode(images: DataFrame, view: CubeView, g: ChunkGrid) -> DataFrame:
     """The scan's join side: each image row (batch or streaming) → one row per
     covering chunk id, by pure column arithmetic on the bbox in the view SRS
-    (no UDF on identity views)."""
-    m = _bbox_in_view_srs(images, view)
-    m = m.withColumn("it", _time_index_col(view).cast("long"))
-    m = m.filter((F.col("it") >= 0) & (F.col("it") < view.nt))
-    dx, dy = view.dx, view.dy
+    (no UDF on identity views). SQL expression strings, not Column calls: each
+    Column call is a JVM round trip."""
+    left, top, dx, dy = (f"{float(x)!r}D" for x in (view.left, view.top, view.dx, view.dy))
     # covering cell ranges (inclusive) → covering chunk ranges
-    m = (m.withColumn("x0", F.greatest(F.lit(0), F.floor((F.col("vleft") - view.left) / dx)).cast("long"))
-         .withColumn("x1", F.least(F.lit(view.nx - 1), F.ceil((F.col("vright") - view.left) / dx - _EPS) - 1).cast("long"))
-         .withColumn("y0", F.greatest(F.lit(0), F.floor((view.top - F.col("vtop")) / dy)).cast("long"))
-         .withColumn("y1", F.least(F.lit(view.ny - 1), F.ceil((view.top - F.col("vbottom")) / dy - _EPS) - 1).cast("long"))
-         .filter((F.col("x0") <= F.col("x1")) & (F.col("y0") <= F.col("y1"))))
-    return (m.withColumn("kx", F.explode(F.sequence((F.col("x0") / g.cx).cast("long"),
-                                                    (F.col("x1") / g.cx).cast("long"))))
-            .withColumn("ky", F.explode(F.sequence((F.col("y0") / g.cy).cast("long"),
-                                                   (F.col("y1") / g.cy).cast("long"))))
-            .withColumn("kt", (F.col("it") / g.ct).cast("long"))
-            .withColumn("chunk_id",
-                        F.col("kt") * (g.ncy * g.ncx) + F.col("ky").cast("long") * g.ncx + F.col("kx"))
-            .select("chunk_id", "it", "image_id", "bytes", "fmt", "nleft", "nright", "nbottom", "ntop",
-                    "epsg", "vleft", "vright", "vbottom", "vtop"))
+    return (_bbox_in_view_srs(images, view)
+            .selectExpr("*", f"CAST({_time_index_sql(view)} AS BIGINT) AS it")
+            .filter(f"it >= 0 AND it < {view.nt}")
+            .selectExpr("*", f"CAST(greatest(0, floor((vleft - {left}) / {dx})) AS BIGINT) AS x0",
+                        f"CAST(least({view.nx - 1}, ceil((vright - {left}) / {dx} - {_EPS!r}) - 1) AS BIGINT) AS x1",
+                        f"CAST(greatest(0, floor(({top} - vtop) / {dy})) AS BIGINT) AS y0",
+                        f"CAST(least({view.ny - 1}, ceil(({top} - vbottom) / {dy} - {_EPS!r}) - 1) AS BIGINT) AS y1")
+            .filter("x0 <= x1 AND y0 <= y1")
+            .selectExpr("*", f"explode(sequence(CAST(x0 / {g.cx} AS BIGINT), CAST(x1 / {g.cx} AS BIGINT))) AS kx")
+            .selectExpr("*", f"explode(sequence(CAST(y0 / {g.cy} AS BIGINT), CAST(y1 / {g.cy} AS BIGINT))) AS ky")
+            .selectExpr(f"CAST(it / {g.ct} AS BIGINT) * {g.ncy * g.ncx} + ky * {g.ncx} + kx AS chunk_id",
+                        "it", "image_id", "bytes", "fmt", "nleft", "nright", "nbottom", "ntop",
+                        "epsg", "vleft", "vright", "vbottom", "vtop"))
 
 
 class _ScanKernel:

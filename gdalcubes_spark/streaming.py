@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gdalcubes_spark.grid import ChunkGrid, CubeView, default_chunking
-from gdalcubes_spark.sources.raster_cube import _bbox_in_view_srs, _time_index_col
+from gdalcubes_spark.sources.raster_cube import _bbox_in_view_srs, _time_index_sql
 from gdalcubes_spark.synth import IMAGE_SCHEMA
 
 
@@ -46,7 +46,7 @@ def streaming_cell_counts(stream: DataFrame, view: CubeView, chunking: ChunkGrid
     arithmetic as the batch scan."""
     g = chunking
     m = (_bbox_in_view_srs(stream, view)
-         .withColumn("it", _time_index_col(view).cast("long"))
+         .withColumn("it", F.expr(_time_index_sql(view)).cast("long"))
          .filter((F.col("it") >= 0) & (F.col("it") < view.nt))
          .withColumn("x0", F.floor((F.col("vleft") - view.left) / view.dx))
          .withColumn("y0", F.floor((view.top - F.col("vtop")) / view.dy))

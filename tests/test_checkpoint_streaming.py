@@ -125,15 +125,28 @@ class TestCheckpoint:
 
     def test_commit_is_one_job(self, spark, tmp_path):
         """The metrics are columns of chunks/, so a commit is the chunk write
-        alone: write_checkpoint runs 1 Spark job. resume runs 3: the parquet
-        footer read that infers chunks/'s schema, the broadcast of the
-        committed chunk ids to the left-anti join, and the chunk write."""
+        alone: write_checkpoint runs 1 Spark job. resume runs 2: the broadcast
+        of the committed chunk ids to the left-anti join, and the chunk
+        write. chunks/ is read with a known schema, so no job infers it."""
         from gdalcubes_spark.checkpoint import resume, write_checkpoint
         c = _cube8(spark)
         path = str(tmp_path / "ckpt")
         assert _jobs(spark, lambda: write_checkpoint(c, path)) == 1
         os.remove(sorted(glob.glob(f"{path}/chunks/part-*.parquet"))[0])
-        assert _jobs(spark, lambda: resume(c, path)) == 3
+        assert _jobs(spark, lambda: resume(c, path)) == 2
+
+    def test_resume_chunks_without_part_files_recomputes_all(self, spark, tmp_path):
+        """A job lost before its commit leaves chunks/ holding only
+        _temporary/: resume recomputes every chunk instead of failing to
+        infer a schema from no part file."""
+        from gdalcubes_spark.checkpoint import read_checkpoint, resume, write_checkpoint
+        c = _cube8(spark, fill=2.0)
+        path = str(tmp_path / "ckpt")
+        write_checkpoint(c, path)
+        shutil.rmtree(f"{path}/chunks")
+        os.makedirs(f"{path}/chunks/_temporary/0")
+        assert resume(c, path) == c.chunking.n_chunks
+        np.testing.assert_array_equal(read_checkpoint(spark, path).collect_array(), c.collect_array())
 
     @pytest.mark.parametrize("field, other", [
         ("chunking", dict(cy=2)),  # another chunking of the same grid

@@ -6,7 +6,8 @@ next to a JVM-only collect of the same frame. With p cores, n partitions run
 in ceil(n / p) waves, so the growth from p to 8p partitions is the cost of a
 wave of Python tasks. The engine's tensor-UDF stages are pinned to one wave
 (`cube.pin_group_partitions`); this table is how to re-check that rule on
-another host.
+another host. The session runs the engine's worker daemon
+(`session.WORKER_DAEMON`), as every engine session does.
 
 Usage: PYTHONPATH=. python tools/python_task_cost.py
 Runs at local[<CPUs this process may use>]. Prints one table row per
@@ -44,7 +45,10 @@ def _timed(fn) -> float:
 def main() -> None:
     cores = len(os.sched_getaffinity(0))
     from pyspark.sql import SparkSession
+
+    from gdalcubes_spark.session import WORKER_DAEMON
     spark = (SparkSession.builder.master(f"local[{cores}]").appName("python_task_cost")
+             .config("spark.python.daemon.module", WORKER_DAEMON)
              .config("spark.ui.enabled", "false")
              .config("spark.ui.showConsoleProgress", "false")
              .config("spark.driver.memory", "1g")

@@ -12,10 +12,17 @@ Build the archive and submit:
 On a cluster, replace --master and point --out at shared storage; the same
 archive ships to every executor (the reference's worker-process model,
 multiprocess.cpp:13-248, replaced by Spark deployment).
+
+The job runs the engine's worker daemon (`session.WORKER_DAEMON`). The daemon
+starts before any task puts the --py-files on sys.path, so the workers get the
+driver's PYTHONPATH, on which spark-submit put the archive. That path must
+resolve on every worker: true on one host; on a cluster, install the package
+on the workers or ship the archive where their PYTHONPATH names it.
 """
 
 import argparse
 import json
+import os
 import sys
 
 from pyspark.sql import SparkSession
@@ -28,7 +35,11 @@ def main():
     ap.add_argument("--resume", action="store_true", help="resume an interrupted run")
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName("gdalcubes-flagship").getOrCreate()
+    from gdalcubes_spark.session import WORKER_DAEMON
+    spark = (SparkSession.builder.appName("gdalcubes-flagship")
+             .config("spark.python.daemon.module", WORKER_DAEMON)
+             .config("spark.executorEnv.PYTHONPATH", os.environ.get("PYTHONPATH", ""))
+             .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
     # imports AFTER session start: on an executor these resolve from --py-files
