@@ -15,6 +15,7 @@ single groupBy(node).agg(min) joined back — all JVM aggregations, no Python.
 Lineage is cut with localCheckpoint every round (iterative plans otherwise
 stack O(rounds) shuffles into one Catalyst tree and planning time explodes);
 convergence is an aggregate equality check on (sum, count) of the edge set.
+An input that is already a star forest (pure clone pairs) runs no round.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from pyspark.sql import functions as F
 # deliberately NOT in dedup._CACHED: checkpoint lineage is truncated, so a
 # released result can never recompute — while dedup's registry holds
 # recomputable caches that other library functions (knn_tiles,
-# minhash_signatures) free unilaterally between queries. Sharing one registry
+# minhash_lsh_pairs) free unilaterally between queries. Sharing one registry
 # let those calls silently invalidate an un-collected dedup_clusters result.
 _CKPT_CACHED: list = []
 
@@ -116,28 +117,26 @@ def connected_components(pairs: DataFrame, src: str = "ida", dst: str = "idb",
         # on every row, so the canonical (least, greatest) re-projection and
         # its distinct shuffle are redundant — a single partial-aggregated
         # scan over the checkpointed blocks (no exchange beyond the final
-        # 1-row merge) computes the same set identity. xxhash64(dst, src)
-        # equals the old xxhash64(least, greatest).
+        # 1-row merge) computes the same set identity.
         r = (e.agg(F.count("*").alias("n"),
                    F.sum(F.pmod(F.xxhash64("dst", "src"), F.lit(1 << 40))).alias("s"))
              .collect()[0])
         return (r["n"], r["s"])
 
-    # canonical signature of the INPUT edge set: both star operators depend
-    # only on the canonical (least, greatest) set, so if one round leaves
-    # that set unchanged the input was already a fixpoint and the loop can
-    # stop after round 0 instead of confirming with a second full round.
-    # Near-dup graphs are often pure clone pairs (already stars) — this
-    # halves their CC cost. Sound without a distinct: if the input holds
-    # both orientations of an edge, its count exceeds the canonical set's
-    # and the signatures simply cannot match (no false positive).
-    r0 = (edges.agg(F.count("*").alias("n"),
-                    F.sum(F.pmod(F.xxhash64(F.least("src", "dst"),
-                                            F.greatest("src", "dst")),
-                                 F.lit(1 << 40))).alias("s"))
-          .collect()[0])
-    prev = (r0["n"], r0["s"])
-    for _ in range(max_rounds):
+    # round 0: the rounds converge to a star forest centred on each
+    # component's minimum; the canonical (greatest, least) input already is
+    # one when no node is both a greatest and a least and every greatest has
+    # a single least. Per node u over its neighbours N(u): u < min N(u) (a
+    # centre) or min N(u) = max N(u) < u (a leaf; its neighbour's own test
+    # makes that a centre). Duplicate and reversed edges change no min/max.
+    # Pure clone pairs then run no round; any other input runs the rounds it
+    # always did (prev = None: round 1 never matches).
+    sym = edges.selectExpr("inline(array(struct(src AS u, dst AS v), struct(dst AS u, src AS v)))")
+    star = (sym.groupBy("u").agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
+            .selectExpr("count_if(NOT (u < lo OR (lo = hi AND hi < u))) = 0 AS star")
+            .collect()[0]["star"])
+    prev = None
+    for _ in range(0 if star else max_rounds):
         old_live = live
         edges, live = checkpointed(_small_star(_large_star(edges)))
         # localCheckpoint is eager: the new edge set is materialized, so the

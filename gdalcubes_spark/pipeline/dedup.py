@@ -8,9 +8,10 @@ Scale design:
   The token join is the classic inverted-index self-join; hot tokens are the
   skew risk → stopword-ish tokens can be dropped via a document-frequency
   cap (df_cap) computed in the same plan.
-- minhash_lsh: shingle → 64 minhashes (single explode + 64 min() aggs, one
-  pass) → 16 bands of 4 → bucket equi-join → exact-Jaccard verification of
-  candidates only. Turns the O(n²) similarity join into an equi-join.
+- minhash_lsh: per-doc shingle array → 64 minhashes (one array expression,
+  no shuffle) → 16 bands of 4 → bucket equi-join → exact-Jaccard
+  verification of candidates only. Turns the O(n²) similarity join into an
+  equi-join.
 - simhash: 64-bit sign-of-weighted-bit-sums; banded Hamming buckets.
 """
 
@@ -110,16 +111,19 @@ def jaccard_pairs(df: DataFrame, threshold: float = 0.6, id_col: str = "doc_id",
             .select("ida", "idb", "jaccard"))
 
 
+def _shingle_sql(text_col: str, n: int) -> str:
+    """SQL array of a doc's word n-gram shingles, HASHED to int64 before
+    leaving the narrow stage: downstream joins shuffle 8-byte keys, not
+    strings (collisions are negligible at n²/2⁶⁴, and the LSH and exact
+    paths share the hashed universe, so Jaccard is unchanged)."""
+    w = f"split(lower(`{text_col}`), ' +')"
+    return (f"transform(sequence(0, greatest(size({w}) - {n}, 0)), "
+            f"i -> xxhash64(concat_ws(' ', slice({w}, i + 1, {n}))))")
+
+
 def _shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """Word n-gram shingles, HASHED to int64 before leaving the narrow stage:
-    every downstream join/groupBy shuffles 8-byte keys instead of strings
-    (xxhash64 collisions are negligible at n²/2⁶⁴, and both the LSH path and
-    the exact-verify path use the same hashed universe so Jaccard is
-    unchanged)."""
-    words = F.split(F.lower(F.col(text_col)), " +")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
-    sh = F.transform(idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i + 1, n))))
-    return df.select(id_col, F.explode(sh).alias("shingle")).distinct()
+    """One row per distinct (doc, shingle hash)."""
+    return df.selectExpr(f"`{id_col}`", f"explode({_shingle_sql(text_col, n)}) AS shingle").distinct()
 
 
 def _shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -127,22 +131,32 @@ def _shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Da
     form of _shingles with NO explode and NO distinct shuffle (array_distinct
     runs per row inside codegen). Same xxhash64 universe as _shingles, so
     Jaccard values are identical between the two representations."""
-    words = F.split(F.lower(F.col(text_col)), " +")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
-    sh = F.transform(idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i + 1, n))))
-    return widen_input(df).select(id_col, F.array_distinct(sh).alias("shingles"))
+    return widen_input(df).selectExpr(
+        f"`{id_col}`", f"array_distinct({_shingle_sql(text_col, n)}) AS shingles")
 
 
-def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                       n_hashes: int = 64, shingle_n: int = 3) -> DataFrame:
-    """Per-row signatures, ZERO shuffle: h_i = array_min(transform(shingles,
-    s -> xxhash64(s, i))) — the whole minhash computation happens inside one
-    codegen projection. Hash family: xxhash64(shingle, seed_i)."""
-    arr = _shingle_arrays(df, id_col, text_col, shingle_n)
-    sig_cols = [F.array_min(F.transform(F.col("shingles"),
-                                        (lambda seed: lambda s: F.xxhash64(s, F.lit(seed)))(i)))
-                .alias(f"h{i}") for i in range(n_hashes)]
-    return arr.select(id_col, *sig_cols)
+def _bind(col: str, var: str, body: str) -> str:
+    """SQL for `body` with `var` bound to the value of column `col`. Catalyst
+    inlines a projected expression that its consumer references once (say
+    once the LSH's shingle cache is released), even into a lambda that runs
+    per array element: a signature lambda would then rebuild the shingles
+    once per hash. A lambda over the one-element array(col) evaluates `col`
+    once wherever the expression ends up."""
+    return f"transform(array({col}), {var} -> {body})[0]"
+
+
+def _signatures(arr: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
+    """(_id, _sig): each doc's n_hashes minhashes as one array."""
+    sig = f"transform(sequence(0, {n_hashes - 1}), i -> array_min(transform(sh, s -> xxhash64(s, i))))"
+    return arr.selectExpr(f"`{id_col}` AS _id", f"{_bind('shingles', 'sh', sig)} AS _sig")
+
+
+def _band_keys(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
+    """(_id, band, key): one row per doc and band."""
+    rows = n_hashes // bands
+    key = ", ".join(["b"] + [f"g[b * {rows} + {r}]" for r in range(rows)])
+    keys = f"transform(sequence(0, {bands - 1}), b -> xxhash64({key}))"
+    return sig.selectExpr("_id", f"posexplode({_bind('_sig', 'g', keys)}) AS (band, key)")
 
 
 def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.6, id_col: str = "doc_id",
@@ -153,28 +167,33 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.6, id_col: str = "doc_
     probability at j=0.6 is ~0.88, at j=0.8 ~0.9986 — tune bands/rows per
     target threshold.
 
-    Plan shape (3× faster than the explode/groupBy formulation it replaced):
-    docs → per-row shingle ARRAYS (no explode) → per-row signatures (no
-    shuffle) → banded bucket equi-join (the only real shuffle: n_docs×bands
-    tiny rows) → verify candidates with array_intersect (pair-count-sized
-    joins). At corpus scale every stage stays proportional to docs +
-    candidate pairs, never to total shingle occurrences."""
-    rows = n_hashes // bands
+    Plan shape: docs → per-row shingle ARRAYS (no explode) → per-row
+    signature array (no shuffle) → one row per (doc, band) → banded bucket
+    equi-join (the only real shuffle: n_docs×bands tiny rows) → verify
+    candidates with array_intersect (pair-count-sized joins). At corpus
+    scale every stage stays proportional to docs + candidate pairs, never to
+    total shingle occurrences.
+
+    The LSH is three SQL expressions, so building the plan costs the same
+    few JVM round trips whatever `n_hashes` and `bands` are (int lambda
+    variables i and b, r = n_hashes // bands):
+    - shingles: `array_distinct(transform(sequence(0, greatest(size(w) - n,
+      0)), i -> xxhash64(concat_ws(' ', slice(w, i + 1, n)))))`, with
+      `w = split(lower(text), ' +')`;
+    - signature: `_sig = transform(sequence(0, n_hashes - 1),
+      i -> array_min(transform(shingles, s -> xxhash64(s, i))))`;
+    - band keys: `posexplode(transform(sequence(0, bands - 1),
+      b -> xxhash64(b, _sig[b*r], …, _sig[b*r + r-1]))) AS (band, key)`.
+    `_sig` is its own Project below the Generate, so the minhashes are
+    computed once per join side, never once per band. The signature and the
+    band keys reach the shingles and `_sig` through `_bind`, so they stay
+    computed once per doc when the shingle cache is gone."""
     release_caches()  # drop caches from any prior LSH call in this session
     arr = _shingle_arrays(df, id_col, text_col, shingle_n).persist()
     _CACHED.append(arr)
-    sig_cols = [F.array_min(F.transform(F.col("shingles"),
-                                        (lambda seed: lambda s: F.xxhash64(s, F.lit(seed)))(i)))
-                .alias(f"h{i}") for i in range(n_hashes)]
-    sig = arr.select(id_col, *sig_cols)
-    band_cols = [F.xxhash64(F.lit(b), *[F.col(f"h{b * rows + r}") for r in range(rows)]).alias(f"b{b}")
-                 for b in range(bands)]
-    banded = sig.select(id_col, *band_cols)
-    bucket = banded.select(id_col, F.explode(F.array(*[
-        F.struct(F.lit(b).alias("band"), F.col(f"b{b}").alias("key")) for b in range(bands)
-    ])).alias("bk")).select(id_col, "bk.band", "bk.key")
-    l = bucket.select(F.col(id_col).alias("ida"), "band", "key")
-    r = bucket.select(F.col(id_col).alias("idb"), "band", "key")
+    bucket = _band_keys(_signatures(arr, id_col, n_hashes), n_hashes, bands)
+    l = bucket.selectExpr("_id AS ida", "band", "key")
+    r = bucket.selectExpr("_id AS idb", "band", "key")
     cand = (l.join(r, ["band", "key"]).filter(F.col("ida") < F.col("idb"))
             .select("ida", "idb").distinct())
     # exact verification on candidates only: set ops on the two arrays

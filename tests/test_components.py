@@ -71,3 +71,43 @@ class TestConnectedComponents:
         assert out[3] == (1, 3, False)
         assert out[4] == (4, 1, True)
         assert out[5] == (5, 1, True)
+
+
+class TestRoundZeroStarCheck:
+    """The round-0 check skips every round only for an input that already
+    is a star forest centred on each component's minimum."""
+
+    @staticmethod
+    def _run(spark, monkeypatch, edges):
+        import gdalcubes_spark.pipeline.components as C
+        rounds = {"n": 0}
+        orig = C._small_star
+
+        def counting(e):
+            rounds["n"] += 1
+            return orig(e)
+
+        monkeypatch.setattr(C, "_small_star", counting)
+        df = spark.createDataFrame(edges, "ida long, idb long")
+        return {r["id"]: r["component"] for r in connected_components(df).collect()}, rounds["n"]
+
+    def test_star_centred_on_non_minimum(self, spark, monkeypatch):
+        got, rounds = self._run(spark, monkeypatch, [(9, 1), (9, 2)])
+        assert got == {1: 1, 2: 1, 9: 1}
+        assert rounds >= 2
+
+    def test_node_both_centre_and_leaf(self, spark, monkeypatch):
+        got, rounds = self._run(spark, monkeypatch, [(4, 2), (6, 4)])
+        assert got == {2: 2, 4: 2, 6: 2}
+        assert rounds >= 2
+
+    def test_both_orientations_and_duplicate(self, spark, monkeypatch):
+        got, rounds = self._run(spark, monkeypatch, [(1, 2), (2, 1), (1, 2), (3, 1)])
+        assert got == {1: 1, 2: 1, 3: 1}
+        assert rounds == 0
+
+    def test_self_loop(self, spark, monkeypatch):
+        # a self-loop is no edge: 7 has no other edge, so it is not labelled
+        got, rounds = self._run(spark, monkeypatch, [(5, 5), (5, 6), (7, 7)])
+        assert got == {5: 5, 6: 5}
+        assert rounds == 0

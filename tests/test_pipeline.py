@@ -79,6 +79,82 @@ class TestDedup:
         assert set(zip(lsh["ida"], lsh["idb"])) == set(zip(exact["ida"], exact["idb"]))
         assert len(lsh) >= 40  # near/exact clone pairs detected
 
+    def test_minhash_hash_family_pinned(self, spark, docs_with_clones):
+        """The signature and band-key expressions give, bit for bit, the
+        hashes of one Column per minhash: h_i = array_min(transform(
+        shingles, s -> xxhash64(s, lit(i)))), band b = xxhash64(lit(b),
+        h_4b .. h_4b+3)."""
+        from gdalcubes_spark.pipeline.dedup import _band_keys, _shingle_arrays, _signatures
+        d = docs_with_clones.filter("doc_id IN (1, 2, 7, 10001, 20002)")
+        words = F.split(F.lower(F.col("text")), " +")
+        idx = F.sequence(F.lit(0), F.greatest(F.size(words) - 3, F.lit(0)))
+        sh = F.array_distinct(F.transform(
+            idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i + 1, 3)))))
+        ref = d.select("doc_id", sh.alias("shingles")).select("doc_id", *[
+            F.array_min(F.transform("shingles", (lambda i: lambda s: F.xxhash64(s, F.lit(i)))(i))).alias(f"h{i}")
+            for i in range(64)])
+        ref = ref.select("doc_id", *[F.col(f"h{i}") for i in range(64)], *[
+            F.xxhash64(F.lit(b), *[F.col(f"h{b * 4 + r}") for r in range(4)]).alias(f"b{b}")
+            for b in range(16)])
+        want = {r["doc_id"]: ([r[f"h{i}"] for i in range(64)], [(b, r[f"b{b}"]) for b in range(16)])
+                for r in ref.collect()}
+        sig = _signatures(_shingle_arrays(d, "doc_id", "text"), "doc_id", 64)
+        got_sig = {r["_id"]: list(r["_sig"]) for r in sig.collect()}
+        got_bands = {}
+        for r in _band_keys(sig, 64, 16).collect():
+            got_bands.setdefault(r["_id"], []).append((r["band"], r["key"]))
+        assert len(want) == 5
+        assert got_sig == {k: v[0] for k, v in want.items()}
+        assert {k: sorted(v) for k, v in got_bands.items()} == {k: v[1] for k, v in want.items()}
+
+    def test_minhash_signature_computed_once_per_join_side(self, spark, docs_with_clones):
+        """The optimized plan keeps the signature in its own Project: one
+        array_min per side of the bucket self-join, never inlined into the
+        band lambda (which would recompute every minhash once per key). With
+        the shingle cache released, the shingle array is still computed once
+        per doc, not inside the per-hash lambda."""
+        from gdalcubes_spark.pipeline.dedup import minhash_lsh_pairs, release_caches
+        for n_hashes, bands in ((64, 16), (16, 16)):
+            for cached in (True, False):
+                pairs = minhash_lsh_pairs(docs_with_clones, threshold=0.7, n_hashes=n_hashes, bands=bands)
+                if not cached:
+                    release_caches()
+                plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+                assert plan.count("array_min(") == 2
+                assert "array_min(transform(array_distinct(" not in plan
+                gen = [ln for ln in plan.splitlines() if "posexplode(" in ln]
+                assert len(gen) == 2 and not any("array_min(" in ln for ln in gen)
+        release_caches()
+
+    def test_minhash_build_cost_flat_in_hashes(self, spark, docs_with_clones, monkeypatch):
+        """Building the LSH plan costs as many py4j round trips at 128
+        hashes / 32 bands as at 64 / 16. Memory commands are left out: py4j's
+        finalizer thread sends them for proxies dropped by earlier work."""
+        import py4j.protocol
+        from py4j.clientserver import ClientServerConnection
+        from gdalcubes_spark.pipeline.dedup import minhash_lsh_pairs, release_caches
+        calls = {"n": 0}
+        orig = ClientServerConnection.send_command
+
+        def counting(self, command, *a, **k):
+            if not command.startswith(py4j.protocol.MEMORY_COMMAND_NAME):
+                calls["n"] += 1
+            return orig(self, command, *a, **k)
+
+        def build_cost(n_hashes, bands):
+            release_caches()
+            calls["n"] = 0
+            monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+            minhash_lsh_pairs(docs_with_clones, threshold=0.7, n_hashes=n_hashes, bands=bands)
+            monkeypatch.setattr(ClientServerConnection, "send_command", orig)
+            return calls["n"]
+
+        build_cost(64, 16)  # warm-up
+        small, big = build_cost(64, 16), build_cost(128, 32)
+        release_caches()
+        assert 0 < small < 1000
+        assert small == big
+
     def test_simhash_near_pairs(self, spark, docs_with_clones):
         from gdalcubes_spark.pipeline.dedup import simhash_near_pairs
         pairs = simhash_near_pairs(docs_with_clones, max_hamming=4).toPandas()

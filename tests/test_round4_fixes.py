@@ -9,7 +9,7 @@
    mislabeling them geographic.
 4. connected_components checkpoint blocks live in their own registry:
    dedup.release_caches() (called unilaterally by knn_tiles and
-   minhash_signatures) no longer frees an un-collected components result.
+   minhash_lsh_pairs) no longer frees an un-collected components result.
 5. ivf/ivfpq with train_full_corpus=True run the distributed Lloyd's path.
 """
 
@@ -95,7 +95,7 @@ class TestCheckpointRegistrySeparation:
             [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)], "ida long, idb long")
         comp = C.connected_components(pairs)
         assert len(C._CKPT_CACHED) > 0
-        release_caches()  # what knn_tiles/minhash_signatures do unilaterally
+        release_caches()  # what knn_tiles/minhash_lsh_pairs do unilaterally
         # the un-collected result must still be computable afterwards
         got = {(r["id"], r["component"]) for r in comp.collect()}
         assert (3, 1) in got and (22, 20) in got

@@ -56,9 +56,9 @@ def test_jpeg_roundtrip_stable():
 
 
 def test_cc_input_fixpoint_early_stop(spark):
-    """A pure-pair graph (already a star per component) must converge after
-    ONE star round via the input-canonical-signature check, and a chain
-    graph must still run full rounds and collapse to its minimum label."""
+    """A pure-pair graph (already a star per component) must converge with
+    NO star round via the round-0 star-forest check, and a chain graph must
+    still run full rounds and collapse to its minimum label."""
     import gdalcubes_spark.pipeline.components as C
     calls = {"n": 0}
     orig = C._small_star
@@ -73,7 +73,7 @@ def test_cc_input_fixpoint_early_stop(spark):
                                       "ida long, idb long")
         comp = {r["id"]: r["component"]
                 for r in C.connected_components(pairs).collect()}
-        assert calls["n"] == 1, f"pure pairs took {calls['n']} rounds"
+        assert calls["n"] == 0, f"pure pairs took {calls['n']} rounds"
         assert all(comp[i] == i and comp[i + 1000] == i for i in range(50))
         calls["n"] = 0
         chain = spark.createDataFrame([(i, i + 1) for i in range(20)],
