@@ -87,13 +87,11 @@ def _small_star(edges: DataFrame) -> DataFrame:
             .distinct())
 
 
-def connected_components(pairs: DataFrame, src: str = "ida", dst: str = "idb",
-                         max_rounds: int = 25) -> DataFrame:
-    """Label every node of the pair graph with its component's MINIMUM id.
-
-    Returns (id, component). Isolated nodes don't appear in `pairs`, so they
-    don't appear here either — left-join and coalesce(component, id) at the
-    call site to label a full corpus."""
+def _component_map(pairs: DataFrame, src: str = "ida", dst: str = "idb",
+                   max_rounds: int = 25) -> DataFrame:
+    """(id, component) for every node of the pair graph that is NOT its
+    component's minimum, labelled with that minimum. A root labels itself,
+    so it has no row here."""
     sc = pairs.sparkSession.sparkContext
 
     def checkpointed(df: DataFrame):
@@ -155,9 +153,19 @@ def connected_components(pairs: DataFrame, src: str = "ida", dst: str = "idb",
     # (dedup.release_caches() no longer touches these: see _CKPT_CACHED)
     _CKPT_CACHED.extend(live)
     # converged state: a star — every non-root points at its component min
-    comp = (edges.select(F.greatest("src", "dst").alias("id"),
+    return (edges.select(F.greatest("src", "dst").alias("id"),
                          F.least("src", "dst").alias("component"))
             .groupBy("id").agg(F.min("component").alias("component")))
+
+
+def connected_components(pairs: DataFrame, src: str = "ida", dst: str = "idb",
+                         max_rounds: int = 25) -> DataFrame:
+    """Label every node of the pair graph with its component's MINIMUM id.
+
+    Returns (id, component). Isolated nodes don't appear in `pairs`, so they
+    don't appear here either — left-join and coalesce(component, id) at the
+    call site to label a full corpus."""
+    comp = _component_map(pairs, src, dst, max_rounds)
     roots = comp.select(F.col("component").alias("id"), F.col("component")).distinct()
     return comp.unionByName(roots).distinct()
 
@@ -169,9 +177,10 @@ def dedup_clusters(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     size and a keep flag on the representative. One broadcast-sized join per
     corpus row — the expensive part is the pair graph, already bucketed."""
     from pyspark.sql import Window as W
-    comp = connected_components(pairs, src, dst)
+    # roots are absent from the non-root map and label themselves through
+    # the coalesce, so the roots union of connected_components is not needed
     labeled = (df.select(F.col(id_col).cast("long").alias("id"))
-               .join(comp, "id", "left")
+               .join(_component_map(pairs, src, dst), "id", "left")
                .select("id", F.coalesce("component", F.col("id")).alias("cluster")))
     # cluster_size as a window count over the same key: one exchange instead
     # of the groupBy + join-back pair (identical values — count over the

@@ -8,10 +8,10 @@ Scale design:
   The token join is the classic inverted-index self-join; hot tokens are the
   skew risk → stopword-ish tokens can be dropped via a document-frequency
   cap (df_cap) computed in the same plan.
-- minhash_lsh: per-doc shingle array → 64 minhashes (one array expression,
-  no shuffle) → 16 bands of 4 → bucket equi-join → exact-Jaccard
-  verification of candidates only. Turns the O(n²) similarity join into an
-  equi-join.
+- minhash_lsh: per-doc shingle array → 64 minhashes → 16 band keys of 4
+  (array expressions, no shuffle, computed once per doc and cached beside
+  the shingles) → bucket equi-join → exact-Jaccard verification of
+  candidates only. Turns the O(n²) similarity join into an equi-join.
 - simhash: 64-bit sign-of-weighted-bit-sums; banded Hamming buckets.
 """
 
@@ -22,7 +22,7 @@ from typing import Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdalcubes_spark.pipeline.text import fingerprint_sql
+from gdalcubes_spark.pipeline.text import _bind, _grams_sql, fingerprint_sql
 
 # DataFrames persisted by long plans (LSH shingles); release_caches() frees
 # them — call between queries in long-lived sessions to avoid cache growth.
@@ -51,9 +51,10 @@ def widen_input(df: DataFrame, mult: int = 2) -> DataFrame:
     splits than cores and this is a no-op; the repartition it adds here
     shuffles only the raw rows once, repaid immediately by full-width
     execution of everything downstream."""
-    sc = df.sparkSession.sparkContext
-    want = sc.defaultParallelism * mult
-    if df.rdd.getNumPartitions() < want:
+    want = df.sparkSession.sparkContext.defaultParallelism * mult
+    # the partition count of the physical plan's RDD, read in the JVM:
+    # df.rdd would also wrap the query in a Python RDD to be thrown away
+    if df._jdf.queryExecution().executedPlan().execute().getNumPartitions() < want:
         return df.repartition(want)
     return df
 
@@ -115,10 +116,9 @@ def _shingle_sql(text_col: str, n: int) -> str:
     """SQL array of a doc's word n-gram shingles, HASHED to int64 before
     leaving the narrow stage: downstream joins shuffle 8-byte keys, not
     strings (collisions are negligible at n²/2⁶⁴, and the LSH and exact
-    paths share the hashed universe, so Jaccard is unchanged)."""
-    w = f"split(lower(`{text_col}`), ' +')"
-    return (f"transform(sequence(0, greatest(size({w}) - {n}, 0)), "
-            f"i -> xxhash64(concat_ws(' ', slice({w}, i + 1, {n}))))")
+    paths share the hashed universe, so Jaccard is unchanged). The words
+    `split(lower(text), ' +')` are computed once per doc."""
+    return _grams_sql(f"split(lower(`{text_col}`), ' +')", n, "xxhash64")
 
 
 def _shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -129,34 +129,35 @@ def _shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFram
 def _shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """One row per doc: array of DISTINCT int64 shingle hashes — the compact
     form of _shingles with NO explode and NO distinct shuffle (array_distinct
-    runs per row inside codegen). Same xxhash64 universe as _shingles, so
-    Jaccard values are identical between the two representations."""
+    runs per row). Same xxhash64 universe as _shingles, so Jaccard values are
+    identical between the two representations."""
     return widen_input(df).selectExpr(
         f"`{id_col}`", f"array_distinct({_shingle_sql(text_col, n)}) AS shingles")
 
 
-def _bind(col: str, var: str, body: str) -> str:
-    """SQL for `body` with `var` bound to the value of column `col`. Catalyst
-    inlines a projected expression that its consumer references once (say
-    once the LSH's shingle cache is released), even into a lambda that runs
-    per array element: a signature lambda would then rebuild the shingles
-    once per hash. A lambda over the one-element array(col) evaluates `col`
-    once wherever the expression ends up."""
-    return f"transform(array({col}), {var} -> {body})[0]"
-
-
-def _signatures(arr: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
-    """(_id, _sig): each doc's n_hashes minhashes as one array."""
+def _signature_sql(n_hashes: int) -> str:
+    """SQL array of the n_hashes minhashes of the `shingles` column:
+    h_i = min over shingles s of xxhash64(s, i)."""
     sig = f"transform(sequence(0, {n_hashes - 1}), i -> array_min(transform(sh, s -> xxhash64(s, i))))"
-    return arr.selectExpr(f"`{id_col}` AS _id", f"{_bind('shingles', 'sh', sig)} AS _sig")
+    return _bind("shingles", "sh", sig)
 
 
-def _band_keys(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
-    """(_id, band, key): one row per doc and band."""
+def _band_keys_sql(n_hashes: int, bands: int) -> str:
+    """SQL array of the `bands` band keys of the `shingles` column's
+    signature g: key b = xxhash64(b, g[b*r], …, g[b*r + r-1]), r =
+    n_hashes // bands. The signature is bound once per doc, not once per
+    band."""
     rows = n_hashes // bands
     key = ", ".join(["b"] + [f"g[b * {rows} + {r}]" for r in range(rows)])
-    keys = f"transform(sequence(0, {bands - 1}), b -> xxhash64({key}))"
-    return sig.selectExpr("_id", f"posexplode({_bind('_sig', 'g', keys)}) AS (band, key)")
+    return _bind(_signature_sql(n_hashes), "g", f"transform(sequence(0, {bands - 1}), b -> xxhash64({key}))")
+
+
+def _lsh_arrays(df: DataFrame, id_col: str, text_col: str, shingle_n: int,
+                n_hashes: int, bands: int) -> DataFrame:
+    """One row per doc: (id, shingles, _keys), the shingle array and its
+    band keys."""
+    return (_shingle_arrays(df, id_col, text_col, shingle_n)
+            .selectExpr(f"`{id_col}`", "shingles", f"{_band_keys_sql(n_hashes, bands)} AS _keys"))
 
 
 def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.6, id_col: str = "doc_id",
@@ -180,18 +181,26 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.6, id_col: str = "doc_
     - shingles: `array_distinct(transform(sequence(0, greatest(size(w) - n,
       0)), i -> xxhash64(concat_ws(' ', slice(w, i + 1, n)))))`, with
       `w = split(lower(text), ' +')`;
-    - signature: `_sig = transform(sequence(0, n_hashes - 1),
+    - signature: `g = transform(sequence(0, n_hashes - 1),
       i -> array_min(transform(shingles, s -> xxhash64(s, i))))`;
-    - band keys: `posexplode(transform(sequence(0, bands - 1),
-      b -> xxhash64(b, _sig[b*r], …, _sig[b*r + r-1]))) AS (band, key)`.
-    `_sig` is its own Project below the Generate, so the minhashes are
-    computed once per join side, never once per band. The signature and the
-    band keys reach the shingles and `_sig` through `_bind`, so they stay
-    computed once per doc when the shingle cache is gone."""
+    - band keys: `_keys = transform(sequence(0, bands - 1),
+      b -> xxhash64(b, g[b*r], …, g[b*r + r-1]))`, posexploded to
+      (band, key) on each side of the bucket join.
+    Higher-order functions are interpreted (CodegenFallback), so each lambda
+    reaches `w`, `shingles` and `g` through `_bind`: each is computed once
+    per doc, never once per shingle, hash or band. The shingles and the band
+    keys are cached together, so both join sides and both verify sides read
+    the cache and the signature runs once per doc (16 keys, 128 B per doc,
+    not the 64 minhashes). With the cache released, each join side computes
+    `_keys` once per doc in its own Project below the Generate."""
     release_caches()  # drop caches from any prior LSH call in this session
-    arr = _shingle_arrays(df, id_col, text_col, shingle_n).persist()
+    arr = _lsh_arrays(df, id_col, text_col, shingle_n, n_hashes, bands).persist()
     _CACHED.append(arr)
-    bucket = _band_keys(_signatures(arr, id_col, n_hashes), n_hashes, bands)
+    # _outer: over an inner Generate of a column, Catalyst infers the filter
+    # `size(_keys) > 0 AND isnotnull(_keys)` and pushes it below the Project,
+    # so with the cache released each join side would compute the signature
+    # three times. `_keys` always holds `bands` keys: the rows are the same.
+    bucket = arr.selectExpr(f"`{id_col}` AS _id", "posexplode_outer(_keys) AS (band, key)")
     l = bucket.selectExpr("_id AS ida", "band", "key")
     r = bucket.selectExpr("_id AS idb", "band", "key")
     cand = (l.join(r, ["band", "key"]).filter(F.col("ida") < F.col("idb"))

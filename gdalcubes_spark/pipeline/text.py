@@ -73,6 +73,34 @@ def fingerprint_sql(col: str) -> str:
     return f"md5(lower(trim({col})))"
 
 
+def _bind(col: str, var: str, body: str) -> str:
+    """SQL for `body` with `var` bound to the value of `col` (a column or an
+    expression). Catalyst inlines a projected expression that its consumer
+    references once, even into a lambda that runs per array element, and
+    higher-order functions are interpreted (CodegenFallback), not compiled:
+    an expression named inside a per-element lambda is re-evaluated for
+    every element. A lambda over the one-element array(col) evaluates `col`
+    once wherever the expression ends up."""
+    return f"transform(array({col}), {var} -> {body})[0]"
+
+
+def _words_sql(col: str) -> str:
+    """SQL array of the text's words: lower-cased, trimmed, split on runs of
+    whitespace (DuckDB's string_split_regex(lower(trim(col)), '\\s+'))."""
+    return f"split(lower(trim(`{col}`)), '\\\\s+')"
+
+
+def _grams_sql(words: str, n: int, hash_fn: str = "") -> str:
+    """SQL array of the word n-grams of the `words` array expression,
+    `hash_fn(gram)` when given: one per start position, all the words when
+    there are fewer than n. `words` is bound once per doc (`_bind`), not
+    re-split for every gram."""
+    gram = f"concat_ws(' ', slice(w, i + 1, {n}))"
+    if hash_fn:
+        gram = f"{hash_fn}({gram})"
+    return _bind(words, "w", f"transform(sequence(0, greatest(size(w) - {n}, 0)), i -> {gram})")
+
+
 def occurrences_of_padded(padded_col: str, word: str) -> str:
     """occurrences_sql against a PRE-COMPUTED padded column — the fast path:
     the naive form re-derives `' ' || replace(lower(text),' ','  ') || ' '`
@@ -118,16 +146,15 @@ def rolling_fingerprints(df: DataFrame, col: str = "text", window: int = 8, keep
 
     Entirely JVM column expressions, ZERO shuffle: the window hashes, dedup,
     sort and top-k all happen per row (transform → array_distinct →
-    array_sort → slice) inside whole-stage codegen — no explode, no groupBy,
-    no Python. The hash is md5 of the window text, so the exact same
-    fingerprints are computable in DuckDB (engine-agnostic oracle), like
-    fingerprint_sql. Replaces a per-character Python rolling hash that was
-    the one row-at-a-time UDF left in the repo."""
-    words = F.split(F.lower(F.trim(F.col(col))), "\\s+")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - window, F.lit(0)))
-    fps = F.transform(idx, lambda i: F.md5(F.concat_ws(" ", F.slice(words, i + 1, window))))
-    top = F.slice(F.array_sort(F.array_distinct(fps)), 1, keep)
-    return df.select("doc_id", F.explode(top).alias("fp"))
+    array_sort → slice) — no explode, no groupBy, no Python. The
+    higher-order functions are interpreted (CodegenFallback), so the words
+    are split once per doc (`_grams_sql`), not once per window. The hash is
+    md5 of the window text, so the exact same fingerprints are computable in
+    DuckDB (engine-agnostic oracle), like fingerprint_sql. Replaces a
+    per-character Python rolling hash that was the one row-at-a-time UDF
+    left in the repo."""
+    fps = _grams_sql(_words_sql(col), window, "md5")
+    return df.selectExpr("doc_id", f"explode(slice(array_sort(array_distinct({fps})), 1, {keep})) AS fp")
 
 
 def rolling_fingerprints_sql(col: str = "text", window: int = 8, keep: int = 4,
@@ -150,13 +177,10 @@ def rolling_fingerprints_sql(col: str = "text", window: int = 8, keep: int = 4,
 
 
 def _doc_gram_hashes(df: DataFrame, n: int, id_col: str, col: str) -> DataFrame:
-    """(id, gh): md5 hash per DISTINCT word n-gram per row — built inside
-    codegen (transform → array_distinct), one output row per (doc, gram)."""
-    words = F.split(F.lower(F.trim(F.col(col))), "\\s+")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
-    grams = F.array_distinct(F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice(words, i + 1, n)))))
-    return df.select(F.col(id_col), F.explode(grams).alias("gh"))
+    """(id, gh): md5 hash per DISTINCT word n-gram per row — built per row
+    (transform → array_distinct), one output row per (doc, gram)."""
+    grams = _grams_sql(_words_sql(col), n, "md5")
+    return df.selectExpr(f"`{id_col}`", f"explode(array_distinct({grams})) AS gh")
 
 
 def ngram_contamination(docs: DataFrame, bench: DataFrame, n: int = 8,
@@ -269,15 +293,12 @@ def pii_scan_sql(table: str = "documents", col: str = "text") -> str:
 def ngram_counts(df: DataFrame, n: int = 2, k: int = 100, col: str = "text",
                  id_col: str = "doc_id") -> DataFrame:
     """Top-k word n-grams by DOCUMENT frequency (vocabulary/contamination
-    analysis over a training corpus). Per-row n-gram arrays are built inside
-    codegen (transform → array_distinct — no per-occurrence rows), so the
-    explode emits at most one row per (doc, distinct n-gram) and the count is
-    one shuffle; the global top-k is a TakeOrdered (no full sort). Ordering is
+    analysis over a training corpus). Per-doc n-gram arrays (transform →
+    array_distinct — no per-occurrence rows) mean the explode emits at most
+    one row per (doc, distinct n-gram) and the count is one shuffle; the global top-k is a TakeOrdered (no full sort). Ordering is
     total (count desc, ngram asc) so results are deterministic under ties."""
-    words = F.split(F.lower(F.trim(F.col(col))), "\\s+")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
-    grams = F.array_distinct(F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, n))))
-    return (df.select(F.col(id_col), F.explode(grams).alias("ngram"))
+    grams = _grams_sql(_words_sql(col), n)
+    return (df.selectExpr(f"`{id_col}`", f"explode(array_distinct({grams})) AS ngram")
             .groupBy("ngram").agg(F.count("*").alias("doc_freq"))
             .orderBy(F.desc("doc_freq"), F.asc("ngram"))
             .limit(k))

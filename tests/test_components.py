@@ -61,6 +61,15 @@ class TestConnectedComponents:
         edges = [(a, b) for a, b in edges if a != b]
         _check(spark, edges)
 
+    def test_roots_label_themselves(self, spark):
+        """connected_components returns every component's root with its own
+        id; dedup_clusters labels from the map without them."""
+        from gdalcubes_spark.pipeline.components import _component_map
+        df = spark.createDataFrame(pd.DataFrame({"ida": [1, 1, 10, 20], "idb": [2, 3, 11, 21]}))
+        got = {r["id"]: r["component"] for r in connected_components(df).collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+        assert {r["id"] for r in _component_map(df).collect()} == {2, 3, 11, 21}
+
     def test_dedup_clusters_labels_singletons(self, spark):
         corpus = spark.createDataFrame(pd.DataFrame({"doc_id": [1, 2, 3, 4, 5]}))
         pairs = spark.createDataFrame(pd.DataFrame({"ida": [1, 2], "idb": [2, 3]}))

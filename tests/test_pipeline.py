@@ -79,12 +79,42 @@ class TestDedup:
         assert set(zip(lsh["ida"], lsh["idb"])) == set(zip(exact["ida"], exact["idb"]))
         assert len(lsh) >= 40  # near/exact clone pairs detected
 
+    @pytest.mark.parametrize("n", [1, 2, 3])
+    def test_shingles_bound_words_bit_identical(self, spark, n):
+        """The shingle and n-gram expressions split the words once per doc;
+        they equal, bit for bit, the reference that re-splits the text
+        inside the per-gram lambda."""
+        from gdalcubes_spark.pipeline.dedup import _shingle_sql
+        from gdalcubes_spark.pipeline.text import _grams_sql, _words_sql
+        texts = ["", "one", "two words", "Three Words Here", "  leading spaces", "trailing spaces  ",
+                 "repeated   inner  spaces", "MiXeD cAsE Words and MORE words", " ", None]
+        d = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
+
+        def unbound(words, gram):
+            return (f"transform(sequence(0, greatest(size({words}) - {n}, 0)), "
+                    f"i -> {gram.format(f'slice({words}, i + 1, {n})')})")
+
+        cases = {
+            "shingles": (_shingle_sql("text", n),
+                         unbound("split(lower(text), ' +')", "xxhash64(concat_ws(' ', {}))")),
+            "md5_grams": (_grams_sql(_words_sql("text"), n, "md5"),
+                          unbound("split(lower(trim(text)), '\\\\s+')", "md5(concat_ws(' ', {}))")),
+            "grams": (_grams_sql(_words_sql("text"), n),
+                      unbound("split(lower(trim(text)), '\\\\s+')", "concat_ws(' ', {})")),
+        }
+        for name, (got, want) in cases.items():
+            rows = d.selectExpr("doc_id", f"{got} AS got", f"{want} AS want").collect()
+            assert len(rows) == len(texts)
+            for r in rows:
+                assert r["got"] == r["want"], (name, texts[r["doc_id"]])
+
     def test_minhash_hash_family_pinned(self, spark, docs_with_clones):
         """The signature and band-key expressions give, bit for bit, the
         hashes of one Column per minhash: h_i = array_min(transform(
         shingles, s -> xxhash64(s, lit(i)))), band b = xxhash64(lit(b),
-        h_4b .. h_4b+3)."""
-        from gdalcubes_spark.pipeline.dedup import _band_keys, _shingle_arrays, _signatures
+        h_4b .. h_4b+3). The band keys are read from the relation that
+        minhash_lsh_pairs caches."""
+        from gdalcubes_spark.pipeline.dedup import _lsh_arrays, _shingle_arrays, _signature_sql
         d = docs_with_clones.filter("doc_id IN (1, 2, 7, 10001, 20002)")
         words = F.split(F.lower(F.col("text")), " +")
         idx = F.sequence(F.lit(0), F.greatest(F.size(words) - 3, F.lit(0)))
@@ -96,23 +126,39 @@ class TestDedup:
         ref = ref.select("doc_id", *[F.col(f"h{i}") for i in range(64)], *[
             F.xxhash64(F.lit(b), *[F.col(f"h{b * 4 + r}") for r in range(4)]).alias(f"b{b}")
             for b in range(16)])
-        want = {r["doc_id"]: ([r[f"h{i}"] for i in range(64)], [(b, r[f"b{b}"]) for b in range(16)])
+        want = {r["doc_id"]: ([r[f"h{i}"] for i in range(64)], [r[f"b{b}"] for b in range(16)])
                 for r in ref.collect()}
-        sig = _signatures(_shingle_arrays(d, "doc_id", "text"), "doc_id", 64)
-        got_sig = {r["_id"]: list(r["_sig"]) for r in sig.collect()}
-        got_bands = {}
-        for r in _band_keys(sig, 64, 16).collect():
-            got_bands.setdefault(r["_id"], []).append((r["band"], r["key"]))
+        sig = _shingle_arrays(d, "doc_id", "text").selectExpr("doc_id", f"{_signature_sql(64)} AS _sig")
+        got_sig = {r["doc_id"]: list(r["_sig"]) for r in sig.collect()}
+        got_keys = {r["doc_id"]: list(r["_keys"]) for r in _lsh_arrays(d, "doc_id", "text", 3, 64, 16).collect()}
         assert len(want) == 5
         assert got_sig == {k: v[0] for k, v in want.items()}
-        assert {k: sorted(v) for k, v in got_bands.items()} == {k: v[1] for k, v in want.items()}
+        assert got_keys == {k: v[1] for k, v in want.items()}
+
+    @staticmethod
+    def _split_at_cache(plan: str):
+        """(the plan's lines outside every InMemoryRelation, the text of
+        each InMemoryRelation's cached plan)."""
+        outside, cached, depth = [], [], None
+        for ln in plan.splitlines():
+            col = len(ln) - len(ln.lstrip(" :+-"))
+            if depth is not None and col > depth:
+                cached[-1].append(ln)
+                continue
+            depth = None
+            outside.append(ln)
+            if "InMemoryRelation" in ln:
+                depth = col
+                cached.append([])
+        return outside, ["\n".join(c) for c in cached]
 
     def test_minhash_signature_computed_once_per_join_side(self, spark, docs_with_clones):
-        """The optimized plan keeps the signature in its own Project: one
-        array_min per side of the bucket self-join, never inlined into the
-        band lambda (which would recompute every minhash once per key). With
-        the shingle cache released, the shingle array is still computed once
-        per doc, not inside the per-hash lambda."""
+        """Cached, the signature is computed once per doc, in the cached
+        relation beside the shingles: every join and verify side reads the
+        cache, with no array_min above it. With the cache released, each
+        side of the bucket self-join computes it once, in its own Project,
+        never inlined into the Generate. Either way the shingle array is
+        computed once per doc, not inside the per-hash lambda."""
         from gdalcubes_spark.pipeline.dedup import minhash_lsh_pairs, release_caches
         for n_hashes, bands in ((64, 16), (16, 16)):
             for cached in (True, False):
@@ -120,10 +166,18 @@ class TestDedup:
                 if not cached:
                     release_caches()
                 plan = pairs._jdf.queryExecution().optimizedPlan().toString()
-                assert plan.count("array_min(") == 2
                 assert "array_min(transform(array_distinct(" not in plan
-                gen = [ln for ln in plan.splitlines() if "posexplode(" in ln]
+                outside, caches = self._split_at_cache(plan)
+                gen = [ln for ln in outside if "posexplode(" in ln]
                 assert len(gen) == 2 and not any("array_min(" in ln for ln in gen)
+                lsh = [c for c in caches if "array_min(" in c]  # not the fixture's cache
+                if cached:
+                    assert len(lsh) == 4  # both join sides, both verify sides
+                    assert all(c.count("array_min(") == 1 for c in lsh)
+                    assert not any("array_min(" in ln for ln in outside)
+                else:
+                    assert lsh == []
+                    assert sum(ln.count("array_min(") for ln in outside) == 2
         release_caches()
 
     def test_minhash_build_cost_flat_in_hashes(self, spark, docs_with_clones, monkeypatch):

@@ -4,7 +4,12 @@ Times an identity `mapInPandas` + collect over a cached 64-row frame split
 into 1, p, 2p, 4p and 8p partitions (p = the session's defaultParallelism),
 next to a JVM-only collect of the same frame. With p cores, n partitions run
 in ceil(n / p) waves, so the growth from p to 8p partitions is the cost of a
-wave of Python tasks. The engine's tensor-UDF stages are pinned to one wave
+wave of Python tasks. `input_wait_ms` is the Python side's wait in one task
+of a `mapInArrow` over the same frame, from UDF entry to the end of its input
+(median over tasks and runs): the time a task's few Arrow batches take to
+reach the worker, which depends on the JVM↔worker socket (loopback TCP or,
+with `spark.python.unix.domain.socket.enabled`, a Unix domain socket). The
+engine's tensor-UDF stages are pinned to one wave
 (`cube.pin_group_partitions`); this table is how to re-check that rule on
 another host. The session runs the engine's worker daemon
 (`session.WORKER_DAEMON`), as every engine session does.
@@ -23,6 +28,7 @@ import statistics
 import time
 
 import pandas as pd
+import pyarrow as pa
 
 REPEATS = 3
 
@@ -30,6 +36,21 @@ REPEATS = 3
 def _identity(batches):
     for pdf in batches:
         yield pdf
+
+
+def _input_wait(batches):
+    t0 = time.perf_counter()
+    for _ in batches:
+        pass
+    yield pa.RecordBatch.from_pydict({"ms": [(time.perf_counter() - t0) * 1e3]})
+
+
+def _median_input_wait_ms(df) -> float:
+    def run():
+        return [r["ms"] for r in df.mapInArrow(_input_wait, "ms double").collect()]
+
+    run()  # warm-up
+    return statistics.median(w for _ in range(REPEATS) for w in run())
 
 
 def _timed(fn) -> float:
@@ -64,8 +85,10 @@ def main() -> None:
             df.count()
             py_s = _timed(lambda: df.mapInPandas(_identity, df.schema).collect())
             jvm_s = _timed(lambda: df.collect())
+            wait_ms = _median_input_wait_ms(df)
             df.unpersist()
-            rows.append(dict(partitions=n, waves=-(-n // p), python_s=round(py_s, 3), jvm_s=round(jvm_s, 3)))
+            rows.append(dict(partitions=n, waves=-(-n // p), python_s=round(py_s, 3), jvm_s=round(jvm_s, 3),
+                             input_wait_ms=round(wait_ms, 1)))
         print(pd.DataFrame(rows).to_string(index=False))
         print(json.dumps(dict(cores=cores, parallelism=p, repeats=REPEATS, rows=rows)))
     finally:
