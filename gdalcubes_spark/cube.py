@@ -98,12 +98,11 @@ def pin_group_partitions(df: DataFrame, keys, n_groups: int) -> DataFrame:
     4-core host (≈0.14 s without the daemon, `tools/python_task_cost.py`).
     The one-wave rule was sized on the old cost and is kept as it is: a
     re-check starts from the new figure. It was measured only at local[4] on
-    the median_zonal stages (scan,
-    reduce_time gather, extract_geom); window and from_cells follow it
-    untimed. reduce_space (groupBy "ct") and aggregate_* (groupBy chunk_id)
-    group with no pin, so AQE may coalesce those stages. Hashing chunk_id
-    into exactly `par` partitions gives tasks unequal group counts, so skew
-    across the one wave is higher."""
+    the median_zonal stages (scan, reduce_time gather); window and from_cells
+    follow it untimed. reduce_space (groupBy "ct") and aggregate_* (groupBy
+    chunk_id) group with no pin, so AQE may coalesce those stages. Hashing
+    chunk_id into exactly `par` partitions gives tasks unequal group counts,
+    so skew across the one wave is higher."""
     try:
         par = df.sparkSession.sparkContext.defaultParallelism
     except Exception:

@@ -13,11 +13,13 @@ Spark shape (the north rule's raster↔vector pattern):
    → explode + equi join); a feature datetime picks one slice by counting
    slice starts ≤ its epoch. A WKT that is not POINT, POLYGON or
    MULTIPOLYGON fails the job (raise_error);
-2. a left-semi join keeps only chunks some feature covers;
-3. ONE Arrow cogroup of each chunk with its features (no tensor duplication
-   per feature): the covered cells (a point's cell, or the cells of the
-   feature's window whose centres are inside the polygon) are gathered for
-   all the chunk's slices at once and leave as Arrow columns;
+2. ONE broadcast inner join gives each covered chunk row its feature list
+   (collect_list): chunks no feature covers drop out, and no tensor is
+   copied per feature;
+3. ONE mapInArrow reads the joined chunks through chunk_stream (a pending
+   narrow chain runs inside it): the covered cells (a point's cell, or the
+   cells of the feature's window whose centres are inside the polygon) are
+   gathered for all the chunk's slices at once and leave as Arrow columns;
 4. zonal stats = plain groupBy("fid"[, "time"]).agg — Catalyst's hash agg.
 kNN tile lookup lives in pipeline/knn.py on the same cell-id machinery.
 """
@@ -33,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gdalcubes_spark.cube import Cube, chunk_rows, emit, pin_group_partitions
+from gdalcubes_spark.cube import Cube, chunk_stream, emit
 from gdalcubes_spark.geom import parse_wkt
 
 # one pattern for the JVM (RLIKE) and Python (re): both read (?i), \s, [...]
@@ -95,6 +97,10 @@ def _cover(cube: Cube, features: DataFrame, time_column: Optional[str]) -> DataF
                          "CAST(it_f AS bigint) AS it_f", "x0", "x1", "y0", "y1")
 
 
+# a feature in its chunk's list: id, WKT, slice (-1: all), clamped cell range
+_FEATURE = ("fid", "wkt", "it_f", "x0", "x1", "y0", "y1")
+
+
 def _covered_cells(wkt: str, xs: np.ndarray, ys: np.ndarray):
     """Row-major (iy, ix) of the window cells with centres (xs, ys) that a
     feature covers: a POINT its one cell, a polygon the cells whose centre is
@@ -116,8 +122,6 @@ def extract_geom(cube: Cube, features: DataFrame, time_column: Optional[str] = N
     form is O(covered cells) rows through Arrow; partials are O(features ×
     chunks) — the map-side-combine shape of the zonal aggregation."""
     view, g = cube.view, cube.chunking
-    fb = _cover(cube, features, time_column)
-
     time_strings = pa.array([view.datetime_at_index(i).to_string() for i in range(view.nt)], pa.string())
     safe = [re.sub(r"\W", "_", b) for b in cube.bands]
     keys = [T.StructField("fid", T.LongType(), False), T.StructField("it", T.IntegerType(), False),
@@ -148,46 +152,49 @@ def extract_geom(cube: Cube, features: DataFrame, time_column: Optional[str] = N
         return [np.full(keep.sum(), fid), np.repeat(its, keep.sum(axis=1)),
                 *(vals[bi][keep] for bi in range(len(safe)))]
 
-    def gather(chunks: pa.Table, feats: pa.Table) -> pa.Table:
-        out = []
-        if chunks.num_rows and feats.num_rows:
-            _, coords, t_ = next(chunk_rows(chunks))
-            (ct0, ct1), (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(*coords)
-            xs = view.left + (np.arange(cx0, cx1) + 0.5) * view.dx
-            ys = view.top - (np.arange(cy0, cy1) + 0.5) * view.dy
-            cols = [feats.column(c).to_pylist() for c in ("fid", "wkt", "it_f", "x0", "x1", "y0", "y1")]
-            for fid, wkt, it_f, x0, x1, y0, y1 in zip(*cols):
-                # the feature's cell window within this chunk, chunk-local
-                sx0, sx1 = max(x0, cx0) - cx0, min(x1 + 1, cx1) - cx0
-                sy0, sy1 = max(y0, cy0) - cy0, min(y1 + 1, cy1) - cy0
-                if sx0 >= sx1 or sy0 >= sy1:
-                    continue
-                iy, ix = _covered_cells(wkt, xs[sx0:sx1], ys[sy0:sy1])
-                if len(iy) == 0:
-                    continue
-                its = np.arange(ct0, ct1) if it_f < 0 else np.array([it_f])
-                out.append(rows_of(fid, its, t_[:, (its - ct0)[:, None], iy + sy0, ix + sx0]))
-        if not out:
-            return pa.Table.from_batches([empty])
-        fid, it, *bands = (np.concatenate(c) for c in zip(*out))
-        fields = [f for f in arrow if f.name != "time"]
-        cols = [pa.array(c, f.type, from_pandas=True)  # NaN → null: an absent value
-                for c, f in zip([fid, it, *bands], fields)]
-        cols.insert(2, time_strings.take(it))
-        return pa.Table.from_arrays(cols, schema=arrow)
+    df, chunks = chunk_stream(cube)
 
-    # chunk-mask pruning analogue (extract_geom.cpp:164-218): only chunks with
-    # candidate features enter the cogroup. The feature side is broadcast
-    # explicitly: it has no size estimate, so Catalyst would plan a
-    # SortMergeJoin and shuffle the cube's tensors by chunk_id before AQE
-    # could switch to a broadcast — one tensor shuffle more than the pin
-    # below. No distinct on the build side: left_semi dedupes by construction.
-    pruned = cube.df.join(F.broadcast(fb.select("chunk_id")), "chunk_id", "left_semi")
-    # pin the cogroup's task count on BOTH sides (PIP/extract cost per byte ≫
-    # columnar work — see pin_group_partitions' AQE note)
-    return (pin_group_partitions(pruned, "chunk_id", g.n_chunks).groupBy("chunk_id")
-            .cogroup(pin_group_partitions(fb, "chunk_id", g.n_chunks).groupBy("chunk_id"))
-            .applyInArrow(gather, out_schema))
+    def gather(batches):
+        for b in batches:
+            # the batch's feature lists, flat, and each chunk row's slice of them
+            lists = b.column("feats")
+            off = lists.offsets.to_numpy()
+            feats = list(zip(*(lists.values.field(c).to_pylist() for c in _FEATURE)))
+            row = {cid: i for i, cid in enumerate(b.column("chunk_id").to_pylist())}
+            out = []
+            for cid, coords, t_ in chunks(b):
+                (ct0, ct1), (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(*coords)
+                xs = view.left + (np.arange(cx0, cx1) + 0.5) * view.dx
+                ys = view.top - (np.arange(cy0, cy1) + 0.5) * view.dy
+                for fid, wkt, it_f, x0, x1, y0, y1 in feats[off[row[cid]]:off[row[cid] + 1]]:
+                    # the feature's cell window within this chunk, chunk-local
+                    sx0, sx1 = max(x0, cx0) - cx0, min(x1 + 1, cx1) - cx0
+                    sy0, sy1 = max(y0, cy0) - cy0, min(y1 + 1, cy1) - cy0
+                    if sx0 >= sx1 or sy0 >= sy1:
+                        continue
+                    iy, ix = _covered_cells(wkt, xs[sx0:sx1], ys[sy0:sy1])
+                    if len(iy) == 0:
+                        continue
+                    its = np.arange(ct0, ct1) if it_f < 0 else np.array([it_f])
+                    out.append(rows_of(fid, its, t_[:, (its - ct0)[:, None], iy + sy0, ix + sx0]))
+            if not out:
+                yield empty
+                continue
+            fid, it, *bands = (np.concatenate(c) for c in zip(*out))
+            fields = [f for f in arrow if f.name != "time"]
+            cols = [pa.array(c, f.type, from_pandas=True)  # NaN → null: an absent value
+                    for c, f in zip([fid, it, *bands], fields)]
+            cols.insert(2, time_strings.take(it))
+            yield pa.RecordBatch.from_arrays(cols, schema=arrow)
+
+    # chunk-mask pruning analogue (extract_geom.cpp:164-218): the inner join
+    # keeps only chunks with candidate features. The feature side is
+    # broadcast explicitly: it has no size estimate, so Catalyst would plan a
+    # SortMergeJoin and shuffle the cube's tensors by chunk_id. Broadcast, the
+    # extract runs in the cube's own partitions.
+    feats = _cover(cube, features, time_column).groupBy("chunk_id").agg(
+        F.expr(f"collect_list(struct({', '.join(_FEATURE)})) AS feats"))
+    return df.join(F.broadcast(feats), "chunk_id").mapInArrow(gather, out_schema)
 
 
 ZONAL_FUNCS = {"min": F.min, "max": F.max, "mean": F.avg, "sum": F.sum, "count": F.count,
@@ -195,7 +202,10 @@ ZONAL_FUNCS = {"min": F.min, "max": F.max, "mean": F.avg, "sum": F.sum, "count":
                "var": F.var_samp, "sd": F.stddev_samp}
 
 
-_COMBINABLE_ZONAL = {"min", "max", "mean", "sum", "count"}
+# the COMBINABLE functions: how each merges the _partials columns of band s
+_MERGE_PARTIALS = {"count": lambda s: F.sum(f"{s}__cnt"), "sum": lambda s: F.sum(f"{s}__sum"),
+                   "min": lambda s: F.min(f"{s}__min"), "max": lambda s: F.max(f"{s}__max"),
+                   "mean": lambda s: F.sum(f"{s}__sum") / F.sum(f"{s}__cnt")}
 
 
 def zonal_stats(cube: Cube, features: DataFrame, funcs: List[str], by_time: bool = True,
@@ -212,23 +222,7 @@ def zonal_stats(cube: Cube, features: DataFrame, funcs: List[str], by_time: bool
             raise ValueError(f"unknown zonal function {fn!r}")
     safe = [re.sub(r"\W", "_", b) for b in cube.bands]
     keys = ["fid", "time"] if by_time else ["fid"]
-
-    if all(fn in _COMBINABLE_ZONAL for fn in funcs):
-        part = extract_geom(cube, features, time_column=time_column, _partials=True)
-        merged = {
-            "count": lambda s: F.sum(f"{s}__cnt"),
-            "sum": lambda s: F.sum(f"{s}__sum"),
-            "min": lambda s: F.min(f"{s}__min"),
-            "max": lambda s: F.max(f"{s}__max"),
-            "mean": lambda s: F.sum(f"{s}__sum") / F.sum(f"{s}__cnt"),
-        }
-        aggs = [merged[fn](s).alias(f"{s}_{fn}") for fn in funcs for s in safe]
-        return part.groupBy(*keys).agg(*aggs)
-
-    long = extract_geom(cube, features, time_column=time_column)
-    aggs = []
-    for fn in funcs:
-        for s in safe:
-            col = ZONAL_FUNCS[fn](s) if fn != "median" else F.expr(f"percentile({s}, 0.5)")
-            aggs.append(col.alias(f"{s}_{fn}"))
-    return long.groupBy(*keys).agg(*aggs)
+    partials = all(fn in _MERGE_PARTIALS for fn in funcs)
+    agg = _MERGE_PARTIALS if partials else ZONAL_FUNCS
+    rows = extract_geom(cube, features, time_column=time_column, _partials=partials)
+    return rows.groupBy(*keys).agg(*[agg[fn](s).alias(f"{s}_{fn}") for fn in funcs for s in safe])

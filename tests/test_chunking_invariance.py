@@ -10,7 +10,7 @@ import datetime as dt
 import numpy as np
 import pytest
 
-from gdalcubes_spark.cube import cube_from_array
+from gdalcubes_spark.cube import Cube, cube_from_array
 from gdalcubes_spark.geom import rect_wkt
 from gdalcubes_spark.operators.extract_geom import extract_geom, zonal_stats
 from gdalcubes_spark.grid import ChunkGrid, CubeView
@@ -214,3 +214,18 @@ def test_reduce_aggregate_chunking_invariant(spark, name):
                 np.testing.assert_array_equal(got[b], single[b], err_msg=f"{r} {grid}")
             else:
                 np.testing.assert_allclose(got[b], single[b], rtol=1e-12, err_msg=f"{r} {grid}")
+
+
+def test_from_cells_chunking_invariant(spark):
+    """cells() → from_cells rebuilds a 2×3×5×4 cube with NaN holes on grids
+    with one-slice and one-cell edge chunks as on the single-chunk grid."""
+    rng = np.random.default_rng(14)
+    arr = rng.random((2, 3, 5, 4))
+    arr[rng.random(arr.shape) < 0.3] = np.nan
+
+    def op(c):
+        return Cube.from_cells(c.cells(), c.view, c.bands, c.chunking)
+    single = _run(spark, arr, (3, 5, 4), op)
+    np.testing.assert_array_equal(single, arr)
+    for grid in [(2, 2, 3), (1, 5, 1)]:
+        np.testing.assert_array_equal(_run(spark, arr, grid, op), single, err_msg=str(grid))

@@ -6,6 +6,7 @@ import inspect
 import re
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from gdalcubes_spark.cube import dummy_cube, read_parquet_cube
@@ -45,19 +46,18 @@ class TestPlans:
         assert "l_comment" not in read_schema and "l_extendedprice" not in read_schema
 
     def test_extract_geom_semi_join_prunes_chunks(self, spark):
-        # the chunk-mask analogue: extract_geom only cogroups chunks that
-        # have candidate features (left-semi join visible in the plan)
+        # the chunk-mask analogue: the broadcast inner join of the chunks with
+        # their feature lists keeps only chunks that have candidate features
         from gdalcubes_spark.geom import rect_wkt
         from gdalcubes_spark.operators.extract_geom import extract_geom
         c = dummy_cube(spark, view10(), 1, 1.0, chunking=ChunkGrid(nt=6, ny=10, nx=10, ct=6, cy=2, cx=2))
         feats = spark.createDataFrame([(1, rect_wkt(0, 8, 2, 10))], "fid long, wkt string")
         rows = extract_geom(c, feats)
         plan = rows._jdf.queryExecution().executedPlan().toString()
-        assert "LeftSemi" in plan
         # the feature side is broadcast in the initial plan: no SortMergeJoin
         # that would shuffle the cube's tensors before AQE could re-plan it
-        assert re.search(r"BroadcastHashJoin \[chunk_id#\d+L?\], \[chunk_id#\d+L?\], LeftSemi", plan), plan
-        assert "SortMergeJoin" not in plan
+        assert re.search(r"BroadcastHashJoin \[chunk_id#\d+L?\], \[chunk_id#\d+L?\], Inner, BuildRight", plan), plan
+        assert "SortMergeJoin" not in plan and "LeftSemi" not in plan
         # and the result is correct: 4 cells × 6 slices
         assert rows.count() == 24
 
@@ -65,7 +65,7 @@ class TestPlans:
         """The feature cover is column expressions: on a cube with no Python
         of its own, a zonal_stats plan (partial-state and long-form path) and
         an extract_geom(time_column=) plan run exactly one Python node, the
-        Arrow cogroup of chunks with features."""
+        mapInArrow over the chunks joined with their feature lists."""
         import datetime as dt
 
         from gdalcubes_spark.cube import cube_from_array
@@ -79,12 +79,38 @@ class TestPlans:
         for df in (zonal_stats(c, feats, ["mean", "median"]), zonal_stats(c, feats, ["mean", "count"]),
                    extract_geom(c, timed, time_column="t")):
             plan = df._jdf.queryExecution().executedPlan().toString()
-            assert PYTHON_NODE.findall(plan) == ["FlatMapCoGroupsInArrow"], plan
+            assert PYTHON_NODE.findall(plan) == ["MapInArrow"], plan
+
+    def test_zonal_stats_fuses_pending_chain(self, spark):
+        """zonal_stats over a cube with a pending narrow chain runs the chain
+        inside the extract's mapInArrow: one Python node, no cogroup and no
+        semi-join, the feature table scanned once, and the rows of the same
+        chain materialized first."""
+        from gdalcubes_spark.cube import cube_from_array
+        from gdalcubes_spark.geom import rect_wkt
+        from gdalcubes_spark.operators.extract_geom import zonal_stats
+        g = ChunkGrid(nt=6, ny=10, nx=10, ct=2, cy=5, cx=5)
+        arr = np.random.default_rng(1).random((2, 6, 10, 10))
+        chained = cube_from_array(spark, arr, view10(), chunking=g).apply_pixel(
+            "band1 * 2 - band2", ["d"]).filter_pixel("d > 0")
+        done = cube_from_array(spark, chained.collect_array(), view10(), chunking=g, band_names=["d"])
+        feats = spark.createDataFrame([(1, rect_wkt(1, 1, 6, 6)), (2, "POINT (7.5 2.5)")], "fid long, wkt string")
+        for fns in (["mean", "median", "count"], ["mean", "count", "max"]):
+            got = zonal_stats(chained, feats, fns)
+            plan = got._jdf.queryExecution().executedPlan().toString()
+            assert PYTHON_NODE.findall(plan) == ["MapInArrow"], plan
+            assert "LeftSemi" not in plan and plan.count("Scan ExistingRDD") == 1, plan
+            want = sorted(zonal_stats(done, feats, fns).collect())
+            rows = sorted(got.collect())
+            assert want and len(rows) == len(want)
+            for a, b in zip(rows, want):  # means to 1e-12: partial sums merge in fetch order
+                assert tuple(a) == pytest.approx(tuple(b), rel=1e-12)
 
     def test_tensor_udf_stages_pinned_to_one_wave(self, spark):
-        """The scan's, the reduce_time gather's and both extract_geom cogroup
-        sides' user-numbered exchanges hold min(n_groups, parallelism)
-        partitions: one wave of Python tasks, no oversubscription."""
+        """The scan's and the reduce_time gather's user-numbered exchanges
+        hold min(n_groups, parallelism) partitions: one wave of Python tasks,
+        no oversubscription. extract_geom adds no exchange of the tensors: it
+        runs in the gather's partitions."""
         from gdalcubes_spark import cube as cube_mod
         from gdalcubes_spark.geom import rect_wkt
         from gdalcubes_spark.operators.extract_geom import extract_geom
@@ -108,11 +134,11 @@ class TestPlans:
         med = scan.reduce_time(f"median({band_names(lay)[0]})")
         feats = spark.createDataFrame([(1, rect_wkt(0.1, 0.1, 3.9, 3.9))], "fid long, wkt string")
         n_scan, n_red = min(g.n_chunks, par), min(g.ncy * g.ncx, par)
-        n_ex = min(med.chunking.n_chunks, par)
         assert pinned(scan.df) == [("chunk_id", n_scan)]
         assert pinned(med.df) == sorted([("chunk_id", n_scan), ("skey", n_red)])
-        assert pinned(extract_geom(med, feats)) == sorted(
-            [("chunk_id", n_scan), ("skey", n_red), ("chunk_id", n_ex), ("chunk_id", n_ex)])
+        ex = extract_geom(med, feats)
+        assert pinned(ex) == sorted([("chunk_id", n_scan), ("skey", n_red)])
+        assert ex.rdd.getNumPartitions() == n_red
 
     def test_chunk_udfs_are_arrow_nodes(self, spark, tmp_path, monkeypatch):
         """Every chunk UDF is an Arrow node. A cube built through the scan,
